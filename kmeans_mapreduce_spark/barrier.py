@@ -29,14 +29,19 @@ CHECKPOINT-AT-SCALE POLICY (r15 verdict task 5):
   cluster). Reliable checkpoints survive executor loss at the cost of
   one DFS round-trip per barrier. Results are IDENTICAL either way —
   the barrier only pins where materialization happens, never what is
-  computed — pinned by ``tests/test_plans.py``'s reliable-checkpoint
-  parity test.
-- Lifetime: non-eager checkpoint blocks are freed when the Python
-  DataFrame is GC'd (ContextCleaner); the bench explicitly
-  ``gc.collect()``s between queries so repeated invocations do not
-  accumulate block storage. Long-lived sessions that call a
-  barrier-bearing operator many times inherit the same discipline
-  (ADVICE r15: the single-node assumption is documented here once,
+  computed — pinned by
+  ``tests/test_extensions.py::test_barrier_paths_survive_reliable_checkpointing``.
+- Lifetime: the ContextCleaner frees a barrier's data once the Python
+  DataFrame is GC'd; the bench explicitly ``gc.collect()``s between
+  queries so repeated invocations do not accumulate storage. Local
+  checkpoint blocks are always freed this way; reliable checkpoint
+  FILES only with
+  ``spark.cleaner.referenceTracking.cleanCheckpoints=true``, which
+  ``session.get_spark`` sets. Sessions not built by ``get_spark`` must
+  set it themselves or manage the checkpoint directory, which
+  otherwise grows by one copy per barrier per invocation. Long-lived
+  sessions that call a barrier-bearing operator many times inherit the
+  same discipline (the single-node assumption is documented here once,
   not at 40 call sites).
 
 Usage — chainable, so call sites read like the localCheckpoint they

@@ -68,16 +68,18 @@ def round_half_up(x: float, digits: int) -> float:
 
 
 def normalize_partitions(df: DataFrame) -> DataFrame:
-    """Bound the per-iteration fixed cost of an Arrow loop input: cap
-    over-partitioned inputs at 2× parallelism (many small files multiply
-    the per-task launch + Arrow round-trip by every iteration; measured
-    1.5× above linear at 304 partitions) and raise under-partitioned
-    ones to parallelism/4 (a 3-row-group parquet caches as 3 partitions
-    and caps the loop at 3-way compute — but full-width fan-out of a
-    K-row partial agg loses to per-task Python/Arrow overhead: 64-way
+    """Bound the per-iteration fixed cost of a cached Lloyd-loop input:
+    cap over-partitioned inputs at 2× parallelism (many small files
+    multiply the per-task launch cost by every iteration; measured 1.5×
+    above linear at 304 partitions) and raise under-partitioned ones to
+    parallelism/4 (a 3-row-group parquet caches as 3 partitions and
+    caps the loop at 3-way compute — but full-width fan-out of a K-row
+    partial agg loses to per-task overhead: on the Arrow step, 64-way
     measured 2.4× slower than 8-way; a quarter of the cores is the
     measured sweet spot). ONE shuffle, amortized over all iterations.
-    Shared by the 2-D and n-D fits — retune here, not per-copy."""
+    Shared by the 2-D ``fit`` (Catalyst step), the n-D ``fit_nd`` and
+    the spectral embedding loop (Arrow steps) — retune here, not
+    per-copy."""
     spark_ctx = df.sparkSession.sparkContext
     target = spark_ctx.defaultParallelism * 2
     floor = max(2, spark_ctx.defaultParallelism // 4)
@@ -138,42 +140,6 @@ def assign_df(points: DataFrame, centroids: DataFrame) -> DataFrame:
         )
     )
     return best
-
-
-def assign_broadcast(points: DataFrame, centers: list[Center]) -> DataFrame:
-    """Same semantics as :func:`assign`, but centers travel as a
-    broadcast ONE-ROW table (cx0,cy0,…) instead of plan literals.
-
-    Inside the Lloyd loop the literal form generates *different* code
-    every iteration (new constants → Janino recompiles, ~0.3 s/iter —
-    half the per-iteration wall at sf0.1). Here the generated code is
-    identical across iterations — centroid values arrive as runtime
-    join data via a 1-row BroadcastNestedLoopJoin — so codegen compiles
-    once and every later iteration is pure execution. Still narrow: no
-    shuffle, K×4 flops/row in whole-stage codegen.
-    """
-    spark = points.sparkSession
-    ordered = sorted((int(c), float(x), float(y)) for c, x, y in centers)
-    row = tuple(v for _, x, y in ordered for v in (x, y))
-    schema = ", ".join(f"cx{i} DOUBLE, cy{i} DOUBLE" for i in range(len(ordered)))
-    cdf = spark.createDataFrame([row], schema)
-    cands = [
-        F.struct(
-            sq_dist_2d(
-                F.col("x"), F.col("y"), F.col(f"cx{i}"), F.col(f"cy{i}")
-            ).alias("d2"),
-            F.lit(cid).cast("int").alias("cid"),
-        )
-        for i, (cid, _, _) in enumerate(ordered)
-    ]
-    best = F.array_min(F.array(*cands))
-    return points.crossJoin(F.broadcast(cdf)).select(
-        "point_id",
-        "x",
-        "y",
-        best["cid"].alias("cid"),
-        best["d2"].alias("min_d2"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -246,12 +212,33 @@ def init_random(
 def kmpp_scores(points: DataFrame, cands: list[tuple[float, float]]) -> DataFrame:
     """One k-means|| round's D²-scoring: distance of every point to its
     nearest current candidate — the quantity Bahmani's sampling weights
-    by. A narrow literal-argmin map (no shuffle); shared by the
+    by. Returns ``points`` plus a ``d2 DOUBLE`` column; shared by the
     :func:`init_kmeans_parallel` loop and the oracle-gated
-    ``kmeans_kmpp_round1`` query so the gated math IS the init's math."""
-    lit_centers = [(i, cx, cy) for i, (cx, cy) in enumerate(cands)]
-    best = nearest_centroid_2d(F.col("x"), F.col("y"), lit_centers)
-    return points.select("*", best["d2"].alias("d2"))
+    ``kmeans_kmpp_round*`` queries so the gated math IS the init's math.
+
+    A narrow Arrow ``mapInPandas`` pass (no shuffle): candidates ride in
+    the closure, so the plan stays the same width however many
+    candidates the rounds add (~rounds·2k). A literal expression over
+    that many candidates is one huge generated method — measured 8×
+    slower under whole-stage codegen than interpreted (26.0 s vs
+    3.2 s for one 81-candidate D² job at sf0.1 on 4 cores).
+    numpy runs the same ``(x−cx)*(x−cx) + (y−cy)*(y−cy)`` float64 op
+    sequence as :func:`assign`, so ``d2`` equals its ``min_d2`` bit for
+    bit; ``fmin`` skips NaN like Spark's ordering does."""
+    import numpy as np
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    cx = np.array([c[0] for c in cands], dtype=np.float64)
+    cy = np.array([c[1] for c in cands], dtype=np.float64)
+
+    def score(batches):
+        for pdf in batches:
+            dx = pdf["x"].to_numpy(dtype=np.float64)[:, None] - cx[None, :]
+            dy = pdf["y"].to_numpy(dtype=np.float64)[:, None] - cy[None, :]
+            yield pdf.assign(d2=np.fmin.reduce(dx * dx + dy * dy, axis=1))
+
+    schema = StructType([*points.schema.fields, StructField("d2", DoubleType())])
+    return points.mapInPandas(score, schema)
 
 
 def kmpp_round_probs(
@@ -300,10 +287,11 @@ def init_kmeans_parallel(
     final solution).
 
     Each round: score every point against the current candidate set
-    (narrow literal-argmin map — no shuffle), Σd² via one aggregate,
-    then sample points with probability min(1, l·d²/φ) using a seeded
+    (:func:`kmpp_scores` — no shuffle), Σd² via one aggregate, then
+    sample points with probability min(1, l·d²/φ) using a seeded
     per-round ``rand``. Candidates (≈ rounds·l total, driver-tiny) are
-    weighted by their nearest-point counts and reduced to k with a
+    weighted by their nearest-point counts — the cluster sizes of one
+    :func:`lloyd_step_arrow` pass — and reduced to k with a
     deterministic weighted Lloyd on the driver. O(rounds) passes over
     the data, exactly like MLlib's implementation of the same paper.
     """
@@ -333,12 +321,12 @@ def init_kmeans_parallel(
         cands.extend((row["x"], row["y"]) for row in new)
 
     # weights: how many points each candidate wins
-    lit_centers = [(i, cx, cy) for i, (cx, cy) in enumerate(cands)]
-    best = nearest_centroid_2d(F.col("x"), F.col("y"), lit_centers)
-    wrows = pts.select(best["cid"].alias("cid")).groupBy("cid").count().collect()
+    _, sizes, _ = lloyd_step_arrow(
+        pts, [(i, cx, cy) for i, (cx, cy) in enumerate(cands)]
+    )
     weights = np.zeros(len(cands))
-    for row in wrows:
-        weights[row["cid"]] = row["count"]
+    for cid, n in sizes.items():
+        weights[cid] = n
 
     # driver-side weighted Lloyd to reduce candidates → k (deterministic)
     arr = np.array(cands)
@@ -448,23 +436,20 @@ def lloyd_step(
 
 
 def lloyd_step_arrow(
-    points_xy: DataFrame,
-    centers: list[Center],
-    n_parts: int | None = None,
+    points_xy: DataFrame, centers: list[Center]
 ) -> tuple[dict[int, tuple[float, float]], dict[int, int], float]:
     """One Lloyd iteration via Arrow-vectorized partial aggregation.
 
     Same contract as :func:`lloyd_step`, different physical strategy:
     ``mapInPandas`` emits K partial-sum rows per partition (numpy
-    argmin over a (batch × K) distance matrix), then a K-row groupBy
-    merges them. Why this exists alongside the pure-Catalyst step: the
-    expression form bakes centroid literals into the plan, so every
-    iteration re-analyzes and re-compiles codegen (~0.2 s/iter — the
-    dominant per-iteration cost at bench scale, and pure driver-side
-    latency at any scale). Here centers ride in the Python closure:
-    the plan is structurally identical every iteration, nothing
-    recompiles, and the shuffle still carries only K rows per
-    partition. Distances use the same (x−cx)²+(y−cy)² float64 op
+    argmin over a (batch × K) distance matrix), merged on the driver
+    (through a K-row groupBy above 1024 partitions).
+    Centers ride in the Python closure, never in plan text, so this is
+    the step for centers SQL cannot carry (the non-finite fallback of
+    :func:`lloyd_step_sql`), for many centers (the k-means|| candidate
+    weights) and for streaming k-means. It is not ``fit``'s step: its
+    per-row Python cost made an 8 M-point fit ~6× the CPU of the
+    Catalyst step. Distances use the same (x−cx)²+(y−cy)² float64 op
     order; argmin ties break to the lowest index = lowest cid
     (reference mapper.py:43 first-wins).
     """
@@ -521,11 +506,7 @@ def lloyd_step_arrow(
     part_df = points_xy.mapInPandas(
         partials, "pid INT, cid INT, sx DOUBLE, sy DOUBLE, n LONG, sse DOUBLE"
     )
-    if n_parts is None:
-        # .rdd forces a plan→RDD conversion; callers looping (fit)
-        # should compute this once and pass it in
-        n_parts = points_xy.rdd.getNumPartitions()
-    if n_parts <= 1024:
+    if points_xy.rdd.getNumPartitions() <= 1024:
         # Single-stage job: P×K partial rows come straight to the
         # driver (MLlib's treeAggregate endgame) — no shuffle at all.
         # Merge in pid order so float sums are deterministic per layout.
@@ -560,15 +541,6 @@ def lloyd_step_arrow(
     return means, sizes, f_cur
 
 
-# Below this many cached rows, one iteration's interpreted-eval cost is
-# smaller than Janino's ~0.2 s whole-stage-codegen compile of the fresh
-# literal plan, so the loop runs faster with codegen off. Above it, the
-# compile amortizes over the scan and codegen wins (and at 100 TB it is
-# not even a rounding error). Measured crossover at sf0.1 (600 K rows):
-# interpreted step ≈ 0.31 s vs codegen step ≈ 0.5 s (compile-dominated).
-CODEGEN_MIN_ROWS = 5_000_000
-
-
 def lloyd_step_sql(
     points_xy: DataFrame, centers: list[Center]
 ) -> tuple[dict[int, tuple[float, float]], dict[int, int], float]:
@@ -585,10 +557,10 @@ def lloyd_step_sql(
 
     The plan itself is the right one at every scale: a narrow literal
     arg-min map (no join, no shuffle of points) into a partial+final
-    hash aggregate whose exchange carries K rows per partition. The
-    caller decides whether whole-stage codegen pays for itself (see
-    ``CODEGEN_MIN_ROWS`` — fresh literals mean a fresh compile every
-    iteration, which dominates at bench scale and vanishes at 100 TB).
+    hash aggregate whose exchange carries K rows per partition. It runs
+    under the session's own confs. Fresh literals cost a codegen
+    compile per iteration; even so, a 10-iteration fit measured on par
+    with interpreted evaluation at 6 K points and faster from 60 K up.
     """
     ordered = sorted((int(c), float(x), float(y)) for c, x, y in centers)
     # repr() of a finite double round-trips exactly through the SQL
@@ -642,7 +614,6 @@ def fit(
     seed: int = 42,
     init_centers: list[Center] | None = None,
     empty_policy: str = "reseed",
-    impl: str = "auto",
     init: str = "random",
     round_digits: int | None = None,
 ) -> KMeansResult:
@@ -652,17 +623,10 @@ def fit(
     absolute-WSSSE test (master.py:22,365) but with tol configurable.
     ``points`` is cached once (the reference re-reads points.txt 3+
     times per iteration); plans are rebuilt from driver-held centers
-    each iteration so lineage does not grow across iterations.
-
-    ``impl``: ``"auto"`` (default) resolves to ``"sql"`` —
-    :func:`lloyd_step_sql`, a pure-Catalyst string-built step with
-    whole-stage codegen toggled off for small inputs (the per-iteration
-    Janino compile of fresh centroid literals costs more than
-    interpreted eval below ``CODEGEN_MIN_ROWS``; above it codegen stays
-    on and amortizes). ``"arrow"`` iterates with
-    :func:`lloyd_step_arrow` (constant plan, Arrow partial agg);
-    ``"expr"`` uses the Py4J-built :func:`lloyd_step`. Same textbook
-    semantics in every mode.
+    each iteration so lineage does not grow across iterations. Every
+    iteration is one :func:`lloyd_step_sql` job, run under the
+    session's own confs: ``fit`` sets none, so concurrent queries on
+    the same session are unaffected.
 
     ``round_digits``: round each iteration's means to this many decimals
     before they become the next generation's centers. With a fixed init
@@ -670,57 +634,11 @@ def fit(
     engines (rounding absorbs float summation-order noise), which is how
     the ``kmeans_fit_fixed`` query puts ``fit`` itself — repair path
     included — under the DuckDB hash gate.
-
-    .. warning:: session-global conf toggle. For the duration of the
-       loop, ``fit`` sets ``spark.sql.adaptive.enabled=false`` and (for
-       small inputs on the sql path) ``spark.sql.codegen.wholeStage=
-       false`` on the shared ``SparkSession``, restoring both in a
-       ``finally``. Any query run CONCURRENTLY on the same session
-       executes with those settings (interpreted, non-adaptive) —
-       harmless for a single-threaded driver, a footgun for
-       multi-threaded library use. Spark has no per-query scope for
-       these confs; callers who need isolation should run ``fit`` on
-       its own session (``spark.newSession()``).
     """
-    if impl == "auto":
-        impl = "sql"
-    cols = ["x", "y"] if impl in ("arrow", "sql") else ["point_id", "x", "y"]
-    points = points.select(*cols)
-    points = normalize_partitions(points).cache()
-    if impl == "arrow":
-        cached_parts = points.rdd.getNumPartitions()
-
-        def step(pts, cs):
-            return lloyd_step_arrow(pts, cs, n_parts=cached_parts)
-
-    elif impl == "sql":
-        step = lloyd_step_sql
-    else:
-        step = lloyd_step
-    spark = points.sparkSession
-    # The loop's only shuffle is a K-row aggregate: AQE's adaptive
-    # re-planning buys nothing there but costs ~0.1 s scheduling per
-    # iteration (20% of iteration wall at sf0.1). Disable for the loop,
-    # restore after — large one-shot queries elsewhere keep AQE.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    cg_before = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    points = normalize_partitions(points.select("x", "y")).cache()
     try:
-        # ONE pre-loop job: bounding box (init/repair sampling range)
-        # plus the row count that decides the codegen strategy — the
-        # count rides the same partial+final agg for free.
-        b = (
-            points.agg(
-                F.min("x").alias("min_x"),
-                F.max("x").alias("max_x"),
-                F.min("y").alias("min_y"),
-                F.max("y").alias("max_y"),
-                F.count(F.lit(1)).alias("n_rows"),
-            ).collect()
-        )[0]
+        b = bbox(points).collect()[0]
         bounds = (b["min_x"], b["max_x"], b["min_y"], b["max_y"])
-        if impl == "sql" and b["n_rows"] < CODEGEN_MIN_ROWS:
-            spark.conf.set("spark.sql.codegen.wholeStage", "false")
         if init_centers is None:
             if init == "k-means||":
                 centers = init_kmeans_parallel(points, k, seed)
@@ -733,7 +651,7 @@ def fit(
         result = KMeansResult(centers=centers)
         f_prev: float | None = None
         for it in range(max_iter):
-            means, sizes, f_cur = step(points, centers)
+            means, sizes, f_cur = lloyd_step_sql(points, centers)
             if round_digits is not None:
                 means = {
                     c: (
@@ -753,6 +671,4 @@ def fit(
             f_prev = f_cur
         return result
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.codegen.wholeStage", cg_before)
         points.unpersist()

@@ -362,8 +362,8 @@ def q_kmeans_elbow_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kmeans_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O13 under the hash gate: the REAL ``fit`` driver loop — Arrow
-    partial-agg step, repair path, convergence bookkeeping — made
+    """O13 under the hash gate: the REAL ``fit`` driver loop — its
+    ``lloyd_step_sql`` step, repair path, convergence bookkeeping — made
     deterministic (fixed init, exactly 3 iterations via ``tol=0.0``,
     ``keep`` repair, per-iteration MEAN_DIGITS rounding) so the
     3-iteration unrolled SQL twin reproduces it value-for-value.

@@ -78,6 +78,11 @@ def get_spark(
             "javax.jdo.option.ConnectionURL",
             "jdbc:derby:;databaseName=/tmp/spark-graft-metastore;create=true",
         )
+        # Reliable checkpoints (``barrier.narrow_barrier`` with
+        # SPARK_GRAFT_RELIABLE_CHECKPOINT=1) stay on disk unless the
+        # ContextCleaner deletes them once their RDD is collected. Core
+        # conf: read only when the context starts.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -3613,6 +3613,10 @@ def test_barrier_paths_survive_reliable_checkpointing(
             tuple(r) for r in df.collect()
         )
 
+    # reliable checkpoint files are deleted with their RDDs only when
+    # get_spark has turned the cleaner on for them
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
     baseline = {n: rows(n) for n in names}
     ckpt = tmp_path / "reliable-ckpt"
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")

@@ -56,7 +56,7 @@ def test_lloyd_step_sql_matches_expr_and_arrow(spark, f4):
     pts = f4.unionByName(extra)
     expr = km.lloyd_step(pts, F4_CENTERS)
     sql = km.lloyd_step_sql(pts.select("x", "y"), F4_CENTERS)
-    arrow = km.lloyd_step_arrow(pts.select("x", "y"), F4_CENTERS, n_parts=2)
+    arrow = km.lloyd_step_arrow(pts.select("x", "y"), F4_CENTERS)
     assert expr == sql == arrow
     means, sizes, _ = sql
     assert sizes[0] == 5  # the tie went to cid 0 everywhere
@@ -118,6 +118,60 @@ def test_fit_converges_and_is_fixpoint(f4):
     assert res.converged
     assert res.wssse_history[0] == 16.0
     assert sorted(res.centers) == [(0, 1.0, 1.0), (1, 11.0, 11.0)]
+
+
+def test_fit_leaves_session_confs_alone(spark, f4, monkeypatch):
+    """fit's Lloyd steps run under the session's own AQE and
+    whole-stage-codegen settings: a session-wide flip for the length of
+    a fit would also change every query run concurrently on it."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage")
+    session = {k: spark.conf.get(k) for k in keys}
+    seen = []
+    step = km.lloyd_step_sql
+
+    def recording_step(points, centers):
+        seen.append({k: spark.conf.get(k) for k in keys})
+        return step(points, centers)
+
+    monkeypatch.setattr(km, "lloyd_step_sql", recording_step)
+    km.fit(f4, k=2, max_iter=2, tol=0.0, init_centers=F4_CENTERS)
+    assert seen == [session, session]
+    assert {k: spark.conf.get(k) for k in keys} == session
+
+
+@pytest.mark.parametrize("n_cands", [1, 70])
+def test_kmpp_scores_matches_assign_bitwise(spark, n_cands):
+    """The Arrow D² scoring of k-means|| is the same float64 op sequence
+    as the literal-expression assignment: d2 equals assign's min_d2 bit
+    for bit, with the input columns and types passed through — over one
+    candidate and over more than 64, for a point exactly between two
+    candidates and for points sitting exactly on a candidate."""
+    import random as rnd
+
+    r = rnd.Random(n_cands)
+    cands = [(0.0, 0.0)] + [
+        (r.uniform(-50, 50), r.uniform(-50, 50)) for _ in range(n_cands - 1)
+    ]
+    rows = [(i, r.uniform(-60, 60), r.uniform(-60, 60)) for i in range(2000)]
+    rows += [(5000 + i, cx, cy) for i, (cx, cy) in enumerate(cands)]  # on a candidate
+    if n_cands > 1:
+        # equidistant from two candidates placed symmetrically about it
+        cands += [(-1000.0, 0.0), (-1000.0, 4.0)]
+        rows.append((9000, -1000.0, 2.0))
+    pts = spark.createDataFrame(rows, POINTS_2D).repartition(4)
+    scored = km.kmpp_scores(pts, cands)
+    assert scored.dtypes == pts.dtypes + [("d2", "double")]
+    got = {p: (x, y, d2) for p, x, y, d2 in scored.collect()}
+    want = {
+        row["point_id"]: (row["x"], row["y"], row["min_d2"])
+        for row in km.assign(pts, [(i, x, y) for i, (x, y) in enumerate(cands)]).collect()
+    }
+    assert {p: tuple(v.hex() for v in t) for p, t in got.items()} == {
+        p: tuple(v.hex() for v in t) for p, t in want.items()
+    }
+    assert all(got[5000 + i][2] == 0.0 for i in range(n_cands))
+    if n_cands > 1:
+        assert got[9000][2] == 4.0
 
 
 def test_fit_wssse_nonincreasing(spark, sf_dir):

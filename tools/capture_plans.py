@@ -1,7 +1,8 @@
-"""Capture .explain('formatted') for tracked bench queries → plans/r16/.
+"""Capture .explain('formatted') for tracked bench queries → plans/<round>/.
 
-Usage: python tools/capture_plans_r16.py <suffix> [query ...]
-Writes plans/r16/<query>_<suffix>.txt for each query (default: every
+Usage: python tools/capture_plans.py <round> [suffix] [query ...]
+Writes plans/<round>/<query>_<suffix>.txt (suffix defaults to
+``before``) for each query (default: every
 BENCH_EXTENSION_QUERIES entry). Also prints a one-line plan-smell
 summary (exchanges, join strategies, sort aggregates, python nodes) to
 stderr so the round's optimization checklist can be built from it.
@@ -21,19 +22,23 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        print(__doc__, file=sys.stderr)
+        return 2
+    round_dir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     from kmeans_mapreduce_spark import queries as Q
     from kmeans_mapreduce_spark.session import get_spark
 
     spark = get_spark("capture-plans")
     registry = {**Q.core_queries(), **Q.extension_queries()}
-    names = sys.argv[2:] or sorted(
+    names = sys.argv[3:] or sorted(
         n for n in registry if n in Q.BENCH_EXTENSION_QUERIES
     )
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r16",
+        round_dir,
     )
     os.makedirs(outdir, exist_ok=True)
     for name in names:

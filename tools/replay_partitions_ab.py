@@ -6,7 +6,8 @@ work inside the stateful stage — with REPLAY_SHUFFLE_PARTITIONS=8
 join replay) only 8 of 32 cores process the ~7.5k keys. This probe
 alternates partition counts inside ONE session (so a box wave hits all
 arms) and reports median wall + summed triggerExecution per arm, with
-health stamps.
+health stamps. Each arm sets ``extensions.REPLAY_KEYED_PARTITIONS``,
+the value both TTL replay call sites read when they run.
 
 Usage: python tools/replay_partitions_ab.py [p1 p2 ...reps-per-arm interleaved]
 Default plan: 8 32 8 32 16 8 32 16.
@@ -37,9 +38,9 @@ def main() -> int:
     spark = get_spark("replay-partitions-ab")
 
     def set_parts(p: int) -> None:
-        d = list(X._drain_bounded_replay.__defaults__)
-        d[-1] = p
-        X._drain_bounded_replay.__defaults__ = tuple(d)
+        # both TTL replays pass shuffle_partitions=REPLAY_KEYED_PARTITIONS
+        # explicitly, reading the module global at call time
+        X.REPLAY_KEYED_PARTITIONS = p
 
     # warm python workers + parquet footers like bench.py
     spark.range(

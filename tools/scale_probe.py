@@ -51,6 +51,13 @@ def main() -> int:
 
     # --- data scaling: per-iteration Lloyd wall at 1x / 4x / 16x ------
     centers = km.init_random(8, (1.0, 110.0, 1.0, 50.0), 42)
+
+    # Jitter the centers per lloyd_step_sql call so every plan carries
+    # FRESH literals — measuring the loop's real per-iteration cost
+    # including the codegen compile, not a compile-cache hit.
+    def jitter(i):
+        return [(c, x + 1e-9 * (i + 1), y) for c, x, y in centers]
+
     for factor in (1, 4, 16):
         df = base
         for i in range(factor - 1):
@@ -61,14 +68,10 @@ def main() -> int:
                     (F.col("y") + F.lit(0.001 * (i + 1))).alias("y"),
                 )
             )
-        df = df.select("x", "y")
         # same partition normalization fit() applies before its loop
-        target = spark.sparkContext.defaultParallelism * 2
-        if df.rdd.getNumPartitions() > 4 * target:
-            df = df.repartition(target)
-        df = df.cache()
+        df = km.normalize_partitions(df.select("x", "y")).cache()
         df.count()  # materialize
-        km.lloyd_step_arrow(df, centers)  # warm codegen+workers
+        km.lloyd_step_arrow(df, centers)  # warm workers
         times = []
         for _ in range(3):
             t = time.time()
@@ -76,27 +79,14 @@ def main() -> int:
             times.append(time.time() - t)
         out[f"lloyd_iter_sec_{factor}x"] = round(min(times), 3)
         out[f"rows_{factor}x"] = n0 * factor
-        # fit()'s DEFAULT step since round 8 (string-built Catalyst,
-        # codegen chosen by input size like fit does). Jitter the
-        # centers per call so every plan carries FRESH literals —
-        # measuring the loop's real per-iteration cost including any
-        # codegen recompile, not a compile-cache hit.
-        n_rows = n0 * factor
-        cg = "false" if n_rows < km.CODEGEN_MIN_ROWS else "true"
-        cg_before = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-        spark.conf.set("spark.sql.codegen.wholeStage", cg)
-        try:
-            def jitter(i):
-                return [(c, x + 1e-9 * (i + 1), y) for c, x, y in centers]
 
-            km.lloyd_step_sql(df, jitter(99))  # warm workers
-            times = []
-            for i in range(3):
-                t = time.time()
-                km.lloyd_step_sql(df, jitter(i))
-                times.append(time.time() - t)
-        finally:
-            spark.conf.set("spark.sql.codegen.wholeStage", cg_before)
+        # fit()'s step, under the session's own confs as fit runs it.
+        km.lloyd_step_sql(df, jitter(99))  # warm
+        times = []
+        for i in range(3):
+            t = time.time()
+            km.lloyd_step_sql(df, jitter(i))
+            times.append(time.time() - t)
         out[f"lloyd_sql_iter_sec_{factor}x"] = round(min(times), 3)
         df.unpersist()
 
