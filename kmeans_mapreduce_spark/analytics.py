@@ -23,7 +23,7 @@ from kmeans_mapreduce_spark.operators import decontam as dc
 from kmeans_mapreduce_spark.operators import selection as sel
 from kmeans_mapreduce_spark.operators import sketches as sk
 from kmeans_mapreduce_spark.operators import textops as tx
-from kmeans_mapreduce_spark.sources.loaders import load_table
+from kmeans_mapreduce_spark.sources.loaders import load_table, parquet_schema
 from kmeans_mapreduce_spark.barrier import narrow_barrier
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -531,8 +531,7 @@ def q_events_stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")

@@ -35,7 +35,7 @@ from kmeans_mapreduce_spark.operators import sampling as sp
 from kmeans_mapreduce_spark.operators import selection as _sel
 from kmeans_mapreduce_spark.operators import similarity as sim
 from kmeans_mapreduce_spark.operators import textops as tx
-from kmeans_mapreduce_spark.sources.loaders import load_table
+from kmeans_mapreduce_spark.sources.loaders import load_table, parquet_schema
 from kmeans_mapreduce_spark.barrier import narrow_barrier
 
 # thresholds / params shared by both engines (calibrated against the
@@ -390,7 +390,7 @@ def q_corpus_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -430,8 +430,7 @@ def q_events_stream_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -468,8 +467,7 @@ def q_events_stream_m4_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -508,8 +506,7 @@ def q_events_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # the file-stream source requires a DIRECTORY; glob-filter the one
     # events file out of the shared sf_dir
     stream = normalize_events_ts(
@@ -541,8 +538,7 @@ def q_events_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFram
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -576,8 +572,7 @@ def q_events_stream_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -625,17 +620,26 @@ def _record_replay_progress(name: str, q) -> None:
 REPLAY_SHUFFLE_PARTITIONS = int(
     os.environ.get("SPARK_GRAFT_REPLAY_PARTITIONS", "8")
 )
-"""Shuffle-partition count pinned for the bounded replays (r13 verdict
-task 1). Stateful streaming instantiates one state store PER shuffle
-partition (several per partition for a stream-stream join) and AQE is
-disabled for stateful workloads, so the replays were paying 32-way
-state-store init/commit for ≤120k keys — 11+ s of the clean bench on
-the join replay alone, and the entire steal-amplification surface on
-loaded boxes. The drained row-SET is partition-invariant (the gate
-sorts before hashing), so a small fixed count only changes overhead,
-never results. This bounds the gated REPLAY harness, not the
-production operators — a real cluster job sizes shuffle partitions to
-its key cardinality as usual."""
+"""Shuffle-partition count pinned for the work-bound bounded replays
+(r13 verdict task 1): tumbling-window aggregates, session windows,
+funnel, the HLL/span/corpus dedups. Stateful streaming instantiates one
+state store PER shuffle partition (several per partition for a
+stream-stream join) and AQE is disabled for stateful workloads, so the
+replays were paying 32-way state-store init/commit for ≤120k keys —
+11+ s of the clean bench on the join replay alone, and the entire
+steal-amplification surface on loaded boxes. The drained row-SET is
+partition-invariant (the gate sorts before hashing), so the count only
+changes overhead, never results. This bounds the gated REPLAY harness,
+not the production operators — a real cluster job sizes shuffle
+partitions to its key cardinality as usual.
+
+The store-bound replays (native dedup, stream-stream join and its
+left-outer variant, stream-static enrich), whose wall is state-store
+init/commit rather than per-key work, are sized from their input bytes
+instead (:func:`_input_sized_partitions`); the TTL dedups use
+``REPLAY_KEYED_PARTITIONS``. The work-bound replays keep this count:
+at sf0.1 on 4 cores, one partition raised the session replay's median
+wall from 4.5 to 6.7 s and the funnel's from 4.1 to 5.8 s."""
 REPLAY_KEYED_PARTITIONS = int(
     os.environ.get(
         "SPARK_GRAFT_REPLAY_KEYED_PARTITIONS",
@@ -655,6 +659,29 @@ The drained row-SET is partition-invariant (the gate sorts before
 hashing), re-verified against the oracle at this count."""
 
 
+def _input_sized_partitions(spark: SparkSession, path: str) -> int:
+    """Shuffle-partition count for a store-bound replay of ``path`` (a
+    parquet file or a directory of them): one partition per
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` of input,
+    clamped to [1, cores]. Each partition costs its state stores' init
+    and commit (on a box without Hadoop native IO, a ``chmod`` process
+    per checkpoint file), so a replay of a few MB gets one partition."""
+    if os.path.isdir(path):
+        n_bytes = sum(
+            os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+    else:
+        n_bytes = os.path.getsize(path)
+    jutils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    advisory = jutils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cores = spark.sparkContext.defaultParallelism
+    return max(1, min(cores, -(-n_bytes // advisory)))
+
+
 def _drain_bounded_replay(
     spark: SparkSession, out: DataFrame, name: str, mode: str,
     timeout_sec: int = 300,
@@ -663,11 +690,13 @@ def _drain_bounded_replay(
     """Shared bounded-replay scaffold for every gated streaming replay
     (was copied ~10x and had already drifted once): memory sink under
     a unique query name, availableNow trigger, a bounded
-    shuffle-partition scope (state-store count — see
-    REPLAY_SHUFFLE_PARTITIONS), a drain guard that refuses to gate a
-    partially-populated sink, and micro-batch progress recording for
-    the bench's setup-vs-compute split. Returns the drained sink as a
-    DataFrame."""
+    shuffle-partition scope (state-store count: REPLAY_SHUFFLE_PARTITIONS
+    for the work-bound replays, REPLAY_KEYED_PARTITIONS for the TTL
+    dedups, :func:`_input_sized_partitions` for the store-bound native
+    dedup, stream-stream joins and enrich), a drain guard that refuses
+    to gate a partially-populated sink, and micro-batch progress
+    recording for the bench's setup-vs-compute split. Returns the
+    drained sink as a DataFrame."""
     import uuid
 
     qname = f"{name}_{uuid.uuid4().hex[:8]}"
@@ -715,8 +744,7 @@ def q_events_stream_ttl_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFr
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -802,8 +830,8 @@ def q_events_stream_ttl_dedup_tws_replay(
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    # every session-global mutation (the pbshim env edit and both
-    # conf.set calls) sits inside the try so an exception anywhere
+    # every session-global mutation (the pbshim env edit and the
+    # provider conf.set) sits inside the try so an exception anywhere
     # after the first mutation still restores env + provider
     restore_env = None
     prov = "spark.sql.streaming.stateStore.providerClass"
@@ -811,7 +839,6 @@ def q_events_stream_ttl_dedup_tws_replay(
     prov_set = False
     try:
         restore_env = _activate_pbshim(spark)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         prov_before = spark.conf.get(prov, None)
         spark.conf.set(
             prov,
@@ -819,7 +846,7 @@ def q_events_stream_ttl_dedup_tws_replay(
             "RocksDBStateStoreProvider",
         )
         prov_set = True
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+        raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
         stream = normalize_events_ts(
             spark.readStream.schema(raw_schema)
             .option("pathGlobFilter", "events.parquet")
@@ -858,8 +885,7 @@ def q_events_stream_native_dedup_replay(
     from kmeans_mapreduce_spark.operators.events import floor_div
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -874,7 +900,10 @@ def q_events_stream_native_dedup_replay(
         ["user_id", "event_type"]
     ).select("user_id", "event_type")
     return _drain_bounded_replay(
-        spark, ded, "events_stream_native_dedup_replay", "append"
+        spark, ded, "events_stream_native_dedup_replay", "append",
+        shuffle_partitions=_input_sized_partitions(
+            spark, f"{sf_dir}/events.parquet"
+        ),
     )
 
 
@@ -900,8 +929,7 @@ def q_events_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -912,7 +940,10 @@ def q_events_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, ASOF_LEFT_TYPE, ASOF_RIGHT_TYPE, horizon_sec=RANGE_HORIZON_SEC
     )
     return _drain_bounded_replay(
-        spark, joined, "events_stream_join_replay", "append"
+        spark, joined, "events_stream_join_replay", "append",
+        shuffle_partitions=_input_sized_partitions(
+            spark, f"{sf_dir}/events.parquet"
+        ),
     ).select(
         "user_id", "event_id", "l_ts_sec", "r_ts_sec", "r_value"
     )
@@ -991,16 +1022,14 @@ def _write_event_time_ordered_split(
         % (zlib.crc32(sf_dir.encode()) & 0xFFFFFFFF, os.getpid()),
     )
     _reap_orphaned_split_dirs(live=out)
-    from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # normalize ts to epoch-nanos BIGINT BEFORE writing: the replay
-    # reads the split with a fixed LONG schema, and a TIMESTAMP-micros
-    # vintage written as-is would be silently reinterpreted as LONG
-    # micros (1000x off — every event lands inside every horizon)
-    e = normalize_events_ts(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    ).select("user_id", "event_type", "event_id", "ts", "value")
+    # load_table normalizes ts to epoch-nanos BIGINT BEFORE writing: the
+    # replay reads the split with a fixed LONG schema, and a
+    # TIMESTAMP-micros vintage written as-is would be silently
+    # reinterpreted as LONG micros (1000x off — every event lands inside
+    # every horizon)
+    e = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "event_id", "ts", "value"
+    )
     n = e.count()
     ranked = e.withColumn(
         "_rn",
@@ -1069,7 +1098,8 @@ def q_events_stream_join_outer_replay(
         join_type="left_outer",
     )
     return _drain_bounded_replay(
-        spark, joined, "events_stream_join_outer_replay", "append"
+        spark, joined, "events_stream_join_outer_replay", "append",
+        shuffle_partitions=_input_sized_partitions(spark, split_dir),
     ).select("user_id", "event_id", "l_ts_sec", "r_ts_sec", "r_value")
 
 
@@ -1087,8 +1117,7 @@ def q_events_stream_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = normalize_events_ts(
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -1110,8 +1139,11 @@ def q_events_stream_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     return _drain_bounded_replay(
-        spark, so.stream_static_enrich(purchases, dim, key="user_id")
-        , "events_stream_enrich_replay", "append"
+        spark, so.stream_static_enrich(purchases, dim, key="user_id"),
+        "events_stream_enrich_replay", "append",
+        shuffle_partitions=_input_sized_partitions(
+            spark, f"{sf_dir}/events.parquet"
+        ),
     ).select("user_id", "event_id", "ts_sec", "segment")
 
 
@@ -2077,7 +2109,7 @@ def q_corpus_stream_span_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/documents.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")

@@ -11,47 +11,95 @@ write is a standard DataFrame sink.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from kmeans_mapreduce_spark.schema import POINTS_2D_CSV
+
+
+# Session confs that change what parquet schema inference returns for
+# the same footer; part of the memo key so a flip re-infers.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_MEMO_MAX = 256
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, inferred once
+    per file version.
+
+    Schema inference without a user schema launches one Spark job to
+    read the footer, on every read. For a single local file the result
+    is memoized per (absolute path, size, ``st_mtime_ns``, the
+    ``_SCHEMA_CONFS`` values), so an unchanged file is never re-read
+    and a rewritten file or a flipped conf is. Directories, non-local
+    paths and sessions with ``spark.sql.parquet.mergeSchema`` on keep
+    plain inference.
+
+    A TIMESTAMP(NANOS) footer fails inference unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` is on; ``get_spark`` sets
+    it at build, and on any other session that error alone turns it on
+    (reads of the file must then keep it on to execute)."""
+    local = os.path.abspath(path)
+    if not os.path.isfile(local) or (
+        spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true"
+    ):
+        return _infer_parquet_schema(spark, path)
+    st = os.stat(local)
+    version = (local, st.st_size, st.st_mtime_ns)
+    key = version + tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _infer_parquet_schema(spark, local)
+        if len(_SCHEMAS) >= _SCHEMA_MEMO_MAX:
+            _SCHEMAS.pop(next(iter(_SCHEMAS)))
+        # re-read the confs: the NANOS fallback may have turned one on
+        _SCHEMAS[version + tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)] = schema
+    return schema
+
+
+def _infer_parquet_schema(spark: SparkSession, path: str) -> StructType:
+    try:
+        return spark.read.parquet(path).schema
+    except Exception as exc:
+        # only the TIMESTAMP(NANOS) schema error earns the legacy conf:
+        # turning it on for ANY failure (missing path, corrupt footer)
+        # would change later reads' types and mask the real error
+        if "NANOS" not in str(exc) and "nanosAsLong" not in str(exc):
+            raise
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return spark.read.parquet(path).schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver-generated parquet table (TESTDATA.md).
 
+    The single load chokepoint for registry tables: the read carries the
+    schema from :func:`parquet_schema`, so only the first load of a file
+    version pays the footer-inference job.
+
     ``events.ts`` has shipped as either TIMESTAMP(NANOS) (older fixture
     vintages — Spark reads it as an epoch-nanos BIGINT under the
-    nanos-as-long legacy conf) or TIMESTAMP(MICROS)/NTZ (current
-    vintage). Every downstream operator and every DuckDB oracle twin
-    (``epoch_ns(ts)``) works in epoch nanoseconds, so normalize to a
-    BIGINT nanos column here, at the single load chokepoint. The NTZ
+    nanos-as-long legacy conf, which ``get_spark`` sets and
+    :func:`parquet_schema` turns on where a NANOS footer needs it) or
+    TIMESTAMP(MICROS)/NTZ (current vintage). Every downstream operator
+    and every DuckDB oracle twin (``epoch_ns(ts)``) works in epoch
+    nanoseconds, so normalize to a BIGINT nanos column here. The NTZ
     branch uses ``timestampdiff`` against an NTZ epoch literal — pure
     wall-clock arithmetic, independent of any session time zone the
     caller may have set.
     """
-    if name == "events":
-        # set the nanos-as-long legacy conf ONLY when the footer
-        # actually needs it (schema inference throws on TIMESTAMP
-        # NANOS without it): unconditionally setting it session-wide
-        # silently turned every later NANOS parquet read into a BIGINT
-        # column; once set it must STAY set for lazy execution of this
-        # read, so the conf leaks only on vintages that require it
-        try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            df.schema
-        except Exception as exc:
-            # only the TIMESTAMP(NANOS) schema error earns the legacy
-            # conf: setting it on ANY failure (missing path, corrupt
-            # footer) would leak a session-wide silent type change and
-            # mask the real error behind a second confusing failure
-            if "NANOS" not in str(exc) and "nanosAsLong" not in str(exc):
-                raise
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        return normalize_events_ts(df)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -24,6 +24,61 @@ def test_read_points_csv_reference_format(spark, tmp_path):
     assert {(r["x"], r["y"]) for r in rows} == {(1.5, 2.5), (-3.0, 4.25), (0.0, 0.0)}
 
 
+def test_load_table_infers_each_file_version_once(spark, tmp_path):
+    """The load chokepoint pays schema inference (a Spark job) once per
+    file version: a second load of an unchanged file starts no job, and
+    rewriting the file with an added column makes the next load show
+    that column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path)
+    path = f"{sf}/t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"load_table_memo_{os.getpid()}_{tmp_path.name}"
+
+    def load_jobs(tag):
+        sc.setJobGroup(f"{group}_{tag}", "load_table")
+        try:
+            df = loaders.load_table(spark, sf, "t")
+        finally:
+            sc.setJobGroup("", "")
+        return df, list(tracker.getJobIdsForGroup(f"{group}_{tag}"))
+
+    _, first = load_jobs("first")
+    assert first, "the first load infers the schema with a Spark job"
+    df, second = load_jobs("second")
+    assert second == [], "an unchanged file must not be re-inferred"
+    assert sorted(r["a"] for r in df.collect()) == [1, 2]
+
+    pq.write_table(pa.table({"a": [3, 4], "b": ["x", "y"]}), path)
+    df = loaders.load_table(spark, sf, "t")
+    assert df.columns == ["a", "b"]
+    assert sorted((r["a"], r["b"]) for r in df.collect()) == [(3, "x"), (4, "y")]
+
+
+def test_parquet_schema_reinfers_when_a_schema_conf_flips(spark, tmp_path):
+    """The memo is keyed by the confs that change inference: the same
+    file reads BINARY as STRING once ``binaryAsString`` is on."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import BinaryType, StringType
+
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    assert isinstance(loaders.parquet_schema(spark, path)["b"].dataType, BinaryType)
+    spark.conf.set(key, "true")
+    try:
+        assert isinstance(loaders.parquet_schema(spark, path)["b"].dataType, StringType)
+    finally:
+        spark.conf.set(key, before)
+    assert isinstance(loaders.parquet_schema(spark, path)["b"].dataType, BinaryType)
+
+
 def test_write_centroids_overwrite_keeps_latest_generation(spark, tmp_path):
     path = str(tmp_path / "centroids")
     gen1 = spark.createDataFrame([(0, 1.0, 1.0), (1, 2.0, 2.0)], "cid INT, cx DOUBLE, cy DOUBLE")

@@ -1641,6 +1641,47 @@ def test_stream_join_outer_replay_split_invariant(spark, tmp_path_factory):
     assert any(r[3] is not None for r in got[2])  # and matches
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "events_stream_native_dedup_replay",
+        "events_stream_join_replay",
+        "events_stream_join_outer_replay",
+        "events_stream_enrich_replay",
+    ],
+)
+def test_store_bound_replays_sized_from_input(spark, monkeypatch, name):
+    """The store-bound replays size their shuffle partitions from input
+    bytes, which is one partition at sf0.001: every stateful operator
+    reports a single shuffle partition in its progress. The enrich
+    replay is stateless (broadcast stream-static join), so it reports no
+    state operator and only the drain's count is checked."""
+    from kmeans_mapreduce_spark import extensions as X
+
+    seen = {}
+    drain = X._drain_bounded_replay
+    record = X._record_replay_progress
+
+    def spy_drain(*args, **kwargs):
+        seen["partitions"] = kwargs.get("shuffle_partitions")
+        return drain(*args, **kwargs)
+
+    def spy_record(qname, q):
+        seen["progress"] = [p for p in q.recentProgress if p]
+        record(qname, q)
+
+    monkeypatch.setattr(X, "_drain_bounded_replay", spy_drain)
+    monkeypatch.setattr(X, "_record_replay_progress", spy_record)
+    df = X.extension_queries()[name](spark, SF)
+    assert df.count() > 0
+    assert seen["partitions"] == 1
+    ops = [o for p in seen["progress"] for o in p.get("stateOperators") or []]
+    if name == "events_stream_enrich_replay":
+        assert ops == []
+    else:
+        assert ops and all(o["numShufflePartitions"] == 1 for o in ops), ops
+
+
 def test_stream_join_outer_eviction_boundary_is_strict(
     spark, tmp_path_factory
 ):

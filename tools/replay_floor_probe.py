@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from kmeans_mapreduce_spark.session import get_spark
-from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
+from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts, parquet_schema
 from kmeans_mapreduce_spark.streaming import stream_ops as so
 from kmeans_mapreduce_spark.extensions import (
     REPLAY_KEYED_PARTITIONS,
@@ -30,8 +30,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> int:
     spark = get_spark("replay-floor-probe")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{SF_DIR}/events.parquet")
 
     def stream():
         return normalize_events_ts(
