@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kmeans_mapreduce_spark.functions.distance import sq_dist_nd
 from kmeans_mapreduce_spark.functions.hashing import MINHASH_P, h64_sql, hash_family
 from kmeans_mapreduce_spark.functions.text import (
     LANG_MARKERS,
@@ -3030,7 +3029,7 @@ def q_similarity_rebuild_crossover(
     r10 verdict task 7): for nightly increments of 10/20/50% of the
     corpus (vec_id % 10 buckets), the decision table an index operator
     reads before choosing between appending into the existing coarse
-    cells (cost ∝ |increment|, one narrow literal-argmin pass) and
+    cells (cost ∝ |increment|, one narrow Arrow argmin pass) and
     retraining the quantizer from scratch (cost ∝ (FIT_ITERS+1)·|corpus|
     scan-rows: the Lloyd passes plus the final reassignment). Reports
     per fraction: populations, rebuild scan-rows, nights-to-amortize
@@ -3096,7 +3095,7 @@ def q_similarity_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe=const is bounded by the LARGEST probed cell, so a skewed
     quantizer silently costs what the recall dial appears to buy;
     this is the one-row-per-cell number an index build ships with.
-    One literal-argmin assignment (no join, no shuffle) + a K-group
+    One Arrow argmin assignment (no join, no shuffle) + a K-group
     aggregate + a 1-row broadcast total."""
     from kmeans_mapreduce_spark.operators.dedup import assign_cells
 
@@ -3699,32 +3698,16 @@ def q_kmeans_nd_loop2(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts.filter(F.col("vec_id").isin(ND_CENTROID_IDS)).orderBy("vec_id").collect()
     )
     centers = [(i, list(r["vec"])) for i, r in enumerate(cents)]
-
-    def assign_with_vec(centers_):
-        cands = [
-            F.struct(
-                sq_dist_nd(
-                    F.col("vec"), F.array(*[F.lit(float(x)) for x in cvec])
-                ).alias("d2"),
-                F.lit(int(cid)).cast("int").alias("cid"),
-            )
-            for cid, cvec in centers_
-        ]
-        best = F.array_min(F.array(*cands))
-        return pts.select("vec", best["cid"].alias("cid"))
-
     mean_aggs = [
         F.round(F.avg(F.col("vec").getItem(i)), 6).alias(f"c{i}")
         for i in range(EMB_DIM)
     ]
-    it1 = (
-        assign_with_vec(centers).groupBy("cid").agg(*mean_aggs).collect()
-    )
+    it1 = knd.assign_nd(pts, centers).groupBy("cid").agg(*mean_aggs).collect()
     centers1 = [
         (r["cid"], [r[f"c{i}"] for i in range(EMB_DIM)]) for r in it1
     ]
     stats2 = (
-        assign_with_vec(centers1)
+        knd.assign_nd(pts, centers1)
         .groupBy("cid")
         .agg(*mean_aggs, F.count(F.lit(1)).alias("n"))
     )
@@ -3824,16 +3807,14 @@ def q_kmeans_nd_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ND_LARGE_K = 256  # production-K gate: the scale where literal plans die
+ND_LARGE_K = 256  # production-K gate for the Arrow matmul Lloyd step
 
 
 def q_kmeans_nd_fit_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-K n-D fit under the hash gate (r8 verdict task 4):
-    K=256 × d=64 — the K·d regime where the literal-argmin plan is
-    refused (``CELL_LITERAL_MAX_KD``) and the Arrow matmul assignment
-    (``kmeans_nd.lloyd_step_nd``) is the only sane physical plan — so
-    its correctness is pinned exactly where the plan-size switch makes
-    it the default. Same determinism discipline as
+    K=256 × d=64, the production-K regime of the Arrow matmul step
+    (``kmeans_nd.lloyd_step_nd``), whose float sums are pinned here
+    through the rounded means. Same determinism discipline as
     ``kmeans_nd_fit_fixed``: init = first K corpus rows by vec_id,
     exactly 2 iterations (tol=0.0), per-iteration HALF_UP rounding to
     6 digits; clusters empty in an iteration keep their previous

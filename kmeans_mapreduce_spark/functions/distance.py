@@ -57,17 +57,6 @@ def nearest_centroid_2d(
     return F.array_min(F.array(*candidates))
 
 
-def sq_dist_nd(vec: Column, cvec: Column) -> Column:
-    """Squared Euclidean distance between two ``array<double>`` columns.
-
-    ``zip_with`` + ``aggregate`` stay in Catalyst (no Python); the fold
-    is sequential in index order — the same order DuckDB's list
-    functions use, so oracle comparisons agree after rounding.
-    """
-    diffs = F.zip_with(vec, cvec, lambda a, b: (a - b) * (a - b))
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
-
-
 def dot_nd(a: Column, b: Column) -> Column:
     prods = F.zip_with(a, b, lambda x, y: x * y)
     return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)

@@ -1,7 +1,6 @@
 from kmeans_mapreduce_spark.operators.kmeans import (  # noqa: F401
     KMeansResult,
     assign,
-    assign_df,
     bbox,
     fit,
     init_random,

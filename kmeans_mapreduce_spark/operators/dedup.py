@@ -877,131 +877,27 @@ def hamming_banded_pairs(
 
 EMBED_BLOCK_ROW_CAP = 8192  # tile oversized cosine blocks above this
 
-# K·dim ceiling for the literal-argmin plan. Above it, building +
-# analyzing the K·d F.lit() nodes dominates execution — measured at
-# sf0.1 (r9): plan wall 0.99 s at K·d=512, 1.54 s at 1024, 2.60 s at
-# 2048, 5.33 s at 4096 (superlinear, Py4J tree building + Catalyst
-# analysis), while the Arrow path plans in ~0.03 s at ANY K·d and is
-# bit-identical (dim-sequential float64 folds, see
-# _assign_cells_arrow). 1024 keeps every registered query (K≤16 ×
-# d=64) on the zero-Python literal plan; production SemDeDup/IVF
-# quantizers (K 10²–10⁴) land on Arrow.
-CELL_LITERAL_MAX_KD = 1024
-
-
-def _assign_cells_arrow(
-    emb: DataFrame,
-    centers: list[tuple[int, list[float]]],
-    out: str,
-    keep_d2: str | None,
-) -> DataFrame:
-    """Arrow/matmul twin of the literal ``assign_cells`` plan: one
-    ``mapInPandas`` pass, numpy argmin per batch. Bit-identical to the
-    literal path by construction — the squared distance accumulates
-    DIM-SEQUENTIALLY in float64 (``acc += (x_d − c_d)²`` for d in index
-    order), the exact IEEE-754 op sequence of ``sq_dist_nd``'s
-    ``F.aggregate`` fold, and ties break to the lowest cid (centers
-    sorted by cid; ``argmin`` keeps the first minimum). Plan size is
-    O(1) in K·d — the centers ride in the task closure, not the plan —
-    which is what survives a K≈10⁴ production quantizer."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
-    order = sorted((int(c), [float(x) for x in v]) for c, v in centers)
-    cids = np.array([c for c, _ in order], dtype=np.int32)
-    C = np.array([v for _, v in order], dtype=np.float64)  # K×d
-
-    fields = [emb.schema["vec_id"], emb.schema["embedding"]]
-    fields.append(StructField(out, IntegerType(), False))
-    if keep_d2 is not None:
-        fields.append(StructField(keep_d2, DoubleType(), False))
-    schema = StructType(fields)
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            w, d2 = seq_argmin_d2(X, C)
-            cols = {
-                "vec_id": pdf["vec_id"],
-                "embedding": pdf["embedding"],
-                out: cids[w],
-            }
-            if keep_d2 is not None:
-                cols[keep_d2] = d2
-            yield pd.DataFrame(cols)
-
-    return emb.select("vec_id", "embedding").mapInPandas(fn, schema=schema)
-
 
 def assign_cells(
     emb: DataFrame,
     centers: list[tuple[int, list[float]]],
     out: str = "label",
     keep_d2: str | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
-    """Coarse-cell assignment shared by the cell-blocked embedding ops
-    (semantic dedup, k-NN graph, IVF cell maps): tie-break (d2, cid)
-    matches the twins' ``ORDER BY d2, cid``. One definition so the
-    tie-break/fold rules cannot drift between consumers. ``keep_d2``
-    additionally emits the winning squared distance under that name
-    (the outlier detector's input).
+    """Coarse-cell assignment of a ``(vec_id, embedding)`` table for the
+    cell-blocked embedding ops (semantic dedup, k-NN graph, IVF cell
+    maps): :func:`kmeans_nd.assign_nd`'s cid under ``out`` and, if
+    ``keep_d2`` names it, the winning squared distance (the outlier
+    detector's input). Ties go to the lowest cid, as the twins'
+    ``ORDER BY d2, cid``."""
+    from kmeans_mapreduce_spark.operators.kmeans_nd import assign_nd
 
-    Two physical plans, same bits (``impl='auto'`` picks by K·dim
-    against :data:`CELL_LITERAL_MAX_KD`):
-
-    - ``'literal'`` — centers ship inside the plan as K·d ``F.lit``
-      nodes (O6/O16 shape — no join, no shuffle, whole-stage codegen).
-      Optimal while the expression tree stays small.
-    - ``'arrow'`` — one ``mapInPandas`` matmul-style pass with
-      dim-sequential float64 folds; O(1) plan size, the 100 TB path
-      for production K (SemDeDup/IVF coarse quantizers).
-    """
-    from kmeans_mapreduce_spark.functions.distance import sq_dist_nd
-
-    if not centers:
-        raise ValueError("assign_cells: empty centers")
-    if impl == "auto":
-        kd = len(centers) * len(centers[0][1])
-        impl = "literal" if kd <= CELL_LITERAL_MAX_KD else "arrow"
-    if impl == "arrow":
-        return _assign_cells_arrow(emb, centers, out, keep_d2)
-    if impl != "literal":
-        raise ValueError(f"assign_cells: unknown impl {impl!r}")
-
-    cands = [
-        F.struct(
-            sq_dist_nd(
-                F.col("__v"), F.array(*[F.lit(float(x)) for x in cvec])
-            ).alias("d2"),
-            F.lit(int(cid)).cast("int").alias("cid"),
-        )
-        for cid, cvec in centers
-    ]
-    best = F.array_min(F.array(*cands))
-    if keep_d2 is None:
-        return emb.withColumn(
-            "__v", F.transform(F.col("embedding"), lambda v: v.cast("double"))
-        ).select("vec_id", "embedding", best["cid"].alias(out))
-    # two-step projection: materialize the argmin struct ONCE, then
-    # expand both fields. CollapseProject refuses to inline a non-cheap
-    # alias referenced twice, so the K-centroid fold is evaluated once
-    # per row instead of once per extracted field.
-    staged = emb.withColumn(
-        "__v", F.transform(F.col("embedding"), lambda v: v.cast("double"))
-    ).select("vec_id", "embedding", best.alias("__best"))
-    return staged.select(
-        "vec_id",
-        "embedding",
-        F.col("__best")["cid"].alias(out),
-        F.col("__best")["d2"].alias(keep_d2),
-    )
+    cols = [F.col("cid").alias(out)]
+    if keep_d2 is not None:
+        cols.append(F.col("min_d2").alias(keep_d2))
+    return assign_nd(
+        emb.select("vec_id", F.col("embedding").alias("vec")), centers
+    ).select("vec_id", F.col("vec").alias("embedding"), *cols)
 
 
 def seq_normalize(V):
@@ -1016,26 +912,6 @@ def seq_normalize(V):
         acc += V[:, d] * V[:, d]
     with np.errstate(divide="ignore", invalid="ignore"):
         return V / np.sqrt(acc)[:, None]
-
-
-def seq_argmin_d2(X, C):
-    """Shared nearest-center kernel for the Arrow assignment paths
-    (``_assign_cells_arrow`` here, ``kmeans_nd.assign_nd_arrow``):
-    squared distances accumulated DIM-SEQUENTIALLY in float64
-    (``acc += (x_d − c_d)²`` in index order — the exact IEEE-754 op
-    sequence of ``sq_dist_nd``'s F.aggregate fold), winner =
-    ``argmin`` first-minimum (ties to the lowest row index = lowest
-    cid when C is cid-sorted). ONE implementation so the bit-identity
-    promise to the SQL twins cannot drift between consumers. Returns
-    ``(winner_idx, min_d2)`` arrays."""
-    import numpy as np
-
-    acc = np.zeros((len(X), len(C)))
-    for d in range(C.shape[1]):
-        diff = X[:, d, None] - C[None, :, d]
-        acc += diff * diff
-    w = acc.argmin(axis=1)
-    return w, acc[np.arange(len(X)), w]
 
 
 def seq_fold_gemm(A, B):
@@ -1634,11 +1510,11 @@ def semantic_dedup_pairs(
     O(Σ|cell|²) independent blocks; cross-cell near-dups are the
     method's accepted miss (the paper's recall/cost dial is K).
 
-    Assignment is the same narrow literal-argmin plan as the k-means
-    engine (O6/O16: centers ship inside the plan, no join, no
-    shuffle); intra-cell pairing reuses the tiled-GEMM machinery of
-    :func:`embedding_near_dup`, so one hot cell becomes m(m+1)/2
-    bounded tasks instead of a straggler. ``centers`` is a driver-held
+    Assignment is the n-D engine's own operator
+    (:func:`kmeans_nd.assign_nd`: one Arrow argmin pass, centers in the
+    task closure, no join, no shuffle); intra-cell pairing reuses the
+    tiled-GEMM machinery of :func:`embedding_near_dup`, so one hot cell
+    becomes m(m+1)/2 bounded tasks instead of a straggler. ``centers`` is a driver-held
     K-row list — at 100 TB it comes from a k-means‖ fit (O11); here
     the caller pins it to fixed corpus rows so the DuckDB twin can
     replay the assignment exactly.

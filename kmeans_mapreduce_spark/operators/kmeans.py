@@ -8,11 +8,13 @@ mapper processes (master.py:179-189) which write mod-R partition files
 master loops until |ΔWSSSE| < 0.5 (master.py:352-366), re-scanning the
 raw input twice per iteration for the objective (master.py:315-332).
 
-The Spark-native shape: per iteration, ONE job —
+The Spark-native shape: per iteration, one action —
 a narrow arg-min map (no shuffle, no crossJoin: centers are K literals
 inside whole-stage codegen) feeding one partial+final hash aggregation
 whose shuffle carries O(partitions × K) rows, not O(N) like the
-reference (no map-side combine there — BASELINE.md §2). WSSSE falls out
+reference (no map-side combine there — BASELINE.md §2). Under the
+session's default AQE the K-row exchange is its own query stage, so
+the action runs as 2 Spark jobs. WSSSE falls out
 of the same aggregation: zero extra scans. Centroids live on the driver
 between iterations (K rows), exactly like MLlib's own KMeans; plans are
 rebuilt from literals each iteration so lineage stays O(1).
@@ -45,7 +47,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kmeans_mapreduce_spark.functions.distance import nearest_centroid_2d, sq_dist_2d
+from kmeans_mapreduce_spark.functions.distance import nearest_centroid_2d
 
 Center = tuple[int, float, float]  # (cid, cx, cy)
 
@@ -78,7 +80,7 @@ def normalize_partitions(df: DataFrame) -> DataFrame:
     measured 2.4× slower than 8-way; a quarter of the cores is the
     measured sweet spot). ONE shuffle, amortized over all iterations.
     Shared by the 2-D ``fit`` (Catalyst step), the n-D ``fit_nd`` and
-    the spectral embedding loop (Arrow steps) — retune here, not
+    ``similarity.fit_pq_codebooks`` (Arrow steps) — retune here, not
     per-copy."""
     spark_ctx = df.sparkSession.sparkContext
     target = spark_ctx.defaultParallelism * 2
@@ -109,37 +111,6 @@ def assign(points: DataFrame, centers: list[Center]) -> DataFrame:
         best["cid"].alias("cid"),
         best["d2"].alias("min_d2"),
     )
-
-
-def assign_df(points: DataFrame, centroids: DataFrame) -> DataFrame:
-    """General assignment when centroids are a DataFrame (unknown K).
-
-    Broadcast nested-loop join + per-point struct-min aggregation — the
-    declarative form of the reference's RPC centroid fan-out
-    (master.py:184-188) + Python argmin loop (mapper.py:38-49). The
-    explicit ``broadcast`` hint guarantees no N×K shuffle at any scale;
-    the groupBy shuffles N rows once. Prefer :func:`assign` inside
-    loops; use this when centroids come from data (e.g. another query).
-    """
-    d2 = sq_dist_2d(F.col("x"), F.col("y"), F.col("cx"), F.col("cy"))
-    scored = points.crossJoin(F.broadcast(centroids)).select(
-        "point_id",
-        "x",
-        "y",
-        F.struct(d2.alias("d2"), F.col("cid").cast("int").alias("cid")).alias("cand"),
-    )
-    best = (
-        scored.groupBy("point_id", "x", "y")
-        .agg(F.min("cand").alias("best"))
-        .select(
-            "point_id",
-            "x",
-            "y",
-            F.col("best.cid").alias("cid"),
-            F.col("best.d2").alias("min_d2"),
-        )
-    )
-    return best
 
 
 # ---------------------------------------------------------------------------
@@ -410,7 +381,8 @@ class KMeansResult:
 def lloyd_step(
     points: DataFrame, centers: list[Center]
 ) -> tuple[dict[int, tuple[float, float]], dict[int, int], float]:
-    """One Lloyd iteration as ONE Spark job.
+    """One Lloyd iteration as one action (2 Spark jobs under AQE: the
+    K-row exchange is its own query stage).
 
     Single aggregation returns per-cluster (mean, count) AND the WSSSE
     of the *current* centers: sums shuffle as O(partitions×K) partial

@@ -1,16 +1,15 @@
 """n-D k-means over array<double> columns (SURVEY §7 Phase 4 / FIXTURES F6).
 
-Two assignment paths, chosen by K×dim:
-
-- **expression path** (small K·dim): unrolled per-centroid distance
-  expressions + array_min argmin — narrow, codegen'd, zero Python.
-  Same shape as the 2-D engine.
-- **pandas path** (large K·dim): ``mapInPandas`` with one numpy
-  matmul per Arrow batch — ``|points|×dim @ dim×K`` — the vectorized
-  scale path (this is how you do 768-dim × K=1000 on 100 TB; a
-  per-row expression tree would explode). Partial per-batch centroid
-  sums are emitted from the same pass, so the shuffle carries
-  O(batches×K) rows.
+One nearest-centroid assignment, :func:`assign_nd`: a ``mapInPandas``
+pass over :func:`seq_argmin_d2`, whose squared distances fold dimension
+by dimension in float64 — the op order of the DuckDB twins'
+``list_sum(list_transform(...))`` fold, so unrounded distances match
+them bit for bit. The centers ride in the task closure, so the plan is
+O(1) in K·dim. The Lloyd step :func:`lloyd_step_nd` scores with one
+numpy matmul per Arrow batch instead (``|points|×dim @ dim×K``) and
+emits per-partition centroid sums from the same pass, so the shuffle
+carries O(partitions×K) rows; its means are rounded before any gate
+sees them.
 """
 
 from __future__ import annotations
@@ -21,56 +20,41 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from kmeans_mapreduce_spark.functions.distance import sq_dist_nd
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 NDCenter = tuple[int, list[float]]
 
 
-def assign_nd_expr(points: DataFrame, centers: list[NDCenter]) -> DataFrame:
-    """Expression-path assignment: (point_id, cid, min_d2).
-
-    ``points`` must have columns (point_id, vec: array<double>).
-    Tie-break: lowest cid (lexicographic struct min), as in 2-D.
-    Plan size is O(K·dim) literals — prefer :func:`assign_nd`, which
-    auto-switches to the Arrow path above the plan-size threshold."""
-    cands = [
-        F.struct(
-            sq_dist_nd(
-                F.col("vec"), F.array(*[F.lit(float(x)) for x in cvec])
-            ).alias("d2"),
-            F.lit(int(cid)).cast("int").alias("cid"),
-        )
-        for cid, cvec in centers
-    ]
-    best = F.array_min(F.array(*cands))
-    return points.select(
-        "point_id", best["cid"].alias("cid"), best["d2"].alias("min_d2")
-    )
+def seq_argmin_d2(X, C):
+    """Nearest row of ``C`` for each row of ``X``: squared distances
+    accumulated DIM-SEQUENTIALLY in float64 (``acc += (x_d − c_d)²`` in
+    index order — the op sequence of the twins'
+    ``list_sum(list_transform(...))`` fold), winner = ``argmin``'s
+    first minimum (ties to the lowest row of ``C``). ONE implementation
+    so the bit-identity promise to the SQL twins cannot drift between
+    consumers. Returns ``(winner_idx, min_d2)`` arrays."""
+    acc = np.zeros((len(X), len(C)))
+    for d in range(C.shape[1]):
+        diff = X[:, d, None] - C[None, :, d]
+        acc += diff * diff
+    w = acc.argmin(axis=1)
+    return w, acc[np.arange(len(X)), w]
 
 
-def assign_nd_arrow(points: DataFrame, centers: list[NDCenter]) -> DataFrame:
-    """Arrow twin of :func:`assign_nd_expr` — same output contract
-    (point_id, cid, min_d2), bit-identical distances via the SHARED
-    ``dedup.seq_argmin_d2`` kernel (dim-sequential float64 folds
-    replicate ``sq_dist_nd``'s F.aggregate order, ties to lowest cid:
-    centers sorted; argmin keeps the first minimum), O(1) plan size in
-    K·dim."""
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
-    from kmeans_mapreduce_spark.operators.dedup import seq_argmin_d2
-
+def assign_nd(points: DataFrame, centers: list[NDCenter]) -> DataFrame:
+    """Nearest-centroid assignment of the ``vec`` column (an array of
+    numbers): ``points``' own columns, types unchanged, plus
+    ``cid INT`` and the winning squared distance ``min_d2 DOUBLE``.
+    Ties go to the lowest cid (centers sorted by cid, first minimum
+    wins)."""
+    if not centers:
+        raise ValueError("assign_nd: empty centers")
     order = sorted((int(c), [float(x) for x in v]) for c, v in centers)
     cids = np.array([c for c, _ in order], dtype=np.int32)
     C = np.array([v for _, v in order], dtype=np.float64)
-
-    # point_id keeps the INPUT's type (assign_nd_expr preserves it, so
-    # impl='auto' must not widen e.g. INT→LONG when K·dim crosses the
-    # dispatch threshold)
-    out_schema = StructType(
-        [
-            points.schema["point_id"],
+    schema = StructType(
+        points.schema.fields
+        + [
             StructField("cid", IntegerType(), False),
             StructField("min_d2", DoubleType(), False),
         ]
@@ -80,40 +64,11 @@ def assign_nd_arrow(points: DataFrame, centers: list[NDCenter]) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["vec"]]
-            )
+            x = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
             w, d2 = seq_argmin_d2(x, C)
-            yield pd.DataFrame(
-                {
-                    "point_id": pdf["point_id"],
-                    "cid": cids[w],
-                    "min_d2": d2,
-                }
-            )
+            yield pdf.assign(cid=cids[w], min_d2=d2)
 
-    return points.select("point_id", "vec").mapInPandas(fn, schema=out_schema)
-
-
-def assign_nd(
-    points: DataFrame, centers: list[NDCenter], impl: str = "auto"
-) -> DataFrame:
-    """n-D nearest-centroid assignment with the plan-size auto-switch
-    (same dial as ``dedup.assign_cells``): the K·dim-literal expression
-    plan below ``CELL_LITERAL_MAX_KD``, the O(1)-plan Arrow matmul pass
-    above it. Both paths are bit-identical by construction."""
-    from kmeans_mapreduce_spark.operators.dedup import CELL_LITERAL_MAX_KD
-
-    if not centers:
-        raise ValueError("assign_nd: empty centers")
-    if impl == "auto":
-        kd = len(centers) * len(centers[0][1])
-        impl = "expr" if kd <= CELL_LITERAL_MAX_KD else "arrow"
-    if impl == "expr":
-        return assign_nd_expr(points, centers)
-    if impl == "arrow":
-        return assign_nd_arrow(points, centers)
-    raise ValueError(f"assign_nd: unknown impl {impl!r}")
+    return points.mapInPandas(fn, schema=schema)
 
 
 def _assign_batches(centers_arr: np.ndarray):

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from kmeans_mapreduce_spark.functions.distance import cosine_sim, dot_nd, norm_nd
 from kmeans_mapreduce_spark.functions.text import ieee_round_pos, ieee_round_signed
 from kmeans_mapreduce_spark.barrier import narrow_barrier
+from kmeans_mapreduce_spark.operators.kmeans_nd import seq_argmin_d2
 
 NUM_PLANES = 8
 DIM = 64
@@ -300,9 +301,9 @@ def build_ivf_index(
     the normalized vector, vectorized per Arrow batch with
     DIM-ORDER-PRESERVING numpy folds — every accumulation runs in
     index order, so d2, the argmin, and nv are bit-identical to the
-    Catalyst ``sq_dist_nd``/``dot_nd`` sequential folds the oracle
-    mirrors (interpreted HOFs cost ~64 per-element interpreter hops
-    per row; this is the same math at numpy speed).
+    twins' ``list_sum(list_transform(...))`` folds (the cell comes
+    from :func:`kmeans_nd.seq_argmin_d2`, the engine's one n-D argmin
+    kernel).
 
     ``carry_cols``: extra metadata columns stored ALONGSIDE the index
     rows (the vector-DB layout for filtered search — predicates prune
@@ -318,18 +319,14 @@ def build_ivf_index(
         "vec_id", _as_double_vec(F.col("embedding")).alias("v0"), *carry
     )
     C = np.array([cvec for _, cvec in centers], dtype=np.float64)
-    n_cells, dim = C.shape
+    dim = C.shape[1]
 
     def build_index(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             V = np.stack(pdf["v0"].to_numpy()).astype(np.float64)
-            D = np.zeros((len(V), n_cells))
-            for d in range(dim):
-                diff = V[:, d][:, None] - C[:, d][None, :]
-                D += diff * diff
-            cell = D.argmin(axis=1)  # first min → lowest cell on ties
+            cell, _ = seq_argmin_d2(V, C)  # ties → lowest cell
             acc = np.zeros(len(V))
             for d in range(dim):
                 acc += V[:, d] * V[:, d]
@@ -746,11 +743,7 @@ def fit_pq_codebooks(
                     if _C is not None:
                         # residual mode: assign cells on the raw
                         # vectors first (same fold as build_pq_index)
-                        D = np.zeros((len(x), _C.shape[0]))
-                        for d in range(dim):
-                            diff = x[:, d][:, None] - _C[:, d][None, :]
-                            D += diff * diff
-                        cell = D.argmin(axis=1)
+                        cell, _ = seq_argmin_d2(x, _C)
                     acc_n = np.zeros(len(x))
                     for d in range(dim):
                         acc_n += x[:, d] * x[:, d]
@@ -978,7 +971,7 @@ def build_pq_index(
     _check_cell_ids(centers, "build_pq_index")
     e0 = emb.select("vec_id", _as_double_vec(F.col("embedding")).alias("v0"))
     C = np.array([cvec for _, cvec in centers], dtype=np.float64)
-    n_cells, dim = C.shape
+    dim = C.shape[1]
     CN = (
         np.array([_norm_py(cvec) for _, cvec in centers], dtype=np.float64)
         if residual
@@ -1002,11 +995,7 @@ def build_pq_index(
             if not len(pdf):
                 continue
             V = np.stack(pdf["v0"].to_numpy()).astype(np.float64)
-            D = np.zeros((len(V), n_cells))
-            for d in range(dim):
-                diff = V[:, d][:, None] - C[:, d][None, :]
-                D += diff * diff
-            cell = D.argmin(axis=1)
+            cell, _ = seq_argmin_d2(V, C)
             acc = np.zeros(len(V))
             for d in range(dim):
                 acc += V[:, d] * V[:, d]
@@ -1017,13 +1006,9 @@ def build_pq_index(
             enc = nv - CN[cell] if residual else nv
             codes = np.zeros((len(V), m), dtype=np.int32)
             for mi in range(m):
-                Dm = np.zeros((len(V), n_codes))
-                for d in range(sub):
-                    diff = (
-                        enc[:, mi * sub + d][:, None] - CBm[mi][:, d][None, :]
-                    )
-                    Dm += diff * diff
-                codes[:, mi] = Dm.argmin(axis=1)  # first min → lowest code
+                codes[:, mi], _ = seq_argmin_d2(
+                    enc[:, mi * sub : (mi + 1) * sub], CBm[mi]
+                )  # ties → lowest code
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -1368,7 +1353,7 @@ def knn_graph(
     miss, exactly as in IVF with nprobe=1 — the cell count K is the
     recall/cost dial.
 
-    Scale shape: the narrow literal-argmin assignment (no shuffle)
+    Scale shape: the narrow Arrow argmin assignment (no shuffle)
     shards the O(N²) score space into per-cell blocks; oversized cells
     split into pair-complete tile groups (``dedup.tiled_blocks``), each
     computing one bounded sequential-fold GEMM. A group emits only each
@@ -1678,7 +1663,7 @@ def embedding_outliers(
     ``is_outlier=False`` (two-valued, so ``filter(~is_outlier)``
     keeps singleton-cell rows).
 
-    Scale shape: literal-argmin assignment (no join, no shuffle), one
+    Scale shape: Arrow argmin assignment (no join, no shuffle), one
     map-side-combinable K-row aggregate, stats broadcast back onto a
     narrow scan — the corpus is never exchanged.
 
@@ -2070,7 +2055,7 @@ def index_drift(
     summation-order noise the micro rounding absorbs (boundary-scanned,
     like every rounded aggregate).
 
-    Scale shape: assignment is the shared literal-argmin (no join, no
+    Scale shape: assignment is the shared Arrow argmin (no join, no
     shuffle); the per-dim explode shuffles (cell, half, dim)-keyed rows
     — d× the corpus rows but map-side combined into O(K·2·d) groups
     (production would fuse this into the PCA-style Arrow suffstats

@@ -15,6 +15,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    box's physical memory, at most 32g. In local mode the driver is
+    the executor, so it is sized like one, but a fixed 32g lets the
+    JVM grow past a smaller box until the kernel kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 32 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "kmeans-mapreduce-spark",
     master: str | None = None,
@@ -55,7 +64,8 @@ def get_spark(
         # like an executor. Applied at JVM launch; no-op on getOrCreate
         # of an existing session.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
         .config("spark.driver.maxResultSize", "4g")
         # Whole-stage codegen emits one class per distinct plan; long

@@ -2547,31 +2547,34 @@ def test_gapfill_null_type_series_survives_all_gap(spark):
 
 
 def test_assign_cells_arrow_matches_literal_bitwise(spark):
-    """Task: the literal-argmin plan does not survive production K
-    (K·d F.lit nodes stall Catalyst analysis), so assign_cells
-    auto-switches to an Arrow matmul path above CELL_LITERAL_MAX_KD.
-    The switch is only safe if the two paths are BIT-identical —
-    dim-sequential float64 folds, (d2, cid) tie-break — so compare
-    them on the real sf0.001 embeddings, unrounded, with keep_d2."""
+    """assign_cells runs one Arrow argmin at every K·d; its answer must
+    be BIT-identical to the literal definition — a dim-sequential
+    float64 fold from 0.0, (d2, cid) tie-break — so compare it with a
+    pure-Python fold on the real sf0.001 embeddings, unrounded, with
+    keep_d2."""
     from kmeans_mapreduce_spark.operators import dedup as dd
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    rows = emb.orderBy("vec_id").collect()
     # centers: real corpus rows (first 6 by vec_id) → realistic floats
-    first = emb.orderBy("vec_id").limit(6).collect()
     centers = [
-        (i, [float(x) for x in r["embedding"]]) for i, r in enumerate(first)
+        (i, [float(x) for x in r["embedding"]]) for i, r in enumerate(rows[:6])
     ]
-    lit = {
-        r["vec_id"]: (r["cell"], r["d2"])
-        for r in dd.assign_cells(
-            emb, centers, out="cell", keep_d2="d2", impl="literal"
-        ).collect()
-    }
+
+    def fold(x, c):
+        acc = 0.0
+        for a, b in zip(x, c):
+            acc += (a - b) * (a - b)
+        return acc
+
+    lit = {}
+    for r in rows:
+        x = [float(v) for v in r["embedding"]]
+        d2, cid = min((fold(x, c), i) for i, c in centers)
+        lit[r["vec_id"]] = (cid, d2.hex())
     arr = {
-        r["vec_id"]: (r["cell"], r["d2"])
-        for r in dd.assign_cells(
-            emb, centers, out="cell", keep_d2="d2", impl="arrow"
-        ).collect()
+        r["vec_id"]: (r["cell"], r["d2"].hex())
+        for r in dd.assign_cells(emb, centers, out="cell", keep_d2="d2").collect()
     }
     assert len(lit) == 500
     # exact equality, doubles unrounded — same IEEE-754 op sequence
@@ -2579,9 +2582,9 @@ def test_assign_cells_arrow_matches_literal_bitwise(spark):
 
 
 def test_assign_cells_arrow_tie_breaks_to_lowest_cid(spark):
-    """Duplicate centers under different cids: both paths must pick
-    the LOWEST cid (lexicographic (d2, cid) struct-min ≡ argmin over
-    cid-sorted rows), and auto must switch at CELL_LITERAL_MAX_KD."""
+    """Duplicate centers under different cids: the Arrow argmin must
+    pick the LOWEST cid (lexicographic (d2, cid) min), whatever the
+    order the centers are listed in, and the plan is the Python map."""
     from kmeans_mapreduce_spark.operators import dedup as dd
 
     emb = spark.createDataFrame(
@@ -2590,21 +2593,14 @@ def test_assign_cells_arrow_tie_breaks_to_lowest_cid(spark):
     )
     # cid 2 listed FIRST but duplicates cid 1's vector → 1 must win
     centers = [(2, [1.0, 1.0]), (1, [1.0, 1.0]), (3, [5.0, 5.0])]
-    for impl in ("literal", "arrow"):
+    for order in (centers, centers[::-1]):
         got = {
             r["vec_id"]: r["cell"]
-            for r in dd.assign_cells(emb, centers, impl=impl, out="cell").collect()
+            for r in dd.assign_cells(emb, order, out="cell").collect()
         }
-        assert got == {0: 1, 1: 3}, impl
-    # auto dispatch: K*d=6 → literal (no mapInPandas in the plan);
-    # forcing the threshold down → arrow (plan contains a Python map)
-    plan_lit = dd.assign_cells(emb, centers, out="cell")._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan_lit
-    import unittest.mock as _m
-
-    with _m.patch.object(dd, "CELL_LITERAL_MAX_KD", 5):
-        plan_arr = dd.assign_cells(emb, centers, out="cell")._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan_arr
+        assert got == {0: 1, 1: 3}, order
+    plan = dd.assign_cells(emb, centers, out="cell")._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
 
 
 def test_star_cap_recall_delta_vs_exact_is_pinned(spark):

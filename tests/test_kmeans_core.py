@@ -62,15 +62,6 @@ def test_lloyd_step_sql_matches_expr_and_arrow(spark, f4):
     assert sizes[0] == 5  # the tie went to cid 0 everywhere
 
 
-def test_assign_df_matches_assign(spark, f4):
-    cents = spark.createDataFrame(
-        [(c, x, y) for c, x, y in F4_CENTERS], "cid INT, cx DOUBLE, cy DOUBLE"
-    )
-    a = {(r["point_id"], r["cid"], r["min_d2"]) for r in km.assign(f4, F4_CENTERS).collect()}
-    b = {(r["point_id"], r["cid"], r["min_d2"]) for r in km.assign_df(f4, cents).collect()}
-    assert a == b
-
-
 def test_recompute_golden(f4):
     assigned = km.assign(f4, F4_CENTERS)
     stats = {r["cid"]: r for r in km.recompute(assigned).collect()}
@@ -275,39 +266,78 @@ def test_lloyd_step_sql_nonfinite_center_falls_back(spark):
     assert sizes2 == {1: 3}
 
 
-def test_assign_nd_arrow_matches_expr_bitwise(spark):
-    """assign_nd's two physical paths (K*d-literal expression vs Arrow
-    matmul) must agree bit-for-bit — unrounded d2 included — and break
-    ties to the lowest cid; auto dispatch picks by plan size."""
-    from kmeans_mapreduce_spark.operators import kmeans_nd as knd
+def _py_fold_d2(x, c):
+    acc = 0.0
+    for a, b in zip(x, c):
+        acc += (a - b) * (a - b)
+    return acc
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+
+@pytest.mark.parametrize("via", ["assign_nd", "assign_cells"])
+def test_nd_assignment_matches_python_fold_bitwise(spark, via):
+    """The one n-D nearest-centroid assignment, called on (point_id INT,
+    vec ARRAY<FLOAT>) and through the (vec_id, embedding) adapter: on
+    the 500 sf0.001 embeddings the unrounded d2 equals, by float.hex, a
+    pure-Python fold from 0.0 adding (a-b)*(a-b) in index order (the
+    twins' op order); a duplicate center listed FIRST under a higher
+    cid loses the tie to the lower cid; the input columns keep their
+    types."""
     from pyspark.sql import functions as F
 
-    pts = emb.select(
-        F.col("vec_id").alias("point_id"),
-        F.transform(F.col("embedding"), lambda v: v.cast("double")).alias(
-            "vec"
-        ),
+    from kmeans_mapreduce_spark.operators import dedup as dd
+    from kmeans_mapreduce_spark.operators import kmeans_nd as knd
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
+        "vec_id", "embedding"
     )
-    first = pts.orderBy("point_id").limit(5).collect()
-    centers = [(i, list(r["vec"])) for i, r in enumerate(first)]
-    # plant an exact duplicate center under a higher cid: ties -> 0
-    centers.append((9, centers[0][1]))
-    a = {
-        r["point_id"]: (r["cid"], r["min_d2"])
-        for r in knd.assign_nd(pts, centers, impl="expr").collect()
+    rows = emb.orderBy("vec_id").collect()
+    centers = [
+        (i, [float(x) for x in r["embedding"]]) for i, r in enumerate(rows[:5])
+    ]
+    centers.insert(0, (9, centers[0][1]))
+    if via == "assign_nd":
+        pts = emb.select(
+            F.col("vec_id").cast("int").alias("point_id"),
+            F.col("embedding").alias("vec"),
+        )
+        out = knd.assign_nd(pts, centers)
+        key, cid, d2 = "point_id", "cid", "min_d2"
+    else:
+        out = dd.assign_cells(emb, centers, out="cell", keep_d2="d2")
+        key, cid, d2 = "vec_id", "cell", "d2"
+    assert out.dtypes == [
+        (key, "int" if via == "assign_nd" else "bigint"),
+        (out.columns[1], "array<float>"),
+        (cid, "int"),
+        (d2, "double"),
+    ]
+    got = {r[key]: (r[cid], r[d2].hex()) for r in out.collect()}
+    assert len(got) == 500
+    for r in rows:
+        x = [float(v) for v in r["embedding"]]
+        want_d2, want_cid = min((_py_fold_d2(x, c), c_id) for c_id, c in centers)
+        assert got[r["vec_id"]] == (want_cid, want_d2.hex()), r["vec_id"]
+    assert got[rows[0]["vec_id"]] == (0, (0.0).hex())
+
+
+def test_build_ivf_index_cells_match_assign_nd(spark):
+    """The IVF index build runs the same argmin kernel: its cell is
+    assign_nd's cid, duplicate-center ties included."""
+    from kmeans_mapreduce_spark.operators import dedup as dd
+    from kmeans_mapreduce_spark.operators import similarity as sim
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    first = [
+        [float(x) for x in r["embedding"]]
+        for r in emb.orderBy("vec_id").limit(6).collect()
+    ]
+    centers = list(enumerate([first[0]] + first))  # cid 1 duplicates cid 0
+    ivf = {
+        r["vec_id"]: r["cell"] for r in sim.build_ivf_index(emb, centers).collect()
     }
-    b = {
-        r["point_id"]: (r["cid"], r["min_d2"])
-        for r in knd.assign_nd(pts, centers, impl="arrow").collect()
+    nd = {
+        r["vec_id"]: r["cell"]
+        for r in dd.assign_cells(emb, centers, out="cell").collect()
     }
-    assert len(a) == 500 and a == b
-    assert a[first[0]["point_id"]][0] == 0  # duplicate-center tie -> lowest
-    # r9 ADVICE: the Arrow path must preserve the INPUT's point_id type
-    # (it hardcoded LONG, so impl='auto' silently widened INT ids when
-    # K*d crossed CELL_LITERAL_MAX_KD)
-    pts_int = pts.withColumn("point_id", F.col("point_id").cast("int"))
-    for impl in ("expr", "arrow"):
-        got = dict(knd.assign_nd(pts_int, centers, impl=impl).dtypes)
-        assert got["point_id"] == "int", (impl, got)
+    assert len(ivf) == 500 and ivf == nd
+    assert 1 not in set(nd.values())

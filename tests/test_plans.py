@@ -46,15 +46,6 @@ def test_assign_is_narrow_no_join_no_shuffle(spark):
     assert "Exchange" not in plan  # pure map: scan → project
 
 
-def test_assign_df_broadcasts_centroids(spark):
-    cents = spark.createDataFrame(
-        [(0, 1.0, 1.0), (1, 9.0, 9.0)], "cid INT, cx DOUBLE, cy DOUBLE"
-    )
-    df = km.assign_df(points_2d(spark, SF), cents)
-    assert plans.has_broadcast_join(df)
-    assert not plans.has_cartesian(df)
-
-
 def test_minhash_candidates_join_is_not_cartesian(spark):
     docs = load_table(spark, SF, "documents")
     cands = dd.candidate_pairs(dd.lsh_bands(dd.minhash_signatures(docs)))

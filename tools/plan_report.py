@@ -49,8 +49,8 @@ REPORT_QUERIES = [
     # scan — report the underlying operator on the same mod-5 sides
     # instead (identical plan, pre-checkpoint)
     ("dedup_cross_snapshot!operator", "manifest-diff increment (delta dirs only) banded and broadcast onto the prior snapshot's band index — same _cross_band_pairs plan as dedup_incremental with the sides as separate version reads"),
-    ("similarity_rebuild_crossover", "one literal-argmin assignment + (cell,bkt) aggregate; fraction table and totals broadcast — corpus scanned once, never re-exchanged per fraction"),
-    ("dedup_semantic", "literal-argmin cell assignment (no join) + tiled per-cell GEMM"),
+    ("similarity_rebuild_crossover", "one Arrow argmin assignment + (cell,bkt) aggregate; fraction table and totals broadcast — corpus scanned once, never re-exchanged per fraction"),
+    ("dedup_semantic", "Arrow argmin cell assignment (no join) + tiled per-cell GEMM"),
     ("similarity_knn_graph", "cell-blocked local top-k emission + one src-keyed window merge"),
     ("corpus_dsir_weights", "one token explode; all bucket-table joins broadcast; corpus never shuffled"),
     ("corpus_rule_filter", "row-local rule verdicts: zero exchanges"),
@@ -60,7 +60,7 @@ REPORT_QUERIES = [
     ("corpus_source_cap", "one source-keyed window; hash rank computed in the scan projection"),
     ("pipeline_pagerank_loop2", "O(edges) rank join + map-side-combined sum per iteration over a checkpointed edge list"),
     ("pipeline_curation_funnel", "row-local verdicts + one fingerprint window + broadcast decontam semi-join"),
-    ("embeddings_outliers", "literal-argmin assignment; K-row stats broadcast back, corpus never exchanged"),
+    ("embeddings_outliers", "Arrow argmin assignment; K-row stats broadcast back, corpus never exchanged"),
     ("text_vocab_coverage", "TakeOrdered truncation before ranking; broadcast 1-row total"),
     ("corpus_pack_fragments", "one per-stratum window + narrow interval explode, all-int64"),
     ("dedup_substring", "stride-1 window keep-first + token-level anti-join; covered explode ∝ duplicated occurrences, no self-join"),
@@ -97,7 +97,7 @@ REPORT_QUERIES = [
     ("pipeline_events_dashboard", "four O(|types|) aggregates broadcast-joined; zero added corpus shuffles"),
     ("points_radius_join", "grid-cell broadcast equi-join with d2 residual — no BNLJ/cartesian"),
     ("text_heaps_law", "one explode + per-term MIN answers the whole prefix ladder"),
-    ("similarity_cell_balance", "literal-argmin assignment + K-group aggregate + 1-row broadcast total"),
+    ("similarity_cell_balance", "Arrow argmin assignment + K-group aggregate + 1-row broadcast total"),
     ("join_small_quantity", "decorrelated per-part aggregate joined back on the same key"),
     ("join_idle_customers", "1-row broadcast threshold + anti-join on the filtered fact"),
     # kmeans_nd_fit_large intentionally absent for the same reason as

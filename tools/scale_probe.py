@@ -198,29 +198,25 @@ def main() -> int:
     pts.unpersist()
 
     # --- assign_cells at production K: plan time must stay O(1) -------
-    # The literal plan ships K·d F.lit nodes; above CELL_LITERAL_MAX_KD
-    # the auto-switch picks the Arrow matmul path whose PLAN is O(1) in
-    # K·d. Probe both the analysis/planning wall (the thing that blows
-    # up with literals — measured 10× on bloom bitmaps, ~2.4 s on LR
-    # weights) and the execution wall at K=64 (both paths) and K=1024
-    # (Arrow only — 65,536 literal nodes is exactly the plan we refuse
-    # to build).
+    # The Arrow assignment keeps the centers in the task closure, so its
+    # plan is O(1) in K·d. Probe the analysis/planning wall (the thing
+    # that blows up when K·d literals ride in the plan — measured 10× on
+    # bloom bitmaps, ~2.4 s on LR weights) and the execution wall at
+    # K=64 and K=1024.
     emb_ac = emb.select("vec_id", "embedding").cache()
     emb_ac.count()
-    for k_cells, impl in ((64, "literal"), (64, "arrow"), (1024, "arrow")):
+    for k_cells in (64, 1024):
         centers_ac = [
             (i, rng.normal(size=64).tolist()) for i in range(k_cells)
         ]
         t = time.time()
-        df_ac = dd.assign_cells(emb_ac, centers_ac, out="cell", impl=impl)
+        df_ac = dd.assign_cells(emb_ac, centers_ac, out="cell")
         df_ac._jdf.queryExecution().executedPlan()  # force analyze+plan
-        out[f"cell_assign_{impl}_k{k_cells}_plan_sec"] = round(
-            time.time() - t, 3
-        )
+        out[f"cell_assign_k{k_cells}_plan_sec"] = round(time.time() - t, 3)
         df_ac.write.format("noop").mode("overwrite").save()  # warm
         t = time.time()
         df_ac.write.format("noop").mode("overwrite").save()
-        out[f"cell_assign_{impl}_k{k_cells}_sec"] = round(time.time() - t, 3)
+        out[f"cell_assign_k{k_cells}_sec"] = round(time.time() - t, 3)
     emb_ac.unpersist()
 
     # --- k-NN graph scaling: cell-blocked GEMM at 1x / 4x vectors -----
