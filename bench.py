@@ -277,10 +277,10 @@ def _measure(spark, sf_dir: str) -> dict:
     )
 
     # registry queries tracked by the bench — each runs at sf_dir.
-    # Iterate the FULL registry (core + extensions): round 11 found
-    # kmeans_wssse listed in BENCH_EXTENSION_QUERIES but silently never
-    # run because this loop only looked at extension_queries(); the
-    # registry-accounting test now pins every listed name as runnable.
+    # The tracked set is derived from the FULL registry (core +
+    # extensions): round 11 found kmeans_wssse listed for the bench but
+    # silently never run because this loop only looked at
+    # extension_queries().
     from kmeans_mapreduce_spark import queries as Q
 
     registry = {**Q.core_queries(), **Q.extension_queries()}
@@ -291,10 +291,7 @@ def _measure(spark, sf_dir: str) -> dict:
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     allow = {s for s in only.split(",") if s} if only else None
     tracked = [
-        n
-        for n in registry
-        if n in Q.BENCH_EXTENSION_QUERIES
-        and (allow is None or n in allow)
+        n for n in Q.bench_tracked_queries() if allow is None or n in allow
     ]
     for i, name in enumerate(tracked):
         fn = registry[name]

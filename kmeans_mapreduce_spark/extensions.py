@@ -1029,34 +1029,32 @@ def _write_event_time_ordered_split(
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "ts", "value"
     )
-    n = e.count()
-    ranked = e.withColumn(
-        "_rn",
-        F.row_number().over(
-            Window.orderBy(F.asc("ts"), F.asc("event_id"))
-        ),
+    # ONE ranking pass: the row count rides along as a window over the
+    # same single sorted partition, and one partitioned write emits
+    # every run (file i holds ranks i*per+1 .. (i+1)*per)
+    n = F.count(F.lit(1)).over(Window.partitionBy())
+    rn = F.row_number().over(Window.orderBy(F.asc("ts"), F.asc("event_id")))
+    per = F.ceil(n / F.lit(n_files))
+    ranked = e.select("*", rn.alias("_rn"), n.alias("_n")).select(
+        "*", F.floor((F.col("_rn") - 1) / per).alias("_file")
     )
-    per = (n + n_files - 1) // n_files
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
+    tmp = os.path.join(out, "_stage")
+    (
+        ranked.sortWithinPartitions("_file", "_rn")
+        .drop("_rn", "_n")
+        .write.partitionBy("_file")
+        .parquet(tmp)
+    )
     for i in range(n_files):
-        tmp = os.path.join(out, f"_stage{i}")
-        (
-            ranked.filter(
-                (F.col("_rn") > i * per) & (F.col("_rn") <= (i + 1) * per)
-            )
-            .drop("_rn")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        part = _glob.glob(os.path.join(tmp, f"_file={i}", "part-*.parquet"))[0]
         dst = os.path.join(out, f"{i:02d}.parquet")
         shutil.move(part, dst)
-        shutil.rmtree(tmp)
         # strictly increasing, deterministic mtimes: the file-source
         # ordering must never depend on write-latency luck
         os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
+    shutil.rmtree(tmp)
     return out
 
 

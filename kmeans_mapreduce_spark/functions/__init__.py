@@ -1,5 +1,1 @@
-from kmeans_mapreduce_spark.functions.distance import (  # noqa: F401
-    sq_dist_2d,
-    nearest_centroid_2d,
-    cosine_sim,
-)
+from kmeans_mapreduce_spark.functions.distance import cosine_sim  # noqa: F401

@@ -10,7 +10,9 @@ raw input twice per iteration for the objective (master.py:315-332).
 
 The Spark-native shape: per iteration, one action —
 a narrow arg-min map (no shuffle, no crossJoin: centers are K literals
-inside whole-stage codegen) feeding one partial+final hash aggregation
+inside whole-stage codegen; :func:`assign` builds it, the engine's one
+2-D nearest-centroid plan, shared by the Lloyd step, the registry
+queries and streaming scoring) feeding one partial+final hash aggregation
 whose shuffle carries O(partitions × K) rows, not O(N) like the
 reference (no map-side combine there — BASELINE.md §2). Under the
 session's default AQE the K-row exchange is its own query stage, so
@@ -40,14 +42,11 @@ is worth revisiting for many-iteration fits.
 
 from __future__ import annotations
 
-import math
 import random
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from kmeans_mapreduce_spark.functions.distance import nearest_centroid_2d
 
 Center = tuple[int, float, float]  # (cid, cx, cy)
 
@@ -98,18 +97,40 @@ def normalize_partitions(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def assign(points: DataFrame, centers: list[Center]) -> DataFrame:
-    """Assign each point to its nearest centroid (squared Euclidean).
+    """Assign each point to its nearest centroid (squared Euclidean):
+    ``points``' own columns plus ``min_d2 DOUBLE`` and ``cid INT``.
 
-    Narrow (shuffle-free) path for driver-held centers — the common case
-    in the Lloyd loop. Output keeps x,y so recompute/wssse reuse it.
+    The engine's one 2-D nearest-centroid plan: the Lloyd step, the
+    registry queries and streaming scoring all use it (a narrow map, so
+    it runs unchanged on a streaming DataFrame). The K centers arrive
+    as ONE ``selectExpr`` text batch that the JVM parses in a few ms; a
+    Column-API tree costs a Py4J round-trip per node (~0.3 s/iteration
+    of the sf0.1 loop). Each literal is ``CAST('repr' AS DOUBLE)``: a
+    finite double's shortest repr round-trips exactly and nan/inf parse.
+    Distances are ``(x−cx)*(x−cx) + (y−cy)*(y−cy)``, the DuckDB twins'
+    IEEE op order; ``least`` then ``CASE WHEN d_i = min_d2`` in cid
+    order breaks ties to the lowest cid (strict ``<`` first-wins,
+    mapper.py:43). Spark orders NaN above every double, so a nan center
+    never beats a finite one. The ``__d{i}`` distance columns are
+    projected away.
     """
-    best = nearest_centroid_2d(F.col("x"), F.col("y"), centers)
-    return points.select(
-        "point_id",
-        "x",
-        "y",
-        best["cid"].alias("cid"),
-        best["d2"].alias("min_d2"),
+    ordered = sorted((int(c), float(x), float(y)) for c, x, y in centers)
+    d = [f"__d{i}" for i in range(len(ordered))]
+    d_exprs = []
+    for di, (_, cx, cy) in zip(d, ordered):
+        lx, ly = f"CAST('{cx!r}' AS DOUBLE)", f"CAST('{cy!r}' AS DOUBLE)"
+        d_exprs.append(f"((x - {lx})*(x - {lx}) + (y - {ly})*(y - {ly})) AS {di}")
+    min_expr = f"least({','.join(d)})" if len(d) > 1 else d[0]
+    case_expr = (
+        "CASE "
+        + " ".join(f"WHEN {di} = min_d2 THEN {cid}" for di, (cid, _, _) in zip(d, ordered))
+        + " END AS cid"
+    )
+    keep = ["`" + c.replace("`", "``") + "`" for c in points.columns]
+    return (
+        points.selectExpr("*", *d_exprs)
+        .selectExpr(*keep, f"{min_expr} AS min_d2", *d)
+        .selectExpr(*keep, "min_d2", case_expr)
     )
 
 
@@ -378,52 +399,22 @@ class KMeansResult:
     cluster_sizes: dict[int, int] = field(default_factory=dict)
 
 
-def lloyd_step(
-    points: DataFrame, centers: list[Center]
-) -> tuple[dict[int, tuple[float, float]], dict[int, int], float]:
-    """One Lloyd iteration as one action (2 Spark jobs under AQE: the
-    K-row exchange is its own query stage).
-
-    Single aggregation returns per-cluster (mean, count) AND the WSSSE
-    of the *current* centers: sums shuffle as O(partitions×K) partial
-    rows. Returns (means, sizes, wssse). Compare: the reference runs a
-    full map phase, an R×M shuffle of every point, plus two extra whole-
-    input scans for the objective — per iteration.
-    """
-    rows = (
-        assign(points, centers)
-        .groupBy("cid")
-        .agg(
-            F.avg("x").alias("cx"),
-            F.avg("y").alias("cy"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("min_d2").alias("sse"),
-        )
-        .collect()
-    )
-    means = {r["cid"]: (r["cx"], r["cy"]) for r in rows}
-    sizes = {r["cid"]: r["n"] for r in rows}
-    f_cur = float(sum(r["sse"] for r in rows))
-    return means, sizes, f_cur
-
-
 def lloyd_step_arrow(
     points_xy: DataFrame, centers: list[Center]
 ) -> tuple[dict[int, tuple[float, float]], dict[int, int], float]:
     """One Lloyd iteration via Arrow-vectorized partial aggregation.
 
-    Same contract as :func:`lloyd_step`, different physical strategy:
-    ``mapInPandas`` emits K partial-sum rows per partition (numpy
-    argmin over a (batch × K) distance matrix), merged on the driver
-    (through a K-row groupBy above 1024 partitions).
-    Centers ride in the Python closure, never in plan text, so this is
-    the step for centers SQL cannot carry (the non-finite fallback of
-    :func:`lloyd_step_sql`), for many centers (the k-means|| candidate
-    weights) and for streaming k-means. It is not ``fit``'s step: its
-    per-row Python cost made an 8 M-point fit ~6× the CPU of the
-    Catalyst step. Distances use the same (x−cx)²+(y−cy)² float64 op
-    order; argmin ties break to the lowest index = lowest cid
-    (reference mapper.py:43 first-wins).
+    Same contract as :func:`lloyd_step_sql`, different physical
+    strategy: ``mapInPandas`` emits K partial-sum rows per partition
+    (numpy argmin over a (batch × K) distance matrix), merged on the
+    driver (through a K-row groupBy above 1024 partitions).
+    Centers ride in the Python closure, never in plan text, so the plan
+    keeps one width however many centers there are: this is the step
+    for the k-means|| candidate weights and for streaming k-means. It
+    is not ``fit``'s step: its per-row Python cost made an 8 M-point
+    fit ~6× the CPU of the Catalyst step. Distances use the same
+    (x−cx)²+(y−cy)² float64 op order; argmin ties break to the lowest
+    index = lowest cid (reference mapper.py:43 first-wins).
     """
     import numpy as np
     import pandas as pd
@@ -433,8 +424,8 @@ def lloyd_step_arrow(
     cx = np.array([x for _, x, _ in ordered])
     cy = np.array([y for _, _, y in ordered])
     k = len(ordered)
-    # nan-guard is only needed when a center is non-finite (the
-    # lloyd_step_sql fallback path); keep the hot loop one pass
+    # nan-guard is only needed when a center is non-finite; keep the
+    # hot loop one pass
     guard_nan = not (np.isfinite(cx).all() and np.isfinite(cy).all())
 
     def partials(batches):
@@ -516,53 +507,21 @@ def lloyd_step_arrow(
 def lloyd_step_sql(
     points_xy: DataFrame, centers: list[Center]
 ) -> tuple[dict[int, tuple[float, float]], dict[int, int], float]:
-    """One Lloyd iteration as a single string-built Catalyst plan.
+    """One Lloyd iteration as one action (2 Spark jobs under AQE: the
+    K-row exchange is its own query stage).
 
-    Same contract and semantics as :func:`lloyd_step` — squared
-    Euclidean ``(x−cx)²+(y−cy)²`` in the identical IEEE op order, ties
-    break first-wins to the lowest cid (reference ``mapper.py:43``) —
-    but the expression tree arrives as ONE ``selectExpr`` string batch
-    instead of thousands of Py4J ``Column`` calls. Why: profiling the
-    sf0.1 loop showed ~0.3 s/iteration spent *driver-side in Python*
-    building ``struct``/``array_min`` trees one Py4J round-trip at a
-    time; the JVM parses the same expressions from text in ~5 ms.
-
-    The plan itself is the right one at every scale: a narrow literal
-    arg-min map (no join, no shuffle of points) into a partial+final
-    hash aggregate whose exchange carries K rows per partition. It runs
-    under the session's own confs. Fresh literals cost a codegen
-    compile per iteration; even so, a 10-iteration fit measured on par
-    with interpreted evaluation at 6 K points and faster from 60 K up.
+    The :func:`assign` plan feeds one partial+final hash aggregate that
+    returns per-cluster (mean, count) AND the WSSSE of the *current*
+    centers; its exchange carries K rows per partition. Returns
+    (means, sizes, wssse). Compare: the reference runs a full map
+    phase, an R×M shuffle of every point, plus two extra whole-input
+    scans for the objective — per iteration. It runs under the
+    session's own confs. Fresh literals cost a codegen compile per
+    iteration; even so, a 10-iteration fit measured on par with
+    interpreted evaluation at 6 K points and faster from 60 K up.
     """
-    ordered = sorted((int(c), float(x), float(y)) for c, x, y in centers)
-    # repr() of a finite double round-trips exactly through the SQL
-    # parser (shortest-repr → decimal literal → double); nan/inf would
-    # produce unparseable or always-false SQL text, so route those
-    # centers through the numerically-safe Arrow step instead (same
-    # contract, centers ride in the closure, not in SQL text).
-    if not all(
-        math.isfinite(x) and math.isfinite(y) for _, x, y in ordered
-    ):
-        return lloyd_step_arrow(points_xy, centers)
-    k = len(ordered)
-    d_exprs = [
-        f"((x - ({x!r}))*(x - ({x!r})) + (y - ({y!r}))*(y - ({y!r}))) AS d{i}"
-        for i, (_, x, y) in enumerate(ordered)
-    ]
-    min_expr = (
-        "least(" + ",".join(f"d{i}" for i in range(k)) + ")" if k > 1 else "d0"
-    )
-    case_expr = (
-        "CASE "
-        + " ".join(
-            f"WHEN d{i} = min_d2 THEN {int(cid)}" for i, (cid, _, _) in enumerate(ordered)
-        )
-        + " END AS cid"
-    )
     rows = (
-        points_xy.selectExpr("x", "y", *d_exprs)
-        .selectExpr("x", "y", f"{min_expr} AS min_d2", *[f"d{i}" for i in range(k)])
-        .selectExpr("x", "y", "min_d2", case_expr)
+        assign(points_xy, centers)
         .groupBy("cid")
         .agg(
             F.avg("x").alias("cx"),
@@ -576,6 +535,10 @@ def lloyd_step_sql(
     sizes = {r["cid"]: r["n"] for r in rows}
     f_cur = float(sum(r["sse"] for r in rows))
     return means, sizes, f_cur
+
+
+# one step under two names; perfbench/tracing.py wraps each name
+lloyd_step = lloyd_step_sql
 
 
 def fit(

@@ -1,5 +1,4 @@
 from kmeans_mapreduce_spark.streaming.stream_ops import (  # noqa: F401
-    score_stream,
     stream_window_counts,
     run_stream_to_memory,
 )

@@ -1,11 +1,12 @@
 """Structured Streaming operators (north-star; SURVEY §2.2 notes the
 reference is strictly batch — this is the engine's streaming face).
 
-Design: the same narrow assignment expression the batch engine uses
-works unchanged on a streaming DataFrame (stateless map); windowed
-aggregations use event-time + watermark so late data is bounded-state.
-At scale: file/kafka source partitions → narrow score → windowed agg
-whose state store is keyed by (window, type) — bounded by watermark.
+Design: stateless scoring needs no operator of its own — the batch
+engine's ``operators.kmeans.assign`` is a narrow map and runs unchanged
+on a streaming DataFrame. Windowed aggregations use event-time +
+watermark so late data is bounded-state. At scale: file/kafka source
+partitions → narrow score → windowed agg whose state store is keyed by
+(window, type) — bounded by watermark.
 """
 
 from __future__ import annotations
@@ -13,10 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kmeans_mapreduce_spark.operators.events import floor_div
-
-from kmeans_mapreduce_spark.functions.distance import nearest_centroid_2d
-from kmeans_mapreduce_spark.operators.events import WINDOW_SEC
+from kmeans_mapreduce_spark.operators.events import WINDOW_SEC, floor_div
 
 
 def events_stream(spark: SparkSession, events_dir: str, schema: str) -> DataFrame:
@@ -26,18 +24,6 @@ def events_stream(spark: SparkSession, events_dir: str, schema: str) -> DataFram
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(events_dir)
-    )
-
-
-def score_stream(
-    stream: DataFrame, centers: list[tuple[int, float, float]]
-) -> DataFrame:
-    """Streaming nearest-centroid scoring — stateless narrow map, the
-    streaming twin of operators.kmeans.assign (same codegen'd argmin
-    expression; nothing about it is batch-specific)."""
-    best = nearest_centroid_2d(F.col("x"), F.col("y"), centers)
-    return stream.select(
-        "*", best["cid"].alias("cid"), best["d2"].alias("min_d2")
     )
 
 

@@ -47,19 +47,32 @@ def test_assign_tiebreak_lowest_cid(spark, f4):
     assert row["min_d2"] == 50.0
 
 
-def test_lloyd_step_sql_matches_expr_and_arrow(spark, f4):
-    """The three step implementations are one contract: identical
-    means, sizes, and WSSSE on the golden fixture — INCLUDING the
-    first-wins tie-break (the (6,6) point is exactly equidistant from
-    both centroids and must count toward cid 0 in every impl)."""
+def test_assign_nonfinite_centers(spark, f4):
+    """nan and inf centers parse as SQL literals and never beat a
+    finite center; a point equidistant from two finite centers still
+    goes to the lower cid, and a nan center listed first does not."""
+    centers = [(0, float("nan"), 1.0), (1, float("inf"), 0.0), (2, 1.0, 1.0), (3, 11.0, 11.0)]
     extra = spark.createDataFrame([(99, 6.0, 6.0)], POINTS_2D)
-    pts = f4.unionByName(extra)
-    expr = km.lloyd_step(pts, F4_CENTERS)
-    sql = km.lloyd_step_sql(pts.select("x", "y"), F4_CENTERS)
-    arrow = km.lloyd_step_arrow(pts.select("x", "y"), F4_CENTERS)
-    assert expr == sql == arrow
-    means, sizes, _ = sql
-    assert sizes[0] == 5  # the tie went to cid 0 everywhere
+    rows = {r["point_id"]: r for r in km.assign(f4.unionByName(extra), centers).collect()}
+    assert {p: r["cid"] for p, r in rows.items()} == {
+        0: 2, 1: 2, 2: 2, 3: 2, 4: 3, 5: 3, 6: 3, 7: 3, 99: 2
+    }
+    assert rows[99]["min_d2"] == 50.0
+    assert all(r["min_d2"] == 2.0 for p, r in rows.items() if p != 99)
+
+
+@pytest.mark.parametrize("step", ["lloyd_step_sql", "lloyd_step_arrow"])
+def test_lloyd_step_matches_golden(spark, f4, step):
+    """Both step implementations return the hand-computed F4 means,
+    sizes and WSSSE, INCLUDING the first-wins tie-break: the (6,6)
+    point is exactly equidistant (50.0) from both centroids and must
+    count toward cid 0."""
+    extra = spark.createDataFrame([(99, 6.0, 6.0)], POINTS_2D)
+    pts = f4.unionByName(extra).select("x", "y")
+    means, sizes, sse = getattr(km, step)(pts, F4_CENTERS)
+    assert means == {0: (2.0, 2.0), 1: (11.0, 11.0)}
+    assert sizes == {0: 5, 1: 4}
+    assert sse == 8 * 2.0 + 50.0
 
 
 def test_recompute_golden(f4):
@@ -246,21 +259,25 @@ def test_elbow_sweep_wssse_monotone_in_k(spark):
     assert ws[0] > ws[1] > ws[2]
 
 
-def test_lloyd_step_sql_nonfinite_center_falls_back(spark):
-    """ADVICE r8: repr() of nan/inf makes unparseable/always-false SQL
-    text, so lloyd_step_sql must route non-finite centers through the
-    Arrow step instead of crashing — and still produce the numeric
-    answer for the finite centers."""
+def test_lloyd_step_sql_nonfinite_center_falls_back(spark, monkeypatch):
+    """nan/inf centers are CAST('nan'/'inf' AS DOUBLE) literals in the
+    step's own Catalyst plan: no Arrow step runs, nothing crashes, and
+    every point lands on the one finite center (Spark orders NaN above
+    every double, and an inf center is infinitely far)."""
     from kmeans_mapreduce_spark.operators import kmeans as km
 
+    def no_arrow(*_a, **_k):
+        raise AssertionError("lloyd_step_sql ran an Arrow step")
+
+    monkeypatch.setattr(km, "lloyd_step_arrow", no_arrow)
     pts = spark.createDataFrame(
         [(0.0, 0.0), (1.0, 1.0), (10.0, 10.0)], "x DOUBLE, y DOUBLE"
     )
     bad = [(0, float("nan"), 0.0), (1, 10.0, 10.0)]
     means, sizes, sse = km.lloyd_step_sql(pts, bad)
-    # every point lands on the one finite center (nan distances never
-    # win an argmin against a finite one in the Arrow step)
     assert sizes == {1: 3}
+    assert means == {1: (11.0 / 3, 11.0 / 3)}
+    assert sse == 200.0 + 162.0 + 0.0
     inf_c = [(0, float("inf"), 0.0), (1, 0.0, 0.0)]
     means2, sizes2, _ = km.lloyd_step_sql(pts, inf_c)
     assert sizes2 == {1: 3}

@@ -152,27 +152,28 @@ def test_bench_badness_orders_unknown_steal_worst():
 
 def test_bench_accounting_is_a_partition():
     """No query silently falls through the bench: every registry entry
-    is either tracked by bench.py (BENCH_EXTENSION_QUERIES or a core
-    timed entry) or carries a written reason in BENCH_EXCLUDED_REASONS.
-    Round 11 found kmeans_wssse listed for the bench but never run
-    (bench.py iterated only extension_queries()); this partition makes
-    that class of silent gap impossible, and also catches stale names
-    left behind when a query is renamed or removed."""
+    is either tracked by bench.py's loop (bench_tracked_queries), timed
+    directly (BENCH_DIRECT_QUERIES) or carries a written reason in
+    BENCH_EXCLUDED_REASONS. Round 11 found kmeans_wssse listed for the
+    bench but never run (bench.py iterated only extension_queries());
+    the tracked set is now derived from the registry, and this test
+    catches stale names left behind when a query is renamed or removed
+    and exclusions without a reason."""
     import __spark_entry__ as entry
     from kmeans_mapreduce_spark.queries import (
+        BENCH_DIRECT_QUERIES,
         BENCH_EXCLUDED_REASONS,
-        BENCH_EXTENSION_QUERIES,
+        bench_tracked_queries,
     )
 
     q = set(entry.queries())
-    core_benched = {"kmeans_assign"}  # timed directly by bench.py
-    benched = BENCH_EXTENSION_QUERIES | core_benched
+    tracked = set(bench_tracked_queries())
+    direct = set(BENCH_DIRECT_QUERIES)
     excluded = set(BENCH_EXCLUDED_REASONS)
-    assert not benched & excluded, sorted(benched & excluded)
-    assert benched <= q, f"stale bench names: {sorted(benched - q)}"
+    assert not direct & excluded, sorted(direct & excluded)
+    assert direct <= q, f"stale direct names: {sorted(direct - q)}"
     assert excluded <= q, f"stale excluded names: {sorted(excluded - q)}"
-    missing = q - benched - excluded
-    assert not missing, f"silently unbenched, no reason: {sorted(missing)}"
+    assert tracked == q - direct - excluded
     empty = [n for n in excluded if not BENCH_EXCLUDED_REASONS[n].strip()]
     assert not empty, f"empty reasons: {empty}"
 
@@ -250,11 +251,11 @@ def test_tracked_replays_record_progress_split():
     import inspect
 
     from kmeans_mapreduce_spark import extensions as X
-    from kmeans_mapreduce_spark.queries import BENCH_EXTENSION_QUERIES
+    from kmeans_mapreduce_spark.queries import bench_tracked_queries
 
     tracked = [
         n
-        for n in BENCH_EXTENSION_QUERIES
+        for n in bench_tracked_queries()
         if "_stream_" in n and n.endswith("_replay")
     ]
     assert tracked, "replay split exists because replays are benched"

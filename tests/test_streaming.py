@@ -73,11 +73,14 @@ def test_stream_window_counts_matches_batch(spark, events_dir, schema):
 
 
 def test_stream_scoring_stateless(spark, events_dir, schema):
+    """The batch assign plan scores a streaming DataFrame unchanged."""
+    from kmeans_mapreduce_spark.operators import kmeans as km
+
     centers = [(0, 0.0, 0.0), (1, 100.0, 100.0)]
     stream = so.events_stream(spark, events_dir, schema).select(
         F.col("value").alias("x"), (F.col("user_id") % 100).cast("double").alias("y")
     )
-    scored = so.score_stream(stream, centers)
+    scored = km.assign(stream, centers)
     so.run_stream_to_memory(scored, "scored", mode="append")
     rows = spark.table("scored").collect()
     assert len(rows) == load_table(spark, SF, "events").count()

@@ -2,8 +2,8 @@
 
 Usage: python tools/capture_plans.py <round> [suffix] [query ...]
 Writes plans/<round>/<query>_<suffix>.txt (suffix defaults to
-``before``) for each query (default: every
-BENCH_EXTENSION_QUERIES entry). Also prints a one-line plan-smell
+``before``) for each query (default: every query in
+``queries.bench_tracked_queries()``). Also prints a one-line plan-smell
 summary (exchanges, join strategies, sort aggregates, python nodes) to
 stderr so the round's optimization checklist can be built from it.
 """
@@ -32,9 +32,7 @@ def main() -> int:
 
     spark = get_spark("capture-plans")
     registry = {**Q.core_queries(), **Q.extension_queries()}
-    names = sys.argv[3:] or sorted(
-        n for n in registry if n in Q.BENCH_EXTENSION_QUERIES
-    )
+    names = sys.argv[3:] or sorted(Q.bench_tracked_queries())
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",

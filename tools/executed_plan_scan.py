@@ -24,9 +24,7 @@ def main() -> int:
 
     spark = get_spark("executed-plan-scan")
     registry = {**Q.core_queries(), **Q.extension_queries()}
-    names = sys.argv[1:] or sorted(
-        n for n in registry if n in Q.BENCH_EXTENSION_QUERIES
-    )
+    names = sys.argv[1:] or sorted(Q.bench_tracked_queries())
     for name in names:
         if "_stream_" in name:
             continue
