@@ -28,10 +28,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         extension_queries,
     )
 
-    # ordered so the driver's 50-query CORRECTNESS window ROTATES
-    # verification debt down each round: one previously-green anchor
-    # per operator family plus never-yet-gated queries first (see
-    # queries.DRIVER_WINDOW_QUERIES and its round-10 staging comment)
+    # every @query-registered builder; the 50 names of
+    # queries.DRIVER_WINDOW_QUERIES (the driver's CORRECTNESS window)
+    # come first, the rest follow in declaration order
     return driver_ordered({**core_queries(), **extension_queries()})
 
 

@@ -277,13 +277,11 @@ def _measure(spark, sf_dir: str) -> dict:
     )
 
     # registry queries tracked by the bench — each runs at sf_dir.
-    # The tracked set is derived from the FULL registry (core +
-    # extensions): round 11 found kmeans_wssse listed for the bench but
-    # silently never run because this loop only looked at
-    # extension_queries().
+    # The tracked set is every registered query without an
+    # ``unbenched`` reason (queries.bench_tracked_queries).
     from kmeans_mapreduce_spark import queries as Q
 
-    registry = {**Q.core_queries(), **Q.extension_queries()}
+    registry = Q.registry()
     # A/B support (r11 verdict task 4): SPARK_GRAFT_BENCH_ONLY
     # restricts the tracked set to a comma-separated allowlist so an
     # old round's subset can be re-measured at current HEAD on the
@@ -294,7 +292,7 @@ def _measure(spark, sf_dir: str) -> dict:
         n for n in Q.bench_tracked_queries() if allow is None or n in allow
     ]
     for i, name in enumerate(tracked):
-        fn = registry[name]
+        fn = registry[name].build
         timed(
             name,
             lambda fn=fn: fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),

@@ -1,8 +1,9 @@
-"""Corpus/warehouse analytics extensions, round 3 second wave.
+"""Corpus/warehouse analytics queries.
 
-Same contract as ``extensions.py`` (every Spark query has a DuckDB
-oracle twin, column names aligned on both sides); registered into the
-driver's ``queries()`` via ``queries.extension_queries``. Families:
+Same contract as ``extensions.py``: every Spark query has a DuckDB
+oracle twin with column names aligned on both sides, declared by the
+``@query`` decorator on its builder (see ``queries.py``); the registry
+lists these after the ``extensions.py`` queries. Families:
 
 - sketches: portable HyperLogLog distinct counts (operators/sketches)
 - relational surface the reference lacks (SURVEY §2.2): PIVOT,
@@ -12,8 +13,6 @@ driver's ``queries()`` via ``queries.extension_queries``. Families:
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +24,12 @@ from kmeans_mapreduce_spark.operators import sketches as sk
 from kmeans_mapreduce_spark.operators import textops as tx
 from kmeans_mapreduce_spark.sources.loaders import load_table, parquet_schema
 from kmeans_mapreduce_spark.barrier import narrow_barrier
+from kmeans_mapreduce_spark.queries import (
+    _R_EVENTAGG,
+    _R_STREAM,
+    _R_TEXTSCAN,
+    query,
+)
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -33,6 +38,7 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 # Queries
 # ---------------------------------------------------------------------------
 
+@query(twin=lambda: _hll_oracle())
 def q_events_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable HLL sketch vs exact distinct, per event type.
 
@@ -59,6 +65,7 @@ def q_events_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 URGENT = "1-URGENT"
 
 
+@query(unbenched=_R_EVENTAGG, twin=lambda: _BLOOM_REGISTERS_ORACLE)
 def q_orders_bloom_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter build side over the urgent-order keys: the (word,
     bits) register table both engines must produce bit-identically.
@@ -69,6 +76,7 @@ def q_orders_bloom_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sk.bloom_registers(o, "o_orderkey")
 
 
+@query(twin=lambda: _BLOOM_PRUNE_ORACLE)
 def q_lineitem_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-join reduction: revenue of line items belonging to urgent
     orders, with the fact side pre-pruned by a 1 KB bloom filter before
@@ -88,6 +96,7 @@ def q_lineitem_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _TEXT_CHUNKS_ORACLE)
 def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UDTF surface (the third extension API next to the pandas_udf
     UDF and the grouped-agg UDAF): context-window chunking of documents
@@ -99,6 +108,7 @@ def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.chunk_docs_udtf(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _TEXT_CHUNKS_ORACLE)
 def q_text_chunks_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The vectorized Catalyst twin of q_text_chunks (explode + slice +
     md5, zero Python) — registered separately so the bench shows the
@@ -106,6 +116,7 @@ def q_text_chunks_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.chunk_docs_vectorized(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _pca_gate_oracle())
 def q_embeddings_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed PCA under the hash gate (r12 verdict task 3 —
     previously rows-only): one Arrow suffstats pass, driver eigh,
@@ -168,6 +179,7 @@ def q_embeddings_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _PCA_SUFFSTATS_ORACLE)
 def q_embeddings_pca_suffstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GATED half of embeddings_pca: the distributed sufficient
     statistics (n, Σx, ΣxxT) that feed the driver-side eigh, emitted as
@@ -269,6 +281,7 @@ ORDER_PRIORITIES = [
 PRICE_LO, PRICE_HI = 0.0, 1000000.0
 
 
+@query(twin=lambda: _FIRST_TOUCH_ORACLE)
 def q_events_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch attribution: each user's first event per UTC day
     (row_number over ONE (user, day)-keyed window ordered by the unique
@@ -291,12 +304,14 @@ def q_events_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _SURPRISAL_ORACLE)
 def q_text_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM surprisal quality score per document
     (textops.lm_surprisal) — the CCNet-style filtering signal."""
     return tx.lm_surprisal(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _QUALITY_REPORT_ORACLE)
 def q_quality_report_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality report over orders (operators/quality):
     4 row-local checks in ONE conditional-aggregate scan, a uniqueness
@@ -320,6 +335,7 @@ def q_quality_report_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rows.unionByName(uniq).unionByName(fk)
 
 
+@query(twin=lambda: _pivot_oracle())
 def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT (§2.2 gap): hour-of-day x event-type matrix of counts and
     value sums. Explicit pivot values keep the output schema static
@@ -339,6 +355,7 @@ def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _RUNNING_WINDOW_ORACLE)
 def q_orders_running_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analytic window suite (§2.2 gap): per-customer order sequence,
     running revenue, and days since the previous order (row_number +
@@ -360,12 +377,14 @@ def q_orders_running_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _REPETITION_ORACLE)
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals (dup-n-gram boilerplate
     detection) per document — see textops.repetition_signals."""
     return tx.repetition_signals(load_table(spark, sf_dir, "documents"))
 
 
+@query(unbenched=_R_TEXTSCAN, twin=lambda: _redact_oracle())
 def q_text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing over text with planted PII: the synthetic corpus
     has no emails/phones/IPs, so the query derives them
@@ -391,6 +410,10 @@ HIST_LO, HIST_HI = 0.0, 500.0
 HIST_QS = (0.5, 0.9, 0.99)
 
 
+@query(unbenched=_R_EVENTAGG, twin=lambda: "WITH " + sk.hist_sql(
+    "value", "event_type", "events", HIST_QS, HIST_LO, HIST_HI,
+    gname="event_type",
+))
 def q_events_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram-sketch quantiles of event values per type: p50/p90/p99
     from a 64-bin equi-width sketch. The shuffle carries at most
@@ -401,6 +424,7 @@ def q_events_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sk.hist_quantiles(hist, ["event_type"], HIST_QS, HIST_LO, HIST_HI)
 
 
+@query(twin=lambda: _quantile_sketch_error_sql())
 def q_events_quantile_sketch_error(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -436,6 +460,7 @@ def q_events_quantile_sketch_error(
     )
 
 
+@query(twin=lambda: _weighted_sample_oracle())
 def q_corpus_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-proportional deterministic sampling: each doc kept with
     probability = its quality score (hash-threshold membership, no RNG,
@@ -449,6 +474,7 @@ def q_corpus_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_sample(q, F.col("quality_score"))
 
 
+@query(unbenched=_R_TEXTSCAN, twin=lambda: _cms_oracle())
 def q_text_cms_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min frequency sketch vs exact term counts over the corpus
     vocabulary. The sketch's shuffle is constant-size (<= 4 x 1024
@@ -469,6 +495,7 @@ SERIES_QUERY_USERS = [0, 10, 20, 30, 40]
 SERIES_K = 3
 
 
+@query(twin=lambda: _series_similarity_oracle())
 def q_pipeline_series_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series similarity search (cf. REPOSE/EDBT'19 in PAPERS.md,
     re-expressed Spark-first): each user's activity becomes a 24-dim
@@ -502,6 +529,7 @@ def q_pipeline_series_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(vecs, SERIES_QUERY_USERS, k=SERIES_K)
 
 
+@query(twin=lambda: _decontaminate_oracle())
 def q_corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: corpus docs whose 3-gram shingles
     overlap the ~1% benchmark split (doc_id % 97 == 0) by >= 5%. The
@@ -514,6 +542,7 @@ def q_corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Oracle twins
 # ---------------------------------------------------------------------------
 
+@query(unbenched=_R_STREAM, twin=lambda: _stream_hll_oracle())
 def q_events_stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SKETCH maintenance under the gate: the bounded events
     table replayed through ``stream_hll_registers`` — the HLL register
@@ -864,6 +893,7 @@ SELECT 'foreign_key(o_custkey)', n::BIGINT, v::BIGINT, v = 0 FROM fk
 """
 
 
+@query(twin=lambda: _rule_filter_oracle())
 def q_corpus_rule_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style rule-based quality filter: per-document verdict
     booleans for each heuristic plus the conjunction — the transparent
@@ -873,6 +903,7 @@ def q_corpus_rule_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sel.rule_filter_report(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _dsir_oracle())
 def q_corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights (hashed unigram LM ratio, target =
     quality-filtered subset): the data-selection score used to resample
@@ -928,6 +959,14 @@ FROM feat JOIN sc ON feat.b = sc.b GROUP BY doc_id
 """
 
 
+@query(twin=lambda: """
+WITH c AS (SELECT user_id, COUNT(*)::BIGINT AS n FROM events GROUP BY user_id),
+s AS (SELECT COUNT(*)::BIGINT AS n_keys, MAX(n)::BIGINT AS max_n,
+             ROUND(quantile_cont(n, 0.5), 6) AS med_n FROM c),
+t AS (SELECT MIN(c.user_id) AS top_key FROM c, s WHERE c.n = s.max_n)
+SELECT s.n_keys, s.max_n, s.med_n,
+       ROUND(s.max_n::DOUBLE / s.med_n, 6) AS skew_ratio, t.top_key
+FROM s, t""")
 def q_events_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join/agg key-skew diagnostic: per-key cardinality profile of
     events.user_id — key count, hottest-key size, median key size, and
@@ -970,6 +1009,7 @@ def q_events_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _DAY_DIGEST_ORACLE)
 def q_events_day_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent per-day content digest of the events table —
     the replica/migration verification primitive: both sides run one
@@ -1010,76 +1050,6 @@ SELECT day, COUNT(*)::BIGINT AS n_rows,
        (SUM(h) % {sk.DIGEST_MOD})::BIGINT AS digest_sum,
        bit_xor(h)::BIGINT AS digest_xor
 FROM rows_h GROUP BY day"""
-
-
-def analytics_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "events_hll_distinct": q_events_hll_distinct,
-        "events_stream_hll_replay": q_events_stream_hll_replay,
-        "orders_bloom_registers": q_orders_bloom_registers,
-        "lineitem_bloom_prune": q_lineitem_bloom_prune,
-        "text_chunks": q_text_chunks,
-        "text_chunks_fast": q_text_chunks_fast,
-        "embeddings_pca": q_embeddings_pca,
-        "embeddings_pca_suffstats": q_embeddings_pca_suffstats,
-        "quality_report_orders": q_quality_report_orders,
-        "events_first_touch": q_events_first_touch,
-        "text_surprisal": q_text_surprisal,
-        "events_pivot": q_events_pivot,
-        "orders_running_window": q_orders_running_window,
-        "text_repetition": q_text_repetition,
-        "text_redact_pii": q_text_redact_pii,
-        "corpus_decontaminate": q_corpus_decontaminate,
-        "text_cms_terms": q_text_cms_terms,
-        "corpus_sample_weighted": q_corpus_sample_weighted,
-        "events_hist_quantiles": q_events_hist_quantiles,
-        "events_quantile_sketch_error": q_events_quantile_sketch_error,
-        "pipeline_series_similarity": q_pipeline_series_similarity,
-        "corpus_rule_filter": q_corpus_rule_filter,
-        "events_key_skew": q_events_key_skew,
-        "corpus_dsir_weights": q_corpus_dsir_weights,
-        "events_day_digest": q_events_day_digest,
-    }
-
-
-def analytics_oracle_sql() -> dict[str, str]:
-    return {
-        "events_hll_distinct": _hll_oracle(),
-        "events_stream_hll_replay": _stream_hll_oracle(),
-        "orders_bloom_registers": _BLOOM_REGISTERS_ORACLE,
-        "lineitem_bloom_prune": _BLOOM_PRUNE_ORACLE,
-        "text_chunks": _TEXT_CHUNKS_ORACLE,
-        "text_chunks_fast": _TEXT_CHUNKS_ORACLE,
-        "embeddings_pca": _pca_gate_oracle(),
-        "embeddings_pca_suffstats": _PCA_SUFFSTATS_ORACLE,
-        "quality_report_orders": _QUALITY_REPORT_ORACLE,
-        "events_first_touch": _FIRST_TOUCH_ORACLE,
-        "text_surprisal": _SURPRISAL_ORACLE,
-        "events_pivot": _pivot_oracle(),
-        "orders_running_window": _RUNNING_WINDOW_ORACLE,
-        "text_repetition": _REPETITION_ORACLE,
-        "text_redact_pii": _redact_oracle(),
-        "corpus_decontaminate": _decontaminate_oracle(),
-        "text_cms_terms": _cms_oracle(),
-        "corpus_sample_weighted": _weighted_sample_oracle(),
-        "pipeline_series_similarity": _series_similarity_oracle(),
-        "corpus_rule_filter": _rule_filter_oracle(),
-        "events_key_skew": """
-WITH c AS (SELECT user_id, COUNT(*)::BIGINT AS n FROM events GROUP BY user_id),
-s AS (SELECT COUNT(*)::BIGINT AS n_keys, MAX(n)::BIGINT AS max_n,
-             ROUND(quantile_cont(n, 0.5), 6) AS med_n FROM c),
-t AS (SELECT MIN(c.user_id) AS top_key FROM c, s WHERE c.n = s.max_n)
-SELECT s.n_keys, s.max_n, s.med_n,
-       ROUND(s.max_n::DOUBLE / s.med_n, 6) AS skew_ratio, t.top_key
-FROM s, t""",
-        "corpus_dsir_weights": _dsir_oracle(),
-        "events_day_digest": _DAY_DIGEST_ORACLE,
-        "events_hist_quantiles": "WITH " + sk.hist_sql(
-            "value", "event_type", "events", HIST_QS, HIST_LO, HIST_HI,
-            gname="event_type",
-        ),
-        "events_quantile_sketch_error": _quantile_sketch_error_sql(),
-    }
 
 def _quantile_sketch_error_sql() -> str:
     """Twin of q_events_quantile_sketch_error: the hist-sketch twin and

@@ -1,9 +1,10 @@
-"""North-star extension query registry + DuckDB oracle twins.
+"""North-star extension queries + their DuckDB oracle twins.
 
-Same contract as ``queries.py``: every Spark query and its oracle SQL
-are generated from the SAME Python constants (stopword lists, seeds,
-thresholds, LSH planes), so the two sides cannot drift. Float
-discipline: exact-integer ratios compare unrounded; float sums round
+Same contract as ``queries.py``: each builder is declared by one
+``@query`` decorator carrying its twin, and every Spark query and its
+oracle SQL are generated from the SAME Python constants (stopword
+lists, seeds, thresholds, LSH planes), so the two sides cannot drift.
+Float discipline: exact-integer ratios compare unrounded; float sums round
 to 6 (small magnitudes) or 2 (big sums) on both sides.
 """
 
@@ -30,12 +31,24 @@ from kmeans_mapreduce_spark.operators import dedup as dd
 from kmeans_mapreduce_spark.operators import events as ev
 from kmeans_mapreduce_spark.operators import kmeans_nd as knd
 from kmeans_mapreduce_spark.operators import multimodal as mm
+from kmeans_mapreduce_spark.operators import relational as rel
 from kmeans_mapreduce_spark.operators import sampling as sp
 from kmeans_mapreduce_spark.operators import selection as _sel
 from kmeans_mapreduce_spark.operators import similarity as sim
 from kmeans_mapreduce_spark.operators import textops as tx
 from kmeans_mapreduce_spark.sources.loaders import load_table, parquet_schema
 from kmeans_mapreduce_spark.barrier import narrow_barrier
+from kmeans_mapreduce_spark.queries import (
+    SUM_DIGITS,
+    _R_EVAL,
+    _R_EVENTAGG,
+    _R_FIT,
+    _R_JOINFAM,
+    _R_STREAM,
+    _R_SUBSTEP,
+    _R_TEXTSCAN,
+    query,
+)
 
 # thresholds / params shared by both engines (calibrated against the
 # corpus: shingle-Jaccard between unrelated docs ≈ 0.002, planted
@@ -153,8 +166,8 @@ SELECT event_type,
        MAX(CASE WHEN rn = (99 * n + 99) // 100 THEN cents END) / 100.0 AS p99
 FROM r GROUP BY 1"""
 
-# f-string at module level: _ieee_round_signed_sql is defined below, so
-# build lazily via a plain format at first import of the oracle dict
+# a function, not a module-level f-string: _ieee_round_signed_sql is
+# defined below, so the SQL is built when the twin is first called
 def _trend_sql() -> str:
     return f"""
 WITH e AS (
@@ -189,26 +202,53 @@ def _sql_str_list(items: list[str]) -> str:
 # Spark-side queries
 # ---------------------------------------------------------------------------
 
+@query(twin=lambda: (
+    "SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n_tokens, "
+    "length(text)::BIGINT AS n_chars FROM documents"
+))
 def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.token_stats(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _quality_sql())
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.quality(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _langid_sql())
 def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.langid(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: (
+    f"SELECT doc_id, {h64_sql('lower(trim(text))')} AS fingerprint "
+    "FROM documents"
+))
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.fingerprint(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: f"""
+WITH tok AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+),
+tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
+df AS (SELECT term, COUNT(DISTINCT doc_id)::DOUBLE AS df FROM tok GROUP BY term),
+scored AS (
+  SELECT tf.doc_id, tf.term,
+         ROUND(tf.tf * ln((SELECT COUNT(*) FROM documents)::DOUBLE / df.df), 6) AS tfidf
+  FROM tf JOIN df ON tf.term = df.term
+),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
+  FROM scored
+)
+SELECT doc_id, term, rank::INTEGER AS rank, tfidf FROM ranked WHERE rank <= {TFIDF_K}""")
 def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=TFIDF_K)
 
 
+@query(twin=lambda: _sample_sql())
 def q_corpus_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible hash-bucket stratified sample (per-lang rates):
     the auditable, retry-stable way to subsample a training corpus —
@@ -218,6 +258,11 @@ def q_corpus_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang")
 
 
+@query(unbenched=_R_TEXTSCAN, twin=lambda: f"""
+WITH q AS ({_quality_sql()})
+SELECT doc_id, quality_score FROM q
+ORDER BY quality_score DESC, doc_id
+LIMIT {TOP_QUALITY_K}""")
 def q_text_top_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global ORDER BY + LIMIT (the §2.2 'sorts/limits' gap): top-K
     docs by quality score. Spark executes this as TakeOrderedAndProject
@@ -232,6 +277,7 @@ def q_text_top_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_TEXTSCAN, twin=lambda: _token_quantiles_sql())
 def q_text_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language exact token-count quantiles (corpus length profile
     for truncation/packing budgets)."""
@@ -240,6 +286,18 @@ def q_text_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# GPT-2-ish pre-tokenizer count: both engines run the SAME
+# lookahead-free pattern leftmost-first (Java regex / RE2)
+@query(twin=lambda: f"""
+WITH c AS (
+  SELECT doc_id,
+         len(regexp_extract_all(text, '{tx.BPE_SPLIT_RE.replace("'", "''")}'))::BIGINT AS n_bpe_tokens,
+         length(text) AS n_chars
+  FROM documents
+)
+SELECT doc_id, n_bpe_tokens,
+       ROUND(n_chars::DOUBLE / GREATEST(n_bpe_tokens, 1)::DOUBLE, 6) AS chars_per_token
+FROM c""")
 def q_text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.token_stats_bpe(load_table(spark, sf_dir, "documents"))
 
@@ -247,16 +305,45 @@ def q_text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHUFFLE_SHARDS = 32
 
 
+@query(twin=lambda: f"""
+WITH s AS (
+  SELECT doc_id,
+         {h64_sql(f"'{sp.SHUFFLE_SALT}:' || doc_id::VARCHAR")} AS k
+  FROM documents
+)
+SELECT doc_id, k AS shuffle_key, (k % {SHUFFLE_SHARDS})::INTEGER AS shard
+FROM s""")
 def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sp.global_shuffle(
         load_table(spark, sf_dir, "documents"), n_shards=SHUFFLE_SHARDS
     )
 
 
+# α=0.5 temperature mix: r_s = sqrt(n_min/n_s) is one IEEE
+# correctly-rounded divide + sqrt, so FLOOR(BUCKETS·r) is
+# bit-identical to the Spark driver's math.floor/math.sqrt
+@query(twin=lambda: f"""
+WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
+m AS (SELECT MIN(n) AS nmin FROM c),
+t AS (
+  SELECT lang,
+         FLOOR({sp.SAMPLE_BUCKETS} * sqrt(m.nmin::DOUBLE / c.n::DOUBLE))::BIGINT AS thr
+  FROM c, m
+)
+SELECT d.doc_id, d.lang
+FROM documents d JOIN t ON d.lang = t.lang
+WHERE {h64_sql(f"'{sp.TEMP_SALT}:' || doc_id::VARCHAR")} % {sp.SAMPLE_BUCKETS} < t.thr""")
 def q_corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sp.temperature_sample(load_table(spark, sf_dir, "documents"))
 
 
+@query(
+    unbenched=(
+        "weighted-mix planner over per-source counts; shape tracked by "
+        "the benched corpus_temperature_mix"
+    ),
+    twin=lambda: _training_mix_sql(),
+)
 def q_corpus_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end 'make training data' composition: quality filter
     → reproducible stratified hash sample → greedy token-budget
@@ -284,6 +371,14 @@ RESIZE_W, RESIZE_H = 32, 32
 FRAME_EVERY_N = 4
 
 
+# resize geometry replayed arithmetically: every image re-encodes
+# as "P6\n{W} {H}\n255\n" + 3WH pixels
+@query(twin=lambda: f"""
+SELECT doc_id AS media_id, 'image' AS kind,
+       {RESIZE_W}::INTEGER AS out_width, {RESIZE_H}::INTEGER AS out_height,
+       (9 + length('{RESIZE_W}') + length('{RESIZE_H}')
+          + 3 * {RESIZE_W} * {RESIZE_H})::BIGINT AS n_bytes
+FROM documents WHERE doc_id % 3 = 0""")
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real nearest-neighbor resize over decoded PPM pixel grids; the
     gate checks the re-encoded geometry (dims + exact byte size) — the
@@ -294,6 +389,20 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    unbenched=(
+        "frame-sample kernel; end-to-end AVI decode is benched via "
+        "multimodal_mjpeg"
+    ),
+    # real AVI frame sampling: F = doc_id%4+2 frames of
+    # 3*VID_W*VID_H raw RGB24 bytes, every FRAME_EVERY_N-th emitted
+    twin=lambda: f"""
+SELECT doc_id AS media_id,
+       unnest(range(0, doc_id % 4 + 2, {FRAME_EVERY_N}))::INTEGER AS frame_idx,
+       {mm.VID_FRAME_BYTES}::INTEGER AS frame_len
+FROM documents
+WHERE doc_id % 3 = 2""",
+)
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling (1→N fan-out): sampled frame indices and
     sizes per video payload."""
@@ -305,6 +414,14 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+SELECT doc_id AS media_id,
+       (doc_id % 4 + 2)::INTEGER AS n_frames,
+       {mm.VID_W}::INTEGER AS dec_width,
+       {mm.VID_H}::INTEGER AS dec_height,
+       ((doc_id % 4 + 2) * {mm.VID_FRAME_BYTES})::BIGINT AS rgb_bytes
+FROM documents
+WHERE doc_id % 3 = 2""")
 def q_multimodal_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MJPEG encode→container→decode roundtrip (round 9): per video
     doc, frames are JPEG-encoded, wrapped in an MJPG AVI, and decoded
@@ -318,6 +435,22 @@ def q_multimodal_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 SLIDE_SEC = ev.WINDOW_SEC  # slide = 300 s under a 600 s window → overlap 2
 
 
+# sliding windows: each event expands to size/slide = 2
+# epoch-aligned window starts
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT event_type, value,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+),
+w AS (
+  SELECT event_type, value,
+         ((ts_sec // {SLIDE_SEC}) * {SLIDE_SEC} - k.off)::BIGINT AS window_start
+  FROM e CROSS JOIN (VALUES (0), ({SLIDE_SEC})) k(off)
+)
+SELECT window_start, event_type,
+       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
+FROM w GROUP BY 1, 2""")
 def q_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native sliding-window aggregation (``F.window`` with a slide):
     every event lands in window_size/slide = 2 overlapping windows —
@@ -347,6 +480,30 @@ def q_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# independent lag-based replay of the NATIVE session_window
+# operator (split strictly-greater-than gap, verified boundary)
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, event_id, value,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+),
+flagged AS (
+  SELECT *, CASE WHEN ts_sec - lag(ts_sec) OVER w > {ev.SESSION_GAP_SEC}
+                 THEN 1 ELSE 0 END AS new_session
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)
+),
+sessions AS (
+  SELECT *, SUM(new_session) OVER (
+    PARTITION BY user_id ORDER BY ts_sec, event_id
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+  )::BIGINT AS session_idx
+  FROM flagged
+)
+SELECT user_id,
+       MIN(ts_sec) AS session_start, MAX(ts_sec) AS session_end,
+       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
+FROM sessions GROUP BY user_id, session_idx""")
 def q_events_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap sessions via Catalyst's NATIVE ``session_window`` operator
     (MergingSessionsExec — Spark plans the merge itself, no lag/cumsum
@@ -379,6 +536,13 @@ def q_events_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# batch twin of the STATEFUL streaming dedup: a full bounded
+# replay collapses the fingerprint state to this GROUP BY
+@query(unbenched=_R_STREAM, twin=lambda: f"""
+SELECT {h64_sql("lower(trim(text))")} AS fp,
+       MIN(doc_id) AS keep_doc_id,
+       COUNT(*)::BIGINT AS n_copies
+FROM documents GROUP BY 1""")
 def q_corpus_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second streaming artifact under the gate: the STATEFUL
     cross-batch exact-dedup operator (applyInPandasWithState keyed by
@@ -414,6 +578,7 @@ def q_corpus_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_STREAM, twin=lambda: _ROLLUP_RECOMPUTE_SQL)
 def q_events_stream_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``events_rollup_incremental`` under the gate:
     the bounded events table replayed through
@@ -452,6 +617,9 @@ def q_events_stream_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+# the SAME full-recompute M4 twin gates the streaming
+# maintainer: maintained ≡ recomputed, the rollup contract
+@query(unbenched=_R_STREAM, twin=lambda: _M4_SQL)
 def q_events_stream_m4_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``events_m4`` under the gate: the bounded
     events table replayed through ``stream_m4_maintain`` (mergeable
@@ -493,6 +661,18 @@ def q_events_stream_m4_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# batch twin of the STREAMING window aggregation: replay parity
+# means the streaming complete-mode state over bounded input
+# equals this one-shot tumbling-window GROUP BY
+@query(unbenched=_R_STREAM, twin=lambda: f"""
+WITH e AS (
+  SELECT event_type, value,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+)
+SELECT ((ts_sec // {ev.WINDOW_SEC}) * {ev.WINDOW_SEC})::BIGINT AS window_start,
+       event_type, COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
+FROM e GROUP BY 1, 2""")
 def q_events_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming artifact under the batch correctness gate:
     replay the bounded events table through the streaming tumbling-
@@ -524,6 +704,24 @@ def q_events_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    unbenched=_R_STREAM,
+    # streaming sessionizer replay: all sessions EXCEPT each user's
+    # trailing one (only a later event closes a session when idle
+    # eviction is off) — batching-invariant, so SQL-expressible
+    twin=lambda: _SESSIONIZE_SQL
+    + """,
+agg AS (
+  SELECT user_id, session_idx,
+         MIN(ts_sec) AS session_start, MAX(ts_sec) AS session_end,
+         COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
+  FROM sessions GROUP BY user_id, session_idx
+),
+last AS (SELECT user_id, MAX(session_idx) AS last_idx FROM agg GROUP BY user_id)
+SELECT a.user_id, a.session_start, a.session_end, a.n_events, a.value_sum
+FROM agg a JOIN last l
+  ON a.user_id = l.user_id AND a.session_idx < l.last_idx""",
+)
 def q_events_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Third streaming artifact under the gate: the
     ``applyInPandasWithState`` sessionizer replayed over the bounded
@@ -555,6 +753,54 @@ def q_events_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+# independently-formulated funnel: layered CTEs instead of the
+# engine's chained withColumn windows; same (ts_sec, event_id)
+# streaming funnel twin: the automaton's emitted rows, stated
+# relationally — per user, step k's timestamp is the first
+# step-k-typed event whose row already satisfies step k-1
+# (running-min chain, (ts_sec, event_id) order); per-user
+# aggregate MIN of each chained CASE equals the final running
+# value, and completed steps emit one row each
+@query(unbenched=_R_STREAM, twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, event_id, event_type,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+),
+s0 AS (
+  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[0]}' THEN ts_sec END)
+    OVER w AS q0
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+s1 AS (
+  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[1]}'
+                      AND q0 IS NOT NULL THEN ts_sec END) OVER w AS q1
+  FROM s0 WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+s2 AS (
+  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[2]}'
+                      AND q1 IS NOT NULL THEN ts_sec END) OVER w AS q2
+  FROM s1 WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+pu AS (
+  SELECT user_id,
+         MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[0]}'
+                  THEN ts_sec END) AS t1,
+         MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[1]}'
+                   AND q0 IS NOT NULL THEN ts_sec END) AS t2,
+         MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[2]}'
+                   AND q1 IS NOT NULL THEN ts_sec END) AS t3
+  FROM s2 GROUP BY user_id
+)
+SELECT user_id, 1 AS step, '{ev.FUNNEL_STEPS[0]}' AS step_type, t1 AS ts_sec
+FROM pu WHERE t1 IS NOT NULL
+UNION ALL
+SELECT user_id, 2, '{ev.FUNNEL_STEPS[1]}', t2 FROM pu WHERE t2 IS NOT NULL
+UNION ALL
+SELECT user_id, 3, '{ev.FUNNEL_STEPS[2]}', t3 FROM pu WHERE t3 IS NOT NULL""")
 def q_events_stream_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming FUNNEL under the gate: the bounded events
     table replayed through ``stream_funnel`` (the
@@ -728,6 +974,7 @@ def _drain_bounded_replay(
     return spark.table(qname)
 
 
+@query(twin=lambda: _ttl_dedup_replay_sql())
 def q_events_stream_ttl_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked TTL-dedup under the gate: the bounded events table
     replayed through ``stream_dedup_ttl`` (debounce by
@@ -811,6 +1058,11 @@ def _activate_pbshim(spark: SparkSession) -> Callable[[], None]:
     return restore
 
 
+# the TWS variant shares the v1 fold (one _ttl_fold_batch),
+# so its bounded single-batch replay has the SAME batch-LAG
+# twin — gating it pins the transformWithStateInPandas
+# protocol path itself (state server, timers, pbshim runtime)
+@query(twin=lambda: _ttl_dedup_replay_sql())
 def q_events_stream_ttl_dedup_tws_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -867,6 +1119,12 @@ def q_events_stream_ttl_dedup_tws_replay(
                 spark.conf.set(prov, prov_before)
 
 
+# native dropDuplicatesWithinWatermark: key columns only (which
+# duplicate row survives is engine-arbitrary); single-batch
+# bounded replay ≡ batch DISTINCT
+@query(twin=lambda: (
+    "SELECT DISTINCT user_id, event_type FROM events"
+))
 def q_events_stream_native_dedup_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -906,6 +1164,29 @@ def q_events_stream_native_dedup_replay(
     )
 
 
+# batch twin of the STREAMING inner interval join: an inner
+# stream-stream join emits pairs on arrival (never on watermark
+# timeout), so over bounded input it equals this relational
+# interval join row-for-row
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, event_id, event_type, value,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+),
+l AS (
+  SELECT user_id, event_id, ts_sec AS l_ts_sec
+  FROM e WHERE event_type = '{ASOF_LEFT_TYPE}'
+),
+r AS (
+  SELECT user_id AS r_user, ts_sec AS r_ts_sec, value AS r_value
+  FROM e WHERE event_type = '{ASOF_RIGHT_TYPE}'
+)
+SELECT l.user_id, l.event_id, l.l_ts_sec, r.r_ts_sec, r.r_value
+FROM l JOIN r
+  ON r.r_user = l.user_id
+ AND r.r_ts_sec >= l.l_ts_sec
+ AND r.r_ts_sec < l.l_ts_sec + {RANGE_HORIZON_SEC}""")
 def q_events_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STREAM join under the gate: the bounded events table
     replayed through ``stream_stream_range_join`` (purchases of the
@@ -1058,6 +1339,53 @@ def _write_event_time_ordered_split(
     return out
 
 
+# batch twin of the LEFT OUTER stream-stream join over the
+# pinned ordered split: matched pairs emit on arrival exactly
+# like the inner join; an unmatched left row emits nulls iff
+# its horizon closes AT or before the FINAL watermark (the
+# eviction boundary is inclusive — pinned by the strictness test)
+# W = min(max l ts, max r ts) - delay (two per-branch
+# watermarks, min-combined; rows still inside their horizon at
+# end-of-stream never emit)
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, event_id, event_type, value,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+),
+l AS (
+  SELECT user_id, event_id, ts_sec AS l_ts_sec
+  FROM e WHERE event_type = '{ASOF_LEFT_TYPE}'
+),
+r AS (
+  SELECT user_id AS r_user, ts_sec AS r_ts_sec, value AS r_value
+  FROM e WHERE event_type = '{ASOF_RIGHT_TYPE}'
+),
+wm AS (
+  -- NULL when EITHER branch has no rows: a branch whose event type
+  -- never appears keeps the min-combined Spark watermark at its
+  -- initial value, so no left row ever evicts and no nulls emit —
+  -- DuckDB's LEAST skips NULL (LEAST(NULL, x) = x), which would
+  -- wrongly advance the twin's watermark on single-type vintages
+  SELECT CASE WHEN ml.v IS NULL OR mr.v IS NULL
+              THEN NULL ELSE LEAST(ml.v, mr.v) - {STREAM_WATERMARK_SEC}
+         END AS w
+  FROM (SELECT MAX(ts_sec) AS v FROM e
+        WHERE event_type = '{ASOF_LEFT_TYPE}') ml,
+       (SELECT MAX(ts_sec) AS v FROM e
+        WHERE event_type = '{ASOF_RIGHT_TYPE}') mr
+),
+j AS (
+  SELECT l.user_id, l.event_id, l.l_ts_sec, r.r_ts_sec, r.r_value
+  FROM l LEFT JOIN r
+    ON r.r_user = l.user_id
+   AND r.r_ts_sec >= l.l_ts_sec
+   AND r.r_ts_sec < l.l_ts_sec + {RANGE_HORIZON_SEC}
+)
+SELECT j.user_id, j.event_id, j.l_ts_sec, j.r_ts_sec, j.r_value
+FROM j, wm
+WHERE j.r_ts_sec IS NOT NULL
+   OR j.l_ts_sec + {RANGE_HORIZON_SEC} <= wm.w""")
 def q_events_stream_join_outer_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1100,6 +1428,20 @@ def q_events_stream_join_outer_replay(
     ).select("user_id", "event_id", "l_ts_sec", "r_ts_sec", "r_value")
 
 
+# batch twin of the STREAM-STATIC broadcast enrich: stateless
+# per-batch join over bounded input = the batch left join
+@query(twin=lambda: f"""
+WITH p AS (
+  SELECT user_id, event_id,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events WHERE event_type = '{ASOF_RIGHT_TYPE}'
+),
+d AS (
+  SELECT c_custkey AS user_id, c_mktsegment AS segment
+  FROM customer WHERE c_custkey < {ENRICH_DIM_CUTOFF}
+)
+SELECT p.user_id, p.event_id, p.ts_sec, d.segment
+FROM p LEFT JOIN d USING (user_id)""")
 def q_events_stream_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM-STATIC join under the gate: the purchase stream enriched
     with a batch customer dimension via ``stream_static_enrich``
@@ -1144,15 +1486,34 @@ def q_events_stream_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select("user_id", "event_id", "ts_sec", "segment")
 
 
+@query(twin=lambda: """
+SELECT l_returnflag, l_linestatus,
+       ROUND(SUM(l_quantity), 2) AS sum_qty,
+       ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
+       ROUND(SUM(l_extendedprice * (CAST(1.0 AS DOUBLE) - l_discount)), 2) AS sum_disc_price,
+       ROUND(SUM(l_extendedprice * (CAST(1.0 AS DOUBLE) - l_discount)
+                 * (CAST(1.0 AS DOUBLE) + l_tax)), 2) AS sum_charge,
+       ROUND(AVG(l_quantity), 6) AS avg_qty,
+       ROUND(AVG(l_extendedprice), 6) AS avg_price,
+       ROUND(AVG(l_discount), 6) AS avg_disc,
+       COUNT(*) AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '2000-09-02'
+GROUP BY l_returnflag, l_linestatus""")
 def q_lineitem_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.pricing_summary(load_table(spark, sf_dir, "lineitem"))
 
 
+@query(twin=lambda: """
+SELECT n.n_name,
+       ROUND(SUM(l.l_extendedprice * (CAST(1.0 AS DOUBLE) - l.l_discount)), 2) AS revenue,
+       COUNT(*) AS n_items
+FROM lineitem l
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+JOIN customer c ON o.o_custkey = c.c_custkey
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+GROUP BY n.n_name""")
 def q_join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.revenue_by_nation(
         load_table(spark, sf_dir, "lineitem"),
         load_table(spark, sf_dir, "orders"),
@@ -1161,9 +1522,24 @@ def q_join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+WITH per_cust AS (
+  SELECT o.o_custkey, ROUND(SUM(l.l_extendedprice * (CAST(1.0 AS DOUBLE) - l.l_discount)), 2) AS revenue
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  GROUP BY o.o_custkey
+),
+named AS (
+  SELECT n.n_name, p.o_custkey AS custkey, p.revenue
+  FROM per_cust p
+  JOIN customer c ON p.o_custkey = c.c_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY n_name ORDER BY revenue DESC, custkey) AS rank
+  FROM named
+)
+SELECT n_name, custkey, rank::INTEGER AS rank, revenue FROM ranked WHERE rank <= {TOPCUST_K}""")
 def q_join_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.top_customers_per_nation(
         load_table(spark, sf_dir, "lineitem"),
         load_table(spark, sf_dir, "orders"),
@@ -1173,9 +1549,13 @@ def q_join_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_JOINFAM, twin=lambda: f"""
+SELECT p.p_partkey FROM part p
+WHERE NOT EXISTS (
+  SELECT 1 FROM lineitem l
+  WHERE l.l_partkey = p.p_partkey AND l.l_quantity > {ANTI_MIN_QTY}
+)""")
 def q_join_parts_never_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.parts_never_ordered(
         load_table(spark, sf_dir, "part"),
         load_table(spark, sf_dir, "lineitem"),
@@ -1183,9 +1563,13 @@ def q_join_parts_never_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_JOINFAM, twin=lambda: """
+SELECT r.r_name, COUNT(*) AS n_suppliers
+FROM supplier s
+JOIN nation n ON s.s_nationkey = n.n_nationkey
+JOIN region r ON n.n_regionkey = r.r_regionkey
+GROUP BY r.r_name""")
 def q_join_suppliers_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.suppliers_per_region(
         load_table(spark, sf_dir, "supplier"),
         load_table(spark, sf_dir, "nation"),
@@ -1193,9 +1577,19 @@ def q_join_suppliers_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_JOINFAM, twin=lambda: """
+SELECT l.l_orderkey, strftime(o.o_orderdate, '%Y-%m-%d') AS o_date,
+       ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+FROM customer c
+JOIN orders o ON o.o_custkey = c.c_custkey
+JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+WHERE c.c_mktsegment = 'BUILDING'
+  AND o.o_orderdate < TIMESTAMP '1998-06-01'
+  AND l.l_shipdate > TIMESTAMP '1998-06-01'
+GROUP BY 1, 2
+ORDER BY revenue DESC, l.l_orderkey
+LIMIT 10""")
 def q_join_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.shipping_priority(
         load_table(spark, sf_dir, "customer"),
         load_table(spark, sf_dir, "orders"),
@@ -1203,43 +1597,102 @@ def q_join_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_JOINFAM, twin=lambda: """
+SELECT o.o_orderpriority, COUNT(*)::BIGINT AS order_count
+FROM orders o
+WHERE o.o_orderdate >= TIMESTAMP '1998-01-01'
+  AND o.o_orderdate < TIMESTAMP '1998-04-01'
+  AND EXISTS (
+    SELECT 1 FROM lineitem l
+    WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate
+  )
+GROUP BY o.o_orderpriority""")
 def q_join_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: quarter's orders with ≥1 late-shipping lineitem,
     per priority — EXISTS as a left-semi hash join with the cross-table
     inequality as join residual (never a correlated rescan)."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.order_priority_check(
         load_table(spark, sf_dir, "orders"),
         load_table(spark, sf_dir, "lineitem"),
     )
 
 
+@query(unbenched=_R_JOINFAM, twin=lambda: f"""
+WITH agg AS (
+  SELECT ROUND(SUM(CASE WHEN p.p_type = 'PROMO'
+                        THEN l.l_extendedprice * (1 - l.l_discount)
+                        ELSE CAST(0.0 AS DOUBLE) END), 2) AS promo_revenue,
+         ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS total_revenue,
+         COUNT(*)::BIGINT AS n_items
+  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+  WHERE l.l_shipdate >= TIMESTAMP '1998-06-01'
+    AND l.l_shipdate < TIMESTAMP '1998-07-01'
+)
+SELECT promo_revenue, total_revenue, n_items,
+       {_ieee_round_pos_sql('CAST(100.0 AS DOUBLE) * promo_revenue / total_revenue')} AS promo_share
+FROM agg""")
 def q_join_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: promo parts' share of one month's revenue —
     conditional aggregation over a broadcast part join; share derived
     from the two cents-rounded sums with the floor-pinned round."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.promo_revenue_share(
         load_table(spark, sf_dir, "lineitem"),
         load_table(spark, sf_dir, "part"),
     )
 
 
+# Q17 shape: decorrelated per-part aggregate; exact-integer
+# below-one-fifth predicate (5*qty*n < sum)
+@query(unbenched=_R_JOINFAM, twin=lambda: """
+WITH s AS (
+  SELECT l_partkey, COUNT(*)::BIGINT AS n_q,
+         SUM(CAST(floor(l_quantity + 0.5) AS BIGINT))::BIGINT AS s_q
+  FROM lineitem GROUP BY 1)
+SELECT p.p_brand, COUNT(*)::BIGINT AS n_small,
+       ROUND(SUM(l.l_extendedprice), 2) AS revenue
+FROM lineitem l
+JOIN s ON s.l_partkey = l.l_partkey
+JOIN part p ON p.p_partkey = l.l_partkey
+WHERE 5 * CAST(floor(l.l_quantity + 0.5) AS BIGINT) * s.n_q < s.s_q
+GROUP BY 1""")
 def q_join_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: revenue of line items below one fifth of their
     part's average quantity — the correlated scalar subquery
     decorrelated into a same-key aggregate+join; the threshold test is
     exact int64 (5·qty·n < Σqty), so no float-average ulp flips rows."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.small_quantity_revenue(
         load_table(spark, sf_dir, "lineitem"),
         load_table(spark, sf_dir, "part"),
     )
 
 
+# Q21 shape: EXISTS/NOT-EXISTS over the status-pruned fact;
+# lateness is the exact timestamp predicate both engines share
+@query(twin=lambda: f"""
+WITH o AS (SELECT o_orderkey, o_orderdate FROM orders
+           WHERE o_orderstatus = 'F'),
+ll AS (
+  SELECT l.l_orderkey, l.l_suppkey,
+         (l.l_shipdate > o.o_orderdate
+            + INTERVAL {rel.LATE_SHIP_DAYS} DAY) AS late
+  FROM lineitem l JOIN o ON l.l_orderkey = o.o_orderkey
+),
+w AS (
+  SELECT l1.l_orderkey, l1.l_suppkey
+  FROM ll l1
+  WHERE l1.late
+    AND EXISTS (SELECT 1 FROM ll l2
+                WHERE l2.l_orderkey = l1.l_orderkey
+                  AND l2.l_suppkey <> l1.l_suppkey)
+    AND NOT EXISTS (SELECT 1 FROM ll l3
+                    WHERE l3.l_orderkey = l1.l_orderkey
+                      AND l3.l_suppkey <> l1.l_suppkey AND l3.late)
+)
+SELECT s.s_suppkey, s.s_name, n.n_name, COUNT(*)::BIGINT AS numwait
+FROM w
+JOIN supplier s ON w.l_suppkey = s.s_suppkey
+JOIN nation n ON s.s_nationkey = n.n_nationkey
+GROUP BY 1, 2, 3""")
 def q_join_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (r13 verdict task 4 — the relational suite's
     hard tail): only-late supplier per multi-supplier finished order.
@@ -1247,8 +1700,6 @@ def q_join_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     SEMI + LEFT ANTI hash joins on l_orderkey with the supplier
     inequality as join residual — no correlated rescans, exact
     timestamp lateness predicate shared verbatim with the twin."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.waiting_suppliers(
         load_table(spark, sf_dir, "supplier"),
         load_table(spark, sf_dir, "nation"),
@@ -1257,14 +1708,29 @@ def q_join_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Q20 shape: pair aggregate + window total + exact-integer
+# dominance (2*sum_sp > sum_p), IN resolved as a key join
+@query(twin=lambda: f"""
+WITH p AS (SELECT p_partkey FROM part
+           WHERE p_name LIKE '{rel.EXCESS_PART_PREFIX}%'),
+l AS (SELECT l_partkey, l_suppkey,
+             CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty
+      FROM lineitem
+      WHERE l_shipdate >= TIMESTAMP '{rel.EXCESS_YEAR}-01-01'
+        AND l_shipdate < TIMESTAMP '{rel.EXCESS_YEAR + 1}-01-01'),
+pr AS (SELECT l.l_partkey, l.l_suppkey, SUM(qty)::BIGINT AS s_sp
+       FROM l JOIN p ON l.l_partkey = p.p_partkey GROUP BY 1, 2),
+d AS (SELECT *, SUM(s_sp) OVER (PARTITION BY l_partkey) AS s_p FROM pr)
+SELECT s.s_suppkey, s.s_name, COUNT(*)::BIGINT AS n_parts
+FROM d JOIN supplier s ON d.l_suppkey = s.s_suppkey
+WHERE 2 * s_sp > s_p
+GROUP BY 1, 2""")
 def q_join_excess_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers shipping more than half of a
     prefix-matched part's yearly quantity. The nested
     IN-with-correlated-aggregate decorrelates into one pair aggregate
     + a window total over the aggregate (never a second fact scan) +
     the exact-integer dominance test 2*sum_sp > sum_p."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.excess_stock_suppliers(
         load_table(spark, sf_dir, "supplier"),
         load_table(spark, sf_dir, "lineitem"),
@@ -1272,40 +1738,75 @@ def q_join_excess_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Q13 shape: predicate inside the OUTER join condition — the
+# 0-bucket must survive
+@query(twin=lambda: f"""
+WITH per_cust AS (
+  SELECT c.c_custkey, COUNT(o.o_orderkey)::BIGINT AS c_count
+  FROM customer c
+  LEFT OUTER JOIN orders o
+    ON c.c_custkey = o.o_custkey
+   AND o.o_orderpriority <> '{rel.CUSTDIST_EXCLUDED_PRIORITY}'
+  GROUP BY c.c_custkey
+)
+SELECT c_count, COUNT(*)::BIGINT AS custdist
+FROM per_cust GROUP BY c_count""")
 def q_join_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: customer order-count histogram with the
     order-class predicate INSIDE the left-outer join condition (a
     WHERE would drop the 0-bucket customers the histogram exists to
     count). One outer hash join + two map-side-combined aggregates."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.customer_order_histogram(
         load_table(spark, sf_dir, "customer"),
         load_table(spark, sf_dir, "orders"),
     )
 
 
+# Q15 shape: cents-rounded revenue view + 1-row MAX equality
+@query(twin=lambda: f"""
+WITH revenue AS (
+  SELECT l_suppkey,
+         ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
+  FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '{rel.TOP_REVENUE_START}'
+    AND l_shipdate < TIMESTAMP '{rel.TOP_REVENUE_END}'
+  GROUP BY l_suppkey
+)
+SELECT s.s_suppkey, s.s_name, r.total_revenue
+FROM revenue r JOIN supplier s ON r.l_suppkey = s.s_suppkey
+WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)""")
 def q_join_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: supplier(s) whose quarter revenue equals the
     global maximum — the correlated-MAX view decorrelated into one
     materialized revenue aggregate + a broadcast 1-row max; revenue is
     cents-rounded BEFORE the equality so the argmax can't flip on
     summation order."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.top_revenue_suppliers(
         load_table(spark, sf_dir, "supplier"),
         load_table(spark, sf_dir, "lineitem"),
     )
 
 
+# Q16 shape: pruned part dim, NOT IN as anti (keys non-null),
+# exact two-phase COUNT(DISTINCT)
+@query(twin=lambda: f"""
+SELECT p.p_brand, p.p_type, p.p_size,
+       COUNT(DISTINCT l.l_suppkey)::BIGINT AS supplier_cnt
+FROM lineitem l
+JOIN part p ON l.l_partkey = p.p_partkey
+WHERE p.p_brand <> '{rel.SUPPLIER_CNT_EXCL_BRAND}'
+  AND p.p_type NOT LIKE '{rel.SUPPLIER_CNT_EXCL_TYPE}%'
+  AND p.p_size IN {rel.SUPPLIER_CNT_SIZES}
+  AND l.l_suppkey NOT IN (
+    SELECT s_suppkey FROM supplier
+    WHERE s_acctbal < {rel.COMPLAINT_ACCTBAL_MAX}
+  )
+GROUP BY 1, 2, 3""")
 def q_join_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct suppliers per qualifying part class,
     excluding the low-acctbal "complaints" blacklist — part predicates
     prune before the broadcast, NOT IN runs as a broadcast LEFT ANTI
     (non-null keys make them equivalent), COUNT(DISTINCT) two-phase."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.supplier_count_by_part_class(
         load_table(spark, sf_dir, "part"),
         load_table(spark, sf_dir, "lineitem"),
@@ -1318,6 +1819,33 @@ MIN_COST_REGION = "EUROPE"  # Q2-shape region filter (4 suppliers even
 MIN_COST_TOP_N = 100
 
 
+# Q2 shape: decorrelated per-(part, supplier) min unit cost,
+# per-part argmin with (cost, suppkey) tie-break, region-pruned
+# supplier dim; unit price pinned to cents with the shared
+# IEEE floor expression
+@query(twin=lambda: f"""
+WITH sup AS (
+  SELECT s.s_suppkey, s.s_name, n.n_name
+  FROM supplier s
+  JOIN nation n ON s.s_nationkey = n.n_nationkey
+  JOIN region r ON n.n_regionkey = r.r_regionkey
+  WHERE r.r_name = '{MIN_COST_REGION}'),
+supply AS (
+  SELECT l.l_partkey, sup.s_suppkey, sup.s_name, sup.n_name,
+         MIN(CAST(floor(l.l_extendedprice / l.l_quantity * 100 + 0.5)
+                  AS BIGINT)) AS cost_cents
+  FROM lineitem l JOIN sup ON l.l_suppkey = sup.s_suppkey
+  GROUP BY 1, 2, 3, 4),
+best AS (
+  SELECT *, row_number() OVER (
+      PARTITION BY l_partkey ORDER BY cost_cents, s_suppkey) AS rn
+  FROM supply)
+SELECT p.p_partkey, p.p_brand, b.cost_cents,
+       b.s_suppkey, b.s_name, b.n_name
+FROM best b JOIN part p ON p.p_partkey = b.l_partkey
+WHERE b.rn = 1
+ORDER BY b.cost_cents, p.p_partkey
+LIMIT {MIN_COST_TOP_N}""")
 def q_join_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: the minimum-cost supplier per part within one
     region — the correlated MIN subquery decorrelated into a
@@ -1325,8 +1853,6 @@ def q_join_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, region predicate pruning suppliers before the fact
     join, cents-pinned unit cost so the argmin can never flip
     cross-engine (operators/relational.min_cost_supplier)."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.min_cost_supplier(
         load_table(spark, sf_dir, "lineitem"),
         load_table(spark, sf_dir, "part"),
@@ -1341,6 +1867,18 @@ def q_join_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 HEAPS_PREFIXES = [64, 128, 256, 512, 1024, 4096]
 
 
+# Heaps curve: per-term first-seen doc, ladder via range join
+@query(unbenched=_R_TEXTSCAN, twin=lambda: f"""
+WITH first AS (
+  SELECT term, MIN(doc_id) AS first_doc
+  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        FROM documents)
+  GROUP BY 1),
+ladder AS (SELECT unnest([{", ".join(str(n) for n in HEAPS_PREFIXES)}])
+           AS prefix_docs)
+SELECT l.prefix_docs::BIGINT AS prefix_docs, COUNT(*)::BIGINT AS vocab_size
+FROM first f JOIN ladder l ON f.first_doc < l.prefix_docs
+GROUP BY 1""")
 def q_text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps-law vocabulary growth — |vocab| after the first N docs for
     a ladder of N (the curve that sizes a tokenizer's vocab budget and
@@ -1372,31 +1910,63 @@ def q_text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# spatial radius join: 3x3 grid-neighborhood blocking, exact
+# IEEE d2 <= r2 residual, pinned min rounding
+@query(twin=lambda: _radius_join_sql())
 def q_points_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial radius join over the 2-D point set
     (relational.radius_join_counts): per fixed probe, the population
     and pinned-rounded nearest d² within r=5 — grid-blocked 3×3 cell
     neighborhood, broadcast probe side, exact IEEE d² residual."""
-    from kmeans_mapreduce_spark.operators import relational as rel
     from kmeans_mapreduce_spark.queries import K4_CENTERS
     from kmeans_mapreduce_spark.sources.derive import points_2d
 
     return rel.radius_join_counts(points_2d(spark, sf_dir), K4_CENTERS)
 
 
+# Q22 shape: exact-integer above-average membership + anti-join
+@query(unbenched=_R_JOINFAM, twin=lambda: """
+WITH c AS (
+  SELECT c_custkey, c_nationkey,
+         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
+  FROM customer),
+pos AS (
+  SELECT COUNT(*)::BIGINT AS n_pos, SUM(bal_cents)::BIGINT AS s_pos
+  FROM c WHERE bal_cents > 0)
+SELECT c.c_nationkey, COUNT(*)::BIGINT AS n_custs,
+       (SUM(c.bal_cents)::BIGINT / 100.0) AS total_bal
+FROM c, pos
+WHERE c.bal_cents * pos.n_pos > pos.s_pos
+  AND NOT EXISTS (SELECT 1 FROM orders o
+                  WHERE o.o_custkey = c.c_custkey
+                    AND o.o_orderpriority = '1-URGENT')
+GROUP BY 1""")
 def q_join_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: high-balance customers with no urgent order,
     per nation — broadcast scalar threshold (exact int64
     cents·n > Σcents) + anti-join on the urgent-filtered orders fact
     (the unfiltered form is vacuous on this synthetic data)."""
-    from kmeans_mapreduce_spark.operators import relational as rel
-
     return rel.idle_customer_balance(
         load_table(spark, sf_dir, "customer"),
         load_table(spark, sf_dir, "orders"),
     )
 
 
+@query(twin=lambda: f"""
+WITH qual AS ({_quality_sql()}),
+keep AS (
+  SELECT MIN(doc_id) AS doc_id FROM documents
+  GROUP BY {h64_sql('lower(trim(text))')}
+),
+clean AS (
+  SELECT q.doc_id, q.quality_score, d.lang
+  FROM qual q
+  JOIN keep k ON q.doc_id = k.doc_id
+  JOIN documents d ON d.doc_id = q.doc_id
+  WHERE q.quality_score >= {CLEAN_MIN_QUALITY}
+)
+SELECT lang, COUNT(*) AS n_docs, ROUND(AVG(quality_score), 6) AS avg_quality
+FROM clean GROUP BY lang""")
 def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composition: quality-filter → exact-dedup keepers → per-language
     stats. The operators compose as DataFrames — one chained plan, not
@@ -1416,6 +1986,15 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_EVENTAGG, twin=lambda: f"""
+SELECT COALESCE(event_type, 'ALL') AS event_type,
+       COALESCE(hour, -1) AS hour,
+       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
+FROM (
+  SELECT event_type, (epoch_ns(ts) // 1000000000 // 3600)::BIGINT AS hour, value
+  FROM events
+)
+GROUP BY ROLLUP(event_type, hour)""")
 def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping-set rollup: per (event_type, hour) with hour subtotals
     and a grand total — the multi-granularity aggregate a reporting
@@ -1438,6 +2017,11 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# full from-scratch recompute in exact int64 cents — the gate
+# thereby checks the incremental-maintenance invariant
+# (history-state ⊎ delta ≡ recompute) across engines; the SAME
+# twin gates the streaming maintainer (same mergeable state)
+@query(unbenched=_R_EVENTAGG, twin=lambda: _ROLLUP_RECOMPUTE_SQL)
 def q_events_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance: the per-(type, hour) rollup
     kept as mergeable (count, int64-cents sum) partials — history state
@@ -1448,6 +2032,9 @@ def q_events_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.incremental_rollup(load_table(spark, sf_dir, "events"))
 
 
+# dense hourly axis from a 1-row bounds aggregate; LOCF =
+# last_value IGNORE NULLS over the exact cents sum
+@query(twin=lambda: _GAPFILL_SQL)
 def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-bucket gap filling with LOCF (events.gapfill_locf) — the
     hypertable ``time_bucket_gapfill`` + ``locf`` pattern: dense
@@ -1456,6 +2043,29 @@ def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.gapfill_locf(load_table(spark, sf_dir, "events"))
 
 
+# hold-time-weighted mean: exact int64 cents·seconds numerator,
+# one division + the pinned floor-round at the end
+@query(unbenched=_R_EVENTAGG, twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, event_id,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec,
+         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+  FROM events),
+stepped AS (
+  SELECT user_id, ts_sec, cents,
+         lead(ts_sec) OVER (PARTITION BY user_id ORDER BY ts_sec, event_id)
+           - ts_sec AS dt
+  FROM e),
+agg AS (
+  SELECT user_id, COUNT(*)::BIGINT AS n_events,
+         SUM(cents * dt)::BIGINT AS num,
+         (MAX(ts_sec) - MIN(ts_sec))::BIGINT AS duration_sec
+  FROM stepped GROUP BY 1)
+SELECT user_id, n_events, duration_sec,
+       CASE WHEN duration_sec > 0 THEN
+         {_ieee_round_pos_sql("CAST(num AS DOUBLE) / (duration_sec * 100.0)")}
+       END AS twa
+FROM agg""")
 def q_events_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average per user (events.time_weighted_avg) —
     hold-time-weighted mean over irregular samples, exact int64
@@ -1463,6 +2073,9 @@ def q_events_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.time_weighted_avg(load_table(spark, sf_dir, "events"))
 
 
+# M4 downsampling: first/last resolved by the unique
+# (ts_sec, event_id) row_number against the partition count
+@query(unbenched=_R_EVENTAGG, twin=lambda: _M4_SQL)
 def q_events_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4 chart downsampling (events.m4_downsample): per (type, hour)
     min/max/first/last — pixel-exact line rendering from O(buckets)
@@ -1470,6 +2083,20 @@ def q_events_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.m4_downsample(load_table(spark, sf_dir, "events"))
 
 
+# same contribution expansion: distinct (day,user) → explode
+# to the W trailing report days → distinct → count
+@query(twin=lambda: """
+WITH per AS (
+  SELECT DISTINCT (epoch_ns(ts) // 1000000000 // 86400)::BIGINT AS day,
+         user_id
+  FROM events),
+contrib AS (
+  SELECT DISTINCT unnest(generate_series(day, day + 6)) AS day, user_id
+  FROM per)
+SELECT c.day, COUNT(*)::BIGINT AS n_active
+FROM contrib c
+WHERE c.day IN (SELECT day FROM per)
+GROUP BY 1""")
 def q_events_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     """7-day rolling distinct active users per day
     (events.rolling_active_users): contribution-expansion over distinct
@@ -1479,6 +2106,10 @@ def q_events_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.rolling_active_users(load_table(spark, sf_dir, "events"))
 
 
+# same exact suffstats: DuckDB integer SUM widens to HUGEINT,
+# Spark accumulates DECIMAL(38,0) — identical integers, one
+# correctly-rounded cast + division + the signed pinned round
+@query(twin=_trend_sql)
 def q_events_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type OLS value trend (events.value_trend): exact
     DECIMAL(38,0) sufficient statistics, one pinned division at the
@@ -1486,6 +2117,30 @@ def q_events_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.value_trend(load_table(spark, sf_dir, "events"))
 
 
+# composition twin: the four operator twins as subqueries,
+# joined on the O(|types|) key — same single-source reuse rule
+# as the other pipeline twins
+@query(twin=lambda: f"""
+WITH q AS (SELECT event_type, n_events, p50, p99
+           FROM ({_EXACT_QUANTILES_SQL}) t1),
+tr AS (SELECT event_type, slope FROM ({_trend_sql()}) t2),
+g AS (
+  SELECT event_type,
+         {_ieee_round_pos_sql(
+             "SUM(CASE WHEN is_gap THEN 1 ELSE 0 END)::DOUBLE / COUNT(*)")}
+           AS gap_frac
+  FROM ({_GAPFILL_SQL}) t3 GROUP BY 1),
+m AS (
+  SELECT event_type, v_last AS last_close
+  FROM (SELECT event_type, v_last,
+               row_number() OVER (PARTITION BY event_type
+                                  ORDER BY bucket DESC) AS _rn
+        FROM ({_M4_SQL}) t4)
+  WHERE _rn = 1)
+SELECT q.event_type, q.n_events, q.p50, q.p99, tr.slope, g.gap_frac,
+       m.last_close
+FROM q JOIN tr USING (event_type) JOIN g USING (event_type)
+       JOIN m USING (event_type)""")
 def q_pipeline_events_dashboard(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1540,6 +2195,9 @@ def q_pipeline_events_dashboard(
     return q.join(t, "event_type").join(g, "event_type").join(m, "event_type")
 
 
+# exact nearest-rank quantiles: pure integer rank math over
+# exact cents — no float interpolation on either engine
+@query(twin=lambda: _EXACT_QUANTILES_SQL)
 def q_events_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT per-type value quantiles (events.exact_quantiles) — the
     sort-based exact complement to the mergeable histogram sketch
@@ -1548,6 +2206,40 @@ def q_events_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.exact_quantiles(load_table(spark, sf_dir, "events"))
 
 
+# MAD anomaly flags: all-integer rollup + nearest-rank medians
+# (the exact_quantiles rank discipline), k·MAD compare exact
+@query(twin=lambda: f"""
+WITH roll AS (
+  SELECT event_type, (epoch_ns(ts) // 1000000000) // 3600 AS hr,
+         SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))::BIGINT AS v
+  FROM events GROUP BY 1, 2),
+r1 AS (
+  SELECT event_type, v,
+         row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn,
+         COUNT(*) OVER (PARTITION BY event_type) AS n
+  FROM roll),
+med AS (
+  SELECT event_type,
+         MAX(CASE WHEN rn = (n + 1) // 2 THEN v END)::BIGINT AS med_cents
+  FROM r1 GROUP BY 1),
+dev AS (
+  SELECT roll.event_type, abs(v - med_cents)::BIGINT AS d, med_cents
+  FROM roll JOIN med USING (event_type)),
+r2 AS (
+  SELECT event_type, d,
+         row_number() OVER (PARTITION BY event_type ORDER BY d) AS rn,
+         COUNT(*) OVER (PARTITION BY event_type) AS n
+  FROM dev),
+mad AS (
+  SELECT event_type,
+         MAX(CASE WHEN rn = (n + 1) // 2 THEN d END)::BIGINT AS mad_cents
+  FROM r2 GROUP BY 1)
+SELECT dev.event_type, COUNT(*)::BIGINT AS n_hours,
+       MAX(dev.med_cents)::BIGINT AS med_cents,
+       MAX(mad.mad_cents)::BIGINT AS mad_cents,
+       SUM(CASE WHEN dev.d > {ev.MAD_K} * mad.mad_cents
+                THEN 1 ELSE 0 END)::BIGINT AS n_anomalous
+FROM dev JOIN mad USING (event_type) GROUP BY 1""")
 def q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-type anomaly detection over the hourly rollup
     (events.anomaly_mad): nearest-rank median + MAD in exact int64
@@ -1557,6 +2249,21 @@ def q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.anomaly_mad(load_table(spark, sf_dir, "events"))
 
 
+# in-flight CollectMetrics counters vs the relational ground
+# truth (the observe() zero-extra-scan contract)
+# n_groups counts the NULL group iff present (Spark's groupBy
+# makes NULL a group; COUNT(DISTINCT) alone would ignore it —
+# latent off-by-one on a NULL-bearing vintage)
+@query(twin=lambda: """
+SELECT COUNT(*)::BIGINT AS n_rows,
+       COALESCE(SUM(CASE WHEN props IS NULL THEN 1 ELSE 0 END), 0)::BIGINT
+         AS n_null_props,
+       COALESCE(SUM(CASE WHEN CAST(floor(value * 100 + 0.5) AS BIGINT) < 0
+                THEN 1 ELSE 0 END), 0)::BIGINT AS n_neg_cents,
+       (COUNT(DISTINCT event_type)
+        + CASE WHEN COUNT(*) > COUNT(event_type) THEN 1 ELSE 0 END
+       )::BIGINT AS n_groups
+FROM events""")
 def q_events_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``Dataset.observe`` surface (CollectMetrics): pipeline
     counters — input rows, null-props rows, negative-value rows —
@@ -1601,6 +2308,13 @@ def q_events_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    unbenched=(
+        "eval table over the trained LR; training is benched via "
+        "corpus_lr_loop2 / corpus_lr_calibration"
+    ),
+    twin=lambda: _lr_auc_sql(),
+)
 def q_corpus_lr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Mann-Whitney AUC of the gated LR classifier — the eval
     number that goes next to the calibration table. Ranks come from
@@ -1670,26 +2384,124 @@ def auc_exact(scored: DataFrame) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+SELECT MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
+FROM documents GROUP BY {h64_sql('lower(trim(text))')}""")
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.dedup_exact(load_table(spark, sf_dir, "documents"))
 
 
+@query(
+    unbenched=(
+        "signature-build sub-step of the benched dedup_minhash_pairs"
+    ),
+    twin=lambda: f"""
+WITH {_minhash_cte()}
+SELECT doc_id, j::INTEGER AS h_idx, minhash FROM s""",
+)
 def q_dedup_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.minhash_signatures(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _minhash_pairs_sql())
 def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.minhash_lsh_dedup(
         load_table(spark, sf_dir, "documents"), JACCARD_LSH_THRESHOLD
     )
 
 
+@query(twin=lambda: f"""
+WITH d AS (
+  SELECT doc_id, lang, (n_chars // 100)::INTEGER AS len_bucket,
+         {SHINGLE_EXPR} AS s
+  FROM (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS w FROM documents)
+),
+post AS (
+  SELECT doc_id, lang, len_bucket, unnest(s) AS sh FROM d
+),
+hot AS (
+  SELECT lang, len_bucket, sh FROM post
+  GROUP BY lang, len_bucket, sh HAVING COUNT(*) > {dd.NGRAM_DF_CAP}
+),
+capped AS (
+  SELECT p.* FROM post p
+  LEFT JOIN hot h
+    ON h.lang = p.lang AND h.len_bucket = p.len_bucket AND h.sh = p.sh
+  WHERE h.sh IS NULL
+),
+probe AS (
+  SELECT doc_id, lang, len_bucket, sh,
+         unnest([len_bucket, len_bucket + 1]) AS jb
+  FROM capped
+),
+shared AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
+  FROM probe a JOIN probe b
+    ON a.lang = b.lang AND a.jb = b.jb AND a.sh = b.sh
+   AND a.doc_id < b.doc_id
+   AND GREATEST(a.len_bucket, b.len_bucket) = a.jb
+  GROUP BY a.doc_id, b.doc_id
+),
+sizes AS (SELECT doc_id, len(s) AS sz FROM d),
+j AS (
+  SELECT doc_a, doc_b,
+         ROUND(inter::DOUBLE / (x.sz + y.sz - inter)::DOUBLE, 6) AS jaccard
+  FROM shared JOIN sizes x ON x.doc_id = doc_a JOIN sizes y ON y.doc_id = doc_b
+)
+SELECT * FROM j WHERE jaccard >= {JACCARD_BLOCK_THRESHOLD}""")
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), JACCARD_BLOCK_THRESHOLD
     )
 
 
+@query(twin=lambda: f"""
+WITH pre AS (
+  SELECT doc_id, substr(text, 1, {dd.FUZZY_PREFIX_LEN}) AS p,
+         length(substr(text, 1, {dd.FUZZY_PREFIX_LEN}))::INT AS plen
+  FROM documents
+),
+segs AS (
+  SELECT pre.doc_id AS doc_s, plen AS L, i,
+         substr(p, 1 + i * (plen // {dd.FUZZY_MAX_DIST + 1})
+                     + least(i, plen % {dd.FUZZY_MAX_DIST + 1}),
+                CASE WHEN i < plen % {dd.FUZZY_MAX_DIST + 1}
+                     THEN plen // {dd.FUZZY_MAX_DIST + 1} + 1
+                     ELSE plen // {dd.FUZZY_MAX_DIST + 1} END) AS s
+  FROM pre, range(0, {dd.FUZZY_MAX_DIST + 1}) r(i)
+  WHERE plen >= {dd.FUZZY_MAX_DIST + 1}
+),
+lens AS (SELECT DISTINCT plen AS L FROM pre WHERE plen >= {dd.FUZZY_MAX_DIST + 1}),
+probe AS (
+  SELECT b.doc_id AS doc_p, L, i,
+         substr(b.p,
+                1 + i * (L // {dd.FUZZY_MAX_DIST + 1}) + least(i, L % {dd.FUZZY_MAX_DIST + 1}) + d,
+                CASE WHEN i < L % {dd.FUZZY_MAX_DIST + 1}
+                     THEN L // {dd.FUZZY_MAX_DIST + 1} + 1
+                     ELSE L // {dd.FUZZY_MAX_DIST + 1} END) AS s
+  FROM pre b, lens, range(0, {dd.FUZZY_MAX_DIST + 1}) r(i),
+       range({-dd.FUZZY_MAX_DIST}, {dd.FUZZY_MAX_DIST + 1}) sh(d)
+  WHERE L <= b.plen AND b.plen - L <= {dd.FUZZY_MAX_DIST}
+    AND 1 + i * (L // {dd.FUZZY_MAX_DIST + 1}) + least(i, L % {dd.FUZZY_MAX_DIST + 1}) + d >= 1
+    AND i * (L // {dd.FUZZY_MAX_DIST + 1}) + least(i, L % {dd.FUZZY_MAX_DIST + 1}) + d
+        + (CASE WHEN i < L % {dd.FUZZY_MAX_DIST + 1}
+                THEN L // {dd.FUZZY_MAX_DIST + 1} + 1
+                ELSE L // {dd.FUZZY_MAX_DIST + 1} END) <= b.plen
+),
+cand AS (
+  SELECT DISTINCT least(doc_s, doc_p) AS doc_a, greatest(doc_s, doc_p) AS doc_b
+  FROM segs JOIN probe USING (L, i, s)
+  WHERE doc_s <> doc_p
+  UNION
+  SELECT a.doc_id, b.doc_id
+  FROM pre a JOIN pre b ON a.doc_id < b.doc_id
+  WHERE a.plen <= {2 * dd.FUZZY_MAX_DIST} AND b.plen <= {2 * dd.FUZZY_MAX_DIST}
+)
+SELECT doc_a, doc_b, levenshtein(x.p, y.p)::BIGINT AS dist
+FROM cand
+JOIN pre x ON x.doc_id = doc_a
+JOIN pre y ON y.doc_id = doc_b
+WHERE levenshtein(x.p, y.p) <= {dd.FUZZY_MAX_DIST}""")
 def q_dedup_fuzzy_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typo-tolerant near-dup pairs by prefix edit distance — Pass-Join
     segment blocking + thresholded levenshtein verify
@@ -1697,10 +2509,35 @@ def q_dedup_fuzzy_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.fuzzy_prefix_pairs(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: f"""
+WITH d AS (
+  SELECT doc_id, {SHINGLE_EXPR} AS s
+  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
+),
+post AS (SELECT doc_id, unnest(s) AS sh FROM d),
+df AS (SELECT sh, COUNT(*) AS df FROM post GROUP BY sh),
+per AS (
+  SELECT p.doc_id, COUNT(*) AS n_shingles,
+         CAST(SUM(CASE WHEN f.df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
+  FROM post p JOIN df f ON f.sh = p.sh
+  GROUP BY p.doc_id
+)
+SELECT doc_id, n_shingles, n_dup,
+       ROUND(n_dup::DOUBLE / n_shingles::DOUBLE, 6) AS dup_fraction
+FROM per""")
 def q_dedup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.duplicated_span_stats(load_table(spark, sf_dir, "documents"))
 
 
+@query(
+    unbenched=(
+        "min-label propagation loop shared with (and benched via) "
+        "pipeline_label_propagation"
+    ),
+    twin=lambda: f"""
+WITH RECURSIVE {_cc_cte(_minhash_pairs_sql())}
+SELECT doc_id, cluster_rep FROM cc""",
+)
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup canonicalization: MinHash→LSH→verify pairs fed into
     distributed connected components (min-label propagation); every
@@ -1711,6 +2548,19 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.connected_components(pairs)
 
 
+@query(
+    unbenched=(
+        "post-aggregation of dedup_clusters output; label propagation is "
+        "benched via pipeline_label_propagation"
+    ),
+    # same components CTE folded to the size histogram
+    twin=lambda: f"""
+WITH RECURSIVE {_cc_cte(_minhash_pairs_sql())},
+sz AS (SELECT cluster_rep, COUNT(*)::BIGINT AS cluster_size
+       FROM cc GROUP BY 1)
+SELECT cluster_size, COUNT(*)::BIGINT AS n_clusters
+FROM sz GROUP BY 1""",
+)
 def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup report: the duplicate-cluster SIZE DISTRIBUTION (how many
     clusters of 2, of 3, ... — the number a dedup run is judged by:
@@ -1730,6 +2580,25 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+WITH RECURSIVE {_cc_cte(_minhash_pairs_sql())},
+j AS (
+  SELECT d.doc_id, COALESCE(cc.cluster_rep, d.doc_id) AS canonical_id
+  FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
+),
+q AS ({_quality_sql()}),
+m AS (
+  SELECT j.canonical_id, j.doc_id, q.quality_score
+  FROM j JOIN q ON q.doc_id = j.doc_id
+),
+r AS (
+  SELECT *,
+         row_number() OVER (PARTITION BY canonical_id ORDER BY quality_score DESC, doc_id) AS rk,
+         COUNT(*) OVER (PARTITION BY canonical_id) AS n_members
+  FROM m
+)
+SELECT canonical_id, doc_id AS kept_doc_id, n_members, quality_score AS kept_quality
+FROM r WHERE rk = 1""")
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retained corpus after near-dup dedup: one row per cluster,
     keeping the highest-quality member (dedup.keep_best_per_cluster
@@ -1741,6 +2610,17 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.keep_best_per_cluster(docs, pairs, tx.quality(docs))
 
 
+@query(twin=lambda: f"""
+WITH RECURSIVE {_cc_cte(_minhash_pairs_sql())},
+j AS (
+  SELECT d.doc_id, COALESCE(cc.cluster_rep, d.doc_id) AS canonical_id
+  FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
+)
+SELECT doc_id, canonical_id,
+       CASE WHEN {h64_sql(f"'{sp.SPLIT_SALT}:' || canonical_id::VARCHAR")} % 100
+                 < {sp.SPLIT_TRAIN_PCT}
+            THEN 'train' ELSE 'eval' END AS split
+FROM j""")
 def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/eval split: near-dup cluster members share a
     side (sampling.leakage_safe_split over minhash-LSH verified
@@ -1753,10 +2633,55 @@ def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sp.leakage_safe_split(docs, pairs)
 
 
+@query(
+    unbenched=(
+        "single-scan conditional aggregate; shape tracked by the benched "
+        "corpus_datacard"
+    ),
+    twin=lambda: """
+WITH base AS (
+  SELECT COUNT(*) AS n_docs,
+         COUNT(DISTINCT lang) AS n_langs,
+         CAST(SUM(n_chars) AS BIGINT) AS total_chars,
+         ROUND(AVG(n_chars), 2) AS avg_chars,
+         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
+  FROM documents
+),
+dups AS (
+  SELECT CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_docs
+  FROM (SELECT md5(text) AS fp, COUNT(*) AS cnt FROM documents GROUP BY 1)
+)
+SELECT n_docs, n_langs, total_chars, avg_chars, total_tokens, dup_docs,
+       ROUND(dup_docs::DOUBLE / n_docs::DOUBLE, 6) AS dup_frac
+FROM base CROSS JOIN dups""",
+)
 def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.corpus_profile(load_table(spark, sf_dir, "documents"))
 
 
+@query(
+    unbenched=(
+        "manifest-diff + anti-join over two table versions; the end-to-"
+        "end nightly path is benched via dedup_cross_snapshot"
+    ),
+    twin=lambda: f"""
+WITH a AS (SELECT doc_id, md5(text) AS fp_a, TRUE AS in_a FROM documents),
+b AS (
+  SELECT doc_id,
+         md5(CASE WHEN doc_id % 11 = 0 THEN text || ' v2' ELSE text END) AS fp_b,
+         TRUE AS in_b
+  FROM documents WHERE doc_id % 13 != 0
+  UNION ALL
+  SELECT doc_id + {sp.SNAPSHOT_ADD_SHIFT} AS doc_id, md5(text) AS fp_b, TRUE AS in_b
+  FROM documents WHERE doc_id % 17 = 0
+)
+SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
+       CASE WHEN in_a IS NULL THEN 'added'
+            WHEN in_b IS NULL THEN 'removed'
+            WHEN fp_a IS DISTINCT FROM fp_b THEN 'changed'
+            ELSE 'unchanged' END AS status
+FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id""",
+)
 def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kmeans_mapreduce_spark.operators import sampling as sp2
 
@@ -1764,6 +2689,33 @@ def q_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sp2.snapshot_diff(docs, sp2.simulate_next_snapshot(docs))
 
 
+@query(twin=lambda: """
+WITH d AS (
+  SELECT o_custkey, valid_from, o_orderstatus FROM (
+    SELECT o_custkey, o_orderdate AS valid_from, o_orderstatus,
+           row_number() OVER (
+             PARTITION BY o_custkey, o_orderdate
+             ORDER BY o_orderstatus DESC NULLS LAST) AS rn
+    FROM orders) WHERE rn = 1
+),
+s AS (
+  -- no-change suppression; o_orderstatus is non-null in this data, so
+  -- lag() IS NULL is unambiguous first-row detection (matches the
+  -- Spark side's lag-of-struct null test)
+  SELECT o_custkey, valid_from, o_orderstatus FROM (
+    SELECT o_custkey, valid_from, o_orderstatus,
+           lag(o_orderstatus) OVER (
+             PARTITION BY o_custkey ORDER BY valid_from) AS prev
+    FROM d)
+  WHERE prev IS NULL OR prev IS DISTINCT FROM o_orderstatus
+)
+SELECT o_custkey, valid_from,
+       COALESCE(lead(valid_from) OVER w,
+                TIMESTAMP '2200-01-01 00:00:00') AS valid_to,
+       lead(valid_from) OVER w IS NULL AS is_current,
+       o_orderstatus
+FROM s
+WINDOW w AS (PARTITION BY o_custkey ORDER BY valid_from)""")
 def q_dim_scd2_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD-2 dimension history under the hash gate: the pure timeline
     core of ``loaders.merge_scd2`` (``scd2_timeline`` — dedupe per
@@ -1799,6 +2751,23 @@ def q_dim_scd2_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: """
+WITH b1 AS (
+  SELECT COUNT(*) AS n_rows,
+         SUM(ROUND(o_totalprice * 100)::BIGINT)::BIGINT AS total_cents
+  FROM orders WHERE o_orderkey % 7 = 0
+),
+b2 AS (
+  SELECT COUNT(*) AS n_rows,
+         SUM(ROUND(o_totalprice * 100)::BIGINT)::BIGINT AS total_cents
+  FROM orders WHERE o_orderkey % 7 = 1
+)
+SELECT 0::INTEGER AS version, n_rows::BIGINT AS n_rows, total_cents FROM b1
+UNION ALL
+SELECT 1::INTEGER AS version,
+       (b1.n_rows + b2.n_rows)::BIGINT AS n_rows,
+       (b1.total_cents + b2.total_cents)::BIGINT AS total_cents
+FROM b1, b2""")
 def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME TRAVEL under the hash gate: build a real versioned table
     (two ``commit_version`` appends of deterministic orders slices
@@ -1853,20 +2822,40 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _simhash_sql())
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.simhash(load_table(spark, sf_dir, "documents"))
 
 
+# pigeonhole band join over the simhash sketch + popcount verify
+@query(twin=lambda: f"""
+WITH sh AS ({_simhash_sql()}),
+banded AS (
+  SELECT doc_id, simhash, b,
+         (simhash >> (b * {dd.SIMHASH_BITS // (dd.SIMHASH_MAX_HAMMING + 1)}))
+           & {(1 << (dd.SIMHASH_BITS // (dd.SIMHASH_MAX_HAMMING + 1))) - 1} AS bv
+  FROM sh CROSS JOIN (VALUES (0), (1), (2), (3)) t(b)
+),
+cand AS (
+  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
+         bit_count(xor(x.simhash, y.simhash))::BIGINT AS hamming
+  FROM banded x JOIN banded y
+    ON x.b = y.b AND x.bv = y.bv AND x.doc_id < y.doc_id
+)
+SELECT doc_a, doc_b, hamming FROM cand
+WHERE hamming <= {dd.SIMHASH_MAX_HAMMING}""")
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.simhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _embedding_near_dup_sql())
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.embedding_near_dup(
         load_table(spark, sf_dir, "embeddings"), EMBED_COSINE_THRESHOLD
     )
 
 
+@query(twin=lambda: _incremental_pairs_sql())
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MinHash dedup: the newest ~20% of docs (by id,
     boundary computed in-plan) probed against the historical 80% —
@@ -1880,6 +2869,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _cross_snapshot_sql())
 def q_dedup_cross_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-snapshot dedup over the VERSIONED TABLE LOG (round-11
     growth query, r10 verdict task 7): build a real two-commit table —
@@ -1921,6 +2911,7 @@ def q_dedup_cross_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(path, ignore_errors=True)
 
 
+@query(twin=lambda: _semantic_dedup_sql())
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup: k-means-cell blocking (fixed corpus-row centroids so
     the oracle replays the assignment) + intra-cell exact cosine."""
@@ -1929,6 +2920,26 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.semantic_dedup_pairs(emb, centers, SEMANTIC_COSINE_THRESHOLD)
 
 
+@query(twin=lambda: f"""
+WITH {_nd_assign_cte()},
+p AS (
+  SELECT x.vec_id AS vec_a, y.vec_id AS vec_b,
+         ROUND({_dot_sql('x.v', 'y.v')}, 6) AS cosine
+  FROM e x JOIN e y ON x.cid = y.cid AND x.vec_id < y.vec_id
+),
+dropd AS (
+  SELECT DISTINCT vec_b AS vec_id FROM p
+  WHERE cosine >= {SEMANTIC_COSINE_THRESHOLD}
+),
+surv AS (
+  SELECT a.vec_id, a.cid FROM a
+  WHERE a.vec_id NOT IN (SELECT vec_id FROM dropd)
+)
+SELECT cid::INTEGER AS cell,
+       COUNT(*)::BIGINT AS n_vecs,
+       (COUNT(*) * {EMB_DIM * 4})::BIGINT AS bytes_fp32,
+       (COUNT(*) * {EMB_DIM + 8})::BIGINT AS bytes_int8
+FROM surv GROUP BY cid""")
 def q_pipeline_vector_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-PRODUCT vector-corpus build — the embedding-side analog of
     pipeline_pretrain_corpus: SemDeDup the embedding store (drop every
@@ -1967,6 +2978,7 @@ def q_pipeline_vector_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _knn_graph_sql())
 def q_similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cell-blocked exact k-NN graph with mutual-edge marking (the
     label-propagation / graph-clustering input). Same fixed-centroid
@@ -1976,6 +2988,34 @@ def q_similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.knn_graph(emb, centers, KNN_GRAPH_K)
 
 
+# same compact-forward degree orientation in SQL: tuple
+# comparison picks the lower-(deg, id) endpoint, wedges build
+# at it, the canonical edge closes the triangle
+@query(twin=lambda: f"""
+WITH g AS ({_knn_graph_sql()}),
+und AS (
+  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+  FROM g WHERE src <> dst),
+deg AS (
+  SELECT v, COUNT(*)::BIGINT AS deg
+  FROM (SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
+  GROUP BY 1),
+o AS (
+  SELECT CASE WHEN (da.deg, und.a) < (db.deg, und.b)
+              THEN und.a ELSE und.b END AS u,
+         CASE WHEN (da.deg, und.a) < (db.deg, und.b)
+              THEN und.b ELSE und.a END AS w
+  FROM und JOIN deg da ON da.v = und.a JOIN deg db ON db.v = und.b),
+tri AS (
+  SELECT o1.u, o1.w AS w1, o2.w AS w2
+  FROM o o1 JOIN o o2 ON o1.u = o2.u AND o1.w < o2.w
+  JOIN und ON und.a = o1.w AND und.b = o2.w)
+SELECT vec_id, COUNT(*)::BIGINT AS n_triangles
+FROM (
+  SELECT u AS vec_id FROM tri
+  UNION ALL SELECT w1 FROM tri
+  UNION ALL SELECT w2 FROM tri)
+GROUP BY 1""")
 def q_similarity_graph_triangles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1989,6 +3029,7 @@ def q_similarity_graph_triangles(
     return sim.triangle_counts(sim.knn_graph(emb, centers, KNN_GRAPH_K))
 
 
+@query(twin=lambda: _label_propagation_sql())
 def q_pipeline_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-supervised labeling over the k-NN graph: every 5th vector's
     label is held out and re-predicted by neighbor majority vote, with
@@ -2000,6 +3041,7 @@ def q_pipeline_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _curation_funnel_sql())
 def q_pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end curation funnel: per-stage survivor counts for
     raw → Gopher/C4 rule filter → exact dedup (keep lowest doc_id per
@@ -2061,6 +3103,32 @@ def q_pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# all-integer interval math: `div`/greatest/least mirror //,
+# and range(a, b+1) ≡ Spark's inclusive sequence(a, b)
+@query(twin=lambda: f"""
+WITH b AS (
+  SELECT doc_id, lang,
+         len(string_split(COALESCE(text, ''), ' '))::BIGINT AS n_tok
+  FROM documents
+),
+c AS (
+  SELECT doc_id, lang, n_tok,
+         CAST(COALESCE(SUM(n_tok) OVER (
+           PARTITION BY lang ORDER BY doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+           AS cb
+  FROM b
+),
+e AS (
+  SELECT doc_id, lang, n_tok, cb, t.b AS bin_id
+  FROM c, UNNEST(range(cb // {sp.PACK_FRAG_BUDGET},
+                       (cb + n_tok - 1) // {sp.PACK_FRAG_BUDGET} + 1)) AS t(b)
+)
+SELECT doc_id, lang, bin_id::BIGINT AS bin_id,
+       GREATEST(bin_id * {sp.PACK_FRAG_BUDGET} - cb, 0)::BIGINT AS frag_start,
+       (LEAST((bin_id + 1) * {sp.PACK_FRAG_BUDGET}, cb + n_tok)
+        - GREATEST(bin_id * {sp.PACK_FRAG_BUDGET}, cb))::BIGINT AS frag_len
+FROM e""")
 def q_corpus_pack_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-budget fragmenting packer: docs laid end-to-end per
     language and cut at every 512-token boundary, splitting straddling
@@ -2069,6 +3137,7 @@ def q_corpus_pack_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sp.pack_fragments(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _embedding_outliers_sql())
 def q_embeddings_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell distance z-score outlier flags over the embedding
     corpus (similarity.embedding_outliers) — the far-tail curation
@@ -2079,6 +3148,29 @@ def q_embeddings_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.embedding_outliers(emb, centers)
 
 
+# full-vocab window in the twin (fine at oracle scale); the
+# engine side truncates to max(vs) via TakeOrdered first
+@query(twin=lambda: f"""
+WITH t AS (
+  SELECT unnest(string_split(COALESCE(text, ''), ' ')) AS tok FROM documents
+),
+tot AS (SELECT COUNT(*)::BIGINT AS total_tokens FROM t),
+c AS (SELECT tok, COUNT(*)::BIGINT AS cnt FROM t GROUP BY tok),
+r AS (
+  SELECT tok, cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rank FROM c
+),
+top AS (SELECT * FROM r WHERE rank <= {max(tx.VOCAB_COVERAGE_VS)}),
+v(top_v) AS (VALUES {", ".join(f"({v})" for v in sorted(tx.VOCAB_COVERAGE_VS))}),
+cov AS (
+  SELECT v.top_v::INTEGER AS top_v,
+         CAST(COALESCE(SUM(CASE WHEN top.rank <= v.top_v THEN top.cnt END),
+                       0) AS BIGINT) AS covered_tokens
+  FROM v CROSS JOIN top GROUP BY v.top_v
+)
+SELECT top_v, covered_tokens, (SELECT total_tokens FROM tot) AS total_tokens,
+       ROUND(covered_tokens::DOUBLE
+             / (SELECT total_tokens FROM tot)::DOUBLE, 6) AS coverage
+FROM cov""")
 def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage curve at fixed checkpoints: share of token
     occurrences covered by the top-V token types (textops.
@@ -2086,6 +3178,7 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.vocab_coverage(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _pagerank_loop2_sql())
 def q_pipeline_pagerank_loop2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two PageRank iterations over the mutual k-NN graph in integer
     micro-units (similarity.pagerank_loop2) — centrality as a
@@ -2096,6 +3189,28 @@ def q_pipeline_pagerank_loop2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.pagerank_loop2(emb, centers, KNN_GRAPH_K)
 
 
+# batch twin of the streaming span first-occurrence state: the
+# folded replay must equal the keep-first window's rn=1 winners
+@query(unbenched=_R_STREAM, twin=lambda: f"""
+WITH d AS (
+  SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS w FROM documents
+),
+s AS (
+  SELECT doc_id, CAST(t.i AS INT) AS pos,
+         array_to_string(
+           w[(t.i * {dd.SPAN_WORDS} + 1):(t.i * {dd.SPAN_WORDS} + {dd.SPAN_WORDS})],
+           ' ') AS span
+  FROM d, UNNEST(range(0, CAST(CEIL(len(w) / {dd.SPAN_WORDS}.0) AS BIGINT))) AS t(i)
+),
+r AS (
+  SELECT span, doc_id, pos,
+         ROW_NUMBER() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn,
+         COUNT(*) OVER (PARTITION BY span) AS n
+  FROM s
+)
+SELECT {h64_sql('span')} AS span_fp, doc_id AS first_doc_id,
+       pos AS first_pos, n::BIGINT AS n_occurrences
+FROM r WHERE rn = 1""")
 def q_corpus_stream_span_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Third streaming artifact under the gate: the stateful span
     first-occurrence operator (streaming twin of dedup_span_clean's
@@ -2138,18 +3253,47 @@ def q_corpus_stream_span_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+WITH w AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+p AS (SELECT unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair FROM w),
+c AS (SELECT pair, COUNT(*)::BIGINT AS n FROM p GROUP BY pair)
+SELECT pair, n FROM c ORDER BY n DESC, pair LIMIT {tx.BPE_MERGE_TOPK}""")
 def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE training round 1: top adjacent-character-pair merge
     candidates over the corpus vocabulary (count DESC, pair ASC)."""
     return tx.bpe_merge_candidates(load_table(spark, sf_dir, "documents"))
 
 
+@query()
 def q_text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zlib compression-ratio quality signal (rows-only: no SQL twin —
     DuckDB has no zlib; determinism pytest-gated)."""
     return tx.compression_ratio(load_table(spark, sf_dir, "documents"))
 
 
+def _datacard_sql() -> str:
+    """Twin of q_corpus_datacard: the rule verdicts compose the ONE
+    rule-filter twin (same reuse as the curation funnel) — no second
+    hand-maintained rendering of the five Gopher/C4 rules."""
+    from kmeans_mapreduce_spark.analytics import _rule_filter_oracle
+
+    return f"""
+WITH q AS ({_quality_sql()}),
+r AS (SELECT doc_id, pass_all FROM ({_rule_filter_oracle()}) rf),
+base AS (
+  SELECT d.lang, q.n_tokens, q.quality_score, r.pass_all,
+         {h64_sql('lower(trim(d.text))')} AS fp
+  FROM documents d JOIN q ON q.doc_id = d.doc_id JOIN r ON r.doc_id = d.doc_id
+)
+SELECT lang, COUNT(*)::BIGINT AS n_docs,
+       SUM(n_tokens)::BIGINT AS total_tokens,
+       ROUND(AVG(quality_score), 6) AS mean_quality,
+       ROUND(AVG(pass_all::INT::DOUBLE), 6) AS rule_pass_rate,
+       (COUNT(*) - COUNT(DISTINCT fp))::BIGINT AS dup_copies
+FROM base GROUP BY lang ORDER BY lang"""
+
+
+@query(twin=_datacard_sql)
 def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus data card — the summary a curation pipeline
     publishes with a release (datasheet/data-card practice): doc and
@@ -2186,12 +3330,26 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+SELECT doc_id, lang,
+       {h64_sql(f"'{sp.FIXED_SAMPLE_SALT}:' || doc_id::VARCHAR")} AS sample_key
+FROM documents ORDER BY sample_key, doc_id LIMIT {sp.FIXED_SAMPLE_N}""")
 def q_corpus_sample_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-N deterministic sample by salted-hash rank (fixed-budget
     eval set); TakeOrderedAndProject, no global sort."""
     return sp.fixed_size_sample(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: f"""
+WITH q AS ({_quality_sql()}),
+t AS (SELECT {", ".join(
+    f"ROUND(quantile_cont(quality_score, {p}), 6) AS t{i}"
+    for i, p in enumerate(sp.CURRICULUM_PROBS)
+)} FROM q)
+SELECT doc_id,
+  (1{"".join(f" + (quality_score > t.t{i})::INT" for i in range(len(sp.CURRICULUM_PROBS)))})::INTEGER AS phase,
+  {h64_sql(f"'{sp.CURRICULUM_SALT}:' || doc_id::VARCHAR")} AS order_key
+FROM q CROSS JOIN t""")
 def q_corpus_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum ordering: quality-quartile phase + deterministic
     within-phase shuffle key (broadcast-threshold plan, no global
@@ -2199,11 +3357,21 @@ def q_corpus_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sp.curriculum_phases(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: f"""
+WITH w0 AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+p1 AS (SELECT unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair FROM w0),
+t1 AS (SELECT pair FROM (SELECT pair, COUNT(*) AS n FROM p1 GROUP BY pair)
+       ORDER BY n DESC, pair LIMIT 1),
+w2 AS (SELECT replace(w, (SELECT pair FROM t1), chr(1)) AS w FROM w0),
+p2 AS (SELECT unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair FROM w2),
+c AS (SELECT pair, COUNT(*)::BIGINT AS n FROM p2 GROUP BY pair)
+SELECT pair, n FROM c ORDER BY n DESC, pair LIMIT {tx.BPE_MERGE_TOPK}""")
 def q_text_bpe_merges2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE training round 2: apply round 1's winner, recount pairs."""
     return tx.bpe_second_round(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: _bpe_segment_sql())
 def q_text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END BPE: train a 6-rule merge list (scan-once vocab,
     weighted rounds on the cached metadata-scale vocab table — the
@@ -2258,6 +3426,39 @@ FRONTDOOR_MIN_CHARS = 150
 FRONTDOOR_HOST_CAP = 10
 
 
+# the one-scan funnel: same cascading-flag construction as the
+# Spark side (blocked rows sort last in the dedup window,
+# non-survivors last in the host-cap window)
+@query(twin=lambda: f"""
+WITH {_url_canon_cte(", n_chars")},
+f1 AS (
+  SELECT doc_id, n_chars, host,
+         host IN ({", ".join("'" + h + "'" for h in FRONTDOOR_BLOCKLIST)})
+           AS blocked,
+         ROW_NUMBER() OVER (
+           PARTITION BY canon_url
+           ORDER BY (host IN ({", ".join("'" + h + "'" for h in FRONTDOOR_BLOCKLIST)}))::INT, doc_id
+         ) AS url_rk
+  FROM c),
+f2 AS (
+  SELECT blocked,
+         (NOT blocked AND url_rk = 1) AS s_dedup,
+         (NOT blocked AND url_rk = 1
+          AND n_chars >= {FRONTDOOR_MIN_CHARS}) AS s_quality,
+         ROW_NUMBER() OVER (
+           PARTITION BY host
+           ORDER BY (NOT (NOT blocked AND url_rk = 1
+                          AND n_chars >= {FRONTDOOR_MIN_CHARS}))::INT,
+                    doc_id
+         ) AS host_rk
+  FROM f1)
+SELECT COUNT(*)::BIGINT AS n_total,
+       SUM((NOT blocked)::INT)::BIGINT AS n_after_blocklist,
+       SUM(s_dedup::INT)::BIGINT AS n_after_dedup,
+       SUM(s_quality::INT)::BIGINT AS n_after_quality,
+       SUM((s_quality AND host_rk <= {FRONTDOOR_HOST_CAP})::INT)::BIGINT
+         AS n_after_cap
+FROM f2""")
 def q_pipeline_crawl_frontdoor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP composition of the crawl-curation entry pipeline:
     canonicalize → domain blocklist → URL dedup → quality screen →
@@ -2338,6 +3539,9 @@ def q_pipeline_crawl_frontdoor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# same messy-url synthesis text (dialect-pinned), DuckDB's own
+# string ops for the canonicalization rules (_url_canon_cte)
+@query(twin=lambda: _bloom_prefilter_sql())
 def q_dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered incremental dedup (dedup.bloom_prefilter_dedup):
     the nightly increment membership-tested against a KB-scale
@@ -2398,6 +3602,13 @@ SELECT p.doc_id, p.fp, p.bloom_hit,
 FROM probe p LEFT JOIN hfp h ON p.fp = h.fp"""
 
 
+@query(twin=lambda: f"""
+WITH {_url_canon_cte()}
+SELECT doc_id, canon_url, host,
+       (ROW_NUMBER() OVER (PARTITION BY canon_url ORDER BY doc_id))::BIGINT
+         AS url_rank,
+       (COUNT(*) OVER (PARTITION BY host))::BIGINT AS host_docs
+FROM c""")
 def q_corpus_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization + canonical-key dedup + per-host doc
     counts (dedup.url_dedup over functions.urls.canonical_url) — the
@@ -2454,6 +3665,29 @@ def _line_synth_sql() -> str:
   ['{LINE_FOOTER}'])"""
 
 
+# batch twin of the streaming TTL-dedup (debounce): emission is
+# arrival-only (timeouts are pure state cleanup), so the
+# single-batch replay equals the plain LAG window — emit iff
+# first-of-key or gap to the previous same-key event > TTL
+@query(twin=lambda: f"""
+WITH d AS (SELECT doc_id, {_line_synth_sql()} AS lines FROM documents),
+x AS (SELECT doc_id, unnest(lines) AS line,
+             unnest(range(1, len(lines) + 1)) AS idx
+      FROM d),
+xf AS (SELECT doc_id, idx, line, {h64_sql('line')} AS lfp FROM x),
+bo AS (SELECT lfp FROM (SELECT DISTINCT doc_id, lfp FROM xf)
+       GROUP BY lfp HAVING COUNT(*) >= {dd.BOILER_MIN_DF}),
+m AS (SELECT xf.doc_id, xf.idx, xf.line,
+             (bo.lfp IS NOT NULL) AS is_boiler
+      FROM xf LEFT JOIN bo ON xf.lfp = bo.lfp)
+SELECT doc_id, COUNT(*)::BIGINT AS n_lines,
+       SUM(CASE WHEN is_boiler THEN 1 ELSE 0 END)::BIGINT AS n_boiler,
+       {h64_sql(
+           "lower(trim(COALESCE(string_agg("
+           "CASE WHEN NOT is_boiler THEN line END, chr(10) ORDER BY idx"
+           "), '')))"
+       )} AS cleaned_fp
+FROM m GROUP BY doc_id""")
 def q_corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LINE-level boilerplate removal (dedup.line_boilerplate_dedup —
     CCNet/RefinedWeb line-wise filtering): drop lines occurring in ≥
@@ -2470,6 +3704,31 @@ def q_corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.line_boilerplate_dedup(docs)
 
 
+# span dedup: keep-first over fixed word windows, re-agg with
+# ORDER BY pos; SUM cast (DuckDB HUGEINT) and COALESCE('')
+# both mirror the Spark side exactly
+@query(twin=lambda: f"""
+WITH d AS (
+  SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS w FROM documents
+),
+s AS (
+  SELECT doc_id, CAST(t.i AS INT) AS pos,
+         array_to_string(
+           w[(t.i * {dd.SPAN_WORDS} + 1):(t.i * {dd.SPAN_WORDS} + {dd.SPAN_WORDS})],
+           ' ') AS span
+  FROM d, UNNEST(range(0, CAST(CEIL(len(w) / {dd.SPAN_WORDS}.0) AS BIGINT))) AS t(i)
+),
+r AS (
+  SELECT doc_id, pos, span,
+         ROW_NUMBER() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
+  FROM s
+)
+SELECT doc_id,
+       COUNT(*)::BIGINT AS n_spans,
+       CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
+       COALESCE(string_agg(CASE WHEN rn = 1 THEN span END, ' ' ORDER BY pos),
+                '') AS cleaned_text
+FROM r GROUP BY doc_id""")
 def q_dedup_span_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style span dedup WITH reassembly: repeated 10-word spans
     removed except their globally-first occurrence, cleaned text
@@ -2478,6 +3737,51 @@ def q_dedup_span_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.span_dedup(load_table(spark, sf_dir, "documents"))
 
 
+# stride-1 window marking: same keep-first discipline as
+# dedup_span_clean, at every alignment (ExactSubstr)
+@query(twin=lambda: f"""
+WITH d AS (
+  SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS w FROM documents
+),
+wins AS (
+  SELECT doc_id, CAST(t.i AS INT) AS pos,
+         array_to_string(
+           w[(t.i + 1):(t.i + {dd.SUBSTR_MIN_TOKENS})], ' ') AS win
+  FROM d,
+       UNNEST(range(0, GREATEST(len(w) - {dd.SUBSTR_MIN_TOKENS} + 1, 0)))
+         AS t(i)
+),
+r AS (
+  SELECT doc_id, pos,
+         ROW_NUMBER() OVER (
+           PARTITION BY {h64_sql('win')} ORDER BY doc_id, pos) AS rn
+  FROM wins
+),
+cov AS (
+  SELECT DISTINCT doc_id, CAST(c.j AS INT) AS idx
+  FROM r, UNNEST(range(pos, pos + {dd.SUBSTR_MIN_TOKENS})) AS c(j)
+  WHERE rn > 1
+),
+tk AS (
+  SELECT doc_id, CAST(UNNEST(range(0, len(w))) AS INT) AS idx,
+         UNNEST(w) AS tok
+  FROM d
+),
+kept AS (
+  SELECT tk.doc_id, tk.idx, tk.tok
+  FROM tk LEFT JOIN cov ON tk.doc_id = cov.doc_id AND tk.idx = cov.idx
+  WHERE cov.doc_id IS NULL
+),
+per AS (
+  SELECT doc_id, COUNT(*)::BIGINT AS n_kept,
+         COALESCE(string_agg(tok, ' ' ORDER BY idx), '') AS cleaned_text
+  FROM kept GROUP BY doc_id
+),
+tot AS (SELECT doc_id, len(w)::BIGINT AS n_tokens FROM d)
+SELECT tot.doc_id, tot.n_tokens,
+       (tot.n_tokens - COALESCE(per.n_kept, 0))::BIGINT AS n_removed,
+       COALESCE(per.cleaned_text, '') AS cleaned_text
+FROM tot LEFT JOIN per USING (doc_id)""")
 def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact repeated-substring dedup (Lee et al. 2022, ExactSubstr):
     stride-1 15-token window marking with keep-first, covered tokens
@@ -2486,18 +3790,41 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.substring_dedup(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: f"""
+WITH r AS (
+  SELECT doc_id, source,
+         ROW_NUMBER() OVER (
+           PARTITION BY source
+           ORDER BY
+             {h64_sql(f"'{sp.SOURCE_CAP_SALT}:' || doc_id::VARCHAR")}
+               % {sp.SAMPLE_BUCKETS},
+             doc_id
+         )::INTEGER AS cap_rank
+  FROM documents
+)
+SELECT doc_id, source, cap_rank FROM r WHERE cap_rank <= {sp.SOURCE_CAP}""")
 def q_corpus_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document cap by salted-hash rank — the domain-cap
     curation rule (sampling.source_cap)."""
     return sp.source_cap(load_table(spark, sf_dir, "documents"))
 
 
+# flat global window — the two-level Spark scan must match it
+# bit-for-bit (exact integer arithmetic end-to-end)
+@query(twin=lambda: _token_shards_sql())
 def q_corpus_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budgeted shard plan over the shuffled corpus via the
     two-level distributed prefix sum (sampling.token_shard_plan)."""
     return sp.token_shard_plan(load_table(spark, sf_dir, "documents"))
 
 
+@query(twin=lambda: f"""
+WITH plan AS ({_token_shards_sql()})
+SELECT p.shard, COUNT(*)::BIGINT AS n_docs,
+       COUNT(DISTINCT d.lang)::BIGINT AS n_langs,
+       CAST(SUM(p.n_tok) AS BIGINT) AS shard_tokens
+FROM plan p JOIN documents d USING (doc_id)
+GROUP BY p.shard""")
 def q_corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shard manifest a trainer reads before consuming shards:
     doc count, language spread, and token total per planned shard —
@@ -2516,6 +3843,7 @@ def q_corpus_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _lr_loop2_sql())
 def q_corpus_lr_loop2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two full-batch GD iterations of the in-engine quality
     classifier (operators/logreg.py) under the hash gate — the
@@ -2558,6 +3886,13 @@ def _lr_micro_scored(
     )
 
 
+@query(
+    unbenched=(
+        "top-N inference over the trained LR; same suffstats scan shape "
+        "as the benched corpus_lr_calibration"
+    ),
+    twin=lambda: _lr_scores_sql(),
+)
 def q_corpus_lr_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quality classifier's INFERENCE half under the hash gate
     (VERDICT r6 task 7): score every doc with the trained gated
@@ -2591,6 +3926,7 @@ def q_corpus_lr_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _lr_calibration_sql())
 def q_corpus_lr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration table for the gated 2-iteration LR classifier: score
     every doc with the trained weights, bucket predicted probability
@@ -2664,6 +4000,13 @@ def q_corpus_lr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    unbenched=(
+        "50 full-batch GD passes x ~0.38 s fixed per-job overhead at "
+        "bench scale; per-pass shape is right at 100 TB where scan cost "
+        "dominates — inherent, documented since round 10"
+    ),
+)
 def q_corpus_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Free-form classifier fit (binary presence + engineered signals,
     50 GD iterations — measured 0.96 training accuracy vs 0.71 base
@@ -2685,6 +4028,7 @@ def q_corpus_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lg.score_logreg(feats, w, b)
 
 
+@query(unbenched=_R_EVAL, twin=lambda: _lsh_recall_sql())
 def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH dedup recall evaluation (the banding-parameter tuning
     metric, the dedup analog of similarity_ann_recall): LSH-verified
@@ -2724,6 +4068,18 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    unbenched=(
+        "contains a full k-NN graph build already benched via "
+        "similarity_knn_graph (documented since round 10)"
+    ),
+    twin=lambda: f"""
+WITH RECURSIVE {_cc_cte(
+    "SELECT DISTINCT LEAST(src, dst) AS doc_a, GREATEST(src, dst) AS doc_b"
+    f" FROM ({_knn_graph_sql()}) g WHERE mutual"
+)}
+SELECT doc_id, cluster_rep FROM cc""",
+)
 def q_pipeline_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph clustering over embeddings: mutual k-NN edges (the
     symmetrized graph) fed into distributed connected components — how
@@ -2745,6 +4101,7 @@ def q_pipeline_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.connected_components(edges)
 
 
+@query(twin=lambda: _topk_sql(TOPK_K, bucketed=False))
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.cosine_topk(
         load_table(spark, sf_dir, "embeddings"), TOPK_QUERY_IDS, TOPK_K
@@ -2756,6 +4113,30 @@ HYBRID_QUERY_ID = 0  # doc_id == vec_id by testdata construction
 HYBRID_TOPN = 10
 
 
+# hybrid fusion: the two retriever twins as subqueries, ranks
+# fused with the identical 1/(C+r) + 1/(C+r) IEEE expression
+# (vector term first, lexical second, missing list -> 0)
+@query(twin=lambda: f"""
+WITH v AS (
+  SELECT neighbor_id AS doc_id, rank AS rank_vec
+  FROM ({_topk_sql(TOPK_K, bucketed=False)}) tv
+  WHERE query_id = {HYBRID_QUERY_ID}),
+lex AS (SELECT doc_id, rank AS rank_lex FROM ({_bm25_sql()}) tl),
+fused AS (
+  SELECT COALESCE(v.doc_id, lex.doc_id) AS doc_id, rank_vec, rank_lex,
+         COALESCE(CAST(1.0 AS DOUBLE)
+                  / (CAST({float(RRF_C)!r} AS DOUBLE) + CAST(rank_vec AS DOUBLE)),
+                  CAST(0.0 AS DOUBLE))
+         + COALESCE(CAST(1.0 AS DOUBLE)
+                  / (CAST({float(RRF_C)!r} AS DOUBLE) + CAST(rank_lex AS DOUBLE)),
+                  CAST(0.0 AS DOUBLE)) AS rrf
+  FROM v FULL OUTER JOIN lex ON v.doc_id = lex.doc_id),
+r AS (
+  SELECT *, row_number() OVER (ORDER BY rrf DESC, doc_id) AS fused_rank
+  FROM fused)
+SELECT doc_id, fused_rank::INTEGER AS fused_rank, rank_vec, rank_lex,
+       {_ieee_round_pos_sql("rrf")} AS rrf_score
+FROM r WHERE fused_rank <= {HYBRID_TOPN}""")
 def q_similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID retrieval with reciprocal-rank fusion — the production
     vector+keyword search every serving stack ships (Elasticsearch /
@@ -2812,6 +4193,7 @@ def q_similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _hard_negatives_sql(TOPK_K))
 def q_similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive hard-negative mining (similarity.hard_negatives):
     top-5 nearest different-label vectors per probe."""
@@ -2820,6 +4202,7 @@ def q_similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _pretrain_corpus_sql())
 def q_pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship end-to-end pretraining-data build: Gopher/C4 rule
     filter → exact dedup (keep lowest doc_id per text fingerprint) →
@@ -2866,6 +4249,19 @@ def q_pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# explicit [ \t\n\f\r] class: Python's \s and RE2's \s disagree
+# on \x0b, so the whitespace set is spelled out on both sides
+@query(twin=lambda: r"""
+WITH n AS (
+  SELECT doc_id,
+         trim(regexp_replace(nfc_normalize(COALESCE(text, '')),
+                             '[ \t\n\f\r]+', ' ', 'g'), ' ') AS norm_text,
+         COALESCE(text, '') AS t0
+  FROM documents
+)
+SELECT doc_id, norm_text, norm_text != t0 AS changed,
+       length(norm_text)::BIGINT AS n_chars
+FROM n""")
 def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode NFC + whitespace canonicalization (textops.
     normalize_text): the pre-dedup hygiene pass, twinned by DuckDB's
@@ -2873,12 +4269,46 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.normalize_text(load_table(spark, sf_dir, "documents"))
 
 
+# bigram LM: add-one smoothing over the corpus vocabulary;
+# per-bigram bits go through the integer micro-unit sum so the
+# per-doc mean is order-independent (same trick as text_bm25)
+@query(twin=lambda: """
+WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+bg AS (
+  SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+         i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS s
+  FROM d
+),
+p2 AS (SELECT doc_id, s.w1 AS w1, s.w2 AS w2 FROM bg),
+cu AS (
+  SELECT term, COUNT(*) AS c1
+  FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
+  GROUP BY term
+),
+v AS (SELECT COUNT(*) AS v FROM cu),
+cb AS (SELECT w1, w2, COUNT(*) AS c12 FROM p2 GROUP BY w1, w2),
+m AS (
+  SELECT p2.doc_id,
+         CAST(floor(-log2(CAST(cb.c12 + 1 AS DOUBLE)
+                          / CAST(cu.c1 + v.v AS DOUBLE))
+                    * CAST(1000000.0 AS DOUBLE)
+                    + CAST(0.5 AS DOUBLE)) AS BIGINT) AS m
+  FROM p2 JOIN cb USING (w1, w2) JOIN cu ON cu.term = p2.w1 CROSS JOIN v
+)
+SELECT doc_id, COUNT(*)::BIGINT AS n_bigrams,
+       ROUND((SUM(m)::DOUBLE / CAST(1000000.0 AS DOUBLE)) / COUNT(*)::DOUBLE,
+             4) AS bits_per_bigram
+FROM m GROUP BY doc_id""")
 def q_text_surprisal_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM surprisal (textops.lm_surprisal_bigram): add-one
     smoothed p(w2|w1), micro-unit per-doc mean."""
     return tx.lm_surprisal_bigram(load_table(spark, sf_dir, "documents"))
 
 
+# BM25: per-term double math with identical association, then an
+# integer micro-unit cross-term sum (order-independent) — the
+# same fixed-point discipline as pagerank_loop2
+@query(twin=lambda: _bm25_sql())
 def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval (textops.bm25_topk): top-10 documents for
     a 3-term query mixing a rare term (df≈25 at sf0.01) with two common
@@ -2889,6 +4319,34 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# parallel unnest zips (i, x_i); q is integral so the INTEGER
+# cast after floor is exact
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
+),
+s AS (
+  SELECT vec_id, v,
+         list_max(list_transform(v, x -> abs(x))) / CAST(127.0 AS DOUBLE) AS scale
+  FROM e
+),
+x AS (
+  SELECT vec_id, scale,
+         unnest(range(1, {EMB_DIM + 1}))::INTEGER AS i, unnest(v) AS xv
+  FROM s
+),
+q AS (
+  SELECT vec_id, i, scale, xv,
+         CASE WHEN scale = 0 THEN 0
+              ELSE CAST(floor(xv / scale + CAST(0.5 AS DOUBLE)) AS INTEGER)
+         END AS q
+  FROM x
+)
+SELECT vec_id, i, q, {_ieee_round_pos_sql('scale')} AS scale,
+       {_ieee_round_pos_sql(
+           '(xv - CAST(q AS DOUBLE) * scale) * (xv - CAST(q AS DOUBLE) * scale)'
+       )} AS dim_err
+FROM q""")
 def q_embeddings_int8_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization (similarity.quantize_int8): one row
     per (vector, dimension) pins every quantized value, the per-vector
@@ -2896,6 +4354,7 @@ def q_embeddings_int8_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.quantize_int8(load_table(spark, sf_dir, "embeddings"))
 
 
+@query(twin=lambda: _int8_topk_sql(TOPK_K))
 def q_similarity_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantized retrieval (similarity.int8_cosine_topk): cosine top-k
     on int8-quantized unit vectors — exact integer dots, two float
@@ -2905,6 +4364,20 @@ def q_similarity_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+WITH pred AS ({_langid_sql()}),
+j AS (
+  SELECT d.lang, p.pred_lang
+  FROM documents d JOIN pred p ON p.doc_id = d.doc_id
+),
+cm AS (
+  SELECT lang, pred_lang, COUNT(*)::BIGINT AS n_docs
+  FROM j GROUP BY lang, pred_lang
+),
+tot AS (SELECT lang, SUM(n_docs)::BIGINT AS t FROM cm GROUP BY lang)
+SELECT cm.lang, cm.pred_lang, cm.n_docs,
+       {_ieee_round_pos_sql('cm.n_docs::DOUBLE / tot.t::DOUBLE')} AS share
+FROM cm JOIN tot ON tot.lang = cm.lang""")
 def q_text_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID confusion matrix against the ground-truth ``lang``
     column — the eval a heuristic classifier ships with: one row per
@@ -2929,6 +4402,16 @@ def q_text_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+WITH q8t AS (SELECT query_id, neighbor_id FROM ({_int8_topk_sql(TOPK_K)}) t1),
+brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(TOPK_K, bucketed=False)}) t2)
+SELECT i.query_id,
+       COUNT(b.neighbor_id)::BIGINT AS n_hit,
+       {TOPK_K}::BIGINT AS k,
+       ROUND(COUNT(b.neighbor_id)::DOUBLE / {TOPK_K}::DOUBLE, 6) AS recall_at_k
+FROM q8t i LEFT JOIN brute b
+  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
+GROUP BY i.query_id""")
 def q_similarity_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantization-quality eval: recall@k of int8-quantized retrieval
     against exact float cosine top-k, per query — the number that says
@@ -2957,12 +4440,21 @@ def q_similarity_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    unbenched=(
+        "LSH-bucketed ANN variant; the bucketed serving shape is benched "
+        "via similarity_ann_ivf and the banded build via "
+        "dedup_minhash_pairs"
+    ),
+    twin=lambda: _topk_sql(ANN_K, bucketed=True),
+)
 def q_similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.lsh_ann_topk(
         load_table(spark, sf_dir, "embeddings"), TOPK_QUERY_IDS, ANN_K
     )
 
 
+@query(twin=lambda: _ivf_ann_sql())
 def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.ivf_ann_topk(
         load_table(spark, sf_dir, "embeddings"),
@@ -2973,6 +4465,12 @@ def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# recall@k: the IVF replay left-joined to the exact top-k
+# replay (DuckDB allows WITH inside subqueries, so both full
+# twins compose verbatim)
+@query(twin=lambda: _ivf_ann_sql(
+    filter_label=ANN_FILTER_LABEL
+))
 def q_similarity_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered ANN (similarity.ivf_ann_topk_filtered): top-k among
     label == ANN_FILTER_LABEL only — the vector-DB metadata-predicate
@@ -2988,6 +4486,15 @@ def q_similarity_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    unbenched=(
+        "index-maintenance variant; the rebuild-vs-maintain economics "
+        "are benched via similarity_rebuild_crossover"
+    ),
+    # full IVF replay — the gate thereby checks the append-only
+    # maintenance invariant (history-index ⊎ delta ≡ rebuild)
+    twin=lambda: _ivf_ann_sql(),
+)
 def q_similarity_ann_ivf_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3006,6 +4513,33 @@ def q_similarity_ann_ivf_incremental(
     )
 
 
+# drift twin: same assignment CTE, per-dim micro-unit means
+# via a range lateral, exact int64 sum of squared diffs
+@query(twin=lambda: f"""
+WITH {_nd_assign_cte(normalize=False)},
+x AS (
+  SELECT a.cid AS cell, (a.vec_id % 5 = 0) AS is_new,
+         t.d::INTEGER AS dim, a.v0[t.d] AS val
+  FROM a, range(1, {EMB_DIM + 1}) t(d)),
+m AS (
+  SELECT cell, is_new, dim,
+         CAST(floor((SUM(val) / COUNT(*)) * CAST(1000000.0 AS DOUBLE)
+                    + CAST(0.5 AS DOUBLE)) AS BIGINT) AS mm
+  FROM x GROUP BY 1, 2, 3),
+counts AS (
+  SELECT cid AS cell,
+         SUM(CASE WHEN vec_id % 5 <> 0 THEN 1 ELSE 0 END)::BIGINT AS n_hist,
+         SUM(CASE WHEN vec_id % 5 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_new
+  FROM a GROUP BY 1),
+ssq AS (
+  SELECT h.cell, SUM((h.mm - w.mm) * (h.mm - w.mm))::BIGINT AS ss
+  FROM (SELECT cell, dim, mm FROM m WHERE NOT is_new) h
+  JOIN (SELECT cell, dim, mm FROM m WHERE is_new) w
+    ON h.cell = w.cell AND h.dim = w.dim
+  GROUP BY 1)
+SELECT c.cell, c.n_hist, c.n_new,
+       {_ieee_round_pos_sql("sqrt(CAST(ss AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)")} AS drift
+FROM counts c LEFT JOIN ssq ON ssq.cell = c.cell""")
 def q_similarity_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell drift between the history/delta halves of the vector
     corpus (similarity.index_drift) — the measured rebuild trigger for
@@ -3020,6 +4554,30 @@ REBUILD_FIT_ITERS = 10   # Lloyd passes a from-scratch quantizer retrain costs
 INC_BALANCE_REBUILD = 2.0  # increment max-cell balance that flags a rebuild
 
 
+# crossover twin: same assignment CTE folded to (cell, bkt)
+# counts; the cost columns are exact integer arithmetic and
+# the two rounded ratios replay the floor-pin
+@query(twin=lambda: f"""
+WITH {_nd_assign_cte(normalize=False)},
+per AS (SELECT cid AS cell, (vec_id % 10)::INTEGER AS bkt,
+               COUNT(*)::BIGINT AS n
+        FROM a GROUP BY 1, 2),
+tot AS (SELECT SUM(n)::BIGINT AS n_total,
+               COUNT(DISTINCT cell)::BIGINT AS n_cells FROM per),
+fr AS (SELECT * FROM (VALUES (1), (2), (5)) f(inc_tenths)),
+ci AS (SELECT f.inc_tenths, p.cell, SUM(p.n)::BIGINT AS n_cell
+       FROM per p JOIN fr f ON p.bkt < f.inc_tenths GROUP BY 1, 2),
+ag AS (SELECT inc_tenths, SUM(n_cell)::BIGINT AS n_new,
+              MAX(n_cell)::BIGINT AS inc_max_cell
+       FROM ci GROUP BY 1)
+SELECT ag.inc_tenths::INTEGER AS inc_tenths, ag.n_new,
+       (t.n_total - ag.n_new)::BIGINT AS n_hist,
+       ({REBUILD_FIT_ITERS + 1}::BIGINT * t.n_total)::BIGINT AS rebuild_rows,
+       {_ieee_round_pos_sql(f"({REBUILD_FIT_ITERS + 1}::BIGINT * t.n_total) / CAST(ag.n_new AS DOUBLE)", 2)} AS nights_to_amortize,
+       {_ieee_round_pos_sql("ag.inc_max_cell * t.n_cells / CAST(ag.n_new AS DOUBLE)")} AS inc_max_balance,
+       ({_ieee_round_pos_sql("ag.inc_max_cell * t.n_cells / CAST(ag.n_new AS DOUBLE)")}
+        > CAST({INC_BALANCE_REBUILD} AS DOUBLE)) AS rebuild_due
+FROM ag, tot t""")
 def q_similarity_rebuild_crossover(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3087,6 +4645,15 @@ def q_similarity_rebuild_crossover(
     )
 
 
+# same assignment CTE folded to per-cell counts + balance
+@query(twin=lambda: f"""
+WITH {_nd_assign_cte(normalize=False)},
+counts AS (SELECT cid AS cell, COUNT(*)::BIGINT AS n_vecs FROM a GROUP BY 1),
+t AS (SELECT SUM(n_vecs)::BIGINT AS n_total, COUNT(*)::BIGINT AS n_cells
+      FROM counts)
+SELECT c.cell, c.n_vecs,
+       {_ieee_round_pos_sql("c.n_vecs * t.n_cells / CAST(t.n_total AS DOUBLE)")} AS balance
+FROM counts c, t""")
 def q_similarity_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index health report: per-cell population plus the balance
     ratio (cell size / ideal N/K, floor-pinned) — probe latency at
@@ -3119,6 +4686,16 @@ def q_similarity_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_EVAL, twin=lambda: f"""
+WITH ivf AS (SELECT query_id, neighbor_id FROM ({_ivf_ann_sql()}) t1),
+brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
+SELECT i.query_id,
+       COUNT(b.neighbor_id)::BIGINT AS n_hit,
+       {ANN_K}::BIGINT AS k,
+       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
+FROM ivf i LEFT JOIN brute b
+  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
+GROUP BY i.query_id""")
 def q_similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality evaluation — recall@k of the IVF index against the
     exact brute-force top-k, per query (the metric an ANN deployment
@@ -3147,6 +4724,7 @@ def q_similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _ivf_pq_ann_sql())
 def q_similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.ivf_pq_ann_topk(
         load_table(spark, sf_dir, "embeddings"),
@@ -3159,6 +4737,7 @@ def q_similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _ivf_pq_ann_sql(rerank=True))
 def q_similarity_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.ivf_pq_rerank_topk(
         load_table(spark, sf_dir, "embeddings"),
@@ -3270,6 +4849,7 @@ def _fixed_cell_centers(emb: DataFrame) -> list[tuple[int, list[float]]]:
     return [(i, [float(x) for x in r["v0"]]) for i, r in enumerate(rows)]
 
 
+@query(twin=lambda: _ivf_ann_sql(trained=True))
 def q_similarity_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with a TRAINED coarse quantizer (FAISS train()+add()
     shape): fit_nd centers instead of fixed corpus rows — the
@@ -3282,6 +4862,7 @@ def q_similarity_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _ivf_pq_ann_sql(trained_cb=True))
 def q_similarity_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN with TRAINED per-subspace codebooks
     (sim.fit_pq_codebooks — the real FAISS PQ train()): coarse cells
@@ -3298,6 +4879,9 @@ def q_similarity_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _ivf_pq_ann_sql(
+    rerank=True, trained_cb=True
+))
 def q_similarity_ann_pq_rerank_trained(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3315,6 +4899,17 @@ def q_similarity_ann_pq_rerank_trained(
     )
 
 
+@query(unbenched=_R_EVAL, twin=lambda: f"""
+WITH pq AS (SELECT query_id, neighbor_id
+            FROM ({_ivf_pq_ann_sql(trained_cb=True)}) t1),
+brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
+SELECT p.query_id,
+       COUNT(b.neighbor_id)::BIGINT AS n_hit,
+       {ANN_K}::BIGINT AS k,
+       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
+FROM pq p LEFT JOIN brute b
+  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
+GROUP BY p.query_id""")
 def q_similarity_ann_pq_recall_trained(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3342,6 +4937,9 @@ def q_similarity_ann_pq_recall_trained(
     )
 
 
+@query(twin=lambda: _ivf_pq_ann_sql(
+    trained_cb=True, trained_ctr=True
+))
 def q_similarity_ann_pq_full_trained(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3362,6 +4960,17 @@ def q_similarity_ann_pq_full_trained(
     )
 
 
+@query(unbenched=_R_EVAL, twin=lambda: f"""
+WITH pq AS (SELECT query_id, neighbor_id
+            FROM ({_ivf_pq_ann_sql(trained_cb=True, trained_ctr=True)}) t1),
+brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
+SELECT p.query_id,
+       COUNT(b.neighbor_id)::BIGINT AS n_hit,
+       {ANN_K}::BIGINT AS k,
+       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
+FROM pq p LEFT JOIN brute b
+  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
+GROUP BY p.query_id""")
 def q_similarity_ann_pq_recall_full_trained(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3389,6 +4998,7 @@ def q_similarity_ann_pq_recall_full_trained(
     )
 
 
+@query(twin=lambda: _ivf_pq_residual_sql())
 def q_similarity_ann_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual-encoding IVF-PQ (similarity.ivf_pq_residual_ann_topk)
     — FAISS's actual IVFPQ layout: PQ codes describe nv − cn[cell],
@@ -3407,6 +5017,14 @@ def q_similarity_ann_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    unbenched=(
+        "residual-PQ rerank variant; the rerank path is benched via "
+        "similarity_ann_pq_rerank(_trained) and the residual encode via "
+        "similarity_ann_pq_residual"
+    ),
+    twin=lambda: _ivf_pq_residual_sql(rerank=True),
+)
 def q_similarity_ann_pq_rerank_residual(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3439,6 +5057,15 @@ def _pq_residual_trained_codebooks_cached(
     )
 
 
+@query(
+    unbenched=(
+        "trained residual-PQ variant; covered by the benched "
+        "similarity_ann_pq_residual + similarity_ann_pq_trained pair"
+    ),
+    twin=lambda: _ivf_pq_residual_sql(
+        trained_cb=True
+    ),
+)
 def q_similarity_ann_pq_residual_trained(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3458,6 +5085,17 @@ def q_similarity_ann_pq_residual_trained(
     )
 
 
+@query(unbenched=_R_EVAL, twin=lambda: f"""
+WITH pq AS (SELECT query_id, neighbor_id
+            FROM ({_ivf_pq_residual_sql()}) t1),
+brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
+SELECT p.query_id,
+       COUNT(b.neighbor_id)::BIGINT AS n_hit,
+       {ANN_K}::BIGINT AS k,
+       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
+FROM pq p LEFT JOIN brute b
+  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
+GROUP BY p.query_id""")
 def q_similarity_ann_pq_recall_residual(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3486,6 +5124,16 @@ def q_similarity_ann_pq_recall_residual(
     )
 
 
+@query(twin=lambda: f"""
+WITH ivf AS (SELECT query_id, neighbor_id FROM ({_ivf_ann_sql(trained=True)}) t1),
+brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
+SELECT i.query_id,
+       COUNT(b.neighbor_id)::BIGINT AS n_hit,
+       {ANN_K}::BIGINT AS k,
+       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
+FROM ivf i LEFT JOIN brute b
+  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
+GROUP BY i.query_id""")
 def q_similarity_ann_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@k of the TRAINED-quantizer IVF index vs exact brute
     force — the judge's bar: >= the fixed-centroid variant's recall
@@ -3513,6 +5161,13 @@ def q_similarity_ann_recall_trained(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+@query(twin=lambda: f"""
+WITH e0 AS (
+  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v0 FROM embeddings
+)
+SELECT vec_id,
+       {_binary_words_sql()}
+FROM e0""")
 def q_embeddings_binary_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-bit sign quantization (similarity.binary_quantize): the 32×
     storage point of the ladder float32 → int8 → 1-bit; one row per
@@ -3522,6 +5177,7 @@ def q_embeddings_binary_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: _binary_topk_sql(TOPK_K))
 def q_similarity_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming top-k served FROM the 1-bit form
     (similarity.binary_hamming_topk) — candidate generation over 8
@@ -3534,6 +5190,16 @@ def q_similarity_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_EVAL, twin=lambda: f"""
+WITH bt AS (SELECT query_id, neighbor_id FROM ({_binary_topk_sql(TOPK_K)}) t1),
+brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(TOPK_K, bucketed=False)}) t2)
+SELECT i.query_id,
+       COUNT(b.neighbor_id)::BIGINT AS n_hit,
+       {TOPK_K}::BIGINT AS k,
+       {_ieee_round_pos_sql(f'COUNT(b.neighbor_id)::DOUBLE / {TOPK_K}::DOUBLE')} AS recall_at_k
+FROM bt i LEFT JOIN brute b
+  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
+GROUP BY i.query_id""")
 def q_similarity_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantization-quality eval for the 1-bit form: recall@k of
     Hamming retrieval against exact float cosine top-k — the number
@@ -3564,6 +5230,37 @@ def q_similarity_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 DIM_SWEEP = [16, 32, 64]  # truncation points (full dim last = sanity 1.0)
 
 
+@query(unbenched=_R_EVAL, twin=lambda: "\nUNION ALL\n".join(
+    f"""
+SELECT {d}::INTEGER AS dim,
+       COUNT(b.neighbor_id)::BIGINT AS n_hit,
+       COUNT(*)::BIGINT AS n_returned,
+       {_ieee_round_pos_sql(
+           f'COUNT(b.neighbor_id)::DOUBLE'
+           f' / CAST({float(len(set(TOPK_QUERY_IDS)) * TOPK_K)} AS DOUBLE)'
+       )} AS recall_at_k
+FROM (
+  SELECT query_id, neighbor_id FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
+    ) AS rank FROM (
+      SELECT q.query_id, e.vec_id AS neighbor_id,
+             ROUND({_cosine_sql('q.qv', 'e.v', d)}, 6) AS cosine
+      FROM (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+            FROM embeddings) e
+      JOIN (SELECT vec_id AS query_id,
+                   list_transform(embedding, x -> x::DOUBLE) AS qv
+            FROM embeddings
+            WHERE vec_id IN ({', '.join(str(i) for i in TOPK_QUERY_IDS)})) q
+        ON e.vec_id != q.query_id
+    ) s{d}
+  ) r{d} WHERE rank <= {TOPK_K}
+) i
+LEFT JOIN (SELECT query_id, neighbor_id
+           FROM ({_topk_sql(TOPK_K, bucketed=False)}) fb{d}) b
+  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id"""
+    for d in DIM_SWEEP
+))
 def q_similarity_dim_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Truncated-dimension retrieval eval (the Matryoshka-embedding
     serving question): recall@k of brute cosine over only the FIRST d
@@ -3610,6 +5307,22 @@ def q_similarity_dim_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 NPROBE_SWEEP = [1, 2, 3, 4]  # the recall-vs-cost tuning dial values
 
 
+@query(unbenched=_R_EVAL, twin=lambda: "\nUNION ALL\n".join(
+    f"""
+SELECT {np_}::INTEGER AS nprobe,
+       COUNT(b.neighbor_id)::BIGINT AS n_hit,
+       COUNT(*)::BIGINT AS n_returned,
+       {_ieee_round_pos_sql(
+           f'COUNT(b.neighbor_id)::DOUBLE'
+           f' / CAST({float(len(set(TOPK_QUERY_IDS)) * ANN_K)} AS DOUBLE)'
+       )} AS recall_at_k
+FROM (SELECT query_id, neighbor_id
+      FROM ({_ivf_ann_sql(nprobe=np_)}) s{np_}) i
+LEFT JOIN (SELECT query_id, neighbor_id
+           FROM ({_topk_sql(ANN_K, bucketed=False)}) b{np_}) b
+  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id"""
+    for np_ in NPROBE_SWEEP
+))
 def q_similarity_ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF tuning artifact every production vector index ships
     with: recall@k (and candidate volume) at each nprobe — the dial
@@ -3661,6 +5374,7 @@ def q_similarity_ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     return out
 
 
+@query(twin=lambda: _semantic_dedup_sql(trained=True))
 def q_dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup on the trained coarse quantizer: fit_nd cells shard
     the pair space instead of fixed corpus rows (the paper's actual
@@ -3673,6 +5387,7 @@ def q_dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_SUBSTEP, twin=lambda: _kmeans_nd_assign_sql())
 def q_kmeans_nd_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers, pts = _nd_centers_and_points(
         load_table(spark, sf_dir, "embeddings")
@@ -3681,6 +5396,7 @@ def q_kmeans_nd_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("point_id", "cid", F.round("min_d2", 6).alias("min_d2"))
 
 
+@query(unbenched=_R_FIT, twin=lambda: _kmeans_nd_loop2_sql())
 def q_kmeans_nd_loop2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two unrolled n-D Lloyd iterations, oracle-checkable (the n-D
     analog of kmeans_loop2): assign to the fixed centroid rows →
@@ -3718,6 +5434,24 @@ def q_kmeans_nd_loop2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# free-form n-D fit: trajectory stays numerical, result gated —
+# the twin replays the deterministic first-4-rows init and its
+# 64-dim assignment WSSSE for real, and pins the Lloyd
+# invariants the engine verifies honestly
+@query(unbenched=_R_FIT, twin=lambda: f"""
+WITH e AS (SELECT vec_id,
+                  list_transform(embedding, x -> x::DOUBLE) AS v
+           FROM embeddings),
+c AS (SELECT v FROM e ORDER BY vec_id LIMIT 4),
+scored AS (
+  SELECT e.vec_id,
+         MIN(list_sum(list_transform(range(1, {EMB_DIM + 1}),
+             i -> (e.v[i] - c.v[i]) * (e.v[i] - c.v[i])))) AS md2
+  FROM e CROSS JOIN c GROUP BY e.vec_id)
+SELECT CAST(4 AS BIGINT) AS k_centers, COUNT(*)::BIGINT AS n_vecs,
+       ROUND(SUM(md2), {SUM_DIGITS}) AS wssse_init,
+       TRUE AS monotone, TRUE AS fixpoint, TRUE AS improves_on_init
+FROM scored""")
 def q_kmeans_nd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FREE-FORM n-D fit under the hash gate (r12 verdict task 3, the
     n-D analog of the gated ``kmeans_fit``): the unrounded float means
@@ -3736,7 +5470,7 @@ def q_kmeans_nd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(F.col("embedding"), lambda v: v.cast("double")).alias("vec"),
     )
     centers, history, sizes = knd.fit_nd(pts, k=4, max_iter=3, tol=0.0)
-    from kmeans_mapreduce_spark.queries import SUM_DIGITS, _lloyd_slack
+    from kmeans_mapreduce_spark.queries import _lloyd_slack
 
     ver = (
         knd.assign_nd(pts, centers)
@@ -3773,6 +5507,7 @@ def q_kmeans_nd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_FIT, twin=lambda: _kmeans_nd_loop2_sql())
 def q_kmeans_nd_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-D ``fit_nd`` under the hash gate (the n-D analog of
     kmeans_fit_fixed): fixed init from the ND_CENTROID_IDS rows,
@@ -3808,6 +5543,7 @@ def q_kmeans_nd_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 ND_LARGE_K = 256  # production-K gate for the Arrow matmul Lloyd step
 
 
+@query(twin=lambda: _kmeans_nd_fit_large_sql())
 def q_kmeans_nd_fit_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-K n-D fit under the hash gate (r8 verdict task 4):
     K=256 × d=64, the production-K regime of the Arrow matmul step
@@ -3838,6 +5574,20 @@ def q_kmeans_nd_fit_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# real-decode twin, replayed arithmetically from the md5 hex
+# (DuckDB cannot subscript BLOBs): digest byte j = 16*hex[2j] +
+# hex[2j+1]; decoded content is the digest cycled to the
+# content length L (3wh pixels / 2·ns PCM bytes / nf·(3·16·12)
+# AVI frame bytes), so content_sum = (L//16)·digest_sum +
+# prefix_sum(L%16) — all small exact integers, so the single
+# audio twin: the WAV payload's PCM bytes are the md5 digest
+# cycled, so 16 digest bytes = one 8-sample int16 period; the
+# twin materializes the full (<=599-element) sample list per
+# clip and computes the identical exact-integer features, with
+# rms as the shared IEEE floor-round expression
+@query(twin=lambda: f"""
+WITH {_phash_cte()}
+SELECT media_id, width, height, phash FROM ph""")
 def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual hash (pHash) per image + planted near-dup copy
     (r13 verdict task 3 — image near-dup, the one LLM-pipeline family
@@ -3852,6 +5602,15 @@ def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.image_phash(mm.images_with_planted_copies(docs))
 
 
+# exact distance-<=2 join: banding is LOSSLESS at the
+# threshold by pigeonhole, so the banded Spark set equals this
+@query(twin=lambda: f"""
+WITH {_phash_cte()}
+SELECT a.media_id AS media_a, b.media_id AS media_b,
+       bit_count(xor(a.phash, b.phash))::BIGINT AS hamming
+FROM ph a JOIN ph b
+  ON a.media_id < b.media_id
+ AND bit_count(xor(a.phash, b.phash)) <= {mm.PHASH_MAX_HAMMING}""")
 def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image NEAR-DUP pairs over the pHash sketches: the banded
     Hamming self-join shared with SimHash (pigeonhole: <=2 flipped
@@ -3874,6 +5633,15 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# per-frame video twin: frames are digest-identical, so one
+# arithmetic hash replicated over range(n_frames)
+@query(twin=lambda: f"""
+WITH {_phash_cte("video")}
+SELECT v.media_id,
+       unnest(range(0, v.media_id % 4 + 2))::INTEGER AS frame_idx,
+       (v.media_id % 4 + 2)::INTEGER AS n_frames,
+       v.phash
+FROM ph v""")
 def q_multimodal_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-frame perceptual hash through the REAL video container
     path: synthesize the uncompressed-DIB AVI per video doc, walk its
@@ -3888,6 +5656,22 @@ def q_multimodal_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.video_frame_phash(media)
 
 
+# the image-dedup funnel twin: hashes from the shared CTE, the
+# exact distance-<=2 pair join, removed = distinct higher side
+@query(twin=lambda: f"""
+WITH {_phash_cte()},
+pp AS (
+  SELECT a.media_id AS media_a, b.media_id AS media_b
+  FROM ph a JOIN ph b
+    ON a.media_id < b.media_id
+   AND bit_count(xor(a.phash, b.phash)) <= {mm.PHASH_MAX_HAMMING}
+),
+rm AS (SELECT DISTINCT media_b FROM pp)
+SELECT (SELECT COUNT(*) FROM ph)::BIGINT AS n_media,
+       (SELECT COUNT(*) FROM pp)::BIGINT AS n_dup_edges,
+       (SELECT COUNT(*) FROM rm)::BIGINT AS n_removed,
+       ((SELECT COUNT(*) FROM ph) - (SELECT COUNT(*) FROM rm))::BIGINT
+         AS n_kept""")
 def q_pipeline_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END image dedup funnel — the pipeline composition of the
     round's pHash family: decode -> integer pHash sketch -> banded
@@ -3927,6 +5711,9 @@ def q_pipeline_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counts.select("n_media", "n_dup_edges", "n_removed", "n_kept")
 
 
+@query(twin=lambda: f"""
+WITH {_afp_cte()}
+SELECT media_id, n_samples, afp FROM af""")
 def q_multimodal_afp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio envelope fingerprint + planted near-dup copy — the
     fourth modality's near-dup sketch (text/image/video families
@@ -3938,6 +5725,14 @@ def q_multimodal_afp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.audio_fingerprint(mm.audio_with_planted_copies(docs))
 
 
+# exact distance join — banding lossless at the threshold
+@query(twin=lambda: f"""
+WITH {_afp_cte()}
+SELECT a.media_id AS media_a, b.media_id AS media_b,
+       bit_count(xor(a.afp, b.afp))::BIGINT AS hamming
+FROM af a JOIN af b
+  ON a.media_id < b.media_id
+ AND bit_count(xor(a.afp, b.afp)) <= {mm.AFP_MAX_HAMMING}""")
 def q_multimodal_afp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio NEAR-DUP pairs over the envelope fingerprints — the same
     banded Hamming self-join as SimHash/pHash (3 pigeonhole bands of
@@ -3956,11 +5751,85 @@ def q_multimodal_afp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# payload sizes replayed arithmetically: PPM = "P6\n{w} {h}\n255\n"
+# header + 3wh pixels; WAV = canonical 44-byte PCM header + 2
+# bytes/sample; video = uncompressed AVI, 224 fixed header
+# bytes + F frames of (8-byte chunk header + 3*16*12 RGB24)
+@query(twin=lambda: """
+WITH m AS (
+  SELECT doc_id AS media_id,
+         CASE WHEN doc_id % 3 = 0 THEN 'image'
+              WHEN doc_id % 3 = 1 THEN 'audio'
+              ELSE 'video' END AS kind,
+         (doc_id % 64 + 64) AS w, (doc_id % 48 + 48) AS h,
+         (doc_id % 500 + 100) AS ns, (doc_id % 4 + 2) AS nf
+  FROM documents
+)
+SELECT media_id, kind,
+       (CASE kind
+          WHEN 'image' THEN 9 + length(w::VARCHAR) + length(h::VARCHAR) + 3 * w * h
+          WHEN 'audio' THEN 44 + 2 * ns
+          ELSE {avi_fixed} + nf * (8 + {frame_bytes}) END)::BIGINT AS n_bytes,
+       (CASE WHEN kind = 'video' THEN {vid_w} ELSE w END)::INTEGER AS width,
+       (CASE WHEN kind = 'video' THEN {vid_h} ELSE h END)::INTEGER AS height
+FROM m""".format(
+    avi_fixed=mm.AVI_FIXED_BYTES,
+    frame_bytes=mm.VID_FRAME_BYTES,
+    vid_w=mm.VID_W,
+    vid_h=mm.VID_H,
+))
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = mm.media_from_documents(load_table(spark, sf_dir, "documents"))
     return mm.media_meta(media)
 
 
+@query(
+    unbenched=(
+        "Arrow decode kernel; the heavier end-to-end decode paths are "
+        "benched via multimodal_resize / multimodal_mjpeg / "
+        "pipeline_media_cluster"
+    ),
+    # double division is bit-identical to the engine's sum/len
+    twin=lambda: """
+WITH m AS (
+  SELECT doc_id AS media_id,
+         CASE WHEN doc_id % 3 = 0 THEN 'image'
+              WHEN doc_id % 3 = 1 THEN 'audio'
+              ELSE 'video' END AS kind,
+         (doc_id % 64 + 64) AS w, (doc_id % 48 + 48) AS h,
+         (doc_id % 500 + 100) AS ns, (doc_id % 4 + 2) AS nf,
+         md5(text) AS hx
+  FROM documents
+),
+d AS (
+  SELECT *,
+         list_transform(range(0, 16),
+           j -> (strpos('0123456789abcdef', substr(hx, 2 * CAST(j AS INTEGER) + 1, 1)) - 1) * 16
+              + (strpos('0123456789abcdef', substr(hx, 2 * CAST(j AS INTEGER) + 2, 1)) - 1)) AS db,
+         CASE kind WHEN 'image' THEN 3 * w * h
+                   WHEN 'audio' THEN 2 * ns
+                   ELSE nf * {frame_bytes} END AS clen
+  FROM m
+)
+SELECT media_id, kind,
+       (CASE kind
+          WHEN 'image' THEN 9 + length(w::VARCHAR) + length(h::VARCHAR) + 3 * w * h
+          WHEN 'audio' THEN 44 + 2 * ns
+          ELSE {avi_fixed} + nf * (8 + {frame_bytes}) END)::BIGINT AS n_bytes,
+       TRUE AS decoded,
+       (CASE kind WHEN 'image' THEN w WHEN 'video' THEN {vid_w} END)::INTEGER AS dec_width,
+       (CASE kind WHEN 'image' THEN h WHEN 'video' THEN {vid_h} END)::INTEGER AS dec_height,
+       (CASE kind WHEN 'audio' THEN ns WHEN 'video' THEN nf END)::BIGINT AS n_samples,
+       ROUND(((clen // 16) * list_sum(db)
+              + COALESCE(list_sum(db[1:(clen % 16)]), 0))::DOUBLE
+             / clen::DOUBLE, 6) AS byte_mean
+FROM d""".format(
+        avi_fixed=mm.AVI_FIXED_BYTES,
+        frame_bytes=mm.VID_FRAME_BYTES,
+        vid_w=mm.VID_W,
+        vid_h=mm.VID_H,
+    ),
+)
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real per-modality decode (PPM pixels / WAV frames via stdlib
     parsers; video stays a declared codec-bound stub with
@@ -3981,6 +5850,49 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    unbenched=(
+        "Arrow decode kernel (WAV -> PCM features); same narrow "
+        "mapInPandas shape as the benched multimodal_resize"
+    ),
+    twin=lambda: f"""
+WITH m AS (
+  SELECT doc_id AS media_id, (doc_id % 500 + 100) AS ns, md5(text) AS hx
+  FROM documents WHERE doc_id % 3 = 1
+),
+d AS (
+  SELECT media_id, ns,
+         list_transform(range(0, 16),
+           j -> (strpos('0123456789abcdef', substr(hx, 2 * CAST(j AS INTEGER) + 1, 1)) - 1) * 16
+              + (strpos('0123456789abcdef', substr(hx, 2 * CAST(j AS INTEGER) + 2, 1)) - 1)) AS db
+  FROM m
+),
+u AS (
+  SELECT media_id, ns,
+         list_transform(range(0, ns),
+           i -> db[2 * (CAST(i AS INTEGER) % 8) + 1]
+              + 256 * db[2 * (CAST(i AS INTEGER) % 8) + 2]) AS uraw
+  FROM d
+),
+s AS (
+  SELECT media_id, ns,
+         list_transform(uraw,
+           v -> CASE WHEN v >= 32768 THEN v - 65536 ELSE v END) AS sm
+  FROM u
+),
+f AS (
+  SELECT media_id, ns,
+         length(list_filter(range(1, ns),
+           i -> sm[CAST(i AS INTEGER)] * sm[CAST(i AS INTEGER) + 1] < 0)) AS zc,
+         list_max(list_transform(sm, x -> abs(x))) AS pk,
+         list_sum(list_transform(sm, x -> CAST(x AS BIGINT) * CAST(x AS BIGINT))) AS ssq
+  FROM s
+)
+SELECT media_id, ns::BIGINT AS n_samples, zc::BIGINT AS zero_crossings,
+       pk::BIGINT AS peak, ssq::BIGINT AS sum_sq,
+       {_ieee_round_pos_sql('sqrt(ssq::DOUBLE / ns::DOUBLE)')} AS rms
+FROM f""",
+)
 def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-domain audio analysis over REAL decoded PCM (stdlib wave +
     vectorized numpy, one narrow mapInPandas): zero-crossing count,
@@ -4007,6 +5919,21 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, event_id, event_type, value,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+),
+l AS (SELECT user_id, event_id, ts_sec FROM e WHERE event_type = '{ASOF_LEFT_TYPE}'),
+r AS (
+  SELECT user_id, ts_sec, MAX(value) AS r_value
+  FROM e WHERE event_type = '{ASOF_RIGHT_TYPE}' GROUP BY user_id, ts_sec
+)
+SELECT l.user_id, l.event_id, l.ts_sec,
+       r.ts_sec AS asof_ts, r.r_value AS asof_value
+FROM l ASOF JOIN r
+  ON l.user_id = r.user_id AND l.ts_sec >= r.ts_sec""")
 def q_events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each click matched to the user's latest purchase
     state at-or-before it (union + running last over one user-keyed
@@ -4016,6 +5943,20 @@ def q_events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, event_id, event_type, value,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+),
+l AS (SELECT user_id, event_id, ts_sec FROM e WHERE event_type = '{ASOF_LEFT_TYPE}'),
+r AS (SELECT user_id, ts_sec AS r_ts, value FROM e WHERE event_type = '{ASOF_RIGHT_TYPE}')
+SELECT l.user_id, l.event_id, l.ts_sec,
+       COUNT(*) AS n_right, ROUND(SUM(r.value), 2) AS right_value_sum
+FROM l JOIN r
+  ON r.user_id = l.user_id
+ AND r.r_ts >= l.ts_sec AND r.r_ts < l.ts_sec + {RANGE_HORIZON_SEC}
+GROUP BY l.user_id, l.event_id, l.ts_sec""")
 def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded range join: purchases within an hour of each click,
     bucketed equi-join (each left row probes 2 buckets) vs DuckDB's
@@ -4028,6 +5969,15 @@ def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_EVENTAGG, twin=lambda: """
+SELECT COALESCE(event_type, 'ALL') AS event_type,
+       COALESCE(hour, -1) AS hour,
+       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
+FROM (
+  SELECT event_type, (epoch_ns(ts) // 1000000000 // 3600)::BIGINT AS hour, value
+  FROM events
+)
+GROUP BY CUBE(event_type, hour)""")
 def q_events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (event_type, hour): all four grouping combinations in
     one shuffle (rollup's sibling; grouping-set expansion map-side)."""
@@ -4049,6 +5999,12 @@ def q_events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+SELECT user_id FROM events
+WHERE event_type = 'purchase' AND value > CAST({SETOP_VALUE_THRESHOLD!r} AS DOUBLE)
+INTERSECT
+SELECT user_id FROM events
+WHERE event_type = 'error' AND value > CAST({SETOP_VALUE_THRESHOLD!r} AS DOUBLE)""")
 def q_events_users_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT: users with a big purchase AND a big error event."""
     e = load_table(spark, sf_dir, "events")
@@ -4063,6 +6019,11 @@ def q_events_users_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.intersect(b)
 
 
+@query(twin=lambda: f"""
+SELECT user_id FROM events WHERE event_type = '{ASOF_LEFT_TYPE}'
+EXCEPT
+SELECT user_id FROM events
+WHERE event_type = '{ASOF_RIGHT_TYPE}' AND value > CAST({SETOP_VALUE_THRESHOLD!r} AS DOUBLE)""")
 def q_events_users_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct): users who clicked but never made a big
     purchase."""
@@ -4075,6 +6036,7 @@ def q_events_users_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.subtract(b)
 
 
+@query(twin=lambda: _media_cluster_sql())
 def q_pipeline_media_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal capstone composition: binary payloads → embedding
     vectors (mapInPandas encoder plumbing) → n-D nearest-centroid
@@ -4101,6 +6063,29 @@ def q_pipeline_media_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOPIC_TOP_TERMS = 3
 
 
+@query(twin=lambda: f"""
+WITH assigned AS ({_kmeans_nd_assign_sql()}),
+tok AS (
+  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term FROM documents
+),
+f AS (
+  SELECT doc_id, term FROM tok
+  WHERE term <> '' AND NOT list_contains({_sql_str_list(STOPWORDS)}, term)
+),
+c AS (
+  SELECT a.cid, f.term, COUNT(*) AS n_occurrences,
+         COUNT(DISTINCT f.doc_id) AS n_docs
+  FROM f JOIN assigned a ON f.doc_id = a.point_id
+  GROUP BY a.cid, f.term
+),
+r AS (
+  SELECT *, row_number() OVER (
+    PARTITION BY cid ORDER BY n_occurrences DESC, term
+  ) AS rank
+  FROM c
+)
+SELECT cid, rank::INTEGER AS rank, term, n_occurrences, n_docs
+FROM r WHERE rank <= {TOPIC_TOP_TERMS}""")
 def q_pipeline_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Topic-discovery composition (the step every embedding-clustering
     pipeline ends with): embeddings → n-D nearest-centroid assign (the
@@ -4148,6 +6133,7 @@ JOIN nation n ON c.c_nationkey = n.n_nationkey
 GROUP BY n.n_name"""
 
 
+@query(twin=lambda: SQL_REVENUE)
 def q_sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL face (§2.2: the reference's only 'API' is stdin
     prompts): the SAME ANSI text runs through spark.sql over registered
@@ -4159,12 +6145,33 @@ def q_sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(SQL_REVENUE)
 
 
+@query(twin=lambda: """
+WITH ranked AS (
+  SELECT event_type, value,
+         row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
+         COUNT(*) OVER (PARTITION BY event_type) AS n,
+         SUM(value) OVER (PARTITION BY event_type) AS total
+  FROM events
+)
+SELECT event_type,
+       CASE WHEN total = 0 THEN 0.0
+            ELSE ROUND(SUM((2 * rn - n - 1) * value) / (n * total), 6)
+       END AS value_gini
+FROM ranked GROUP BY event_type, n, total""")
 def q_events_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom UDAF (Arrow grouped-agg pandas_udf): per-type Gini
     concentration of event values."""
     return ev.value_gini(load_table(spark, sf_dir, "events"))
 
 
+@query(twin=lambda: """
+SELECT event_type, COUNT(*) AS n_events,
+       SUM(k)::BIGINT AS k_sum,
+       COUNT(DISTINCT k)::BIGINT AS n_distinct_k
+FROM (
+  SELECT event_type, json_extract(props, '$.k')::BIGINT AS k FROM events
+)
+GROUP BY event_type""")
 def q_events_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 VariantType surface: ``try_parse_json`` encodes the
     props column into the binary variant form once, ``variant_get``
@@ -4190,6 +6197,11 @@ def q_events_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(unbenched=_R_EVENTAGG, twin=lambda: """
+SELECT EXTRACT(YEAR FROM o_orderdate)::INTEGER AS o_year,
+       EXTRACT(MONTH FROM o_orderdate)::INTEGER AS o_month,
+       COUNT(*) AS n_orders, ROUND(SUM(o_totalprice), 2) AS total_price
+FROM orders GROUP BY 1, 2""")
 def q_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar/date functions (§2.2 gap): order count + revenue per
     (year, month) extracted from the TIMESTAMP order date. Session
@@ -4208,6 +6220,13 @@ def q_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: """
+SELECT event_type, COUNT(*) AS n_events,
+       MIN(k) AS k_min, MAX(k) AS k_max, ROUND(AVG(k), 6) AS k_avg
+FROM (
+  SELECT event_type, json_extract(props, '$.k')::BIGINT AS k FROM events
+)
+GROUP BY event_type""")
 def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured column handling (§2.2 'JSON functions' gap):
     parse the events ``props`` JSON with an EXPLICIT schema
@@ -4229,31 +6248,145 @@ def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(twin=lambda: f"""
+SELECT (epoch_ns(ts) // 1000000000 // {ev.WINDOW_SEC} * {ev.WINDOW_SEC})::BIGINT AS window_start,
+       event_type, COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
+FROM events GROUP BY 1, 2""")
 def q_events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.window_agg(load_table(spark, sf_dir, "events"))
 
 
+@query(
+    twin=lambda: _SESSIONIZE_SQL
+    + """
+SELECT user_id, session_idx,
+       MIN(ts_sec) AS session_start, MAX(ts_sec) AS session_end,
+       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
+FROM sessions GROUP BY user_id, session_idx""",
+)
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.sessionize(load_table(spark, sf_dir, "events"))
 
 
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, event_id, event_type,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+),
+paired AS (
+  SELECT event_type AS prev_type,
+         lead(event_type) OVER w AS next_type,
+         lead(ts_sec) OVER w - ts_sec AS gap
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)
+)
+SELECT prev_type, next_type, COUNT(*) AS n_transitions
+FROM paired
+WHERE next_type IS NOT NULL AND gap <= {ev.SESSION_GAP_SEC}
+GROUP BY prev_type, next_type
+ORDER BY n_transitions DESC, prev_type, next_type
+LIMIT 10""")
 def q_events_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.session_paths(load_table(spark, sf_dir, "events"))
 
 
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec, value
+  FROM events
+),
+per_sec AS (
+  SELECT user_id, ts_sec, ROUND(SUM(value), 2) AS v
+  FROM e GROUP BY user_id, ts_sec
+),
+stats AS (
+  SELECT user_id, ts_sec, v,
+         COUNT(*) OVER w AS n_prior,
+         SUM(v) OVER w AS s1,
+         SUM(v * v) OVER w AS s2
+  FROM per_sec
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec
+               RANGE BETWEEN {ev.ZSCORE_WINDOW_SEC} PRECEDING AND 1 PRECEDING)
+)
+SELECT user_id, ts_sec, v, n_prior,
+       CASE WHEN n_prior >= 2
+             AND (s2 - s1 * s1 / n_prior) / (n_prior - 1) > 0
+            THEN ROUND((v - s1 / n_prior)
+                       / sqrt((s2 - s1 * s1 / n_prior) / (n_prior - 1)), 6)
+            END AS zscore
+FROM stats""")
 def q_events_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.rolling_zscore(load_table(spark, sf_dir, "events"))
 
 
+# tie-break and at-or-before qualification
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, event_id, event_type,
+         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
+  FROM events
+),
+s0 AS (
+  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[0]}' THEN ts_sec END)
+    OVER w AS q0
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+s1 AS (
+  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[1]}'
+                      AND q0 IS NOT NULL THEN ts_sec END) OVER w AS q1
+  FROM s0 WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+s2 AS (
+  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[2]}'
+                      AND q1 IS NOT NULL THEN ts_sec END) OVER w AS q2
+  FROM s1 WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+per_user AS (
+  SELECT user_id, bool_or(q0 IS NOT NULL) AS r0,
+         bool_or(q1 IS NOT NULL) AS r1, bool_or(q2 IS NOT NULL) AS r2
+  FROM s2 GROUP BY user_id
+),
+counts AS (
+  SELECT CAST(COALESCE(SUM(CASE WHEN r0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n0,
+         CAST(COALESCE(SUM(CASE WHEN r1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n1,
+         CAST(COALESCE(SUM(CASE WHEN r2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n2
+  FROM per_user
+)
+SELECT 1 AS step, '{ev.FUNNEL_STEPS[0]}' AS step_type, n0 AS n_users FROM counts
+UNION ALL
+SELECT 2, '{ev.FUNNEL_STEPS[1]}', n1 FROM counts
+UNION ALL
+SELECT 3, '{ev.FUNNEL_STEPS[2]}', n2 FROM counts""")
 def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.funnel(load_table(spark, sf_dir, "events"))
 
 
+@query(twin=lambda: f"""
+WITH e AS (
+  SELECT user_id, (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec FROM events
+),
+uw AS (
+  SELECT user_id, ts_sec // {ev.WEEK_SEC} AS week, COUNT(*) AS n_events
+  FROM e GROUP BY 1, 2
+),
+coh AS (
+  SELECT *, MIN(week) OVER (PARTITION BY user_id) AS cohort_week FROM uw
+)
+SELECT cohort_week, week - cohort_week AS week_offset,
+       COUNT(*) AS n_users, CAST(SUM(n_events) AS BIGINT) AS n_events
+FROM coh GROUP BY 1, 2""")
 def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.retention_weekly(load_table(spark, sf_dir, "events"))
 
 
+@query(unbenched=_R_FIT)
 def q_kmeans_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark MLlib's own k-means on the 2-D point set, the baseline
+    our fit is timed against (rows-only: no SQL twin — MLlib seeds its
+    k-means|| init from its own RNG, which no SQL can replay)."""
     from kmeans_mapreduce_spark.operators.mllib import fit_mllib_2d
     from kmeans_mapreduce_spark.sources.derive import points_2d
 
@@ -5931,194 +8064,6 @@ FROM ranked WHERE rn = 1
 """
 
 
-def extension_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "text_tokens": q_text_tokens,
-        "text_tokens_bpe": q_text_tokens_bpe,
-        "corpus_shuffle": q_corpus_shuffle,
-        "corpus_temperature_mix": q_corpus_temperature_mix,
-        "text_quality": q_text_quality,
-        "text_langid": q_text_langid,
-        "text_fingerprint": q_text_fingerprint,
-        "text_tfidf": q_text_tfidf,
-        "text_token_quantiles": q_text_token_quantiles,
-        "text_top_quality": q_text_top_quality,
-        "corpus_sample_stratified": q_corpus_sample_stratified,
-        "corpus_training_mix": q_corpus_training_mix,
-        "lineitem_pricing_summary": q_lineitem_pricing_summary,
-        "join_revenue_by_nation": q_join_revenue_by_nation,
-        "join_top_customers": q_join_top_customers,
-        "join_parts_never_ordered": q_join_parts_never_ordered,
-        "join_suppliers_per_region": q_join_suppliers_per_region,
-        "join_shipping_priority": q_join_shipping_priority,
-        "join_priority_check": q_join_priority_check,
-        "join_promo_share": q_join_promo_share,
-        "join_small_quantity": q_join_small_quantity,
-        "join_min_cost_supplier": q_join_min_cost_supplier,
-        "join_waiting_suppliers": q_join_waiting_suppliers,
-        "join_excess_stock": q_join_excess_stock,
-        "join_custdist": q_join_custdist,
-        "join_top_revenue_supplier": q_join_top_revenue_supplier,
-        "join_supplier_cnt": q_join_supplier_cnt,
-        "join_idle_customers": q_join_idle_customers,
-        "points_radius_join": q_points_radius_join,
-        "text_heaps_law": q_text_heaps_law,
-        "pipeline_clean_corpus": q_pipeline_clean_corpus,
-        "events_rollup": q_events_rollup,
-        "events_rollup_incremental": q_events_rollup_incremental,
-        "events_gapfill": q_events_gapfill,
-        "events_twa": q_events_twa,
-        "events_m4": q_events_m4,
-        "events_stream_replay": q_events_stream_replay,
-        "events_stream_rollup_replay": q_events_stream_rollup_replay,
-        "events_stream_m4_replay": q_events_stream_m4_replay,
-        "corpus_stream_dedup_replay": q_corpus_stream_dedup_replay,
-        "corpus_stream_span_replay": q_corpus_stream_span_replay,
-        "events_stream_session_replay": q_events_stream_session_replay,
-        "events_stream_funnel_replay": q_events_stream_funnel_replay,
-        "events_stream_ttl_dedup_replay": q_events_stream_ttl_dedup_replay,
-        "events_stream_ttl_dedup_tws_replay": q_events_stream_ttl_dedup_tws_replay,
-        "events_stream_native_dedup_replay": q_events_stream_native_dedup_replay,
-        "corpus_line_dedup": q_corpus_line_dedup,
-        "events_stream_join_replay": q_events_stream_join_replay,
-        "events_stream_join_outer_replay": q_events_stream_join_outer_replay,
-        "events_stream_enrich_replay": q_events_stream_enrich_replay,
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash_sig": q_dedup_minhash_sig,
-        "dedup_minhash_pairs": q_dedup_minhash_pairs,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_cluster_sizes": q_dedup_cluster_sizes,
-        "dedup_keep_best": q_dedup_keep_best,
-        "corpus_split": q_corpus_split,
-        "corpus_snapshot_diff": q_corpus_snapshot_diff,
-        "dim_scd2_timeline": q_dim_scd2_timeline,
-        "table_time_travel": q_table_time_travel,
-        "corpus_profile": q_corpus_profile,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_fuzzy_prefix": q_dedup_fuzzy_prefix,
-        "dedup_span_fraction": q_dedup_span_fraction,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "dedup_embedding": q_dedup_embedding,
-        "dedup_incremental": q_dedup_incremental,
-        "dedup_cross_snapshot": q_dedup_cross_snapshot,
-        "dedup_semantic": q_dedup_semantic,
-        "pipeline_vector_corpus": q_pipeline_vector_corpus,
-        "dedup_lsh_recall": q_dedup_lsh_recall,
-        "similarity_knn_graph": q_similarity_knn_graph,
-        "pipeline_label_propagation": q_pipeline_label_propagation,
-        "pipeline_pagerank_loop2": q_pipeline_pagerank_loop2,
-        "text_vocab_coverage": q_text_vocab_coverage,
-        "pipeline_curation_funnel": q_pipeline_curation_funnel,
-        "embeddings_outliers": q_embeddings_outliers,
-        "corpus_pack_fragments": q_corpus_pack_fragments,
-        "pipeline_semantic_clusters": q_pipeline_semantic_clusters,
-        "corpus_lr_loop2": q_corpus_lr_loop2,
-        "corpus_lr_calibration": q_corpus_lr_calibration,
-        "corpus_lr_scores": q_corpus_lr_scores,
-        "corpus_lr_auc": q_corpus_lr_auc,
-        "events_exact_quantiles": q_events_exact_quantiles,
-        "events_anomaly_mad": q_events_anomaly_mad,
-        "events_observed_metrics": q_events_observed_metrics,
-        "events_rolling_active": q_events_rolling_active,
-        "events_trend": q_events_trend,
-        "pipeline_events_dashboard": q_pipeline_events_dashboard,
-        "corpus_quality_classifier": q_corpus_quality_classifier,
-        "text_bpe_merges": q_text_bpe_merges,
-        "text_bpe_merges2": q_text_bpe_merges2,
-        "text_bpe_segment": q_text_bpe_segment,
-        "corpus_url_dedup": q_corpus_url_dedup,
-        "pipeline_crawl_frontdoor": q_pipeline_crawl_frontdoor,
-        "dedup_bloom_prefilter": q_dedup_bloom_prefilter,
-        "corpus_curriculum": q_corpus_curriculum,
-        "corpus_sample_fixed": q_corpus_sample_fixed,
-        "corpus_datacard": q_corpus_datacard,
-        "dedup_span_clean": q_dedup_span_clean,
-        "dedup_substring": q_dedup_substring,
-        "corpus_source_cap": q_corpus_source_cap,
-        "corpus_token_shards": q_corpus_token_shards,
-        "corpus_shard_manifest": q_corpus_shard_manifest,
-        "text_compression_ratio": q_text_compression_ratio,
-        "similarity_topk": q_similarity_topk,
-        "similarity_hard_negatives": q_similarity_hard_negatives,
-        "text_bm25": q_text_bm25,
-        "text_surprisal_bigram": q_text_surprisal_bigram,
-        "text_normalize": q_text_normalize,
-        "pipeline_pretrain_corpus": q_pipeline_pretrain_corpus,
-        "embeddings_int8_quant": q_embeddings_int8_quant,
-        "similarity_int8_topk": q_similarity_int8_topk,
-        "similarity_int8_recall": q_similarity_int8_recall,
-        "text_langid_eval": q_text_langid_eval,
-        "similarity_ann_lsh": q_similarity_ann_lsh,
-        "similarity_ann_ivf": q_similarity_ann_ivf,
-        "similarity_ann_ivf_incremental": q_similarity_ann_ivf_incremental,
-        "similarity_index_drift": q_similarity_index_drift,
-        "similarity_cell_balance": q_similarity_cell_balance,
-        "similarity_rebuild_crossover": q_similarity_rebuild_crossover,
-        "similarity_graph_triangles": q_similarity_graph_triangles,
-        "similarity_hybrid_rrf": q_similarity_hybrid_rrf,
-        "similarity_ann_ivf_trained": q_similarity_ann_ivf_trained,
-        "similarity_ann_filtered": q_similarity_ann_filtered,
-        "similarity_ann_recall": q_similarity_ann_recall,
-        "similarity_ann_recall_trained": q_similarity_ann_recall_trained,
-        "dedup_semantic_trained": q_dedup_semantic_trained,
-        "similarity_ann_pq": q_similarity_ann_pq,
-        "similarity_ann_pq_rerank": q_similarity_ann_pq_rerank,
-        "similarity_ann_pq_trained": q_similarity_ann_pq_trained,
-        "similarity_ann_pq_rerank_trained": q_similarity_ann_pq_rerank_trained,
-        "similarity_ann_pq_recall_trained": q_similarity_ann_pq_recall_trained,
-        "similarity_ann_pq_full_trained": q_similarity_ann_pq_full_trained,
-        "similarity_ann_pq_recall_full_trained": q_similarity_ann_pq_recall_full_trained,
-        "similarity_ann_pq_residual": q_similarity_ann_pq_residual,
-        "similarity_ann_pq_recall_residual": q_similarity_ann_pq_recall_residual,
-        "similarity_ann_pq_residual_trained": q_similarity_ann_pq_residual_trained,
-        "similarity_ann_pq_rerank_residual": q_similarity_ann_pq_rerank_residual,
-        "similarity_ann_nprobe_sweep": q_similarity_ann_nprobe_sweep,
-        "embeddings_binary_quant": q_embeddings_binary_quant,
-        "similarity_binary_topk": q_similarity_binary_topk,
-        "similarity_binary_recall": q_similarity_binary_recall,
-        "similarity_dim_sweep": q_similarity_dim_sweep,
-        "kmeans_nd_assign": q_kmeans_nd_assign,
-        "kmeans_nd_loop2": q_kmeans_nd_loop2,
-        "kmeans_nd_fit": q_kmeans_nd_fit,
-        "kmeans_nd_fit_fixed": q_kmeans_nd_fit_fixed,
-        "kmeans_nd_fit_large": q_kmeans_nd_fit_large,
-        "multimodal_meta": q_multimodal_meta,
-        "multimodal_features": q_multimodal_features,
-        "multimodal_audio": q_multimodal_audio,
-        "multimodal_resize": q_multimodal_resize,
-        "multimodal_frames": q_multimodal_frames,
-        "multimodal_mjpeg": q_multimodal_mjpeg,
-        "multimodal_phash": q_multimodal_phash,
-        "multimodal_phash_pairs": q_multimodal_phash_pairs,
-        "multimodal_video_phash": q_multimodal_video_phash,
-        "pipeline_image_dedup": q_pipeline_image_dedup,
-        "multimodal_afp": q_multimodal_afp,
-        "multimodal_afp_pairs": q_multimodal_afp_pairs,
-        "pipeline_media_cluster": q_pipeline_media_cluster,
-        "pipeline_topic_clusters": q_pipeline_topic_clusters,
-        "events_window_agg": q_events_window_agg,
-        "events_sessionize": q_events_sessionize,
-        "events_sessionize_native": q_events_sessionize_native,
-        "events_sliding_window": q_events_sliding_window,
-        "events_asof_join": q_events_asof_join,
-        "events_range_join": q_events_range_join,
-        "events_cube": q_events_cube,
-        "events_json_props": q_events_json_props,
-        "events_variant_props": q_events_variant_props,
-        "orders_by_month": q_orders_by_month,
-        "events_value_gini": q_events_value_gini,
-        "sql_revenue_by_nation": q_sql_revenue_by_nation,
-        "events_users_intersect": q_events_users_intersect,
-        "events_users_except": q_events_users_except,
-        "events_funnel": q_events_funnel,
-        "events_retention": q_events_retention,
-        "events_rolling_zscore": q_events_rolling_zscore,
-        "events_session_paths": q_events_session_paths,
-        "kmeans_mllib": q_kmeans_mllib,
-    }
-
-
 def _media_cluster_sql() -> str:
     """Twin of q_pipeline_media_cluster: rebuild the byte 'embedding'
     from md5 hex (byte j = 16·hex[2j] + hex[2j+1] — same trick as the
@@ -6610,2048 +8555,3 @@ SELECT doc_id, n_words,
        (lt - ls)::BIGINT AS n_merged
 FROM s"""
     )
-
-
-def extension_oracle_sql() -> dict[str, str]:
-    from kmeans_mapreduce_spark.analytics import _rule_filter_oracle as _rf_oracle
-    from kmeans_mapreduce_spark.operators import relational as rel
-    from kmeans_mapreduce_spark.queries import SUM_DIGITS as _SUM_DIGITS
-
-    quality_sql = _quality_sql()
-    return {
-        "text_tokens": (
-            "SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n_tokens, "
-            "length(text)::BIGINT AS n_chars FROM documents"
-        ),
-        # GPT-2-ish pre-tokenizer count: both engines run the SAME
-        # lookahead-free pattern leftmost-first (Java regex / RE2)
-        "text_tokens_bpe": f"""
-WITH c AS (
-  SELECT doc_id,
-         len(regexp_extract_all(text, '{tx.BPE_SPLIT_RE.replace("'", "''")}'))::BIGINT AS n_bpe_tokens,
-         length(text) AS n_chars
-  FROM documents
-)
-SELECT doc_id, n_bpe_tokens,
-       ROUND(n_chars::DOUBLE / GREATEST(n_bpe_tokens, 1)::DOUBLE, 6) AS chars_per_token
-FROM c""",
-        "corpus_shuffle": f"""
-WITH s AS (
-  SELECT doc_id,
-         {h64_sql(f"'{sp.SHUFFLE_SALT}:' || doc_id::VARCHAR")} AS k
-  FROM documents
-)
-SELECT doc_id, k AS shuffle_key, (k % {SHUFFLE_SHARDS})::INTEGER AS shard
-FROM s""",
-        # α=0.5 temperature mix: r_s = sqrt(n_min/n_s) is one IEEE
-        # correctly-rounded divide + sqrt, so FLOOR(BUCKETS·r) is
-        # bit-identical to the Spark driver's math.floor/math.sqrt
-        "corpus_temperature_mix": f"""
-WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
-m AS (SELECT MIN(n) AS nmin FROM c),
-t AS (
-  SELECT lang,
-         FLOOR({sp.SAMPLE_BUCKETS} * sqrt(m.nmin::DOUBLE / c.n::DOUBLE))::BIGINT AS thr
-  FROM c, m
-)
-SELECT d.doc_id, d.lang
-FROM documents d JOIN t ON d.lang = t.lang
-WHERE {h64_sql(f"'{sp.TEMP_SALT}:' || doc_id::VARCHAR")} % {sp.SAMPLE_BUCKETS} < t.thr""",
-        "text_quality": quality_sql,
-        "pipeline_clean_corpus": f"""
-WITH qual AS ({quality_sql}),
-keep AS (
-  SELECT MIN(doc_id) AS doc_id FROM documents
-  GROUP BY {h64_sql('lower(trim(text))')}
-),
-clean AS (
-  SELECT q.doc_id, q.quality_score, d.lang
-  FROM qual q
-  JOIN keep k ON q.doc_id = k.doc_id
-  JOIN documents d ON d.doc_id = q.doc_id
-  WHERE q.quality_score >= {CLEAN_MIN_QUALITY}
-)
-SELECT lang, COUNT(*) AS n_docs, ROUND(AVG(quality_score), 6) AS avg_quality
-FROM clean GROUP BY lang""",
-        "events_rollup": f"""
-SELECT COALESCE(event_type, 'ALL') AS event_type,
-       COALESCE(hour, -1) AS hour,
-       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
-FROM (
-  SELECT event_type, (epoch_ns(ts) // 1000000000 // 3600)::BIGINT AS hour, value
-  FROM events
-)
-GROUP BY ROLLUP(event_type, hour)""",
-        # full from-scratch recompute in exact int64 cents — the gate
-        # thereby checks the incremental-maintenance invariant
-        # (history-state ⊎ delta ≡ recompute) across engines; the SAME
-        # twin gates the streaming maintainer (same mergeable state)
-        "events_rollup_incremental": _ROLLUP_RECOMPUTE_SQL,
-        "events_stream_rollup_replay": _ROLLUP_RECOMPUTE_SQL,
-        # the SAME full-recompute M4 twin gates the streaming
-        # maintainer: maintained ≡ recomputed, the rollup contract
-        "events_stream_m4_replay": _M4_SQL,
-        # dense hourly axis from a 1-row bounds aggregate; LOCF =
-        # last_value IGNORE NULLS over the exact cents sum
-        "events_gapfill": _GAPFILL_SQL,
-        # hold-time-weighted mean: exact int64 cents·seconds numerator,
-        # one division + the pinned floor-round at the end
-        "events_twa": f"""
-WITH e AS (
-  SELECT user_id, event_id,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events),
-stepped AS (
-  SELECT user_id, ts_sec, cents,
-         lead(ts_sec) OVER (PARTITION BY user_id ORDER BY ts_sec, event_id)
-           - ts_sec AS dt
-  FROM e),
-agg AS (
-  SELECT user_id, COUNT(*)::BIGINT AS n_events,
-         SUM(cents * dt)::BIGINT AS num,
-         (MAX(ts_sec) - MIN(ts_sec))::BIGINT AS duration_sec
-  FROM stepped GROUP BY 1)
-SELECT user_id, n_events, duration_sec,
-       CASE WHEN duration_sec > 0 THEN
-         {_ieee_round_pos_sql("CAST(num AS DOUBLE) / (duration_sec * 100.0)")}
-       END AS twa
-FROM agg""",
-        # M4 downsampling: first/last resolved by the unique
-        # (ts_sec, event_id) row_number against the partition count
-        "events_m4": _M4_SQL,
-        # batch twin of the STATEFUL streaming dedup: a full bounded
-        # replay collapses the fingerprint state to this GROUP BY
-        "corpus_stream_dedup_replay": f"""
-SELECT {h64_sql("lower(trim(text))")} AS fp,
-       MIN(doc_id) AS keep_doc_id,
-       COUNT(*)::BIGINT AS n_copies
-FROM documents GROUP BY 1""",
-        # batch twin of the streaming span first-occurrence state: the
-        # folded replay must equal the keep-first window's rn=1 winners
-        "corpus_stream_span_replay": f"""
-WITH d AS (
-  SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS w FROM documents
-),
-s AS (
-  SELECT doc_id, CAST(t.i AS INT) AS pos,
-         array_to_string(
-           w[(t.i * {dd.SPAN_WORDS} + 1):(t.i * {dd.SPAN_WORDS} + {dd.SPAN_WORDS})],
-           ' ') AS span
-  FROM d, UNNEST(range(0, CAST(CEIL(len(w) / {dd.SPAN_WORDS}.0) AS BIGINT))) AS t(i)
-),
-r AS (
-  SELECT span, doc_id, pos,
-         ROW_NUMBER() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn,
-         COUNT(*) OVER (PARTITION BY span) AS n
-  FROM s
-)
-SELECT {h64_sql('span')} AS span_fp, doc_id AS first_doc_id,
-       pos AS first_pos, n::BIGINT AS n_occurrences
-FROM r WHERE rn = 1""",
-        # batch twin of the STREAMING window aggregation: replay parity
-        # means the streaming complete-mode state over bounded input
-        # equals this one-shot tumbling-window GROUP BY
-        "events_stream_replay": f"""
-WITH e AS (
-  SELECT event_type, value,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-)
-SELECT ((ts_sec // {ev.WINDOW_SEC}) * {ev.WINDOW_SEC})::BIGINT AS window_start,
-       event_type, COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
-FROM e GROUP BY 1, 2""",
-        # batch twin of the streaming TTL-dedup (debounce): emission is
-        # arrival-only (timeouts are pure state cleanup), so the
-        # single-batch replay equals the plain LAG window — emit iff
-        # first-of-key or gap to the previous same-key event > TTL
-        "corpus_line_dedup": f"""
-WITH d AS (SELECT doc_id, {_line_synth_sql()} AS lines FROM documents),
-x AS (SELECT doc_id, unnest(lines) AS line,
-             unnest(range(1, len(lines) + 1)) AS idx
-      FROM d),
-xf AS (SELECT doc_id, idx, line, {h64_sql('line')} AS lfp FROM x),
-bo AS (SELECT lfp FROM (SELECT DISTINCT doc_id, lfp FROM xf)
-       GROUP BY lfp HAVING COUNT(*) >= {dd.BOILER_MIN_DF}),
-m AS (SELECT xf.doc_id, xf.idx, xf.line,
-             (bo.lfp IS NOT NULL) AS is_boiler
-      FROM xf LEFT JOIN bo ON xf.lfp = bo.lfp)
-SELECT doc_id, COUNT(*)::BIGINT AS n_lines,
-       SUM(CASE WHEN is_boiler THEN 1 ELSE 0 END)::BIGINT AS n_boiler,
-       {h64_sql(
-           "lower(trim(COALESCE(string_agg("
-           "CASE WHEN NOT is_boiler THEN line END, chr(10) ORDER BY idx"
-           "), '')))"
-       )} AS cleaned_fp
-FROM m GROUP BY doc_id""",
-        # native dropDuplicatesWithinWatermark: key columns only (which
-        # duplicate row survives is engine-arbitrary); single-batch
-        # bounded replay ≡ batch DISTINCT
-        "events_stream_native_dedup_replay": (
-            "SELECT DISTINCT user_id, event_type FROM events"
-        ),
-        "events_stream_ttl_dedup_replay": _ttl_dedup_replay_sql(),
-        # the TWS variant shares the v1 fold (one _ttl_fold_batch),
-        # so its bounded single-batch replay has the SAME batch-LAG
-        # twin — gating it pins the transformWithStateInPandas
-        # protocol path itself (state server, timers, pbshim runtime)
-        "events_stream_ttl_dedup_tws_replay": _ttl_dedup_replay_sql(),
-        # batch twin of the STREAMING inner interval join: an inner
-        # stream-stream join emits pairs on arrival (never on watermark
-        # timeout), so over bounded input it equals this relational
-        # interval join row-for-row
-        "events_stream_join_replay": f"""
-WITH e AS (
-  SELECT user_id, event_id, event_type, value,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-),
-l AS (
-  SELECT user_id, event_id, ts_sec AS l_ts_sec
-  FROM e WHERE event_type = '{ASOF_LEFT_TYPE}'
-),
-r AS (
-  SELECT user_id AS r_user, ts_sec AS r_ts_sec, value AS r_value
-  FROM e WHERE event_type = '{ASOF_RIGHT_TYPE}'
-)
-SELECT l.user_id, l.event_id, l.l_ts_sec, r.r_ts_sec, r.r_value
-FROM l JOIN r
-  ON r.r_user = l.user_id
- AND r.r_ts_sec >= l.l_ts_sec
- AND r.r_ts_sec < l.l_ts_sec + {RANGE_HORIZON_SEC}""",
-        # batch twin of the LEFT OUTER stream-stream join over the
-        # pinned ordered split: matched pairs emit on arrival exactly
-        # like the inner join; an unmatched left row emits nulls iff
-        # its horizon closes AT or before the FINAL watermark (the
-        # eviction boundary is inclusive — pinned by the strictness test)
-        # W = min(max l ts, max r ts) - delay (two per-branch
-        # watermarks, min-combined; rows still inside their horizon at
-        # end-of-stream never emit)
-        "events_stream_join_outer_replay": f"""
-WITH e AS (
-  SELECT user_id, event_id, event_type, value,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-),
-l AS (
-  SELECT user_id, event_id, ts_sec AS l_ts_sec
-  FROM e WHERE event_type = '{ASOF_LEFT_TYPE}'
-),
-r AS (
-  SELECT user_id AS r_user, ts_sec AS r_ts_sec, value AS r_value
-  FROM e WHERE event_type = '{ASOF_RIGHT_TYPE}'
-),
-wm AS (
-  -- NULL when EITHER branch has no rows: a branch whose event type
-  -- never appears keeps the min-combined Spark watermark at its
-  -- initial value, so no left row ever evicts and no nulls emit —
-  -- DuckDB's LEAST skips NULL (LEAST(NULL, x) = x), which would
-  -- wrongly advance the twin's watermark on single-type vintages
-  SELECT CASE WHEN ml.v IS NULL OR mr.v IS NULL
-              THEN NULL ELSE LEAST(ml.v, mr.v) - {STREAM_WATERMARK_SEC}
-         END AS w
-  FROM (SELECT MAX(ts_sec) AS v FROM e
-        WHERE event_type = '{ASOF_LEFT_TYPE}') ml,
-       (SELECT MAX(ts_sec) AS v FROM e
-        WHERE event_type = '{ASOF_RIGHT_TYPE}') mr
-),
-j AS (
-  SELECT l.user_id, l.event_id, l.l_ts_sec, r.r_ts_sec, r.r_value
-  FROM l LEFT JOIN r
-    ON r.r_user = l.user_id
-   AND r.r_ts_sec >= l.l_ts_sec
-   AND r.r_ts_sec < l.l_ts_sec + {RANGE_HORIZON_SEC}
-)
-SELECT j.user_id, j.event_id, j.l_ts_sec, j.r_ts_sec, j.r_value
-FROM j, wm
-WHERE j.r_ts_sec IS NOT NULL
-   OR j.l_ts_sec + {RANGE_HORIZON_SEC} <= wm.w""",
-        # batch twin of the STREAM-STATIC broadcast enrich: stateless
-        # per-batch join over bounded input = the batch left join
-        "events_stream_enrich_replay": f"""
-WITH p AS (
-  SELECT user_id, event_id,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events WHERE event_type = '{ASOF_RIGHT_TYPE}'
-),
-d AS (
-  SELECT c_custkey AS user_id, c_mktsegment AS segment
-  FROM customer WHERE c_custkey < {ENRICH_DIM_CUTOFF}
-)
-SELECT p.user_id, p.event_id, p.ts_sec, d.segment
-FROM p LEFT JOIN d USING (user_id)""",
-        "text_langid": _langid_sql(),
-        "text_langid_eval": f"""
-WITH pred AS ({_langid_sql()}),
-j AS (
-  SELECT d.lang, p.pred_lang
-  FROM documents d JOIN pred p ON p.doc_id = d.doc_id
-),
-cm AS (
-  SELECT lang, pred_lang, COUNT(*)::BIGINT AS n_docs
-  FROM j GROUP BY lang, pred_lang
-),
-tot AS (SELECT lang, SUM(n_docs)::BIGINT AS t FROM cm GROUP BY lang)
-SELECT cm.lang, cm.pred_lang, cm.n_docs,
-       {_ieee_round_pos_sql('cm.n_docs::DOUBLE / tot.t::DOUBLE')} AS share
-FROM cm JOIN tot ON tot.lang = cm.lang""",
-        "text_fingerprint": (
-            f"SELECT doc_id, {h64_sql('lower(trim(text))')} AS fingerprint "
-            "FROM documents"
-        ),
-        "text_tfidf": f"""
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
-df AS (SELECT term, COUNT(DISTINCT doc_id)::DOUBLE AS df FROM tok GROUP BY term),
-scored AS (
-  SELECT tf.doc_id, tf.term,
-         ROUND(tf.tf * ln((SELECT COUNT(*) FROM documents)::DOUBLE / df.df), 6) AS tfidf
-  FROM tf JOIN df ON tf.term = df.term
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-  FROM scored
-)
-SELECT doc_id, term, rank::INTEGER AS rank, tfidf FROM ranked WHERE rank <= {TFIDF_K}""",
-        "corpus_sample_stratified": _sample_sql(),
-        "corpus_training_mix": _training_mix_sql(),
-        "text_token_quantiles": _token_quantiles_sql(),
-        "text_top_quality": f"""
-WITH q AS ({_quality_sql()})
-SELECT doc_id, quality_score FROM q
-ORDER BY quality_score DESC, doc_id
-LIMIT {TOP_QUALITY_K}""",
-        "lineitem_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       ROUND(SUM(l_quantity), 2) AS sum_qty,
-       ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-       ROUND(SUM(l_extendedprice * (CAST(1.0 AS DOUBLE) - l_discount)), 2) AS sum_disc_price,
-       ROUND(SUM(l_extendedprice * (CAST(1.0 AS DOUBLE) - l_discount)
-                 * (CAST(1.0 AS DOUBLE) + l_tax)), 2) AS sum_charge,
-       ROUND(AVG(l_quantity), 6) AS avg_qty,
-       ROUND(AVG(l_extendedprice), 6) AS avg_price,
-       ROUND(AVG(l_discount), 6) AS avg_disc,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2000-09-02'
-GROUP BY l_returnflag, l_linestatus""",
-        "join_revenue_by_nation": """
-SELECT n.n_name,
-       ROUND(SUM(l.l_extendedprice * (CAST(1.0 AS DOUBLE) - l.l_discount)), 2) AS revenue,
-       COUNT(*) AS n_items
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-GROUP BY n.n_name""",
-        "join_top_customers": f"""
-WITH per_cust AS (
-  SELECT o.o_custkey, ROUND(SUM(l.l_extendedprice * (CAST(1.0 AS DOUBLE) - l.l_discount)), 2) AS revenue
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-  GROUP BY o.o_custkey
-),
-named AS (
-  SELECT n.n_name, p.o_custkey AS custkey, p.revenue
-  FROM per_cust p
-  JOIN customer c ON p.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY n_name ORDER BY revenue DESC, custkey) AS rank
-  FROM named
-)
-SELECT n_name, custkey, rank::INTEGER AS rank, revenue FROM ranked WHERE rank <= {TOPCUST_K}""",
-        "join_parts_never_ordered": f"""
-SELECT p.p_partkey FROM part p
-WHERE NOT EXISTS (
-  SELECT 1 FROM lineitem l
-  WHERE l.l_partkey = p.p_partkey AND l.l_quantity > {ANTI_MIN_QTY}
-)""",
-        "corpus_profile": """
-WITH base AS (
-  SELECT COUNT(*) AS n_docs,
-         COUNT(DISTINCT lang) AS n_langs,
-         CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-         ROUND(AVG(n_chars), 2) AS avg_chars,
-         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
-  FROM documents
-),
-dups AS (
-  SELECT CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_docs
-  FROM (SELECT md5(text) AS fp, COUNT(*) AS cnt FROM documents GROUP BY 1)
-)
-SELECT n_docs, n_langs, total_chars, avg_chars, total_tokens, dup_docs,
-       ROUND(dup_docs::DOUBLE / n_docs::DOUBLE, 6) AS dup_frac
-FROM base CROSS JOIN dups""",
-        "table_time_travel": """
-WITH b1 AS (
-  SELECT COUNT(*) AS n_rows,
-         SUM(ROUND(o_totalprice * 100)::BIGINT)::BIGINT AS total_cents
-  FROM orders WHERE o_orderkey % 7 = 0
-),
-b2 AS (
-  SELECT COUNT(*) AS n_rows,
-         SUM(ROUND(o_totalprice * 100)::BIGINT)::BIGINT AS total_cents
-  FROM orders WHERE o_orderkey % 7 = 1
-)
-SELECT 0::INTEGER AS version, n_rows::BIGINT AS n_rows, total_cents FROM b1
-UNION ALL
-SELECT 1::INTEGER AS version,
-       (b1.n_rows + b2.n_rows)::BIGINT AS n_rows,
-       (b1.total_cents + b2.total_cents)::BIGINT AS total_cents
-FROM b1, b2""",
-        "dim_scd2_timeline": """
-WITH d AS (
-  SELECT o_custkey, valid_from, o_orderstatus FROM (
-    SELECT o_custkey, o_orderdate AS valid_from, o_orderstatus,
-           row_number() OVER (
-             PARTITION BY o_custkey, o_orderdate
-             ORDER BY o_orderstatus DESC NULLS LAST) AS rn
-    FROM orders) WHERE rn = 1
-),
-s AS (
-  -- no-change suppression; o_orderstatus is non-null in this data, so
-  -- lag() IS NULL is unambiguous first-row detection (matches the
-  -- Spark side's lag-of-struct null test)
-  SELECT o_custkey, valid_from, o_orderstatus FROM (
-    SELECT o_custkey, valid_from, o_orderstatus,
-           lag(o_orderstatus) OVER (
-             PARTITION BY o_custkey ORDER BY valid_from) AS prev
-    FROM d)
-  WHERE prev IS NULL OR prev IS DISTINCT FROM o_orderstatus
-)
-SELECT o_custkey, valid_from,
-       COALESCE(lead(valid_from) OVER w,
-                TIMESTAMP '2200-01-01 00:00:00') AS valid_to,
-       lead(valid_from) OVER w IS NULL AS is_current,
-       o_orderstatus
-FROM s
-WINDOW w AS (PARTITION BY o_custkey ORDER BY valid_from)""",
-        "corpus_snapshot_diff": f"""
-WITH a AS (SELECT doc_id, md5(text) AS fp_a, TRUE AS in_a FROM documents),
-b AS (
-  SELECT doc_id,
-         md5(CASE WHEN doc_id % 11 = 0 THEN text || ' v2' ELSE text END) AS fp_b,
-         TRUE AS in_b
-  FROM documents WHERE doc_id % 13 != 0
-  UNION ALL
-  SELECT doc_id + {sp.SNAPSHOT_ADD_SHIFT} AS doc_id, md5(text) AS fp_b, TRUE AS in_b
-  FROM documents WHERE doc_id % 17 = 0
-)
-SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
-       CASE WHEN in_a IS NULL THEN 'added'
-            WHEN in_b IS NULL THEN 'removed'
-            WHEN fp_a IS DISTINCT FROM fp_b THEN 'changed'
-            ELSE 'unchanged' END AS status
-FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id""",
-        # Q21 shape: EXISTS/NOT-EXISTS over the status-pruned fact;
-        # lateness is the exact timestamp predicate both engines share
-        "join_waiting_suppliers": f"""
-WITH o AS (SELECT o_orderkey, o_orderdate FROM orders
-           WHERE o_orderstatus = 'F'),
-ll AS (
-  SELECT l.l_orderkey, l.l_suppkey,
-         (l.l_shipdate > o.o_orderdate
-            + INTERVAL {rel.LATE_SHIP_DAYS} DAY) AS late
-  FROM lineitem l JOIN o ON l.l_orderkey = o.o_orderkey
-),
-w AS (
-  SELECT l1.l_orderkey, l1.l_suppkey
-  FROM ll l1
-  WHERE l1.late
-    AND EXISTS (SELECT 1 FROM ll l2
-                WHERE l2.l_orderkey = l1.l_orderkey
-                  AND l2.l_suppkey <> l1.l_suppkey)
-    AND NOT EXISTS (SELECT 1 FROM ll l3
-                    WHERE l3.l_orderkey = l1.l_orderkey
-                      AND l3.l_suppkey <> l1.l_suppkey AND l3.late)
-)
-SELECT s.s_suppkey, s.s_name, n.n_name, COUNT(*)::BIGINT AS numwait
-FROM w
-JOIN supplier s ON w.l_suppkey = s.s_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-GROUP BY 1, 2, 3""",
-        # Q20 shape: pair aggregate + window total + exact-integer
-        # dominance (2*sum_sp > sum_p), IN resolved as a key join
-        "join_excess_stock": f"""
-WITH p AS (SELECT p_partkey FROM part
-           WHERE p_name LIKE '{rel.EXCESS_PART_PREFIX}%'),
-l AS (SELECT l_partkey, l_suppkey,
-             CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '{rel.EXCESS_YEAR}-01-01'
-        AND l_shipdate < TIMESTAMP '{rel.EXCESS_YEAR + 1}-01-01'),
-pr AS (SELECT l.l_partkey, l.l_suppkey, SUM(qty)::BIGINT AS s_sp
-       FROM l JOIN p ON l.l_partkey = p.p_partkey GROUP BY 1, 2),
-d AS (SELECT *, SUM(s_sp) OVER (PARTITION BY l_partkey) AS s_p FROM pr)
-SELECT s.s_suppkey, s.s_name, COUNT(*)::BIGINT AS n_parts
-FROM d JOIN supplier s ON d.l_suppkey = s.s_suppkey
-WHERE 2 * s_sp > s_p
-GROUP BY 1, 2""",
-        # Q13 shape: predicate inside the OUTER join condition — the
-        # 0-bucket must survive
-        "join_custdist": f"""
-WITH per_cust AS (
-  SELECT c.c_custkey, COUNT(o.o_orderkey)::BIGINT AS c_count
-  FROM customer c
-  LEFT OUTER JOIN orders o
-    ON c.c_custkey = o.o_custkey
-   AND o.o_orderpriority <> '{rel.CUSTDIST_EXCLUDED_PRIORITY}'
-  GROUP BY c.c_custkey
-)
-SELECT c_count, COUNT(*)::BIGINT AS custdist
-FROM per_cust GROUP BY c_count""",
-        # Q15 shape: cents-rounded revenue view + 1-row MAX equality
-        "join_top_revenue_supplier": f"""
-WITH revenue AS (
-  SELECT l_suppkey,
-         ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '{rel.TOP_REVENUE_START}'
-    AND l_shipdate < TIMESTAMP '{rel.TOP_REVENUE_END}'
-  GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name, r.total_revenue
-FROM revenue r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)""",
-        # Q16 shape: pruned part dim, NOT IN as anti (keys non-null),
-        # exact two-phase COUNT(DISTINCT)
-        "join_supplier_cnt": f"""
-SELECT p.p_brand, p.p_type, p.p_size,
-       COUNT(DISTINCT l.l_suppkey)::BIGINT AS supplier_cnt
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-WHERE p.p_brand <> '{rel.SUPPLIER_CNT_EXCL_BRAND}'
-  AND p.p_type NOT LIKE '{rel.SUPPLIER_CNT_EXCL_TYPE}%'
-  AND p.p_size IN {rel.SUPPLIER_CNT_SIZES}
-  AND l.l_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier
-    WHERE s_acctbal < {rel.COMPLAINT_ACCTBAL_MAX}
-  )
-GROUP BY 1, 2, 3""",
-        "join_shipping_priority": """
-SELECT l.l_orderkey, strftime(o.o_orderdate, '%Y-%m-%d') AS o_date,
-       ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-FROM customer c
-JOIN orders o ON o.o_custkey = c.c_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1998-06-01'
-  AND l.l_shipdate > TIMESTAMP '1998-06-01'
-GROUP BY 1, 2
-ORDER BY revenue DESC, l.l_orderkey
-LIMIT 10""",
-        "join_priority_check": """
-SELECT o.o_orderpriority, COUNT(*)::BIGINT AS order_count
-FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '1998-01-01'
-  AND o.o_orderdate < TIMESTAMP '1998-04-01'
-  AND EXISTS (
-    SELECT 1 FROM lineitem l
-    WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate
-  )
-GROUP BY o.o_orderpriority""",
-        "join_promo_share": f"""
-WITH agg AS (
-  SELECT ROUND(SUM(CASE WHEN p.p_type = 'PROMO'
-                        THEN l.l_extendedprice * (1 - l.l_discount)
-                        ELSE CAST(0.0 AS DOUBLE) END), 2) AS promo_revenue,
-         ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS total_revenue,
-         COUNT(*)::BIGINT AS n_items
-  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-  WHERE l.l_shipdate >= TIMESTAMP '1998-06-01'
-    AND l.l_shipdate < TIMESTAMP '1998-07-01'
-)
-SELECT promo_revenue, total_revenue, n_items,
-       {_ieee_round_pos_sql('CAST(100.0 AS DOUBLE) * promo_revenue / total_revenue')} AS promo_share
-FROM agg""",
-        # Q17 shape: decorrelated per-part aggregate; exact-integer
-        # below-one-fifth predicate (5*qty*n < sum)
-        "join_small_quantity": """
-WITH s AS (
-  SELECT l_partkey, COUNT(*)::BIGINT AS n_q,
-         SUM(CAST(floor(l_quantity + 0.5) AS BIGINT))::BIGINT AS s_q
-  FROM lineitem GROUP BY 1)
-SELECT p.p_brand, COUNT(*)::BIGINT AS n_small,
-       ROUND(SUM(l.l_extendedprice), 2) AS revenue
-FROM lineitem l
-JOIN s ON s.l_partkey = l.l_partkey
-JOIN part p ON p.p_partkey = l.l_partkey
-WHERE 5 * CAST(floor(l.l_quantity + 0.5) AS BIGINT) * s.n_q < s.s_q
-GROUP BY 1""",
-        # Q2 shape: decorrelated per-(part, supplier) min unit cost,
-        # per-part argmin with (cost, suppkey) tie-break, region-pruned
-        # supplier dim; unit price pinned to cents with the shared
-        # IEEE floor expression
-        "join_min_cost_supplier": f"""
-WITH sup AS (
-  SELECT s.s_suppkey, s.s_name, n.n_name
-  FROM supplier s
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  WHERE r.r_name = '{MIN_COST_REGION}'),
-supply AS (
-  SELECT l.l_partkey, sup.s_suppkey, sup.s_name, sup.n_name,
-         MIN(CAST(floor(l.l_extendedprice / l.l_quantity * 100 + 0.5)
-                  AS BIGINT)) AS cost_cents
-  FROM lineitem l JOIN sup ON l.l_suppkey = sup.s_suppkey
-  GROUP BY 1, 2, 3, 4),
-best AS (
-  SELECT *, row_number() OVER (
-      PARTITION BY l_partkey ORDER BY cost_cents, s_suppkey) AS rn
-  FROM supply)
-SELECT p.p_partkey, p.p_brand, b.cost_cents,
-       b.s_suppkey, b.s_name, b.n_name
-FROM best b JOIN part p ON p.p_partkey = b.l_partkey
-WHERE b.rn = 1
-ORDER BY b.cost_cents, p.p_partkey
-LIMIT {MIN_COST_TOP_N}""",
-        # spatial radius join: 3x3 grid-neighborhood blocking, exact
-        # IEEE d2 <= r2 residual, pinned min rounding
-        "points_radius_join": _radius_join_sql(),
-        # Heaps curve: per-term first-seen doc, ladder via range join
-        "text_heaps_law": f"""
-WITH first AS (
-  SELECT term, MIN(doc_id) AS first_doc
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        FROM documents)
-  GROUP BY 1),
-ladder AS (SELECT unnest([{", ".join(str(n) for n in HEAPS_PREFIXES)}])
-           AS prefix_docs)
-SELECT l.prefix_docs::BIGINT AS prefix_docs, COUNT(*)::BIGINT AS vocab_size
-FROM first f JOIN ladder l ON f.first_doc < l.prefix_docs
-GROUP BY 1""",
-        # Q22 shape: exact-integer above-average membership + anti-join
-        "join_idle_customers": """
-WITH c AS (
-  SELECT c_custkey, c_nationkey,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents
-  FROM customer),
-pos AS (
-  SELECT COUNT(*)::BIGINT AS n_pos, SUM(bal_cents)::BIGINT AS s_pos
-  FROM c WHERE bal_cents > 0)
-SELECT c.c_nationkey, COUNT(*)::BIGINT AS n_custs,
-       (SUM(c.bal_cents)::BIGINT / 100.0) AS total_bal
-FROM c, pos
-WHERE c.bal_cents * pos.n_pos > pos.s_pos
-  AND NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')
-GROUP BY 1""",
-        "join_suppliers_per_region": """
-SELECT r.r_name, COUNT(*) AS n_suppliers
-FROM supplier s
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY r.r_name""",
-        "dedup_exact": f"""
-SELECT MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
-FROM documents GROUP BY {h64_sql('lower(trim(text))')}""",
-        "dedup_minhash_sig": f"""
-WITH {_minhash_cte()}
-SELECT doc_id, j::INTEGER AS h_idx, minhash FROM s""",
-        "dedup_minhash_pairs": _minhash_pairs_sql(),
-        "dedup_clusters": f"""
-WITH RECURSIVE {_cc_cte(_minhash_pairs_sql())}
-SELECT doc_id, cluster_rep FROM cc""",
-        # same components CTE folded to the size histogram
-        "dedup_cluster_sizes": f"""
-WITH RECURSIVE {_cc_cte(_minhash_pairs_sql())},
-sz AS (SELECT cluster_rep, COUNT(*)::BIGINT AS cluster_size
-       FROM cc GROUP BY 1)
-SELECT cluster_size, COUNT(*)::BIGINT AS n_clusters
-FROM sz GROUP BY 1""",
-        "dedup_keep_best": f"""
-WITH RECURSIVE {_cc_cte(_minhash_pairs_sql())},
-j AS (
-  SELECT d.doc_id, COALESCE(cc.cluster_rep, d.doc_id) AS canonical_id
-  FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
-),
-q AS ({_quality_sql()}),
-m AS (
-  SELECT j.canonical_id, j.doc_id, q.quality_score
-  FROM j JOIN q ON q.doc_id = j.doc_id
-),
-r AS (
-  SELECT *,
-         row_number() OVER (PARTITION BY canonical_id ORDER BY quality_score DESC, doc_id) AS rk,
-         COUNT(*) OVER (PARTITION BY canonical_id) AS n_members
-  FROM m
-)
-SELECT canonical_id, doc_id AS kept_doc_id, n_members, quality_score AS kept_quality
-FROM r WHERE rk = 1""",
-        "corpus_split": f"""
-WITH RECURSIVE {_cc_cte(_minhash_pairs_sql())},
-j AS (
-  SELECT d.doc_id, COALESCE(cc.cluster_rep, d.doc_id) AS canonical_id
-  FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
-)
-SELECT doc_id, canonical_id,
-       CASE WHEN {h64_sql(f"'{sp.SPLIT_SALT}:' || canonical_id::VARCHAR")} % 100
-                 < {sp.SPLIT_TRAIN_PCT}
-            THEN 'train' ELSE 'eval' END AS split
-FROM j""",
-        "dedup_fuzzy_prefix": f"""
-WITH pre AS (
-  SELECT doc_id, substr(text, 1, {dd.FUZZY_PREFIX_LEN}) AS p,
-         length(substr(text, 1, {dd.FUZZY_PREFIX_LEN}))::INT AS plen
-  FROM documents
-),
-segs AS (
-  SELECT pre.doc_id AS doc_s, plen AS L, i,
-         substr(p, 1 + i * (plen // {dd.FUZZY_MAX_DIST + 1})
-                     + least(i, plen % {dd.FUZZY_MAX_DIST + 1}),
-                CASE WHEN i < plen % {dd.FUZZY_MAX_DIST + 1}
-                     THEN plen // {dd.FUZZY_MAX_DIST + 1} + 1
-                     ELSE plen // {dd.FUZZY_MAX_DIST + 1} END) AS s
-  FROM pre, range(0, {dd.FUZZY_MAX_DIST + 1}) r(i)
-  WHERE plen >= {dd.FUZZY_MAX_DIST + 1}
-),
-lens AS (SELECT DISTINCT plen AS L FROM pre WHERE plen >= {dd.FUZZY_MAX_DIST + 1}),
-probe AS (
-  SELECT b.doc_id AS doc_p, L, i,
-         substr(b.p,
-                1 + i * (L // {dd.FUZZY_MAX_DIST + 1}) + least(i, L % {dd.FUZZY_MAX_DIST + 1}) + d,
-                CASE WHEN i < L % {dd.FUZZY_MAX_DIST + 1}
-                     THEN L // {dd.FUZZY_MAX_DIST + 1} + 1
-                     ELSE L // {dd.FUZZY_MAX_DIST + 1} END) AS s
-  FROM pre b, lens, range(0, {dd.FUZZY_MAX_DIST + 1}) r(i),
-       range({-dd.FUZZY_MAX_DIST}, {dd.FUZZY_MAX_DIST + 1}) sh(d)
-  WHERE L <= b.plen AND b.plen - L <= {dd.FUZZY_MAX_DIST}
-    AND 1 + i * (L // {dd.FUZZY_MAX_DIST + 1}) + least(i, L % {dd.FUZZY_MAX_DIST + 1}) + d >= 1
-    AND i * (L // {dd.FUZZY_MAX_DIST + 1}) + least(i, L % {dd.FUZZY_MAX_DIST + 1}) + d
-        + (CASE WHEN i < L % {dd.FUZZY_MAX_DIST + 1}
-                THEN L // {dd.FUZZY_MAX_DIST + 1} + 1
-                ELSE L // {dd.FUZZY_MAX_DIST + 1} END) <= b.plen
-),
-cand AS (
-  SELECT DISTINCT least(doc_s, doc_p) AS doc_a, greatest(doc_s, doc_p) AS doc_b
-  FROM segs JOIN probe USING (L, i, s)
-  WHERE doc_s <> doc_p
-  UNION
-  SELECT a.doc_id, b.doc_id
-  FROM pre a JOIN pre b ON a.doc_id < b.doc_id
-  WHERE a.plen <= {2 * dd.FUZZY_MAX_DIST} AND b.plen <= {2 * dd.FUZZY_MAX_DIST}
-)
-SELECT doc_a, doc_b, levenshtein(x.p, y.p)::BIGINT AS dist
-FROM cand
-JOIN pre x ON x.doc_id = doc_a
-JOIN pre y ON y.doc_id = doc_b
-WHERE levenshtein(x.p, y.p) <= {dd.FUZZY_MAX_DIST}""",
-        "dedup_ngram_jaccard": f"""
-WITH d AS (
-  SELECT doc_id, lang, (n_chars // 100)::INTEGER AS len_bucket,
-         {SHINGLE_EXPR} AS s
-  FROM (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS w FROM documents)
-),
-post AS (
-  SELECT doc_id, lang, len_bucket, unnest(s) AS sh FROM d
-),
-hot AS (
-  SELECT lang, len_bucket, sh FROM post
-  GROUP BY lang, len_bucket, sh HAVING COUNT(*) > {dd.NGRAM_DF_CAP}
-),
-capped AS (
-  SELECT p.* FROM post p
-  LEFT JOIN hot h
-    ON h.lang = p.lang AND h.len_bucket = p.len_bucket AND h.sh = p.sh
-  WHERE h.sh IS NULL
-),
-probe AS (
-  SELECT doc_id, lang, len_bucket, sh,
-         unnest([len_bucket, len_bucket + 1]) AS jb
-  FROM capped
-),
-shared AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-  FROM probe a JOIN probe b
-    ON a.lang = b.lang AND a.jb = b.jb AND a.sh = b.sh
-   AND a.doc_id < b.doc_id
-   AND GREATEST(a.len_bucket, b.len_bucket) = a.jb
-  GROUP BY a.doc_id, b.doc_id
-),
-sizes AS (SELECT doc_id, len(s) AS sz FROM d),
-j AS (
-  SELECT doc_a, doc_b,
-         ROUND(inter::DOUBLE / (x.sz + y.sz - inter)::DOUBLE, 6) AS jaccard
-  FROM shared JOIN sizes x ON x.doc_id = doc_a JOIN sizes y ON y.doc_id = doc_b
-)
-SELECT * FROM j WHERE jaccard >= {JACCARD_BLOCK_THRESHOLD}""",
-        "dedup_span_fraction": f"""
-WITH d AS (
-  SELECT doc_id, {SHINGLE_EXPR} AS s
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-),
-post AS (SELECT doc_id, unnest(s) AS sh FROM d),
-df AS (SELECT sh, COUNT(*) AS df FROM post GROUP BY sh),
-per AS (
-  SELECT p.doc_id, COUNT(*) AS n_shingles,
-         CAST(SUM(CASE WHEN f.df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
-  FROM post p JOIN df f ON f.sh = p.sh
-  GROUP BY p.doc_id
-)
-SELECT doc_id, n_shingles, n_dup,
-       ROUND(n_dup::DOUBLE / n_shingles::DOUBLE, 6) AS dup_fraction
-FROM per""",
-        "dedup_simhash": _simhash_sql(),
-        # pigeonhole band join over the simhash sketch + popcount verify
-        "dedup_simhash_pairs": f"""
-WITH sh AS ({_simhash_sql()}),
-banded AS (
-  SELECT doc_id, simhash, b,
-         (simhash >> (b * {dd.SIMHASH_BITS // (dd.SIMHASH_MAX_HAMMING + 1)}))
-           & {(1 << (dd.SIMHASH_BITS // (dd.SIMHASH_MAX_HAMMING + 1))) - 1} AS bv
-  FROM sh CROSS JOIN (VALUES (0), (1), (2), (3)) t(b)
-),
-cand AS (
-  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-         bit_count(xor(x.simhash, y.simhash))::BIGINT AS hamming
-  FROM banded x JOIN banded y
-    ON x.b = y.b AND x.bv = y.bv AND x.doc_id < y.doc_id
-)
-SELECT doc_a, doc_b, hamming FROM cand
-WHERE hamming <= {dd.SIMHASH_MAX_HAMMING}""",
-        "dedup_embedding": _embedding_near_dup_sql(),
-        "dedup_incremental": _incremental_pairs_sql(),
-        "dedup_cross_snapshot": _cross_snapshot_sql(),
-        "dedup_semantic": _semantic_dedup_sql(),
-        "pipeline_vector_corpus": f"""
-WITH {_nd_assign_cte()},
-p AS (
-  SELECT x.vec_id AS vec_a, y.vec_id AS vec_b,
-         ROUND({_dot_sql('x.v', 'y.v')}, 6) AS cosine
-  FROM e x JOIN e y ON x.cid = y.cid AND x.vec_id < y.vec_id
-),
-dropd AS (
-  SELECT DISTINCT vec_b AS vec_id FROM p
-  WHERE cosine >= {SEMANTIC_COSINE_THRESHOLD}
-),
-surv AS (
-  SELECT a.vec_id, a.cid FROM a
-  WHERE a.vec_id NOT IN (SELECT vec_id FROM dropd)
-)
-SELECT cid::INTEGER AS cell,
-       COUNT(*)::BIGINT AS n_vecs,
-       (COUNT(*) * {EMB_DIM * 4})::BIGINT AS bytes_fp32,
-       (COUNT(*) * {EMB_DIM + 8})::BIGINT AS bytes_int8
-FROM surv GROUP BY cid""",
-        "dedup_lsh_recall": _lsh_recall_sql(),
-        "similarity_knn_graph": _knn_graph_sql(),
-        "pipeline_label_propagation": _label_propagation_sql(),
-        "pipeline_pagerank_loop2": _pagerank_loop2_sql(),
-        "pipeline_curation_funnel": _curation_funnel_sql(),
-        "pipeline_pretrain_corpus": _pretrain_corpus_sql(),
-        "embeddings_outliers": _embedding_outliers_sql(),
-        # all-integer interval math: `div`/greatest/least mirror //,
-        # and range(a, b+1) ≡ Spark's inclusive sequence(a, b)
-        "corpus_pack_fragments": f"""
-WITH b AS (
-  SELECT doc_id, lang,
-         len(string_split(COALESCE(text, ''), ' '))::BIGINT AS n_tok
-  FROM documents
-),
-c AS (
-  SELECT doc_id, lang, n_tok,
-         CAST(COALESCE(SUM(n_tok) OVER (
-           PARTITION BY lang ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS cb
-  FROM b
-),
-e AS (
-  SELECT doc_id, lang, n_tok, cb, t.b AS bin_id
-  FROM c, UNNEST(range(cb // {sp.PACK_FRAG_BUDGET},
-                       (cb + n_tok - 1) // {sp.PACK_FRAG_BUDGET} + 1)) AS t(b)
-)
-SELECT doc_id, lang, bin_id::BIGINT AS bin_id,
-       GREATEST(bin_id * {sp.PACK_FRAG_BUDGET} - cb, 0)::BIGINT AS frag_start,
-       (LEAST((bin_id + 1) * {sp.PACK_FRAG_BUDGET}, cb + n_tok)
-        - GREATEST(bin_id * {sp.PACK_FRAG_BUDGET}, cb))::BIGINT AS frag_len
-FROM e""",
-        # full-vocab window in the twin (fine at oracle scale); the
-        # engine side truncates to max(vs) via TakeOrdered first
-        "text_vocab_coverage": f"""
-WITH t AS (
-  SELECT unnest(string_split(COALESCE(text, ''), ' ')) AS tok FROM documents
-),
-tot AS (SELECT COUNT(*)::BIGINT AS total_tokens FROM t),
-c AS (SELECT tok, COUNT(*)::BIGINT AS cnt FROM t GROUP BY tok),
-r AS (
-  SELECT tok, cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rank FROM c
-),
-top AS (SELECT * FROM r WHERE rank <= {max(tx.VOCAB_COVERAGE_VS)}),
-v(top_v) AS (VALUES {", ".join(f"({v})" for v in sorted(tx.VOCAB_COVERAGE_VS))}),
-cov AS (
-  SELECT v.top_v::INTEGER AS top_v,
-         CAST(COALESCE(SUM(CASE WHEN top.rank <= v.top_v THEN top.cnt END),
-                       0) AS BIGINT) AS covered_tokens
-  FROM v CROSS JOIN top GROUP BY v.top_v
-)
-SELECT top_v, covered_tokens, (SELECT total_tokens FROM tot) AS total_tokens,
-       ROUND(covered_tokens::DOUBLE
-             / (SELECT total_tokens FROM tot)::DOUBLE, 6) AS coverage
-FROM cov""",
-        "pipeline_semantic_clusters": f"""
-WITH RECURSIVE {_cc_cte(
-    "SELECT DISTINCT LEAST(src, dst) AS doc_a, GREATEST(src, dst) AS doc_b"
-    f" FROM ({_knn_graph_sql()}) g WHERE mutual"
-)}
-SELECT doc_id, cluster_rep FROM cc""",
-        "corpus_lr_loop2": _lr_loop2_sql(),
-        "corpus_lr_calibration": _lr_calibration_sql(),
-        "corpus_lr_scores": _lr_scores_sql(),
-        "corpus_lr_auc": _lr_auc_sql(),
-        # same exact suffstats: DuckDB integer SUM widens to HUGEINT,
-        # Spark accumulates DECIMAL(38,0) — identical integers, one
-        # correctly-rounded cast + division + the signed pinned round
-        "events_trend": _trend_sql(),
-        # composition twin: the four operator twins as subqueries,
-        # joined on the O(|types|) key — same single-source reuse rule
-        # as the other pipeline twins
-        "pipeline_events_dashboard": f"""
-WITH q AS (SELECT event_type, n_events, p50, p99
-           FROM ({_EXACT_QUANTILES_SQL}) t1),
-tr AS (SELECT event_type, slope FROM ({_trend_sql()}) t2),
-g AS (
-  SELECT event_type,
-         {_ieee_round_pos_sql(
-             "SUM(CASE WHEN is_gap THEN 1 ELSE 0 END)::DOUBLE / COUNT(*)")}
-           AS gap_frac
-  FROM ({_GAPFILL_SQL}) t3 GROUP BY 1),
-m AS (
-  SELECT event_type, v_last AS last_close
-  FROM (SELECT event_type, v_last,
-               row_number() OVER (PARTITION BY event_type
-                                  ORDER BY bucket DESC) AS _rn
-        FROM ({_M4_SQL}) t4)
-  WHERE _rn = 1)
-SELECT q.event_type, q.n_events, q.p50, q.p99, tr.slope, g.gap_frac,
-       m.last_close
-FROM q JOIN tr USING (event_type) JOIN g USING (event_type)
-       JOIN m USING (event_type)""",
-        # same contribution expansion: distinct (day,user) → explode
-        # to the W trailing report days → distinct → count
-        "events_rolling_active": """
-WITH per AS (
-  SELECT DISTINCT (epoch_ns(ts) // 1000000000 // 86400)::BIGINT AS day,
-         user_id
-  FROM events),
-contrib AS (
-  SELECT DISTINCT unnest(generate_series(day, day + 6)) AS day, user_id
-  FROM per)
-SELECT c.day, COUNT(*)::BIGINT AS n_active
-FROM contrib c
-WHERE c.day IN (SELECT day FROM per)
-GROUP BY 1""",
-        # exact nearest-rank quantiles: pure integer rank math over
-        # exact cents — no float interpolation on either engine
-        "events_exact_quantiles": _EXACT_QUANTILES_SQL,
-        # in-flight CollectMetrics counters vs the relational ground
-        # truth (the observe() zero-extra-scan contract)
-        # n_groups counts the NULL group iff present (Spark's groupBy
-        # makes NULL a group; COUNT(DISTINCT) alone would ignore it —
-        # latent off-by-one on a NULL-bearing vintage)
-        "events_observed_metrics": """
-SELECT COUNT(*)::BIGINT AS n_rows,
-       COALESCE(SUM(CASE WHEN props IS NULL THEN 1 ELSE 0 END), 0)::BIGINT
-         AS n_null_props,
-       COALESCE(SUM(CASE WHEN CAST(floor(value * 100 + 0.5) AS BIGINT) < 0
-                THEN 1 ELSE 0 END), 0)::BIGINT AS n_neg_cents,
-       (COUNT(DISTINCT event_type)
-        + CASE WHEN COUNT(*) > COUNT(event_type) THEN 1 ELSE 0 END
-       )::BIGINT AS n_groups
-FROM events""",
-        # MAD anomaly flags: all-integer rollup + nearest-rank medians
-        # (the exact_quantiles rank discipline), k·MAD compare exact
-        "events_anomaly_mad": f"""
-WITH roll AS (
-  SELECT event_type, (epoch_ns(ts) // 1000000000) // 3600 AS hr,
-         SUM(CAST(floor(value * 100 + 0.5) AS BIGINT))::BIGINT AS v
-  FROM events GROUP BY 1, 2),
-r1 AS (
-  SELECT event_type, v,
-         row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM roll),
-med AS (
-  SELECT event_type,
-         MAX(CASE WHEN rn = (n + 1) // 2 THEN v END)::BIGINT AS med_cents
-  FROM r1 GROUP BY 1),
-dev AS (
-  SELECT roll.event_type, abs(v - med_cents)::BIGINT AS d, med_cents
-  FROM roll JOIN med USING (event_type)),
-r2 AS (
-  SELECT event_type, d,
-         row_number() OVER (PARTITION BY event_type ORDER BY d) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM dev),
-mad AS (
-  SELECT event_type,
-         MAX(CASE WHEN rn = (n + 1) // 2 THEN d END)::BIGINT AS mad_cents
-  FROM r2 GROUP BY 1)
-SELECT dev.event_type, COUNT(*)::BIGINT AS n_hours,
-       MAX(dev.med_cents)::BIGINT AS med_cents,
-       MAX(mad.mad_cents)::BIGINT AS mad_cents,
-       SUM(CASE WHEN dev.d > {ev.MAD_K} * mad.mad_cents
-                THEN 1 ELSE 0 END)::BIGINT AS n_anomalous
-FROM dev JOIN mad USING (event_type) GROUP BY 1""",
-        # the rule verdicts compose the ONE rule-filter twin (same
-        # reuse as the curation funnel) — no second hand-maintained
-        # rendering of the five Gopher/C4 rules
-        "corpus_datacard": f"""
-WITH q AS ({_quality_sql()}),
-r AS (SELECT doc_id, pass_all FROM ({_rf_oracle()}) rf),
-base AS (
-  SELECT d.lang, q.n_tokens, q.quality_score, r.pass_all,
-         {h64_sql('lower(trim(d.text))')} AS fp
-  FROM documents d JOIN q ON q.doc_id = d.doc_id JOIN r ON r.doc_id = d.doc_id
-)
-SELECT lang, COUNT(*)::BIGINT AS n_docs,
-       SUM(n_tokens)::BIGINT AS total_tokens,
-       ROUND(AVG(quality_score), 6) AS mean_quality,
-       ROUND(AVG(pass_all::INT::DOUBLE), 6) AS rule_pass_rate,
-       (COUNT(*) - COUNT(DISTINCT fp))::BIGINT AS dup_copies
-FROM base GROUP BY lang ORDER BY lang""",
-        "corpus_sample_fixed": f"""
-SELECT doc_id, lang,
-       {h64_sql(f"'{sp.FIXED_SAMPLE_SALT}:' || doc_id::VARCHAR")} AS sample_key
-FROM documents ORDER BY sample_key, doc_id LIMIT {sp.FIXED_SAMPLE_N}""",
-        "corpus_curriculum": f"""
-WITH q AS ({_quality_sql()}),
-t AS (SELECT {", ".join(
-    f"ROUND(quantile_cont(quality_score, {p}), 6) AS t{i}"
-    for i, p in enumerate(sp.CURRICULUM_PROBS)
-)} FROM q)
-SELECT doc_id,
-  (1{"".join(f" + (quality_score > t.t{i})::INT" for i in range(len(sp.CURRICULUM_PROBS)))})::INTEGER AS phase,
-  {h64_sql(f"'{sp.CURRICULUM_SALT}:' || doc_id::VARCHAR")} AS order_key
-FROM q CROSS JOIN t""",
-        # span dedup: keep-first over fixed word windows, re-agg with
-        # ORDER BY pos; SUM cast (DuckDB HUGEINT) and COALESCE('')
-        # both mirror the Spark side exactly
-        "dedup_span_clean": f"""
-WITH d AS (
-  SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS w FROM documents
-),
-s AS (
-  SELECT doc_id, CAST(t.i AS INT) AS pos,
-         array_to_string(
-           w[(t.i * {dd.SPAN_WORDS} + 1):(t.i * {dd.SPAN_WORDS} + {dd.SPAN_WORDS})],
-           ' ') AS span
-  FROM d, UNNEST(range(0, CAST(CEIL(len(w) / {dd.SPAN_WORDS}.0) AS BIGINT))) AS t(i)
-),
-r AS (
-  SELECT doc_id, pos, span,
-         ROW_NUMBER() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
-  FROM s
-)
-SELECT doc_id,
-       COUNT(*)::BIGINT AS n_spans,
-       CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-       COALESCE(string_agg(CASE WHEN rn = 1 THEN span END, ' ' ORDER BY pos),
-                '') AS cleaned_text
-FROM r GROUP BY doc_id""",
-        # stride-1 window marking: same keep-first discipline as
-        # dedup_span_clean, at every alignment (ExactSubstr)
-        "dedup_substring": f"""
-WITH d AS (
-  SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS w FROM documents
-),
-wins AS (
-  SELECT doc_id, CAST(t.i AS INT) AS pos,
-         array_to_string(
-           w[(t.i + 1):(t.i + {dd.SUBSTR_MIN_TOKENS})], ' ') AS win
-  FROM d,
-       UNNEST(range(0, GREATEST(len(w) - {dd.SUBSTR_MIN_TOKENS} + 1, 0)))
-         AS t(i)
-),
-r AS (
-  SELECT doc_id, pos,
-         ROW_NUMBER() OVER (
-           PARTITION BY {h64_sql('win')} ORDER BY doc_id, pos) AS rn
-  FROM wins
-),
-cov AS (
-  SELECT DISTINCT doc_id, CAST(c.j AS INT) AS idx
-  FROM r, UNNEST(range(pos, pos + {dd.SUBSTR_MIN_TOKENS})) AS c(j)
-  WHERE rn > 1
-),
-tk AS (
-  SELECT doc_id, CAST(UNNEST(range(0, len(w))) AS INT) AS idx,
-         UNNEST(w) AS tok
-  FROM d
-),
-kept AS (
-  SELECT tk.doc_id, tk.idx, tk.tok
-  FROM tk LEFT JOIN cov ON tk.doc_id = cov.doc_id AND tk.idx = cov.idx
-  WHERE cov.doc_id IS NULL
-),
-per AS (
-  SELECT doc_id, COUNT(*)::BIGINT AS n_kept,
-         COALESCE(string_agg(tok, ' ' ORDER BY idx), '') AS cleaned_text
-  FROM kept GROUP BY doc_id
-),
-tot AS (SELECT doc_id, len(w)::BIGINT AS n_tokens FROM d)
-SELECT tot.doc_id, tot.n_tokens,
-       (tot.n_tokens - COALESCE(per.n_kept, 0))::BIGINT AS n_removed,
-       COALESCE(per.cleaned_text, '') AS cleaned_text
-FROM tot LEFT JOIN per USING (doc_id)""",
-        "corpus_source_cap": f"""
-WITH r AS (
-  SELECT doc_id, source,
-         ROW_NUMBER() OVER (
-           PARTITION BY source
-           ORDER BY
-             {h64_sql(f"'{sp.SOURCE_CAP_SALT}:' || doc_id::VARCHAR")}
-               % {sp.SAMPLE_BUCKETS},
-             doc_id
-         )::INTEGER AS cap_rank
-  FROM documents
-)
-SELECT doc_id, source, cap_rank FROM r WHERE cap_rank <= {sp.SOURCE_CAP}""",
-        # flat global window — the two-level Spark scan must match it
-        # bit-for-bit (exact integer arithmetic end-to-end)
-        "corpus_token_shards": _token_shards_sql(),
-        "corpus_shard_manifest": f"""
-WITH plan AS ({_token_shards_sql()})
-SELECT p.shard, COUNT(*)::BIGINT AS n_docs,
-       COUNT(DISTINCT d.lang)::BIGINT AS n_langs,
-       CAST(SUM(p.n_tok) AS BIGINT) AS shard_tokens
-FROM plan p JOIN documents d USING (doc_id)
-GROUP BY p.shard""",
-        "text_bpe_merges": f"""
-WITH w AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-p AS (SELECT unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair FROM w),
-c AS (SELECT pair, COUNT(*)::BIGINT AS n FROM p GROUP BY pair)
-SELECT pair, n FROM c ORDER BY n DESC, pair LIMIT {tx.BPE_MERGE_TOPK}""",
-        "text_bpe_merges2": f"""
-WITH w0 AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-p1 AS (SELECT unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair FROM w0),
-t1 AS (SELECT pair FROM (SELECT pair, COUNT(*) AS n FROM p1 GROUP BY pair)
-       ORDER BY n DESC, pair LIMIT 1),
-w2 AS (SELECT replace(w, (SELECT pair FROM t1), chr(1)) AS w FROM w0),
-p2 AS (SELECT unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair FROM w2),
-c AS (SELECT pair, COUNT(*)::BIGINT AS n FROM p2 GROUP BY pair)
-SELECT pair, n FROM c ORDER BY n DESC, pair LIMIT {tx.BPE_MERGE_TOPK}""",
-        "text_bpe_segment": _bpe_segment_sql(),
-        # same messy-url synthesis text (dialect-pinned), DuckDB's own
-        # string ops for the canonicalization rules (_url_canon_cte)
-        "dedup_bloom_prefilter": _bloom_prefilter_sql(),
-        "corpus_url_dedup": f"""
-WITH {_url_canon_cte()}
-SELECT doc_id, canon_url, host,
-       (ROW_NUMBER() OVER (PARTITION BY canon_url ORDER BY doc_id))::BIGINT
-         AS url_rank,
-       (COUNT(*) OVER (PARTITION BY host))::BIGINT AS host_docs
-FROM c""",
-        # the one-scan funnel: same cascading-flag construction as the
-        # Spark side (blocked rows sort last in the dedup window,
-        # non-survivors last in the host-cap window)
-        "pipeline_crawl_frontdoor": f"""
-WITH {_url_canon_cte(", n_chars")},
-f1 AS (
-  SELECT doc_id, n_chars, host,
-         host IN ({", ".join("'" + h + "'" for h in FRONTDOOR_BLOCKLIST)})
-           AS blocked,
-         ROW_NUMBER() OVER (
-           PARTITION BY canon_url
-           ORDER BY (host IN ({", ".join("'" + h + "'" for h in FRONTDOOR_BLOCKLIST)}))::INT, doc_id
-         ) AS url_rk
-  FROM c),
-f2 AS (
-  SELECT blocked,
-         (NOT blocked AND url_rk = 1) AS s_dedup,
-         (NOT blocked AND url_rk = 1
-          AND n_chars >= {FRONTDOOR_MIN_CHARS}) AS s_quality,
-         ROW_NUMBER() OVER (
-           PARTITION BY host
-           ORDER BY (NOT (NOT blocked AND url_rk = 1
-                          AND n_chars >= {FRONTDOOR_MIN_CHARS}))::INT,
-                    doc_id
-         ) AS host_rk
-  FROM f1)
-SELECT COUNT(*)::BIGINT AS n_total,
-       SUM((NOT blocked)::INT)::BIGINT AS n_after_blocklist,
-       SUM(s_dedup::INT)::BIGINT AS n_after_dedup,
-       SUM(s_quality::INT)::BIGINT AS n_after_quality,
-       SUM((s_quality AND host_rk <= {FRONTDOOR_HOST_CAP})::INT)::BIGINT
-         AS n_after_cap
-FROM f2""",
-        "similarity_topk": _topk_sql(TOPK_K, bucketed=False),
-        # hybrid fusion: the two retriever twins as subqueries, ranks
-        # fused with the identical 1/(C+r) + 1/(C+r) IEEE expression
-        # (vector term first, lexical second, missing list -> 0)
-        "similarity_hybrid_rrf": f"""
-WITH v AS (
-  SELECT neighbor_id AS doc_id, rank AS rank_vec
-  FROM ({_topk_sql(TOPK_K, bucketed=False)}) tv
-  WHERE query_id = {HYBRID_QUERY_ID}),
-lex AS (SELECT doc_id, rank AS rank_lex FROM ({_bm25_sql()}) tl),
-fused AS (
-  SELECT COALESCE(v.doc_id, lex.doc_id) AS doc_id, rank_vec, rank_lex,
-         COALESCE(CAST(1.0 AS DOUBLE)
-                  / (CAST({float(RRF_C)!r} AS DOUBLE) + CAST(rank_vec AS DOUBLE)),
-                  CAST(0.0 AS DOUBLE))
-         + COALESCE(CAST(1.0 AS DOUBLE)
-                  / (CAST({float(RRF_C)!r} AS DOUBLE) + CAST(rank_lex AS DOUBLE)),
-                  CAST(0.0 AS DOUBLE)) AS rrf
-  FROM v FULL OUTER JOIN lex ON v.doc_id = lex.doc_id),
-r AS (
-  SELECT *, row_number() OVER (ORDER BY rrf DESC, doc_id) AS fused_rank
-  FROM fused)
-SELECT doc_id, fused_rank::INTEGER AS fused_rank, rank_vec, rank_lex,
-       {_ieee_round_pos_sql("rrf")} AS rrf_score
-FROM r WHERE fused_rank <= {HYBRID_TOPN}""",
-        # BM25: per-term double math with identical association, then an
-        # integer micro-unit cross-term sum (order-independent) — the
-        # same fixed-point discipline as pagerank_loop2
-        "text_bm25": _bm25_sql(),
-        # explicit [ \t\n\f\r] class: Python's \s and RE2's \s disagree
-        # on \x0b, so the whitespace set is spelled out on both sides
-        "text_normalize": r"""
-WITH n AS (
-  SELECT doc_id,
-         trim(regexp_replace(nfc_normalize(COALESCE(text, '')),
-                             '[ \t\n\f\r]+', ' ', 'g'), ' ') AS norm_text,
-         COALESCE(text, '') AS t0
-  FROM documents
-)
-SELECT doc_id, norm_text, norm_text != t0 AS changed,
-       length(norm_text)::BIGINT AS n_chars
-FROM n""",
-        # bigram LM: add-one smoothing over the corpus vocabulary;
-        # per-bigram bits go through the integer micro-unit sum so the
-        # per-doc mean is order-independent (same trick as text_bm25)
-        "text_surprisal_bigram": """
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-bg AS (
-  SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-         i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS s
-  FROM d
-),
-p2 AS (SELECT doc_id, s.w1 AS w1, s.w2 AS w2 FROM bg),
-cu AS (
-  SELECT term, COUNT(*) AS c1
-  FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
-  GROUP BY term
-),
-v AS (SELECT COUNT(*) AS v FROM cu),
-cb AS (SELECT w1, w2, COUNT(*) AS c12 FROM p2 GROUP BY w1, w2),
-m AS (
-  SELECT p2.doc_id,
-         CAST(floor(-log2(CAST(cb.c12 + 1 AS DOUBLE)
-                          / CAST(cu.c1 + v.v AS DOUBLE))
-                    * CAST(1000000.0 AS DOUBLE)
-                    + CAST(0.5 AS DOUBLE)) AS BIGINT) AS m
-  FROM p2 JOIN cb USING (w1, w2) JOIN cu ON cu.term = p2.w1 CROSS JOIN v
-)
-SELECT doc_id, COUNT(*)::BIGINT AS n_bigrams,
-       ROUND((SUM(m)::DOUBLE / CAST(1000000.0 AS DOUBLE)) / COUNT(*)::DOUBLE,
-             4) AS bits_per_bigram
-FROM m GROUP BY doc_id""",
-        # parallel unnest zips (i, x_i); q is integral so the INTEGER
-        # cast after floor is exact
-        "embeddings_int8_quant": f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings
-),
-s AS (
-  SELECT vec_id, v,
-         list_max(list_transform(v, x -> abs(x))) / CAST(127.0 AS DOUBLE) AS scale
-  FROM e
-),
-x AS (
-  SELECT vec_id, scale,
-         unnest(range(1, {EMB_DIM + 1}))::INTEGER AS i, unnest(v) AS xv
-  FROM s
-),
-q AS (
-  SELECT vec_id, i, scale, xv,
-         CASE WHEN scale = 0 THEN 0
-              ELSE CAST(floor(xv / scale + CAST(0.5 AS DOUBLE)) AS INTEGER)
-         END AS q
-  FROM x
-)
-SELECT vec_id, i, q, {_ieee_round_pos_sql('scale')} AS scale,
-       {_ieee_round_pos_sql(
-           '(xv - CAST(q AS DOUBLE) * scale) * (xv - CAST(q AS DOUBLE) * scale)'
-       )} AS dim_err
-FROM q""",
-        "similarity_int8_topk": _int8_topk_sql(TOPK_K),
-        "embeddings_binary_quant": f"""
-WITH e0 AS (
-  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v0 FROM embeddings
-)
-SELECT vec_id,
-       {_binary_words_sql()}
-FROM e0""",
-        "similarity_binary_topk": _binary_topk_sql(TOPK_K),
-        "similarity_binary_recall": f"""
-WITH bt AS (SELECT query_id, neighbor_id FROM ({_binary_topk_sql(TOPK_K)}) t1),
-brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(TOPK_K, bucketed=False)}) t2)
-SELECT i.query_id,
-       COUNT(b.neighbor_id)::BIGINT AS n_hit,
-       {TOPK_K}::BIGINT AS k,
-       {_ieee_round_pos_sql(f'COUNT(b.neighbor_id)::DOUBLE / {TOPK_K}::DOUBLE')} AS recall_at_k
-FROM bt i LEFT JOIN brute b
-  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-GROUP BY i.query_id""",
-        "similarity_int8_recall": f"""
-WITH q8t AS (SELECT query_id, neighbor_id FROM ({_int8_topk_sql(TOPK_K)}) t1),
-brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(TOPK_K, bucketed=False)}) t2)
-SELECT i.query_id,
-       COUNT(b.neighbor_id)::BIGINT AS n_hit,
-       {TOPK_K}::BIGINT AS k,
-       ROUND(COUNT(b.neighbor_id)::DOUBLE / {TOPK_K}::DOUBLE, 6) AS recall_at_k
-FROM q8t i LEFT JOIN brute b
-  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-GROUP BY i.query_id""",
-        "similarity_hard_negatives": _hard_negatives_sql(TOPK_K),
-        "similarity_ann_lsh": _topk_sql(ANN_K, bucketed=True),
-        "similarity_ann_ivf": _ivf_ann_sql(),
-        # full IVF replay — the gate thereby checks the append-only
-        # maintenance invariant (history-index ⊎ delta ≡ rebuild)
-        "similarity_ann_ivf_incremental": _ivf_ann_sql(),
-        # same assignment CTE folded to per-cell counts + balance
-        "similarity_cell_balance": f"""
-WITH {_nd_assign_cte(normalize=False)},
-counts AS (SELECT cid AS cell, COUNT(*)::BIGINT AS n_vecs FROM a GROUP BY 1),
-t AS (SELECT SUM(n_vecs)::BIGINT AS n_total, COUNT(*)::BIGINT AS n_cells
-      FROM counts)
-SELECT c.cell, c.n_vecs,
-       {_ieee_round_pos_sql("c.n_vecs * t.n_cells / CAST(t.n_total AS DOUBLE)")} AS balance
-FROM counts c, t""",
-        # crossover twin: same assignment CTE folded to (cell, bkt)
-        # counts; the cost columns are exact integer arithmetic and
-        # the two rounded ratios replay the floor-pin
-        "similarity_rebuild_crossover": f"""
-WITH {_nd_assign_cte(normalize=False)},
-per AS (SELECT cid AS cell, (vec_id % 10)::INTEGER AS bkt,
-               COUNT(*)::BIGINT AS n
-        FROM a GROUP BY 1, 2),
-tot AS (SELECT SUM(n)::BIGINT AS n_total,
-               COUNT(DISTINCT cell)::BIGINT AS n_cells FROM per),
-fr AS (SELECT * FROM (VALUES (1), (2), (5)) f(inc_tenths)),
-ci AS (SELECT f.inc_tenths, p.cell, SUM(p.n)::BIGINT AS n_cell
-       FROM per p JOIN fr f ON p.bkt < f.inc_tenths GROUP BY 1, 2),
-ag AS (SELECT inc_tenths, SUM(n_cell)::BIGINT AS n_new,
-              MAX(n_cell)::BIGINT AS inc_max_cell
-       FROM ci GROUP BY 1)
-SELECT ag.inc_tenths::INTEGER AS inc_tenths, ag.n_new,
-       (t.n_total - ag.n_new)::BIGINT AS n_hist,
-       ({REBUILD_FIT_ITERS + 1}::BIGINT * t.n_total)::BIGINT AS rebuild_rows,
-       {_ieee_round_pos_sql(f"({REBUILD_FIT_ITERS + 1}::BIGINT * t.n_total) / CAST(ag.n_new AS DOUBLE)", 2)} AS nights_to_amortize,
-       {_ieee_round_pos_sql("ag.inc_max_cell * t.n_cells / CAST(ag.n_new AS DOUBLE)")} AS inc_max_balance,
-       ({_ieee_round_pos_sql("ag.inc_max_cell * t.n_cells / CAST(ag.n_new AS DOUBLE)")}
-        > CAST({INC_BALANCE_REBUILD} AS DOUBLE)) AS rebuild_due
-FROM ag, tot t""",
-        # drift twin: same assignment CTE, per-dim micro-unit means
-        # via a range lateral, exact int64 sum of squared diffs
-        "similarity_index_drift": f"""
-WITH {_nd_assign_cte(normalize=False)},
-x AS (
-  SELECT a.cid AS cell, (a.vec_id % 5 = 0) AS is_new,
-         t.d::INTEGER AS dim, a.v0[t.d] AS val
-  FROM a, range(1, {EMB_DIM + 1}) t(d)),
-m AS (
-  SELECT cell, is_new, dim,
-         CAST(floor((SUM(val) / COUNT(*)) * CAST(1000000.0 AS DOUBLE)
-                    + CAST(0.5 AS DOUBLE)) AS BIGINT) AS mm
-  FROM x GROUP BY 1, 2, 3),
-counts AS (
-  SELECT cid AS cell,
-         SUM(CASE WHEN vec_id % 5 <> 0 THEN 1 ELSE 0 END)::BIGINT AS n_hist,
-         SUM(CASE WHEN vec_id % 5 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_new
-  FROM a GROUP BY 1),
-ssq AS (
-  SELECT h.cell, SUM((h.mm - w.mm) * (h.mm - w.mm))::BIGINT AS ss
-  FROM (SELECT cell, dim, mm FROM m WHERE NOT is_new) h
-  JOIN (SELECT cell, dim, mm FROM m WHERE is_new) w
-    ON h.cell = w.cell AND h.dim = w.dim
-  GROUP BY 1)
-SELECT c.cell, c.n_hist, c.n_new,
-       {_ieee_round_pos_sql("sqrt(CAST(ss AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)")} AS drift
-FROM counts c LEFT JOIN ssq ON ssq.cell = c.cell""",
-        # same compact-forward degree orientation in SQL: tuple
-        # comparison picks the lower-(deg, id) endpoint, wedges build
-        # at it, the canonical edge closes the triangle
-        "similarity_graph_triangles": f"""
-WITH g AS ({_knn_graph_sql()}),
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM g WHERE src <> dst),
-deg AS (
-  SELECT v, COUNT(*)::BIGINT AS deg
-  FROM (SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
-  GROUP BY 1),
-o AS (
-  SELECT CASE WHEN (da.deg, und.a) < (db.deg, und.b)
-              THEN und.a ELSE und.b END AS u,
-         CASE WHEN (da.deg, und.a) < (db.deg, und.b)
-              THEN und.b ELSE und.a END AS w
-  FROM und JOIN deg da ON da.v = und.a JOIN deg db ON db.v = und.b),
-tri AS (
-  SELECT o1.u, o1.w AS w1, o2.w AS w2
-  FROM o o1 JOIN o o2 ON o1.u = o2.u AND o1.w < o2.w
-  JOIN und ON und.a = o1.w AND und.b = o2.w)
-SELECT vec_id, COUNT(*)::BIGINT AS n_triangles
-FROM (
-  SELECT u AS vec_id FROM tri
-  UNION ALL SELECT w1 FROM tri
-  UNION ALL SELECT w2 FROM tri)
-GROUP BY 1""",
-        "similarity_ann_ivf_trained": _ivf_ann_sql(trained=True),
-        "dedup_semantic_trained": _semantic_dedup_sql(trained=True),
-        "similarity_ann_recall_trained": f"""
-WITH ivf AS (SELECT query_id, neighbor_id FROM ({_ivf_ann_sql(trained=True)}) t1),
-brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
-SELECT i.query_id,
-       COUNT(b.neighbor_id)::BIGINT AS n_hit,
-       {ANN_K}::BIGINT AS k,
-       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
-FROM ivf i LEFT JOIN brute b
-  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-GROUP BY i.query_id""",
-        # recall@k: the IVF replay left-joined to the exact top-k
-        # replay (DuckDB allows WITH inside subqueries, so both full
-        # twins compose verbatim)
-        "similarity_ann_filtered": _ivf_ann_sql(
-            filter_label=ANN_FILTER_LABEL
-        ),
-        "similarity_ann_recall": f"""
-WITH ivf AS (SELECT query_id, neighbor_id FROM ({_ivf_ann_sql()}) t1),
-brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
-SELECT i.query_id,
-       COUNT(b.neighbor_id)::BIGINT AS n_hit,
-       {ANN_K}::BIGINT AS k,
-       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
-FROM ivf i LEFT JOIN brute b
-  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-GROUP BY i.query_id""",
-        "similarity_ann_pq": _ivf_pq_ann_sql(),
-        "similarity_ann_pq_rerank": _ivf_pq_ann_sql(rerank=True),
-        "similarity_ann_pq_trained": _ivf_pq_ann_sql(trained_cb=True),
-        "similarity_ann_pq_rerank_trained": _ivf_pq_ann_sql(
-            rerank=True, trained_cb=True
-        ),
-        "similarity_ann_pq_recall_trained": f"""
-WITH pq AS (SELECT query_id, neighbor_id
-            FROM ({_ivf_pq_ann_sql(trained_cb=True)}) t1),
-brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
-SELECT p.query_id,
-       COUNT(b.neighbor_id)::BIGINT AS n_hit,
-       {ANN_K}::BIGINT AS k,
-       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
-FROM pq p LEFT JOIN brute b
-  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
-GROUP BY p.query_id""",
-        "similarity_ann_pq_full_trained": _ivf_pq_ann_sql(
-            trained_cb=True, trained_ctr=True
-        ),
-        "similarity_ann_pq_residual": _ivf_pq_residual_sql(),
-        "similarity_ann_pq_residual_trained": _ivf_pq_residual_sql(
-            trained_cb=True
-        ),
-        "similarity_ann_pq_rerank_residual": _ivf_pq_residual_sql(rerank=True),
-        "similarity_dim_sweep": "\nUNION ALL\n".join(
-            f"""
-SELECT {d}::INTEGER AS dim,
-       COUNT(b.neighbor_id)::BIGINT AS n_hit,
-       COUNT(*)::BIGINT AS n_returned,
-       {_ieee_round_pos_sql(
-           f'COUNT(b.neighbor_id)::DOUBLE'
-           f' / CAST({float(len(set(TOPK_QUERY_IDS)) * TOPK_K)} AS DOUBLE)'
-       )} AS recall_at_k
-FROM (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-    ) AS rank FROM (
-      SELECT q.query_id, e.vec_id AS neighbor_id,
-             ROUND({_cosine_sql('q.qv', 'e.v', d)}, 6) AS cosine
-      FROM (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-            FROM embeddings) e
-      JOIN (SELECT vec_id AS query_id,
-                   list_transform(embedding, x -> x::DOUBLE) AS qv
-            FROM embeddings
-            WHERE vec_id IN ({', '.join(str(i) for i in TOPK_QUERY_IDS)})) q
-        ON e.vec_id != q.query_id
-    ) s{d}
-  ) r{d} WHERE rank <= {TOPK_K}
-) i
-LEFT JOIN (SELECT query_id, neighbor_id
-           FROM ({_topk_sql(TOPK_K, bucketed=False)}) fb{d}) b
-  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id"""
-            for d in DIM_SWEEP
-        ),
-        "similarity_ann_nprobe_sweep": "\nUNION ALL\n".join(
-            f"""
-SELECT {np_}::INTEGER AS nprobe,
-       COUNT(b.neighbor_id)::BIGINT AS n_hit,
-       COUNT(*)::BIGINT AS n_returned,
-       {_ieee_round_pos_sql(
-           f'COUNT(b.neighbor_id)::DOUBLE'
-           f' / CAST({float(len(set(TOPK_QUERY_IDS)) * ANN_K)} AS DOUBLE)'
-       )} AS recall_at_k
-FROM (SELECT query_id, neighbor_id
-      FROM ({_ivf_ann_sql(nprobe=np_)}) s{np_}) i
-LEFT JOIN (SELECT query_id, neighbor_id
-           FROM ({_topk_sql(ANN_K, bucketed=False)}) b{np_}) b
-  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id"""
-            for np_ in NPROBE_SWEEP
-        ),
-        "similarity_ann_pq_recall_residual": f"""
-WITH pq AS (SELECT query_id, neighbor_id
-            FROM ({_ivf_pq_residual_sql()}) t1),
-brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
-SELECT p.query_id,
-       COUNT(b.neighbor_id)::BIGINT AS n_hit,
-       {ANN_K}::BIGINT AS k,
-       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
-FROM pq p LEFT JOIN brute b
-  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
-GROUP BY p.query_id""",
-        "similarity_ann_pq_recall_full_trained": f"""
-WITH pq AS (SELECT query_id, neighbor_id
-            FROM ({_ivf_pq_ann_sql(trained_cb=True, trained_ctr=True)}) t1),
-brute AS (SELECT query_id, neighbor_id FROM ({_topk_sql(ANN_K, bucketed=False)}) t2)
-SELECT p.query_id,
-       COUNT(b.neighbor_id)::BIGINT AS n_hit,
-       {ANN_K}::BIGINT AS k,
-       ROUND(COUNT(b.neighbor_id)::DOUBLE / {ANN_K}::DOUBLE, 6) AS recall_at_k
-FROM pq p LEFT JOIN brute b
-  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
-GROUP BY p.query_id""",
-        "kmeans_nd_assign": _kmeans_nd_assign_sql(),
-        "pipeline_topic_clusters": f"""
-WITH assigned AS ({_kmeans_nd_assign_sql()}),
-tok AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term FROM documents
-),
-f AS (
-  SELECT doc_id, term FROM tok
-  WHERE term <> '' AND NOT list_contains({_sql_str_list(STOPWORDS)}, term)
-),
-c AS (
-  SELECT a.cid, f.term, COUNT(*) AS n_occurrences,
-         COUNT(DISTINCT f.doc_id) AS n_docs
-  FROM f JOIN assigned a ON f.doc_id = a.point_id
-  GROUP BY a.cid, f.term
-),
-r AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY cid ORDER BY n_occurrences DESC, term
-  ) AS rank
-  FROM c
-)
-SELECT cid, rank::INTEGER AS rank, term, n_occurrences, n_docs
-FROM r WHERE rank <= {TOPIC_TOP_TERMS}""",
-        "kmeans_nd_loop2": _kmeans_nd_loop2_sql(),
-        # payload sizes replayed arithmetically: PPM = "P6\n{w} {h}\n255\n"
-        # header + 3wh pixels; WAV = canonical 44-byte PCM header + 2
-        # bytes/sample; video = uncompressed AVI, 224 fixed header
-        # bytes + F frames of (8-byte chunk header + 3*16*12 RGB24)
-        "multimodal_meta": """
-WITH m AS (
-  SELECT doc_id AS media_id,
-         CASE WHEN doc_id % 3 = 0 THEN 'image'
-              WHEN doc_id % 3 = 1 THEN 'audio'
-              ELSE 'video' END AS kind,
-         (doc_id % 64 + 64) AS w, (doc_id % 48 + 48) AS h,
-         (doc_id % 500 + 100) AS ns, (doc_id % 4 + 2) AS nf
-  FROM documents
-)
-SELECT media_id, kind,
-       (CASE kind
-          WHEN 'image' THEN 9 + length(w::VARCHAR) + length(h::VARCHAR) + 3 * w * h
-          WHEN 'audio' THEN 44 + 2 * ns
-          ELSE {avi_fixed} + nf * (8 + {frame_bytes}) END)::BIGINT AS n_bytes,
-       (CASE WHEN kind = 'video' THEN {vid_w} ELSE w END)::INTEGER AS width,
-       (CASE WHEN kind = 'video' THEN {vid_h} ELSE h END)::INTEGER AS height
-FROM m""".format(
-            avi_fixed=mm.AVI_FIXED_BYTES,
-            frame_bytes=mm.VID_FRAME_BYTES,
-            vid_w=mm.VID_W,
-            vid_h=mm.VID_H,
-        ),
-        "events_asof_join": f"""
-WITH e AS (
-  SELECT user_id, event_id, event_type, value,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-),
-l AS (SELECT user_id, event_id, ts_sec FROM e WHERE event_type = '{ASOF_LEFT_TYPE}'),
-r AS (
-  SELECT user_id, ts_sec, MAX(value) AS r_value
-  FROM e WHERE event_type = '{ASOF_RIGHT_TYPE}' GROUP BY user_id, ts_sec
-)
-SELECT l.user_id, l.event_id, l.ts_sec,
-       r.ts_sec AS asof_ts, r.r_value AS asof_value
-FROM l ASOF JOIN r
-  ON l.user_id = r.user_id AND l.ts_sec >= r.ts_sec""",
-        "events_range_join": f"""
-WITH e AS (
-  SELECT user_id, event_id, event_type, value,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-),
-l AS (SELECT user_id, event_id, ts_sec FROM e WHERE event_type = '{ASOF_LEFT_TYPE}'),
-r AS (SELECT user_id, ts_sec AS r_ts, value FROM e WHERE event_type = '{ASOF_RIGHT_TYPE}')
-SELECT l.user_id, l.event_id, l.ts_sec,
-       COUNT(*) AS n_right, ROUND(SUM(r.value), 2) AS right_value_sum
-FROM l JOIN r
-  ON r.user_id = l.user_id
- AND r.r_ts >= l.ts_sec AND r.r_ts < l.ts_sec + {RANGE_HORIZON_SEC}
-GROUP BY l.user_id, l.event_id, l.ts_sec""",
-        "events_cube": """
-SELECT COALESCE(event_type, 'ALL') AS event_type,
-       COALESCE(hour, -1) AS hour,
-       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
-FROM (
-  SELECT event_type, (epoch_ns(ts) // 1000000000 // 3600)::BIGINT AS hour, value
-  FROM events
-)
-GROUP BY CUBE(event_type, hour)""",
-        "sql_revenue_by_nation": SQL_REVENUE,
-        "events_value_gini": """
-WITH ranked AS (
-  SELECT event_type, value,
-         row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-         COUNT(*) OVER (PARTITION BY event_type) AS n,
-         SUM(value) OVER (PARTITION BY event_type) AS total
-  FROM events
-)
-SELECT event_type,
-       CASE WHEN total = 0 THEN 0.0
-            ELSE ROUND(SUM((2 * rn - n - 1) * value) / (n * total), 6)
-       END AS value_gini
-FROM ranked GROUP BY event_type, n, total""",
-        "orders_by_month": """
-SELECT EXTRACT(YEAR FROM o_orderdate)::INTEGER AS o_year,
-       EXTRACT(MONTH FROM o_orderdate)::INTEGER AS o_month,
-       COUNT(*) AS n_orders, ROUND(SUM(o_totalprice), 2) AS total_price
-FROM orders GROUP BY 1, 2""",
-        "events_json_props": """
-SELECT event_type, COUNT(*) AS n_events,
-       MIN(k) AS k_min, MAX(k) AS k_max, ROUND(AVG(k), 6) AS k_avg
-FROM (
-  SELECT event_type, json_extract(props, '$.k')::BIGINT AS k FROM events
-)
-GROUP BY event_type""",
-        "events_variant_props": """
-SELECT event_type, COUNT(*) AS n_events,
-       SUM(k)::BIGINT AS k_sum,
-       COUNT(DISTINCT k)::BIGINT AS n_distinct_k
-FROM (
-  SELECT event_type, json_extract(props, '$.k')::BIGINT AS k FROM events
-)
-GROUP BY event_type""",
-        "events_users_intersect": f"""
-SELECT user_id FROM events
-WHERE event_type = 'purchase' AND value > CAST({SETOP_VALUE_THRESHOLD!r} AS DOUBLE)
-INTERSECT
-SELECT user_id FROM events
-WHERE event_type = 'error' AND value > CAST({SETOP_VALUE_THRESHOLD!r} AS DOUBLE)""",
-        "events_users_except": f"""
-SELECT user_id FROM events WHERE event_type = '{ASOF_LEFT_TYPE}'
-EXCEPT
-SELECT user_id FROM events
-WHERE event_type = '{ASOF_RIGHT_TYPE}' AND value > CAST({SETOP_VALUE_THRESHOLD!r} AS DOUBLE)""",
-        "kmeans_nd_fit_fixed": _kmeans_nd_loop2_sql(),
-        "kmeans_nd_fit_large": _kmeans_nd_fit_large_sql(),
-        # free-form n-D fit: trajectory stays numerical, result gated —
-        # the twin replays the deterministic first-4-rows init and its
-        # 64-dim assignment WSSSE for real, and pins the Lloyd
-        # invariants the engine verifies honestly (r12 verdict task 3)
-        "kmeans_nd_fit": f"""
-WITH e AS (SELECT vec_id,
-                  list_transform(embedding, x -> x::DOUBLE) AS v
-           FROM embeddings),
-c AS (SELECT v FROM e ORDER BY vec_id LIMIT 4),
-scored AS (
-  SELECT e.vec_id,
-         MIN(list_sum(list_transform(range(1, {EMB_DIM + 1}),
-             i -> (e.v[i] - c.v[i]) * (e.v[i] - c.v[i])))) AS md2
-  FROM e CROSS JOIN c GROUP BY e.vec_id)
-SELECT CAST(4 AS BIGINT) AS k_centers, COUNT(*)::BIGINT AS n_vecs,
-       ROUND(SUM(md2), {_SUM_DIGITS}) AS wssse_init,
-       TRUE AS monotone, TRUE AS fixpoint, TRUE AS improves_on_init
-FROM scored""",
-        "pipeline_media_cluster": _media_cluster_sql(),
-        "events_window_agg": f"""
-SELECT (epoch_ns(ts) // 1000000000 // {ev.WINDOW_SEC} * {ev.WINDOW_SEC})::BIGINT AS window_start,
-       event_type, COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
-FROM events GROUP BY 1, 2""",
-        "events_sessionize": _SESSIONIZE_SQL
-        + """
-SELECT user_id, session_idx,
-       MIN(ts_sec) AS session_start, MAX(ts_sec) AS session_end,
-       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
-FROM sessions GROUP BY user_id, session_idx""",
-        # streaming sessionizer replay: all sessions EXCEPT each user's
-        # trailing one (only a later event closes a session when idle
-        # eviction is off) — batching-invariant, so SQL-expressible
-        "events_stream_session_replay": _SESSIONIZE_SQL
-        + """,
-agg AS (
-  SELECT user_id, session_idx,
-         MIN(ts_sec) AS session_start, MAX(ts_sec) AS session_end,
-         COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
-  FROM sessions GROUP BY user_id, session_idx
-),
-last AS (SELECT user_id, MAX(session_idx) AS last_idx FROM agg GROUP BY user_id)
-SELECT a.user_id, a.session_start, a.session_end, a.n_events, a.value_sum
-FROM agg a JOIN last l
-  ON a.user_id = l.user_id AND a.session_idx < l.last_idx""",
-        # sliding windows: each event expands to size/slide = 2
-        # epoch-aligned window starts
-        "events_sliding_window": f"""
-WITH e AS (
-  SELECT event_type, value,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-),
-w AS (
-  SELECT event_type, value,
-         ((ts_sec // {SLIDE_SEC}) * {SLIDE_SEC} - k.off)::BIGINT AS window_start
-  FROM e CROSS JOIN (VALUES (0), ({SLIDE_SEC})) k(off)
-)
-SELECT window_start, event_type,
-       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
-FROM w GROUP BY 1, 2""",
-        # independent lag-based replay of the NATIVE session_window
-        # operator (split strictly-greater-than gap, verified boundary)
-        "events_sessionize_native": f"""
-WITH e AS (
-  SELECT user_id, event_id, value,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN ts_sec - lag(ts_sec) OVER w > {ev.SESSION_GAP_SEC}
-                 THEN 1 ELSE 0 END AS new_session
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)
-),
-sessions AS (
-  SELECT *, SUM(new_session) OVER (
-    PARTITION BY user_id ORDER BY ts_sec, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-  )::BIGINT AS session_idx
-  FROM flagged
-)
-SELECT user_id,
-       MIN(ts_sec) AS session_start, MAX(ts_sec) AS session_end,
-       COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum
-FROM sessions GROUP BY user_id, session_idx""",
-        # independently-formulated funnel: layered CTEs instead of the
-        # engine's chained withColumn windows; same (ts_sec, event_id)
-        # streaming funnel twin: the automaton's emitted rows, stated
-        # relationally — per user, step k's timestamp is the first
-        # step-k-typed event whose row already satisfies step k-1
-        # (running-min chain, (ts_sec, event_id) order); per-user
-        # aggregate MIN of each chained CASE equals the final running
-        # value, and completed steps emit one row each
-        "events_stream_funnel_replay": f"""
-WITH e AS (
-  SELECT user_id, event_id, event_type,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-),
-s0 AS (
-  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[0]}' THEN ts_sec END)
-    OVER w AS q0
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-s1 AS (
-  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[1]}'
-                      AND q0 IS NOT NULL THEN ts_sec END) OVER w AS q1
-  FROM s0 WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-s2 AS (
-  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[2]}'
-                      AND q1 IS NOT NULL THEN ts_sec END) OVER w AS q2
-  FROM s1 WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-pu AS (
-  SELECT user_id,
-         MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[0]}'
-                  THEN ts_sec END) AS t1,
-         MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[1]}'
-                   AND q0 IS NOT NULL THEN ts_sec END) AS t2,
-         MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[2]}'
-                   AND q1 IS NOT NULL THEN ts_sec END) AS t3
-  FROM s2 GROUP BY user_id
-)
-SELECT user_id, 1 AS step, '{ev.FUNNEL_STEPS[0]}' AS step_type, t1 AS ts_sec
-FROM pu WHERE t1 IS NOT NULL
-UNION ALL
-SELECT user_id, 2, '{ev.FUNNEL_STEPS[1]}', t2 FROM pu WHERE t2 IS NOT NULL
-UNION ALL
-SELECT user_id, 3, '{ev.FUNNEL_STEPS[2]}', t3 FROM pu WHERE t3 IS NOT NULL""",
-        # tie-break and at-or-before qualification
-        "events_funnel": f"""
-WITH e AS (
-  SELECT user_id, event_id, event_type,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-),
-s0 AS (
-  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[0]}' THEN ts_sec END)
-    OVER w AS q0
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-s1 AS (
-  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[1]}'
-                      AND q0 IS NOT NULL THEN ts_sec END) OVER w AS q1
-  FROM s0 WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-s2 AS (
-  SELECT *, MIN(CASE WHEN event_type = '{ev.FUNNEL_STEPS[2]}'
-                      AND q1 IS NOT NULL THEN ts_sec END) OVER w AS q2
-  FROM s1 WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-per_user AS (
-  SELECT user_id, bool_or(q0 IS NOT NULL) AS r0,
-         bool_or(q1 IS NOT NULL) AS r1, bool_or(q2 IS NOT NULL) AS r2
-  FROM s2 GROUP BY user_id
-),
-counts AS (
-  SELECT CAST(COALESCE(SUM(CASE WHEN r0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n0,
-         CAST(COALESCE(SUM(CASE WHEN r1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n1,
-         CAST(COALESCE(SUM(CASE WHEN r2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n2
-  FROM per_user
-)
-SELECT 1 AS step, '{ev.FUNNEL_STEPS[0]}' AS step_type, n0 AS n_users FROM counts
-UNION ALL
-SELECT 2, '{ev.FUNNEL_STEPS[1]}', n1 FROM counts
-UNION ALL
-SELECT 3, '{ev.FUNNEL_STEPS[2]}', n2 FROM counts""",
-        "events_session_paths": f"""
-WITH e AS (
-  SELECT user_id, event_id, event_type,
-         (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec
-  FROM events
-),
-paired AS (
-  SELECT event_type AS prev_type,
-         lead(event_type) OVER w AS next_type,
-         lead(ts_sec) OVER w - ts_sec AS gap
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)
-)
-SELECT prev_type, next_type, COUNT(*) AS n_transitions
-FROM paired
-WHERE next_type IS NOT NULL AND gap <= {ev.SESSION_GAP_SEC}
-GROUP BY prev_type, next_type
-ORDER BY n_transitions DESC, prev_type, next_type
-LIMIT 10""",
-        "events_rolling_zscore": f"""
-WITH e AS (
-  SELECT user_id, (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec, value
-  FROM events
-),
-per_sec AS (
-  SELECT user_id, ts_sec, ROUND(SUM(value), 2) AS v
-  FROM e GROUP BY user_id, ts_sec
-),
-stats AS (
-  SELECT user_id, ts_sec, v,
-         COUNT(*) OVER w AS n_prior,
-         SUM(v) OVER w AS s1,
-         SUM(v * v) OVER w AS s2
-  FROM per_sec
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec
-               RANGE BETWEEN {ev.ZSCORE_WINDOW_SEC} PRECEDING AND 1 PRECEDING)
-)
-SELECT user_id, ts_sec, v, n_prior,
-       CASE WHEN n_prior >= 2
-             AND (s2 - s1 * s1 / n_prior) / (n_prior - 1) > 0
-            THEN ROUND((v - s1 / n_prior)
-                       / sqrt((s2 - s1 * s1 / n_prior) / (n_prior - 1)), 6)
-            END AS zscore
-FROM stats""",
-        "events_retention": f"""
-WITH e AS (
-  SELECT user_id, (epoch_ns(ts) // 1000000000)::BIGINT AS ts_sec FROM events
-),
-uw AS (
-  SELECT user_id, ts_sec // {ev.WEEK_SEC} AS week, COUNT(*) AS n_events
-  FROM e GROUP BY 1, 2
-),
-coh AS (
-  SELECT *, MIN(week) OVER (PARTITION BY user_id) AS cohort_week FROM uw
-)
-SELECT cohort_week, week - cohort_week AS week_offset,
-       COUNT(*) AS n_users, CAST(SUM(n_events) AS BIGINT) AS n_events
-FROM coh GROUP BY 1, 2""",
-        # resize geometry replayed arithmetically: every image re-encodes
-        # as "P6\n{W} {H}\n255\n" + 3WH pixels
-        "multimodal_resize": f"""
-SELECT doc_id AS media_id, 'image' AS kind,
-       {RESIZE_W}::INTEGER AS out_width, {RESIZE_H}::INTEGER AS out_height,
-       (9 + length('{RESIZE_W}') + length('{RESIZE_H}')
-          + 3 * {RESIZE_W} * {RESIZE_H})::BIGINT AS n_bytes
-FROM documents WHERE doc_id % 3 = 0""",
-        # real AVI frame sampling: F = doc_id%4+2 frames of
-        # 3*VID_W*VID_H raw RGB24 bytes, every FRAME_EVERY_N-th emitted
-        "multimodal_frames": f"""
-SELECT doc_id AS media_id,
-       unnest(range(0, doc_id % 4 + 2, {FRAME_EVERY_N}))::INTEGER AS frame_idx,
-       {mm.VID_FRAME_BYTES}::INTEGER AS frame_len
-FROM documents
-WHERE doc_id % 3 = 2""",
-        "multimodal_mjpeg": f"""
-SELECT doc_id AS media_id,
-       (doc_id % 4 + 2)::INTEGER AS n_frames,
-       {mm.VID_W}::INTEGER AS dec_width,
-       {mm.VID_H}::INTEGER AS dec_height,
-       ((doc_id % 4 + 2) * {mm.VID_FRAME_BYTES})::BIGINT AS rgb_bytes
-FROM documents
-WHERE doc_id % 3 = 2""",
-        # real-decode twin, replayed arithmetically from the md5 hex
-        # (DuckDB cannot subscript BLOBs): digest byte j = 16*hex[2j] +
-        # hex[2j+1]; decoded content is the digest cycled to the
-        # content length L (3wh pixels / 2·ns PCM bytes / nf·(3·16·12)
-        # AVI frame bytes), so content_sum = (L//16)·digest_sum +
-        # prefix_sum(L%16) — all small exact integers, so the single
-        # audio twin: the WAV payload's PCM bytes are the md5 digest
-        # cycled, so 16 digest bytes = one 8-sample int16 period; the
-        # twin materializes the full (<=599-element) sample list per
-        # clip and computes the identical exact-integer features, with
-        # rms as the shared IEEE floor-round expression
-        "multimodal_phash": f"""
-WITH {_phash_cte()}
-SELECT media_id, width, height, phash FROM ph""",
-        # the image-dedup funnel twin: hashes from the shared CTE, the
-        # exact distance-<=2 pair join, removed = distinct higher side
-        "pipeline_image_dedup": f"""
-WITH {_phash_cte()},
-pp AS (
-  SELECT a.media_id AS media_a, b.media_id AS media_b
-  FROM ph a JOIN ph b
-    ON a.media_id < b.media_id
-   AND bit_count(xor(a.phash, b.phash)) <= {mm.PHASH_MAX_HAMMING}
-),
-rm AS (SELECT DISTINCT media_b FROM pp)
-SELECT (SELECT COUNT(*) FROM ph)::BIGINT AS n_media,
-       (SELECT COUNT(*) FROM pp)::BIGINT AS n_dup_edges,
-       (SELECT COUNT(*) FROM rm)::BIGINT AS n_removed,
-       ((SELECT COUNT(*) FROM ph) - (SELECT COUNT(*) FROM rm))::BIGINT
-         AS n_kept""",
-        "multimodal_afp": f"""
-WITH {_afp_cte()}
-SELECT media_id, n_samples, afp FROM af""",
-        # exact distance join — banding lossless at the threshold
-        "multimodal_afp_pairs": f"""
-WITH {_afp_cte()}
-SELECT a.media_id AS media_a, b.media_id AS media_b,
-       bit_count(xor(a.afp, b.afp))::BIGINT AS hamming
-FROM af a JOIN af b
-  ON a.media_id < b.media_id
- AND bit_count(xor(a.afp, b.afp)) <= {mm.AFP_MAX_HAMMING}""",
-        # per-frame video twin: frames are digest-identical, so one
-        # arithmetic hash replicated over range(n_frames)
-        "multimodal_video_phash": f"""
-WITH {_phash_cte("video")}
-SELECT v.media_id,
-       unnest(range(0, v.media_id % 4 + 2))::INTEGER AS frame_idx,
-       (v.media_id % 4 + 2)::INTEGER AS n_frames,
-       v.phash
-FROM ph v""",
-        # exact distance-<=2 join: banding is LOSSLESS at the
-        # threshold by pigeonhole, so the banded Spark set equals this
-        "multimodal_phash_pairs": f"""
-WITH {_phash_cte()}
-SELECT a.media_id AS media_a, b.media_id AS media_b,
-       bit_count(xor(a.phash, b.phash))::BIGINT AS hamming
-FROM ph a JOIN ph b
-  ON a.media_id < b.media_id
- AND bit_count(xor(a.phash, b.phash)) <= {mm.PHASH_MAX_HAMMING}""",
-        "multimodal_audio": f"""
-WITH m AS (
-  SELECT doc_id AS media_id, (doc_id % 500 + 100) AS ns, md5(text) AS hx
-  FROM documents WHERE doc_id % 3 = 1
-),
-d AS (
-  SELECT media_id, ns,
-         list_transform(range(0, 16),
-           j -> (strpos('0123456789abcdef', substr(hx, 2 * CAST(j AS INTEGER) + 1, 1)) - 1) * 16
-              + (strpos('0123456789abcdef', substr(hx, 2 * CAST(j AS INTEGER) + 2, 1)) - 1)) AS db
-  FROM m
-),
-u AS (
-  SELECT media_id, ns,
-         list_transform(range(0, ns),
-           i -> db[2 * (CAST(i AS INTEGER) % 8) + 1]
-              + 256 * db[2 * (CAST(i AS INTEGER) % 8) + 2]) AS uraw
-  FROM d
-),
-s AS (
-  SELECT media_id, ns,
-         list_transform(uraw,
-           v -> CASE WHEN v >= 32768 THEN v - 65536 ELSE v END) AS sm
-  FROM u
-),
-f AS (
-  SELECT media_id, ns,
-         length(list_filter(range(1, ns),
-           i -> sm[CAST(i AS INTEGER)] * sm[CAST(i AS INTEGER) + 1] < 0)) AS zc,
-         list_max(list_transform(sm, x -> abs(x))) AS pk,
-         list_sum(list_transform(sm, x -> CAST(x AS BIGINT) * CAST(x AS BIGINT))) AS ssq
-  FROM s
-)
-SELECT media_id, ns::BIGINT AS n_samples, zc::BIGINT AS zero_crossings,
-       pk::BIGINT AS peak, ssq::BIGINT AS sum_sq,
-       {_ieee_round_pos_sql('sqrt(ssq::DOUBLE / ns::DOUBLE)')} AS rms
-FROM f""",
-        # double division is bit-identical to the engine's sum/len
-        "multimodal_features": """
-WITH m AS (
-  SELECT doc_id AS media_id,
-         CASE WHEN doc_id % 3 = 0 THEN 'image'
-              WHEN doc_id % 3 = 1 THEN 'audio'
-              ELSE 'video' END AS kind,
-         (doc_id % 64 + 64) AS w, (doc_id % 48 + 48) AS h,
-         (doc_id % 500 + 100) AS ns, (doc_id % 4 + 2) AS nf,
-         md5(text) AS hx
-  FROM documents
-),
-d AS (
-  SELECT *,
-         list_transform(range(0, 16),
-           j -> (strpos('0123456789abcdef', substr(hx, 2 * CAST(j AS INTEGER) + 1, 1)) - 1) * 16
-              + (strpos('0123456789abcdef', substr(hx, 2 * CAST(j AS INTEGER) + 2, 1)) - 1)) AS db,
-         CASE kind WHEN 'image' THEN 3 * w * h
-                   WHEN 'audio' THEN 2 * ns
-                   ELSE nf * {frame_bytes} END AS clen
-  FROM m
-)
-SELECT media_id, kind,
-       (CASE kind
-          WHEN 'image' THEN 9 + length(w::VARCHAR) + length(h::VARCHAR) + 3 * w * h
-          WHEN 'audio' THEN 44 + 2 * ns
-          ELSE {avi_fixed} + nf * (8 + {frame_bytes}) END)::BIGINT AS n_bytes,
-       TRUE AS decoded,
-       (CASE kind WHEN 'image' THEN w WHEN 'video' THEN {vid_w} END)::INTEGER AS dec_width,
-       (CASE kind WHEN 'image' THEN h WHEN 'video' THEN {vid_h} END)::INTEGER AS dec_height,
-       (CASE kind WHEN 'audio' THEN ns WHEN 'video' THEN nf END)::BIGINT AS n_samples,
-       ROUND(((clen // 16) * list_sum(db)
-              + COALESCE(list_sum(db[1:(clen % 16)]), 0))::DOUBLE
-             / clen::DOUBLE, 6) AS byte_mean
-FROM d""".format(
-            avi_fixed=mm.AVI_FIXED_BYTES,
-            frame_bytes=mm.VID_FRAME_BYTES,
-            vid_w=mm.VID_W,
-            vid_h=mm.VID_H,
-        ),
-        # rows-only (no SQL-expressible oracle): dedup via driver's weaker
-        # gate — kmeans_nd_fit (iterative numpy path), kmeans_mllib
-        # (MLlib RNG).
-    }

@@ -85,7 +85,7 @@ def test_lsh_star_cap_mirrored_by_sql_twin_on_hot_corpus(spark, tmp_path):
     Spark rule, THIS fails, not a future crawl shard."""
     import duckdb
 
-    from kmeans_mapreduce_spark.extensions import (
+    from kmeans_mapreduce_spark.queries import (
         extension_oracle_sql,
         extension_queries,
     )
@@ -133,7 +133,7 @@ def test_ngram_df_cap_mirrored_by_sql_twin_on_hot_corpus(spark, tmp_path):
     pipeline and DuckDB twin must agree on the verified pair set."""
     import duckdb
 
-    from kmeans_mapreduce_spark.extensions import (
+    from kmeans_mapreduce_spark.queries import (
         extension_oracle_sql,
         extension_queries,
     )
@@ -182,7 +182,7 @@ def test_incremental_star_cap_mirrored_by_sql_twin_on_hot_corpus(
     REPRESENTATIVE (min doc_id) only — identically on both engines."""
     import duckdb
 
-    from kmeans_mapreduce_spark.extensions import (
+    from kmeans_mapreduce_spark.queries import (
         extension_oracle_sql,
         extension_queries,
     )
@@ -3142,7 +3142,7 @@ def test_bpe_segment_twin_degrades_with_exhausted_vocab(spark, tmp_path):
     replace(text, NULL, ...) (round-12 advisor finding)."""
     import duckdb
 
-    from kmeans_mapreduce_spark.extensions import (
+    from kmeans_mapreduce_spark.queries import (
         extension_oracle_sql,
         extension_queries,
     )

@@ -151,31 +151,42 @@ def test_bench_badness_orders_unknown_steal_worst():
 
 
 def test_bench_accounting_is_a_partition():
-    """No query silently falls through the bench: every registry entry
-    is either tracked by bench.py's loop (bench_tracked_queries), timed
-    directly (BENCH_DIRECT_QUERIES) or carries a written reason in
-    BENCH_EXCLUDED_REASONS. Round 11 found kmeans_wssse listed for the
-    bench but never run (bench.py iterated only extension_queries());
-    the tracked set is now derived from the registry, and this test
-    catches stale names left behind when a query is renamed or removed
-    and exclusions without a reason."""
-    import __spark_entry__ as entry
-    from kmeans_mapreduce_spark.queries import (
-        BENCH_DIRECT_QUERIES,
-        BENCH_EXCLUDED_REASONS,
-        bench_tracked_queries,
-    )
+    """No query silently falls through the bench: the tracked set is
+    exactly the registry minus the queries declared ``unbenched``, and
+    every such declaration carries a written reason. (kmeans_wssse was
+    once listed for the bench but never run; with bench membership on
+    each query's own @query record there is no second list to drift.)"""
+    from kmeans_mapreduce_spark.queries import bench_tracked_queries, registry
 
-    q = set(entry.queries())
-    tracked = set(bench_tracked_queries())
-    direct = set(BENCH_DIRECT_QUERIES)
-    excluded = set(BENCH_EXCLUDED_REASONS)
-    assert not direct & excluded, sorted(direct & excluded)
-    assert direct <= q, f"stale direct names: {sorted(direct - q)}"
-    assert excluded <= q, f"stale excluded names: {sorted(excluded - q)}"
-    assert tracked == q - direct - excluded
-    empty = [n for n in excluded if not BENCH_EXCLUDED_REASONS[n].strip()]
+    reg = registry()
+    unbenched = {n for n, q in reg.items() if q.unbenched is not None}
+    assert set(bench_tracked_queries()) == set(reg) - unbenched
+    empty = [n for n in unbenched if not reg[n].unbenched.strip()]
     assert not empty, f"empty reasons: {empty}"
+
+
+def test_query_registers_each_name_once_and_keeps_the_builder():
+    """@query refuses a second registration of a name, and returns the
+    builder itself: every registry entry is the plain module-level
+    function (no wrapper), so direct ``X.q_*`` calls and attribute
+    patching see the same object the registry serves."""
+    import sys
+
+    from kmeans_mapreduce_spark import queries as Q
+
+    reg = Q.registry()
+
+    def q_points_source(spark, sf_dir):
+        raise AssertionError("never built")
+
+    with pytest.raises(ValueError, match="points_source"):
+        Q.query(twin=lambda: "SELECT 1")(q_points_source)
+    assert Q.registry()["points_source"].build is Q.q_points_source
+    assert len(Q.registry()) == len(reg)
+    for name, q in reg.items():
+        assert name == q.build.__name__[2:]
+        assert getattr(sys.modules[q.build.__module__], q.build.__name__) is q.build
+        assert q.build.__code__.co_name == q.build.__name__, name
 
 
 def test_driver_window_samples_every_family():
@@ -250,8 +261,10 @@ def test_tracked_replays_record_progress_split():
     headline total with setup wall)."""
     import inspect
 
-    from kmeans_mapreduce_spark import extensions as X
-    from kmeans_mapreduce_spark.queries import bench_tracked_queries
+    from kmeans_mapreduce_spark.queries import (
+        bench_tracked_queries,
+        extension_queries,
+    )
 
     tracked = [
         n
@@ -259,7 +272,7 @@ def test_tracked_replays_record_progress_split():
         if "_stream_" in n and n.endswith("_replay")
     ]
     assert tracked, "replay split exists because replays are benched"
-    reg = X.extension_queries()
+    reg = extension_queries()
     for n in tracked:
         fn_src = inspect.getsource(reg[n])
         assert (

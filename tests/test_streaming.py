@@ -1660,6 +1660,7 @@ def test_store_bound_replays_sized_from_input(spark, monkeypatch, name):
     replay is stateless (broadcast stream-static join), so it reports no
     state operator and only the drain's count is checked."""
     from kmeans_mapreduce_spark import extensions as X
+    from kmeans_mapreduce_spark import queries
 
     seen = {}
     drain = X._drain_bounded_replay
@@ -1675,7 +1676,7 @@ def test_store_bound_replays_sized_from_input(spark, monkeypatch, name):
 
     monkeypatch.setattr(X, "_drain_bounded_replay", spy_drain)
     monkeypatch.setattr(X, "_record_replay_progress", spy_record)
-    df = X.extension_queries()[name](spark, SF)
+    df = queries.extension_queries()[name](spark, SF)
     assert df.count() > 0
     assert seen["partitions"] == 1
     ops = [o for p in seen["progress"] for o in p.get("stateOperators") or []]
@@ -1760,6 +1761,7 @@ def test_stream_join_outer_single_type_vintage_emits_nothing(
     import pandas as pd
 
     from kmeans_mapreduce_spark import extensions as X
+    from kmeans_mapreduce_spark import queries
 
     out = str(tmp_path_factory.mktemp("ss_outer_single"))
     pd.DataFrame(
@@ -1776,6 +1778,6 @@ def test_stream_join_outer_single_type_vintage_emits_nothing(
     con = duckdb.connect()
     con.sql(f"CREATE VIEW events AS FROM '{out}/events.parquet'")
     twin = con.sql(
-        X.extension_oracle_sql()["events_stream_join_outer_replay"]
+        queries.extension_oracle_sql()["events_stream_join_outer_replay"]
     ).fetchall()
     assert twin == [], twin

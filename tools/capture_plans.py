@@ -31,7 +31,7 @@ def main() -> int:
     from kmeans_mapreduce_spark.session import get_spark
 
     spark = get_spark("capture-plans")
-    registry = {**Q.core_queries(), **Q.extension_queries()}
+    registry = Q.registry()
     names = sys.argv[3:] or sorted(Q.bench_tracked_queries())
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -40,7 +40,7 @@ def main() -> int:
     )
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        fn = registry[name]
+        fn = registry[name].build
         try:
             df = fn(spark, SF_DIR)
             buf = io.StringIO()

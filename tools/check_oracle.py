@@ -4,7 +4,9 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at the given sf dir, then compares row count, column names, and
 values (columns sorted by name, rows sorted lexicographically) — the
 same canonicalization the driver's value-hash uses. Exact equality is
-required: both sides are expected to round floats identically.
+required: both sides are expected to round floats identically. A query
+registered without a twin (``@query`` with no ``twin=``) is absent
+from ``oracle_sql()`` and gets a rows-only check.
 
 Usage:  python tools/check_oracle.py [sf_dir] [query ...]
 """

@@ -23,13 +23,13 @@ def main() -> int:
     from kmeans_mapreduce_spark.session import get_spark
 
     spark = get_spark("executed-plan-scan")
-    registry = {**Q.core_queries(), **Q.extension_queries()}
+    registry = Q.registry()
     names = sys.argv[1:] or sorted(Q.bench_tracked_queries())
     for name in names:
         if "_stream_" in name:
             continue
         try:
-            df = registry[name](spark, SF_DIR)
+            df = registry[name].build(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             ep = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # noqa: BLE001

@@ -37,7 +37,7 @@ def main() -> int:
     from kmeans_mapreduce_spark.session import get_spark
 
     spark = get_spark("time-queries")
-    registry = {**Q.core_queries(), **Q.extension_queries()}
+    registry = Q.registry()
 
     # warm JVM + python workers exactly like bench.py
     from kmeans_mapreduce_spark.sources.derive import points_2d
@@ -51,7 +51,7 @@ def main() -> int:
     t0_ticks = _cpu_ticks()
     gbps0 = _mem_stream_gbps()
     for name in args:
-        fn = registry[name]
+        fn = registry[name].build
         spark.sparkContext.setJobDescription(f"time: {name}")
         durs, cpus = [], []
         for _ in range(reps):
