@@ -1398,6 +1398,12 @@ def incremental_minhash_pairs(
     # recompute the full signature scan (same multi-consumer barrier
     # as jaccard_pairs' shingle sets)
     flagged = bands.crossJoin(F.broadcast(boundary)).transform(narrow_barrier)
+    # fill it before the consumers below fan out: under AQE their three
+    # exchanges start as concurrent jobs while this DataFrame is still
+    # being built, and the tasks that lose the race for the barrier's
+    # one partition sit blocked on its block lock until the winner has
+    # run the whole signature scan
+    flagged.count()
     new_bands = flagged.filter(F.col("doc_id") >= F.col("split_id")).select(
         "doc_id", "band_id", "band_hash"
     )

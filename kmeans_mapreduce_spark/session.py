@@ -24,6 +24,13 @@ def _default_driver_memory() -> str:
     return f"{min(phys // 2, 32 << 30) >> 20}m"
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far (Spark's
+    ``CodegenMetrics``); hits in the codegen class cache add nothing."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
+
+
 def get_spark(
     app_name: str = "kmeans-mapreduce-spark",
     master: str | None = None,
@@ -44,6 +51,9 @@ def get_spark(
       ``mapInPandas``, ``toPandas``) moves columnar batches, never rows.
     - Session timezone pinned to UTC so timestamp arithmetic matches the
       DuckDB oracle regardless of host TZ.
+    - Spark's generated-class cache sized above the whole registry's
+      distinct classes, so a long session compiles each class once
+      (count them with :func:`codegen_compiles`).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -77,6 +87,17 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing "
             "-Dderby.stream.error.file=/tmp/spark-graft-derby.log",
         )
+        # Janino compiles each distinct generated class once and keeps
+        # it in a Guava LRU of this many entries, split over 4 segments
+        # that evict on their own. At the default 100, the ~100 classes
+        # of a perfbench query_mix set-up and pass did not fit: every
+        # timed pass recompiled 14-24 classes that the previous pass had
+        # evicted, and the JIT then compiled those again. One round of
+        # the whole 221-query registry at sf0.001 compiles 2,366
+        # distinct classes (4 cores); a second round recompiles 3,263
+        # at 100 entries and 20 at 4096. Static conf: read once, when
+        # the JVM's first session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Catalog state (bucketed-table metadata for the co-located
         # join sink) lives outside the repo tree; saveAsTable would
         # otherwise drop metastore_db/ + spark-warehouse/ into cwd.

@@ -8,7 +8,10 @@ check is that the engine's own code neither breaks nor changes under
 them. One subprocess runs under ``local[2,2]`` (the test session is
 already running with no retries), computes each result once clean and
 once with an identity ``mapInPandas`` that raises on attempt 0 spliced
-into its input, and prints both.
+into it, and prints both. The Lloyd loop and the k-NN graph take it on
+their input; the TTL-dedup replay takes it on the stateful operator's
+output, so the task that fails is the one that has already updated its
+state store, and the retry must start again from the committed state.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ _SCRIPT = textwrap.dedent(
     from kmeans_mapreduce_spark.queries import K4_CENTERS
     from kmeans_mapreduce_spark.session import get_spark
     from kmeans_mapreduce_spark.sources.derive import points_2d
+    from kmeans_mapreduce_spark.streaming import stream_ops as so
 
     sf_dir, marks = sys.argv[1], sys.argv[2]
 
@@ -77,6 +81,13 @@ _SCRIPT = textwrap.dedent(
     X.load_table = load_injected
     out["knn_injected"] = rows(X.q_similarity_knn_graph(spark, sf_dir))
     out["knn_marks"] = len(os.listdir(marks)) - out["fit_marks"]
+
+    done = len(os.listdir(marks))
+    out["ttl"] = rows(X.q_events_stream_ttl_dedup_replay(spark, sf_dir))
+    dedup_ttl = so.stream_dedup_ttl
+    so.stream_dedup_ttl = lambda stream, **kw: inject(dedup_ttl(stream, **kw))
+    out["ttl_injected"] = rows(X.q_events_stream_ttl_dedup_replay(spark, sf_dir))
+    out["ttl_marks"] = len(os.listdir(marks)) - done
     spark.stop()
     print(json.dumps(out))
     """
@@ -106,8 +117,12 @@ def test_first_attempt_failures_are_retried_to_identical_results(tmp_path):
     # otherwise the job, and the subprocess, would have failed)
     assert out["fit_marks"] > 0
     assert out["knn_marks"] > 0
+    assert out["ttl_marks"] > 0
     # the Lloyd loop: same centers, WSSSE history and sizes, to the bit
     assert out["fit_injected"] == out["fit"]
     # the barrier-bearing k-NN graph: same sorted rows, floats to the bit
     assert out["knn"], "k-NN graph came back empty"
     assert out["knn_injected"] == out["knn"]
+    # the TTL-dedup replay: same sorted rows out of the retried state
+    assert out["ttl"], "TTL-dedup replay came back empty"
+    assert out["ttl_injected"] == out["ttl"]

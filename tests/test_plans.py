@@ -9,11 +9,13 @@ these still passes value-correctness tests; these catch it.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from kmeans_mapreduce_spark import plans
 from kmeans_mapreduce_spark.operators import dedup as dd
 from kmeans_mapreduce_spark.operators import kmeans as km
+from kmeans_mapreduce_spark.queries import registry
 from kmeans_mapreduce_spark.sources.derive import points_2d
 from kmeans_mapreduce_spark.sources.loaders import load_table
 
@@ -319,6 +321,43 @@ def test_incremental_dedup_band_probe_broadcasts(spark):
     df = dd.incremental_minhash_pairs(docs, threshold=0.2)
     assert plans.has_broadcast_join(df)
     assert not plans.has_cartesian(df)
+
+
+def test_incremental_dedup_fills_each_barrier_in_one_job(spark):
+    # Under AQE, building the query already runs jobs: each exchange
+    # below a barrier is its own job. A barrier's partition must be
+    # computed by one of them. A stage that still holds the RDDs a
+    # barrier was made from (RDD ids grow as RDDs are made, so they sit
+    # below the barrier's id) computes it, or blocks until another task
+    # has; once the barrier is filled, Spark cuts its lineage, and later
+    # stages hold only the barrier and newer RDDs.
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    as_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    group = "build_dedup_incremental"
+    sc.setJobGroup(group, "build")
+    try:
+        registry()["dedup_incremental"].build(spark, SF)
+    finally:
+        sc.setJobGroup("", "")
+    # the status store is filled from the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    stage_rdds = {}  # (job, stage) -> RDD ids, for the stages that ran
+    for job in tracker.getJobIdsForGroup(group):
+        for stage in tracker.getJobInfo(job).stageIds:
+            try:
+                info = store.lastStageAttempt(stage)
+            except Py4JJavaError:
+                continue  # skipped: past spark.ui.retainedStages, these go first
+            if info.status().toString() == "COMPLETE":
+                stage_rdds[job, stage] = set(as_java(info.rddIds()))
+    barriers = set(sc._jsc.getPersistentRDDs().keySet())
+    barriers &= set().union(*stage_rdds.values())
+    assert barriers, "the build filled no barrier"
+    for b in barriers:
+        jobs = {job for (job, _), ids in stage_rdds.items() if b in ids and min(ids) < b}
+        assert len(jobs) == 1, f"barrier rdd {b} computed by jobs {sorted(jobs)}"
 
 
 def test_cross_snapshot_dedup_band_probe_broadcasts(spark):

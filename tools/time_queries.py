@@ -2,9 +2,11 @@
 
 Usage: python tools/time_queries.py [-r REPS] query [query ...]
 Times each query with the noop sink (guide §1.4) over REPS runs
-(default 5), reporting median / min / max wall and the median CPU
+(default 5), reporting median / min / max wall, the median CPU
 seconds of the whole process tree (this process, the driver JVM and its
-Python workers; ``perfbench/stats.tree_cpu_s``) plus box-health stamps
+Python workers; ``perfbench/stats.tree_cpu_s``), the Janino compiles of
+each rep (Spark's ``CodegenMetrics`` compile count, so a query whose
+generated classes miss the codegen cache shows it) plus box-health stamps
 (steal %, mem-stream GB/s) before and after, so a reading taken on a
 degraded box self-identifies. Uses the same session defaults as
 bench.py ($SPARK_GRAFT_SF_DIR, $SPARK_GRAFT_CPUS).
@@ -34,7 +36,7 @@ def main() -> int:
         reps = int(args[1])
         args = args[2:]
     from kmeans_mapreduce_spark import queries as Q
-    from kmeans_mapreduce_spark.session import get_spark
+    from kmeans_mapreduce_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("time-queries")
     registry = Q.registry()
@@ -53,16 +55,18 @@ def main() -> int:
     for name in args:
         fn = registry[name].build
         spark.sparkContext.setJobDescription(f"time: {name}")
-        durs, cpus = [], []
+        durs, cpus, comps = [], [], []
         for _ in range(reps):
             # release the previous rep's checkpoint blocks before
             # timing (same rationale as bench.py's timed())
             gc.collect()
+            k0 = codegen_compiles(spark)
             c0 = tree_cpu_s(os.getpid())
             t0 = time.time()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             durs.append(round(time.time() - t0, 3))
             cpus.append(round(tree_cpu_s(os.getpid()) - c0, 2))
+            comps.append(codegen_compiles(spark) - k0)
         out[name] = {
             "median": round(statistics.median(durs), 3),
             "min": min(durs),
@@ -70,10 +74,11 @@ def main() -> int:
             "reps": durs,
             "cpu_median": round(statistics.median(cpus), 2),
             "cpu_reps": cpus,
+            "compiles": comps,
         }
         print(
             f"[time] {name}: median {out[name]['median']}s"
-            f" cpu {out[name]['cpu_median']}s reps={durs}",
+            f" cpu {out[name]['cpu_median']}s reps={durs} compiles={comps}",
             file=sys.stderr,
         )
     steal = _steal_pct(t0_ticks, _cpu_ticks())
