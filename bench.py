@@ -305,15 +305,17 @@ def _measure(spark, sf_dir: str) -> dict:
     # events_stream_*_replay walls are dominated by stream-start /
     # state-store setup, not operator compute — which distorts the
     # headline total and cross-round comparisons. Each replay records
-    # its last run's micro-batch progress (extensions.REPLAY_PROGRESS);
+    # its last run's micro-batch progress (replays.REPLAY_PROGRESS);
     # the split below derives setup ≈ median wall − batch processing,
     # and the headline is reported BOTH with and without the replay
     # section so totals stay comparable as replays join/leave the set.
+    from kmeans_mapreduce_spark.replays import REPLAY_PROGRESS
+
     replay_names = [n for n in timings if "_stream_" in n and n.endswith("_replay")]
     replay_split: dict[str, dict] = {}
     if replay_names:
         for n in replay_names:
-            p = dict(X.REPLAY_PROGRESS.get(n) or {})
+            p = dict(REPLAY_PROGRESS.get(n) or {})
             if "trigger_exec_ms" in p:
                 p["batch_processing_sec"] = round(p["trigger_exec_ms"] / 1000.0, 3)
                 # the recorded progress is the LAST rep's, so subtract

@@ -22,11 +22,10 @@ from kmeans_mapreduce_spark.operators import decontam as dc
 from kmeans_mapreduce_spark.operators import selection as sel
 from kmeans_mapreduce_spark.operators import sketches as sk
 from kmeans_mapreduce_spark.operators import textops as tx
-from kmeans_mapreduce_spark.sources.loaders import load_table, parquet_schema
+from kmeans_mapreduce_spark.sources.loaders import load_table
 from kmeans_mapreduce_spark.barrier import narrow_barrier
 from kmeans_mapreduce_spark.queries import (
     _R_EVENTAGG,
-    _R_STREAM,
     _R_TEXTSCAN,
     query,
 )
@@ -541,60 +540,6 @@ def q_corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Oracle twins
 # ---------------------------------------------------------------------------
-
-@query(unbenched=_R_STREAM, twin=lambda: _stream_hll_oracle())
-def q_events_stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming SKETCH maintenance under the gate: the bounded events
-    table replayed through ``stream_hll_registers`` — the HLL register
-    table maintained AS A STREAM with constant state (event_types ×
-    256 max-rho rows forever, no watermark, unlike streaming
-    dropDuplicates whose state grows with distinct keys) — and the
-    final complete-mode register table returned. ``max`` is order- and
-    batch-split-insensitive, so the drained state equals the batch
-    registers bit-for-bit and the DuckDB twin is simply the register
-    stage of the ``events_hll_distinct`` oracle. Exact integers; at
-    100 TB this is nightly distinct-count tracking whose shuffle is
-    bounded by the register count, not the event count."""
-    import uuid
-
-    from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts
-    from kmeans_mapreduce_spark.streaming import stream_ops as so
-
-    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = normalize_events_ts(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    regs = so.stream_hll_registers(stream, "user_id", ["event_type"])
-    qname = f"events_stream_hll_{uuid.uuid4().hex[:8]}"
-    q = (
-        regs.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "events_stream_hll_replay: streaming replay did not finish "
-            "in 300 s — refusing to gate a partially-maintained sketch"
-        )
-    return spark.table(qname).select(
-        "event_type",
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("m_j").cast("long").alias("m_j"),
-    )
-
-
-def _stream_hll_oracle() -> str:
-    u = sk.hll_sql("user_id::VARCHAR", "event_type", "events", "sr")
-    return f"""
-WITH {u}
-SELECT g AS event_type, bucket::BIGINT AS bucket, m_j::BIGINT AS m_j
-FROM reg_sr"""
-
 
 def _hll_oracle() -> str:
     u = sk.hll_sql("user_id::VARCHAR", "event_type", "events", "users_hll")

@@ -7,7 +7,7 @@ generated from the SAME Python constants (centroid literals, rounding
 digits, thresholds) so they cannot drift.
 
 Each query is declared once, by one decorator on its builder (here,
-in ``extensions.py`` or in ``analytics.py``)::
+in ``extensions.py``, ``analytics.py`` or ``replays.py``)::
 
     @query(twin=lambda: "SELECT ... FROM lineitem", unbenched=None)
     def q_my_query(spark, sf_dir): ...
@@ -351,6 +351,7 @@ _MODULES = (
     __name__,
     "kmeans_mapreduce_spark.extensions",
     "kmeans_mapreduce_spark.analytics",
+    "kmeans_mapreduce_spark.replays",
 )
 
 
@@ -374,8 +375,8 @@ def query(
 
 def registry() -> dict[str, Query]:
     """Every registered query, in declaration order: this module's
-    builders, then extensions.py's, then analytics.py's, whichever of
-    the modules was imported first."""
+    builders, then extensions.py's, analytics.py's and replays.py's,
+    whichever of the modules was imported first."""
     for module in _MODULES[1:]:
         importlib.import_module(module)
     return dict(

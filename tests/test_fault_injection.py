@@ -32,6 +32,7 @@ _SCRIPT = textwrap.dedent(
     from pyspark import TaskContext
 
     from kmeans_mapreduce_spark import extensions as X
+    from kmeans_mapreduce_spark import replays as R
     from kmeans_mapreduce_spark.operators import kmeans as km
     from kmeans_mapreduce_spark.queries import K4_CENTERS
     from kmeans_mapreduce_spark.session import get_spark
@@ -83,10 +84,10 @@ _SCRIPT = textwrap.dedent(
     out["knn_marks"] = len(os.listdir(marks)) - out["fit_marks"]
 
     done = len(os.listdir(marks))
-    out["ttl"] = rows(X.q_events_stream_ttl_dedup_replay(spark, sf_dir))
+    out["ttl"] = rows(R.q_events_stream_ttl_dedup_replay(spark, sf_dir))
     dedup_ttl = so.stream_dedup_ttl
     so.stream_dedup_ttl = lambda stream, **kw: inject(dedup_ttl(stream, **kw))
-    out["ttl_injected"] = rows(X.q_events_stream_ttl_dedup_replay(spark, sf_dir))
+    out["ttl_injected"] = rows(R.q_events_stream_ttl_dedup_replay(spark, sf_dir))
     out["ttl_marks"] = len(os.listdir(marks)) - done
     spark.stop()
     print(json.dumps(out))

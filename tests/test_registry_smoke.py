@@ -254,45 +254,50 @@ def test_driver_window_samples_every_family():
 
 
 def test_tracked_replays_record_progress_split():
-    """Every bench-TRACKED streaming replay must record its micro-batch
-    progress into extensions.REPLAY_PROGRESS (r12 verdict task 2: the
-    bench derives the setup-vs-compute split from it — a new tracked
+    """Every streaming replay in the registry, bench-tracked or not, is
+    declared in replays.py and records its micro-batch progress into
+    replays.REPLAY_PROGRESS under its own registry name (r12 verdict
+    task 2: the bench derives the setup-vs-compute split from it — a
     replay that skips the instrumentation would silently re-distort the
     headline total with setup wall)."""
     import inspect
+    import re
 
-    from kmeans_mapreduce_spark.queries import (
-        bench_tracked_queries,
-        extension_queries,
+    from kmeans_mapreduce_spark import replays as R
+    from kmeans_mapreduce_spark.queries import bench_tracked_queries, registry
+
+    reg = {n: q.build for n, q in registry().items() if n.endswith("_replay")}
+    assert any(n in reg for n in bench_tracked_queries()), (
+        "replay split exists because replays are benched"
     )
-
-    tracked = [
-        n
-        for n in bench_tracked_queries()
-        if "_stream_" in n and n.endswith("_replay")
-    ]
-    assert tracked, "replay split exists because replays are benched"
-    reg = extension_queries()
-    for n in tracked:
-        fn_src = inspect.getsource(reg[n])
-        assert (
-            "_drain_bounded_replay(" in fn_src
-            or f'_record_replay_progress("{n}"' in fn_src
-        ), f"{n} is bench-tracked but never records its replay progress"
-        # the helper keys progress by the registry name — the literal
-        # must appear in the function, not a diverging alias
-        assert f'"{n}"' in fn_src, n
+    # both harness entry points wait through the one step that records
+    for entry in (R._drain_bounded_replay, R._maintain_replay):
+        assert "_await_replay(" in inspect.getsource(entry), entry
+    assert "_record_replay_progress(name, q)" in inspect.getsource(
+        R._await_replay
+    )
+    for n, build in reg.items():
+        assert build.__module__ == R.__name__, f"{n} is not declared in replays.py"
+        # the harness call carries the registry name as a literal, not
+        # a diverging alias
+        call = (
+            r"(_drain_bounded_replay|_maintain_replay)\("
+            rf'(?:[^()]|\([^()]*\))*?"{n}"'
+        )
+        assert re.search(call, inspect.getsource(build)), (
+            f"{n} never records its replay progress under its own name"
+        )
 
 
 def test_replay_progress_populated_by_cheapest_tracked_replay(spark):
     """Runtime half of the split contract: running a tracked replay
     leaves a well-formed progress record behind."""
-    from kmeans_mapreduce_spark import extensions as X
+    from kmeans_mapreduce_spark import replays as R
 
-    X.REPLAY_PROGRESS.pop("events_stream_enrich_replay", None)
-    df = X.q_events_stream_enrich_replay(spark, SF)
+    R.REPLAY_PROGRESS.pop("events_stream_enrich_replay", None)
+    df = R.q_events_stream_enrich_replay(spark, SF)
     assert df.count() >= 0
-    p = X.REPLAY_PROGRESS["events_stream_enrich_replay"]
+    p = R.REPLAY_PROGRESS["events_stream_enrich_replay"]
     assert set(p) == {
         "n_batches", "n_data_batches", "trigger_exec_ms", "add_batch_ms",
     }

@@ -1611,12 +1611,12 @@ def test_stream_join_outer_replay_split_invariant(spark, tmp_path_factory):
     (matched + deferred-null) sets, because ordered batches keep every
     row ahead of the watermark and the null set is fixed by the FINAL
     watermark only."""
-    from kmeans_mapreduce_spark import extensions as X
+    from kmeans_mapreduce_spark import replays as R
 
     sf = "/root/testdata/sf0.001"
     got = {}
     for n_files in (2, 3):
-        split = X._write_event_time_ordered_split(spark, sf, n_files=n_files)
+        split = R._write_event_time_ordered_split(spark, sf, n_files=n_files)
         stream = (
             spark.readStream.schema(
                 "user_id LONG, event_type STRING, event_id LONG, "
@@ -1628,8 +1628,8 @@ def test_stream_join_outer_replay_split_invariant(spark, tmp_path_factory):
         )
         joined = so.stream_stream_range_join(
             stream, "click", "purchase",
-            horizon_sec=X.RANGE_HORIZON_SEC,
-            watermark_sec=X.STREAM_WATERMARK_SEC,
+            horizon_sec=R.RANGE_HORIZON_SEC,
+            watermark_sec=R.STREAM_WATERMARK_SEC,
             join_type="left_outer",
         )
         name = f"outer_split_{n_files}"
@@ -1659,12 +1659,12 @@ def test_store_bound_replays_sized_from_input(spark, monkeypatch, name):
     reports a single shuffle partition in its progress. The enrich
     replay is stateless (broadcast stream-static join), so it reports no
     state operator and only the drain's count is checked."""
-    from kmeans_mapreduce_spark import extensions as X
+    from kmeans_mapreduce_spark import replays as R
     from kmeans_mapreduce_spark import queries
 
     seen = {}
-    drain = X._drain_bounded_replay
-    record = X._record_replay_progress
+    drain = R._drain_bounded_replay
+    record = R._record_replay_progress
 
     def spy_drain(*args, **kwargs):
         seen["partitions"] = kwargs.get("shuffle_partitions")
@@ -1674,8 +1674,8 @@ def test_store_bound_replays_sized_from_input(spark, monkeypatch, name):
         seen["progress"] = [p for p in q.recentProgress if p]
         record(qname, q)
 
-    monkeypatch.setattr(X, "_drain_bounded_replay", spy_drain)
-    monkeypatch.setattr(X, "_record_replay_progress", spy_record)
+    monkeypatch.setattr(R, "_drain_bounded_replay", spy_drain)
+    monkeypatch.setattr(R, "_record_replay_progress", spy_record)
     df = queries.extension_queries()[name](spark, SF)
     assert df.count() > 0
     assert seen["partitions"] == 1
@@ -1760,7 +1760,7 @@ def test_stream_join_outer_single_type_vintage_emits_nothing(
     import duckdb
     import pandas as pd
 
-    from kmeans_mapreduce_spark import extensions as X
+    from kmeans_mapreduce_spark import replays as R
     from kmeans_mapreduce_spark import queries
 
     out = str(tmp_path_factory.mktemp("ss_outer_single"))
@@ -1773,7 +1773,7 @@ def test_stream_join_outer_single_type_vintage_emits_nothing(
             "value": [0.0, 0.0],
         }
     ).to_parquet(f"{out}/events.parquet")
-    got = X.q_events_stream_join_outer_replay(spark, out).collect()
+    got = R.q_events_stream_join_outer_replay(spark, out).collect()
     assert got == [], got
     con = duckdb.connect()
     con.sql(f"CREATE VIEW events AS FROM '{out}/events.parquet'")
@@ -1781,3 +1781,58 @@ def test_stream_join_outer_single_type_vintage_emits_nothing(
         queries.extension_oracle_sql()["events_stream_join_outer_replay"]
     ).fetchall()
     assert twin == [], twin
+
+
+def test_memory_sink_replays_leave_no_temp_view(spark):
+    """The drain drops its memory sink's temp view once the returned
+    frame is analyzed, so building replays leaves no view (and none of
+    its rows) registered in the session; the frames still read what was
+    drained."""
+    from kmeans_mapreduce_spark import queries
+
+    def temp_views():
+        return sorted(
+            t.name for t in spark.catalog.listTables() if t.isTemporary
+        )
+
+    before = temp_views()
+    for _ in range(2):
+        for name in (
+            "events_stream_native_dedup_replay",
+            "events_stream_enrich_replay",
+        ):
+            assert queries.registry()[name].build(spark, SF).count() > 0
+    assert temp_views() == before
+
+
+@pytest.mark.parametrize(
+    "name, prefix",
+    [
+        ("events_stream_rollup_replay", "rollup_state_"),
+        ("events_stream_m4_replay", "m4_state_"),
+    ],
+)
+def test_maintained_replays_remove_their_state_dir(
+    spark, monkeypatch, tmp_path, name, prefix
+):
+    """The foreachBatch maintainers keep their state in a parquet table
+    under a ``mkdtemp`` work dir; the replay materializes that small
+    state and removes the dir, so repeated runs leave nothing in
+    ``TMPDIR`` and the rows still equal the DuckDB twin."""
+    import tempfile
+
+    import duckdb
+
+    from kmeans_mapreduce_spark import queries
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    q = queries.registry()[name]
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS FROM '{SF}/events.parquet'")
+    want = sorted(con.sql(q.twin()).fetchall())
+    for _ in range(2):
+        got = sorted(tuple(r) for r in q.build(spark, SF).collect())
+        assert got == want
+    assert tempfile.gettempdir() == str(tmp_path)
+    assert not list(tmp_path.glob(f"{prefix}*"))

@@ -3,6 +3,10 @@ batch-mode applyInPandas over the same 7,500 key groups.
 
 Isolates where the per-key cost lives (r15): the state API's per-key
 Arrow/protocol floor, the Python fold, or the streaming harness.
+
+Usage: python tools/replay_floor_probe.py [partitions]
+The streaming legs drain at ``partitions`` shuffle partitions, by
+default the count the gated TTL replays use (the session's cores).
 """
 
 from __future__ import annotations
@@ -18,12 +22,14 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from kmeans_mapreduce_spark.session import get_spark
+from kmeans_mapreduce_spark.replays import (
+    ONE_BATCH,
+    _drain_bounded_replay,
+    _keyed_partitions,
+    _stream,
+)
 from kmeans_mapreduce_spark.sources.loaders import normalize_events_ts, parquet_schema
 from kmeans_mapreduce_spark.streaming import stream_ops as so
-from kmeans_mapreduce_spark.extensions import (
-    REPLAY_KEYED_PARTITIONS,
-    _drain_bounded_replay,
-)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -31,14 +37,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> int:
     spark = get_spark("replay-floor-probe")
     raw_schema = parquet_schema(spark, f"{SF_DIR}/events.parquet")
+    parts = int(sys.argv[1]) if len(sys.argv) > 1 else _keyed_partitions(spark)
 
     def stream():
-        return normalize_events_ts(
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .option("maxFilesPerTrigger", "1000000")
-            .parquet(SF_DIR)
-        )
+        return _stream(spark, SF_DIR, max_files=ONE_BATCH)
 
     def timed(name, fn, reps=3):
         durs = []
@@ -48,13 +50,13 @@ def main() -> int:
             durs.append(round(time.time() - t0, 3))
         print(f"[probe] {name}: {sorted(durs)[len(durs)//2]}s {durs}", file=sys.stderr)
 
-    # 1. the real operator through the replay harness
-    # r16: probe at the keyed-partition count the gated TTL replays
-    # now use (per-key Python work parallelizes; 8 left 24 cores idle)
+    # 1. the real operator through the replay harness, by default at
+    # the keyed-partition count the gated TTL replays use (per-key
+    # Python work parallelizes; 8 left 24 of 32 cores idle in r16)
     timed("full_ttl_replay", lambda: _drain_bounded_replay(
         spark, so.stream_dedup_ttl(stream(), watermark_sec=600),
         "probe_full", "update",
-        shuffle_partitions=REPLAY_KEYED_PARTITIONS).count())
+        shuffle_partitions=parts).count())
 
     # 2. a no-op state fold over the same key groups (emit nothing,
     # touch no state): the state API's per-key floor
@@ -76,7 +78,7 @@ def main() -> int:
             "last_seen BIGINT", "update", "NoTimeout")
         _drain_bounded_replay(
             spark, out, "probe_noop", "update",
-            shuffle_partitions=REPLAY_KEYED_PARTITIONS).count()
+            shuffle_partitions=parts).count()
 
     timed("noop_state_fold", noop_replay)
 

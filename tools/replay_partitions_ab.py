@@ -6,8 +6,9 @@ work inside the stateful stage — with REPLAY_SHUFFLE_PARTITIONS=8
 join replay) only 8 of 32 cores process the ~7.5k keys. This probe
 alternates partition counts inside ONE session (so a box wave hits all
 arms) and reports median wall + summed triggerExecution per arm, with
-health stamps. Each arm sets ``extensions.REPLAY_KEYED_PARTITIONS``,
-the value both TTL replay call sites read when they run.
+health stamps. Each arm replaces ``replays._keyed_partitions``, the
+function both TTL replays call for their shuffle-partition count when
+they run (the session's core count otherwise).
 
 Usage: python tools/replay_partitions_ab.py [p1 p2 ...reps-per-arm interleaved]
 Default plan: 8 32 8 32 16 8 32 16.
@@ -32,15 +33,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> int:
     plan = [int(a) for a in sys.argv[1:]] or [8, 32, 8, 32, 16, 8, 32, 16]
 
-    import kmeans_mapreduce_spark.extensions as X
+    import kmeans_mapreduce_spark.replays as R
     from kmeans_mapreduce_spark.session import get_spark
 
     spark = get_spark("replay-partitions-ab")
 
     def set_parts(p: int) -> None:
-        # both TTL replays pass shuffle_partitions=REPLAY_KEYED_PARTITIONS
-        # explicitly, reading the module global at call time
-        X.REPLAY_KEYED_PARTITIONS = p
+        # both TTL replays pass shuffle_partitions=_keyed_partitions(spark),
+        # looking the module function up at call time
+        R._keyed_partitions = lambda spark: p
 
     # warm python workers + parquet footers like bench.py
     spark.range(
@@ -49,8 +50,8 @@ def main() -> int:
     spark.read.parquet(f"{SF_DIR}/events.parquet").count()
 
     queries = {
-        "ttl_v1": ("events_stream_ttl_dedup_replay", X.q_events_stream_ttl_dedup_replay),
-        "ttl_tws": ("events_stream_ttl_dedup_tws_replay", X.q_events_stream_ttl_dedup_tws_replay),
+        "ttl_v1": ("events_stream_ttl_dedup_replay", R.q_events_stream_ttl_dedup_replay),
+        "ttl_tws": ("events_stream_ttl_dedup_tws_replay", R.q_events_stream_ttl_dedup_tws_replay),
     }
     walls: dict[str, dict[int, list[float]]] = defaultdict(lambda: defaultdict(list))
     trig: dict[str, dict[int, list[float]]] = defaultdict(lambda: defaultdict(list))
@@ -64,7 +65,7 @@ def main() -> int:
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
             walls[qn][p].append(round(wall, 3))
-            prog = X.REPLAY_PROGRESS.get(name) or {}
+            prog = R.REPLAY_PROGRESS.get(name) or {}
             trig[qn][p].append(round(prog.get("trigger_exec_ms", 0) / 1000.0, 3))
             print(
                 f"[ab] {qn} p={p}: wall {wall:.2f}s trigger "

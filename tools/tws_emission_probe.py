@@ -27,6 +27,7 @@ Writes tools/tws_emission_probe_r{N}.json.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -57,58 +58,37 @@ def make_input(out_dir: str, n_keys: int, events_per_key: int, gap: int) -> int:
 
 
 def run_once(spark, src: str, api: str, ttl: int, wm: int, name: str):
+    from kmeans_mapreduce_spark.replays import (
+        ONE_BATCH,
+        ROCKSDB_PROVIDER,
+        _activate_pbshim,
+        _await_replay,
+        _scoped_conf,
+        _stream,
+    )
     from kmeans_mapreduce_spark.streaming import stream_ops as so
 
-    stream = (
-        spark.readStream.schema(
-            "user_id LONG, event_type STRING, event_id LONG, ts LONG"
-        )
-        .option("maxFilesPerTrigger", "1000000")
-        .parquet(src)
+    stream = _stream(
+        spark, src, "*.parquet", max_files=ONE_BATCH,
+        schema="user_id LONG, event_type STRING, event_id LONG, ts LONG",
     )
-    if api == "tws":
-        from kmeans_mapreduce_spark.extensions import _activate_pbshim
-
-        restore = _activate_pbshim(spark)
-        prov = "spark.sql.streaming.stateStore.providerClass"
-        prov_before = spark.conf.get(prov, None)
-        spark.conf.set(
-            prov,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
+    with contextlib.ExitStack() as scope:
+        if api == "tws":
+            scope.enter_context(_activate_pbshim(spark))
+            scope.enter_context(_scoped_conf(spark, ROCKSDB_PROVIDER))
             out = so.stream_dedup_ttl_tws(stream, ttl_sec=ttl, watermark_sec=wm)
-            t0 = time.time()
-            q = (
-                out.writeStream.format("memory").queryName(name)
-                .outputMode("update").trigger(availableNow=True).start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError(f"{name}: drain did not finish in 600 s")
-            wall = time.time() - t0
-        finally:
-            restore()
-            if prov_before is None:
-                spark.conf.unset(prov)
-            else:
-                spark.conf.set(prov, prov_before)
-    else:
-        out = so.stream_dedup_ttl(stream, ttl_sec=ttl, watermark_sec=wm)
+        else:
+            out = so.stream_dedup_ttl(stream, ttl_sec=ttl, watermark_sec=wm)
         t0 = time.time()
-        q = (
+        _await_replay(
             out.writeStream.format("memory").queryName(name)
-            .outputMode("update").trigger(availableNow=True).start()
+            .outputMode("update").trigger(availableNow=True).start(),
+            name,
+            600,
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(f"{name}: drain did not finish in 600 s")
         wall = time.time() - t0
     n = spark.table(name).count()
-    spark.catalog.dropTempView(name) if name in [
-        t.name for t in spark.catalog.listTables()
-    ] else None
+    spark.catalog.dropTempView(name)
     return wall, n
 
 
