@@ -4487,9 +4487,9 @@ def q_kmeans_nd_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmeans_fit_fixed): fixed init from the ND_CENTROID_IDS rows,
     exactly 2 iterations (tol=0.0), per-iteration HALF_UP rounding to
     6 digits — so the unrolled 2-iteration DuckDB twin reproduces the
-    REAL driver loop (numpy matmul partials, keep-policy repair,
-    convergence bookkeeping) value-for-value. Output long format
-    (cid, dim_idx, c_val, n)."""
+    REAL driver loop (``kmeans.lloyd_step_arrow`` partials,
+    keep-policy repair, convergence bookkeeping) value-for-value.
+    Output long format (cid, dim_idx, c_val, n)."""
     emb = load_table(spark, sf_dir, "embeddings")
     pts = emb.select(
         F.col("vec_id").alias("point_id"),
@@ -4514,14 +4514,14 @@ def q_kmeans_nd_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ND_LARGE_K = 256  # production-K gate for the Arrow matmul Lloyd step
+ND_LARGE_K = 256  # production-K gate for the Arrow Lloyd step
 
 
 @query(twin=lambda: _kmeans_nd_fit_large_sql())
 def q_kmeans_nd_fit_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-K n-D fit under the hash gate (r8 verdict task 4):
-    K=256 × d=64, the production-K regime of the Arrow matmul step
-    (``kmeans_nd.lloyd_step_nd``), whose float sums are pinned here
+    K=256 × d=64, the production-K regime of the Arrow Lloyd step
+    (``kmeans.lloyd_step_arrow``), whose float sums are pinned here
     through the rounded means. Same determinism discipline as
     ``kmeans_nd_fit_fixed``: init = first K corpus rows by vec_id,
     exactly 2 iterations (tol=0.0), per-iteration HALF_UP rounding to

@@ -43,6 +43,7 @@ is worth revisiting for many-iteration fits.
 from __future__ import annotations
 
 import random
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -78,9 +79,9 @@ def normalize_partitions(df: DataFrame) -> DataFrame:
     partial agg loses to per-task overhead: on the Arrow step, 64-way
     measured 2.4× slower than 8-way; a quarter of the cores is the
     measured sweet spot). ONE shuffle, amortized over all iterations.
-    Shared by the 2-D ``fit`` (Catalyst step), the n-D ``fit_nd`` and
-    ``similarity.fit_pq_codebooks`` (Arrow steps) — retune here, not
-    per-copy."""
+    Shared by the 2-D ``fit`` (Catalyst step), the n-D ``fit_nd``
+    (:func:`lloyd_step_arrow`) and ``similarity.fit_pq_codebooks``
+    (its fused per-subspace Arrow pass) — retune here, not per-copy."""
     spark_ctx = df.sparkSession.sparkContext
     target = spark_ctx.defaultParallelism * 2
     floor = max(2, spark_ctx.defaultParallelism // 4)
@@ -132,6 +133,46 @@ def assign(points: DataFrame, centers: list[Center]) -> DataFrame:
         .selectExpr(*keep, f"{min_expr} AS min_d2", *d)
         .selectExpr(*keep, "min_d2", case_expr)
     )
+
+
+def seq_argmin_d2(X, C):
+    """Nearest row of ``C`` for each row of ``X``: the engine's one numpy
+    nearest-centroid kernel. Squared distances accumulate
+    DIM-SEQUENTIALLY in float64 (``acc += (x_d − c_d)²`` in index
+    order — the op sequence of the n-D twins'
+    ``list_sum(list_transform(...))`` fold, and at d=2
+    ``(0 + dx²) + dy²``, which equals :func:`assign`'s ``dx² + dy²``
+    bit for bit); the winner is ``argmin``'s first minimum (ties to the
+    lowest row of ``C``, mapper.py:43). A nan distance never wins, as
+    in :func:`assign` and DuckDB, which order NaN above every double:
+    only a non-finite center can make one, so the centers are checked
+    once and finite ones keep the pass to one fold. Returns
+    ``(winner_idx, min_d2)`` arrays."""
+    import numpy as np
+
+    acc = np.zeros((len(X), len(C)))
+    diff = np.empty_like(acc)  # one scratch matrix, reused per dimension
+    for d in range(C.shape[1]):
+        np.subtract(X[:, d, None], C[None, :, d], out=diff)
+        diff *= diff
+        acc += diff
+    if not np.isfinite(C).all():
+        acc[np.isnan(acc)] = np.inf
+    w = acc.argmin(axis=1)
+    return w, acc[np.arange(len(X)), w]
+
+
+def accumulate_nearest(X, C, n, vsum):
+    """Score ``X`` against ``C`` with :func:`seq_argmin_d2` and add each
+    row into its winner's count ``n`` and coordinate sum ``vsum``, in
+    place (rows in order, so the sums do not depend on how a partition
+    splits into batches). Returns the kernel's ``(winner_idx, min_d2)``."""
+    import numpy as np
+
+    w, d2 = seq_argmin_d2(X, C)
+    n += np.bincount(w, minlength=len(C))
+    np.add.at(vsum, w, X)
+    return w, d2
 
 
 # ---------------------------------------------------------------------------
@@ -214,20 +255,17 @@ def kmpp_scores(points: DataFrame, cands: list[tuple[float, float]]) -> DataFram
     that many candidates is one huge generated method — measured 8×
     slower under whole-stage codegen than interpreted (26.0 s vs
     3.2 s for one 81-candidate D² job at sf0.1 on 4 cores).
-    numpy runs the same ``(x−cx)*(x−cx) + (y−cy)*(y−cy)`` float64 op
-    sequence as :func:`assign`, so ``d2`` equals its ``min_d2`` bit for
-    bit; ``fmin`` skips NaN like Spark's ordering does."""
+    ``d2`` is :func:`seq_argmin_d2`'s ``min_d2``, so it equals
+    :func:`assign`'s bit for bit."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    cx = np.array([c[0] for c in cands], dtype=np.float64)
-    cy = np.array([c[1] for c in cands], dtype=np.float64)
+    C = np.array(cands, dtype=np.float64)
 
     def score(batches):
         for pdf in batches:
-            dx = pdf["x"].to_numpy(dtype=np.float64)[:, None] - cx[None, :]
-            dy = pdf["y"].to_numpy(dtype=np.float64)[:, None] - cy[None, :]
-            yield pdf.assign(d2=np.fmin.reduce(dx * dx + dy * dy, axis=1))
+            _, d2 = seq_argmin_d2(pdf[["x", "y"]].to_numpy(np.float64), C)
+            yield pdf.assign(d2=d2)
 
     schema = StructType([*points.schema.fields, StructField("d2", DoubleType())])
     return points.mapInPandas(score, schema)
@@ -284,8 +322,9 @@ def init_kmeans_parallel(
     per-round ``rand``. Candidates (≈ rounds·l total, driver-tiny) are
     weighted by their nearest-point counts — the cluster sizes of one
     :func:`lloyd_step_arrow` pass — and reduced to k with a
-    deterministic weighted Lloyd on the driver. O(rounds) passes over
-    the data, exactly like MLlib's implementation of the same paper.
+    deterministic weighted Lloyd on the driver (scored by
+    :func:`seq_argmin_d2`). O(rounds) passes over the data, exactly
+    like MLlib's implementation of the same paper.
     """
     import numpy as np
 
@@ -313,9 +352,7 @@ def init_kmeans_parallel(
         cands.extend((row["x"], row["y"]) for row in new)
 
     # weights: how many points each candidate wins
-    _, sizes, _ = lloyd_step_arrow(
-        pts, [(i, cx, cy) for i, (cx, cy) in enumerate(cands)]
-    )
+    _, sizes, _ = lloyd_step_arrow(pts, list(enumerate(cands)))
     weights = np.zeros(len(cands))
     for cid, n in sizes.items():
         weights[cid] = n
@@ -333,8 +370,7 @@ def init_kmeans_parallel(
     top = np.argsort(-weights, kind="stable")[:k]
     centers = arr[top].copy()
     for _ in range(20):
-        d2 = ((arr[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        a = d2.argmin(axis=1)
+        a, _ = seq_argmin_d2(arr, centers)
         moved = 0.0
         for j in range(k):
             m = a == j
@@ -400,107 +436,72 @@ class KMeansResult:
 
 
 def lloyd_step_arrow(
-    points_xy: DataFrame, centers: list[Center]
-) -> tuple[dict[int, tuple[float, float]], dict[int, int], float]:
-    """One Lloyd iteration via Arrow-vectorized partial aggregation.
+    points: DataFrame, centers: list[tuple[int, Sequence[float]]]
+) -> tuple[dict[int, tuple[float, ...]], dict[int, int], float]:
+    """One Lloyd iteration via Arrow-vectorized partial aggregation, for
+    every dimension: the n-D ``fit_nd``, the k-means|| candidate weights
+    and streaming mini-batch k-means.
 
-    Same contract as :func:`lloyd_step_sql`, different physical
-    strategy: ``mapInPandas`` emits K partial-sum rows per partition
-    (numpy argmin over a (batch × K) distance matrix), merged on the
-    driver (through a K-row groupBy above 1024 partitions).
-    Centers ride in the Python closure, never in plan text, so the plan
-    keeps one width however many centers there are: this is the step
-    for the k-means|| candidate weights and for streaming k-means. It
-    is not ``fit``'s step: its per-row Python cost made an 8 M-point
-    fit ~6× the CPU of the Catalyst step. Distances use the same
-    (x−cx)²+(y−cy)² float64 op order; argmin ties break to the lowest
-    index = lowest cid (reference mapper.py:43 first-wins).
+    Same contract as :func:`lloyd_step_sql` — ``(means, sizes, wssse)``
+    — over ``(cid, coords)`` centers; means are tuples. Each point is
+    the row of the frame's ``vec`` array column, or ``(x, y)`` when
+    there is no ``vec``. ``mapInPandas`` folds each partition through
+    :func:`accumulate_nearest` and emits one ``(cid, n, sse, vsum)``
+    row per live cluster; the driver merges the rows in collect
+    (partition) order, so float sums are deterministic per layout, and
+    sees O(partitions × K) rows however large N is. Centers ride in the
+    Python closure, never in plan text, so the plan keeps one width
+    however many centers there are. It is not ``fit``'s step: its
+    per-row Python cost made an 8 M-point fit ~6× the CPU of the
+    Catalyst step.
     """
     import numpy as np
     import pandas as pd
 
-    ordered = sorted((int(c), float(x), float(y)) for c, x, y in centers)
-    cids = [c for c, _, _ in ordered]
-    cx = np.array([x for _, x, _ in ordered])
-    cy = np.array([y for _, _, y in ordered])
-    k = len(ordered)
-    # nan-guard is only needed when a center is non-finite; keep the
-    # hot loop one pass
-    guard_nan = not (np.isfinite(cx).all() and np.isfinite(cy).all())
+    ordered = sorted((int(c), [float(v) for v in coords]) for c, coords in centers)
+    cids = np.array([c for c, _ in ordered], dtype=np.int32)
+    C = np.array([v for _, v in ordered], dtype=np.float64)
+    k, dim = C.shape
+    vec = "vec" in points.columns
 
     def partials(batches):
-        sx = np.zeros(k)
-        sy = np.zeros(k)
         n = np.zeros(k, dtype=np.int64)
-        sse = np.zeros(k)  # per-cluster, so the groupBy merge is exact
+        sse = np.zeros(k)
+        vsum = np.zeros((k, dim))
         for pdf in batches:
-            x = pdf["x"].to_numpy()
-            y = pdf["y"].to_numpy()
-            dx = x[:, None] - cx[None, :]
-            dy = y[:, None] - cy[None, :]
-            d2 = dx * dx + dy * dy
-            if guard_nan:
-                # a nan center (or inf−inf) yields nan distances;
-                # np.argmin would return the nan column AND the nan
-                # partial would cross the Arrow boundary as NULL
-                # (pandas nan_as_null), crashing the driver merge. A
-                # non-finite center simply never wins: nan → +inf
-                # before the argmin.
-                d2 = np.where(np.isnan(d2), np.inf, d2)
-            a = d2.argmin(axis=1)
-            n += np.bincount(a, minlength=k)
-            sx += np.bincount(a, weights=x, minlength=k)
-            sy += np.bincount(a, weights=y, minlength=k)
-            sse += np.bincount(a, weights=d2[np.arange(len(x)), a], minlength=k)
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        yield pd.DataFrame(
-            {
-                "pid": np.full(k, pid, dtype=np.int32),
-                "cid": np.arange(k, dtype=np.int32),
-                "sx": sx,
-                "sy": sy,
-                "n": n,
-                "sse": sse,
-            }
-        )
-
-    part_df = points_xy.mapInPandas(
-        partials, "pid INT, cid INT, sx DOUBLE, sy DOUBLE, n LONG, sse DOUBLE"
-    )
-    if points_xy.rdd.getNumPartitions() <= 1024:
-        # Single-stage job: P×K partial rows come straight to the
-        # driver (MLlib's treeAggregate endgame) — no shuffle at all.
-        # Merge in pid order so float sums are deterministic per layout.
-        rows = sorted(part_df.collect(), key=lambda r: (r["pid"], r["cid"]))
-    else:
-        # Cluster-scale fallback: merge partials through a K-row
-        # groupBy so the driver sees K rows, not P×K.
-        rows = (
-            part_df.groupBy("cid")
-            .agg(
-                F.sum("sx").alias("sx"),
-                F.sum("sy").alias("sy"),
-                F.sum("n").alias("n"),
-                F.sum("sse").alias("sse"),
+            if not len(pdf):
+                continue
+            if vec:
+                X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+            else:
+                X = pdf[["x", "y"]].to_numpy(np.float64)
+            w, d2 = accumulate_nearest(X, C, n, vsum)
+            sse += np.bincount(w, weights=d2, minlength=k)
+        live = n > 0
+        if live.any():
+            yield pd.DataFrame(
+                {
+                    "cid": cids[live],
+                    "n": n[live],
+                    "sse": sse[live],
+                    "vsum": [v.tolist() for v in vsum[live]],
+                }
             )
-            .collect()
-        )
-    import collections
 
-    acc = collections.defaultdict(lambda: [0.0, 0.0, 0, 0.0])
+    rows = (
+        (points.select("vec") if vec else points.select("x", "y"))
+        .mapInPandas(partials, "cid INT, n LONG, sse DOUBLE, vsum ARRAY<DOUBLE>")
+        .collect()
+    )
+    sums: dict[int, np.ndarray] = {}
+    sizes: dict[int, int] = {}
+    f_cur = 0.0
     for r in rows:
-        a = acc[r["cid"]]
-        a[0] += r["sx"]
-        a[1] += r["sy"]
-        a[2] += r["n"]
-        a[3] += r["sse"]
-    means = {
-        cids[c]: (a[0] / a[2], a[1] / a[2]) for c, a in acc.items() if a[2] > 0
-    }
-    sizes = {cids[c]: int(a[2]) for c, a in acc.items() if a[2] > 0}
-    f_cur = float(sum(a[3] for a in acc.values()))
+        c = r["cid"]
+        sums[c] = sums.get(c, np.zeros(dim)) + np.array(r["vsum"])
+        sizes[c] = sizes.get(c, 0) + r["n"]
+        f_cur += r["sse"]
+    means = {c: tuple((s / sizes[c]).tolist()) for c, s in sums.items()}
     return means, sizes, f_cur
 
 

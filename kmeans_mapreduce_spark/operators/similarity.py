@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from kmeans_mapreduce_spark.functions.distance import cosine_sim, dot_nd, norm_nd
 from kmeans_mapreduce_spark.functions.text import ieee_round_pos, ieee_round_signed
 from kmeans_mapreduce_spark.barrier import narrow_barrier
-from kmeans_mapreduce_spark.operators.kmeans_nd import seq_argmin_d2
+from kmeans_mapreduce_spark.operators.kmeans import accumulate_nearest, seq_argmin_d2
 
 NUM_PLANES = 8
 DIM = 64
@@ -302,8 +302,8 @@ def build_ivf_index(
     DIM-ORDER-PRESERVING numpy folds — every accumulation runs in
     index order, so d2, the argmin, and nv are bit-identical to the
     twins' ``list_sum(list_transform(...))`` folds (the cell comes
-    from :func:`kmeans_nd.seq_argmin_d2`, the engine's one n-D argmin
-    kernel).
+    from :func:`kmeans.seq_argmin_d2`, the engine's one numpy
+    nearest-centroid kernel).
 
     ``carry_cols``: extra metadata columns stored ALONGSIDE the index
     rows (the vector-DB layout for filtered search — predicates prune
@@ -650,9 +650,11 @@ def fit_pq_codebooks(
 
     Scale shape (round 7 — fused): ONE ``mapInPandas`` corpus pass per
     Lloyd iteration emits suffstats for ALL m subspaces side by side
-    (``(subspace, code, n, vsum)``, ≤ m·n_codes rows per partition) —
-    the same fusion ``lloyd_step_arrow`` applies across K, applied
-    across subspaces. Round 6 ran m sequential ``fit_nd`` loops =
+    (``(subspace, code, n, vsum)``, ≤ m·n_codes rows per partition):
+    each subspace scores and accumulates through
+    ``kmeans.accumulate_nearest`` — the fold ``lloyd_step_arrow`` runs
+    over the whole vector, so codes follow the twins' dim-sequential
+    distance order. Round 6 ran m sequential ``fit_nd`` loops =
     m·iters corpus passes where ``iters`` suffice; at 100 TB that is
     m× the necessary training I/O. Training cost is O(iters · corpus)
     and independent of query volume — train once, persist, serve.
@@ -731,7 +733,6 @@ def fit_pq_codebooks(
             CB = np.array(books, dtype=np.float64)  # m × n_codes × sub
 
             def suffstats(batches, _CB=CB, _C=C, _CN=CN):
-                sq_c = (_CB ** 2).sum(axis=2)  # m × n_codes
                 n_acc = np.zeros((m, n_codes), dtype=np.int64)
                 vsum_acc = np.zeros((m, n_codes, sub))
                 seen = False
@@ -751,14 +752,12 @@ def fit_pq_codebooks(
                     if _C is not None:
                         x = x - _CN[cell]
                     for mi in range(m):
-                        xm = np.ascontiguousarray(
-                            x[:, mi * sub : (mi + 1) * sub]
+                        accumulate_nearest(
+                            x[:, mi * sub : (mi + 1) * sub],
+                            _CB[mi],
+                            n_acc[mi],
+                            vsum_acc[mi],
                         )
-                        # argmin_c |x|² − 2x·c + |c|² (|x|² const per row)
-                        scores = -2.0 * (xm @ _CB[mi].T) + sq_c[mi]
-                        code = scores.argmin(axis=1)
-                        n_acc[mi] += np.bincount(code, minlength=n_codes)
-                        np.add.at(vsum_acc[mi], code, xm)
                 if seen:
                     mi_ix, code_ix = np.nonzero(n_acc > 0)
                     yield pd.DataFrame(

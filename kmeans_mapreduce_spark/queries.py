@@ -775,8 +775,8 @@ def q_kmeans_fit_centers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lloyd_slack(h: float) -> float:
     """Reassociation allowance for cross-plan WSSSE comparisons: the
     fit loop's aggregate, the verification pass's aggregate, and (n-D)
-    the matmul partials all sum the same per-point terms in different
-    orders; 1e-9 relative is ~100× above the measured float64
+    the Arrow step's per-partition partials all sum the same per-point
+    terms in different orders; 1e-9 relative is ~100× above the measured float64
     reassociation noise and ~9 orders below any real Lloyd-descent
     violation."""
     return abs(h) * 1e-9 + 1e-6

@@ -661,11 +661,11 @@ def stream_kmeans_minibatch(
     decay: float = 1.0,
 ):
     """STREAMING mini-batch k-means (Bottou–Bengio style): every
-    micro-batch assigns its points to the current centers (the same
-    Arrow partial-sum pass the batch Lloyd loop uses) and moves each
-    center to the weighted mean of its history and the batch — the
-    continuous model-maintenance loop a production clustering service
-    runs.
+    micro-batch assigns its points to the current centers (the Arrow
+    partial-sum step ``kmeans.lloyd_step_arrow``, which the n-D batch
+    fit also runs) and moves each center to the weighted mean of its
+    history and the batch — the continuous model-maintenance loop a
+    production clustering service runs.
 
     Physical shape: ``foreachBatch`` → one job per micro-batch emitting
     K partial rows per partition; centers live on the DRIVER (exactly
@@ -692,7 +692,7 @@ def stream_kmeans_minibatch(
         if not batch_df.take(1):
             return
         means, sizes, _sse = lloyd_step_arrow(
-            batch_df.select("x", "y"), state.centers
+            batch_df, [(c, (x, y)) for c, x, y in state.centers]
         )
         new_centers = []
         for cid, cx, cy in state.centers:

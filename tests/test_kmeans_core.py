@@ -69,7 +69,10 @@ def test_lloyd_step_matches_golden(spark, f4, step):
     count toward cid 0."""
     extra = spark.createDataFrame([(99, 6.0, 6.0)], POINTS_2D)
     pts = f4.unionByName(extra).select("x", "y")
-    means, sizes, sse = getattr(km, step)(pts, F4_CENTERS)
+    centers = F4_CENTERS
+    if step == "lloyd_step_arrow":
+        centers = [(c, (x, y)) for c, x, y in F4_CENTERS]
+    means, sizes, sse = getattr(km, step)(pts, centers)
     assert means == {0: (2.0, 2.0), 1: (11.0, 11.0)}
     assert sizes == {0: 5, 1: 4}
     assert sse == 8 * 2.0 + 50.0
@@ -259,28 +262,94 @@ def test_elbow_sweep_wssse_monotone_in_k(spark):
     assert ws[0] > ws[1] > ws[2]
 
 
-def test_lloyd_step_sql_nonfinite_center_falls_back(spark, monkeypatch):
-    """nan/inf centers are CAST('nan'/'inf' AS DOUBLE) literals in the
-    step's own Catalyst plan: no Arrow step runs, nothing crashes, and
-    every point lands on the one finite center (Spark orders NaN above
-    every double, and an inf center is infinitely far)."""
-    from kmeans_mapreduce_spark.operators import kmeans as km
+@pytest.mark.parametrize("via", ["lloyd_step_sql", "assign_nd", "arrow_d2", "arrow_d64"])
+def test_nonfinite_center_never_wins(spark, monkeypatch, via):
+    """A nan center never wins, whichever path scores it: the SQL step
+    (nan/inf centers are CAST('nan'/'inf' AS DOUBLE) literals in its
+    own Catalyst plan, and no Arrow step runs), the n-D assignment and
+    the Arrow step at d=2 and d=64. Nothing crashes and all 3 points
+    land on the one finite center (Spark and DuckDB order NaN above
+    every double; an inf center is infinitely far)."""
+    import collections
 
-    def no_arrow(*_a, **_k):
-        raise AssertionError("lloyd_step_sql ran an Arrow step")
+    from pyspark.sql import functions as F
 
-    monkeypatch.setattr(km, "lloyd_step_arrow", no_arrow)
+    from kmeans_mapreduce_spark.operators import kmeans_nd as knd
+
+    xy = [(0.0, 0.0), (1.0, 1.0), (10.0, 10.0)]
     pts = spark.createDataFrame(
-        [(0.0, 0.0), (1.0, 1.0), (10.0, 10.0)], "x DOUBLE, y DOUBLE"
+        [(i, x, y) for i, (x, y) in enumerate(xy)], "point_id INT, x DOUBLE, y DOUBLE"
     )
-    bad = [(0, float("nan"), 0.0), (1, 10.0, 10.0)]
-    means, sizes, sse = km.lloyd_step_sql(pts, bad)
+    nan = float("nan")
+    if via == "lloyd_step_sql":
+
+        def no_arrow(*_a, **_k):
+            raise AssertionError("lloyd_step_sql ran an Arrow step")
+
+        monkeypatch.setattr(km, "lloyd_step_arrow", no_arrow)
+        means, sizes, sse = km.lloyd_step_sql(pts, [(0, nan, 0.0), (1, 10.0, 10.0)])
+        assert sizes == {1: 3}
+        assert means == {1: (11.0 / 3, 11.0 / 3)}
+        assert sse == 200.0 + 162.0 + 0.0
+        _, sizes2, _ = km.lloyd_step_sql(pts, [(0, float("inf"), 0.0), (1, 0.0, 0.0)])
+        assert sizes2 == {1: 3}
+        return
+    dim = 64 if via == "arrow_d64" else 2
+    # d=64: the 2-D points padded with zeros, so distances are unchanged
+    vec = F.array(F.col("x"), F.col("y"), *[F.lit(0.0)] * (dim - 2)).alias("vec")
+    nd_pts = pts.select("point_id", vec)
+    finite = [10.0, 10.0] + [0.0] * (dim - 2)
+    centers = [(0, [nan] + [0.0] * (dim - 1)), (1, finite)]
+    if via == "assign_nd":
+        rows = knd.assign_nd(nd_pts, centers).collect()
+        sizes = collections.Counter(r["cid"] for r in rows)
+        assert sorted(r["min_d2"] for r in rows) == [0.0, 162.0, 200.0]
+    else:
+        means, sizes, sse = km.lloyd_step_arrow(nd_pts if dim > 2 else pts, centers)
+        assert means == {1: tuple([11.0 / 3, 11.0 / 3] + [0.0] * (dim - 2))}
+        assert sse == 200.0 + 162.0 + 0.0
     assert sizes == {1: 3}
-    assert means == {1: (11.0 / 3, 11.0 / 3)}
-    assert sse == 200.0 + 162.0 + 0.0
-    inf_c = [(0, float("inf"), 0.0), (1, 0.0, 0.0)]
-    means2, sizes2, _ = km.lloyd_step_sql(pts, inf_c)
-    assert sizes2 == {1: 3}
+
+
+@pytest.mark.parametrize("case", ["2d_k4", "nd_k4", "nd_k256"])
+def test_arrow_step_agrees_with_assignment(spark, sf_dir, case):
+    """The Arrow Lloyd step's cluster sizes are the per-cid counts of the
+    assignment pass at the same centers, and its WSSSE is their
+    Σ min_d2 up to reassociation: on the sf0.001 points with the K=4
+    registry centers, and on the embeddings with the ND_CENTROID_IDS
+    rows (K=4) and the first 256 rows (K=256)."""
+    from pyspark.sql import functions as F
+
+    from kmeans_mapreduce_spark.extensions import ND_CENTROID_IDS
+    from kmeans_mapreduce_spark.operators import kmeans_nd as knd
+    from kmeans_mapreduce_spark.queries import K4_CENTERS, _lloyd_slack
+    from kmeans_mapreduce_spark.sources.derive import points_2d
+    from kmeans_mapreduce_spark.sources.loaders import load_table
+
+    if case == "2d_k4":
+        pts = points_2d(spark, sf_dir)
+        assigned = km.assign(pts, K4_CENTERS)
+        centers = [(c, (x, y)) for c, x, y in K4_CENTERS]
+    else:
+        pts = load_table(spark, sf_dir, "embeddings").select(
+            F.col("vec_id").alias("point_id"),
+            F.transform("embedding", lambda v: v.cast("double")).alias("vec"),
+        )
+        rows = pts.orderBy("point_id").collect()
+        if case == "nd_k4":
+            rows = [r for r in rows if r["point_id"] in ND_CENTROID_IDS]
+        centers = [(i, list(r["vec"])) for i, r in enumerate(rows[:256])]
+        assigned = knd.assign_nd(pts, centers)
+    want = {
+        r["cid"]: (r["n"], r["sse"])
+        for r in assigned.groupBy("cid")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("min_d2").alias("sse"))
+        .collect()
+    }
+    _, sizes, sse = km.lloyd_step_arrow(pts, centers)
+    assert sizes == {c: n for c, (n, _) in want.items()}
+    w = sum(s for _, s in want.values())
+    assert abs(sse - w) <= _lloyd_slack(w)
 
 
 def _py_fold_d2(x, c):

@@ -3,8 +3,8 @@ the design claims (SURVEY §8 / README "Scale design").
 
 Replicates the sf0.1 point set in-memory (union of jittered copies, so
 cardinality grows but the distribution doesn't collapse) and measures
-per-iteration Lloyd wall at 1×/4×/16×; then probes the n-D matmul path
-at growing K×dim. A near-linear data slope and sub-linear K·dim slope
+per-iteration Lloyd wall at 1×/4×/16×; then probes the n-D Arrow Lloyd
+step at growing K×dim. A near-linear data slope and sub-linear K·dim slope
 are the pass criteria — superlinear growth means a shuffle or driver
 bottleneck crept in.
 
@@ -38,7 +38,6 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from kmeans_mapreduce_spark.operators import kmeans as km
-    from kmeans_mapreduce_spark.operators import kmeans_nd as knd
     from kmeans_mapreduce_spark.session import get_spark
     from kmeans_mapreduce_spark.sources.derive import points_2d
     from kmeans_mapreduce_spark.sources.loaders import load_table
@@ -71,11 +70,12 @@ def main() -> int:
         # same partition normalization fit() applies before its loop
         df = km.normalize_partitions(df.select("x", "y")).cache()
         df.count()  # materialize
-        km.lloyd_step_arrow(df, centers)  # warm workers
+        centers_xy = [(c, (x, y)) for c, x, y in centers]
+        km.lloyd_step_arrow(df, centers_xy)  # warm workers
         times = []
         for _ in range(3):
             t = time.time()
-            km.lloyd_step_arrow(df, centers)
+            km.lloyd_step_arrow(df, centers_xy)
             times.append(time.time() - t)
         out[f"lloyd_iter_sec_{factor}x"] = round(min(times), 3)
         out[f"rows_{factor}x"] = n0 * factor
@@ -176,7 +176,7 @@ def main() -> int:
         out["incremental_sec_4x"] / out["incremental_sec_1x"] / 4.0, 3
     )
 
-    # --- K x dim scaling: n-D matmul assignment -----------------------
+    # --- K x dim scaling: the n-D Arrow Lloyd step --------------------
     emb = load_table(spark, sf_dir, "embeddings")
     pts = emb.select(
         F.col("vec_id").alias("point_id"),
@@ -188,9 +188,9 @@ def main() -> int:
     rng = np.random.default_rng(42)
     for k in (8, 64):
         centers_nd = [(i, rng.normal(size=64).tolist()) for i in range(k)]
-        knd.lloyd_step_nd(pts, centers_nd)  # warm
+        km.lloyd_step_arrow(pts, centers_nd)  # warm
         t = time.time()
-        knd.lloyd_step_nd(pts, centers_nd)
+        km.lloyd_step_arrow(pts, centers_nd)
         out[f"nd_iter_sec_k{k}"] = round(time.time() - t, 3)
     out["nd_k8_to_k64_ratio"] = round(
         out["nd_iter_sec_k64"] / max(out["nd_iter_sec_k8"], 1e-9), 2
