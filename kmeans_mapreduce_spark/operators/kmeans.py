@@ -143,11 +143,11 @@ def seq_argmin_d2(X, C):
     ``list_sum(list_transform(...))`` fold, and at d=2
     ``(0 + dx²) + dy²``, which equals :func:`assign`'s ``dx² + dy²``
     bit for bit); the winner is ``argmin``'s first minimum (ties to the
-    lowest row of ``C``, mapper.py:43). A nan distance never wins, as
-    in :func:`assign` and DuckDB, which order NaN above every double:
-    only a non-finite center can make one, so the centers are checked
-    once and finite ones keep the pass to one fold. Returns
-    ``(winner_idx, min_d2)`` arrays."""
+    lowest row of ``C``, mapper.py:43). A nan center never wins, as in
+    :func:`assign` and DuckDB, which order NaN above every double: when
+    a center is non-finite its nan distances become +inf before the
+    argmin. The centers are checked once per call, so finite ones keep
+    the pass to one fold. Returns ``(winner_idx, min_d2)`` arrays."""
     import numpy as np
 
     acc = np.zeros((len(X), len(C)))
